@@ -17,20 +17,18 @@ ForUtil.java:32, Lucene90PostingsFormat.java:44-59,141-143):
 The byte layout itself is ours (this is not a file-format port); the
 *properties* — 128-value blocks, per-block width, delta gaps, varint
 tail — match the reference so compression behavior is comparable.
+
+The encoder is ``lucene_spark.codec.batch``, the one implementation of
+this layout: the build packs whole Arrow batches with it, and
+``pack_postings`` below is a one-row call into it. This module holds
+the decoders.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-BLOCK_SIZE = 128  # ForUtil.java:32
-
-
-def _write_varint(out: bytearray, v: int) -> None:
-    while v >= 0x80:
-        out.append((v & 0x7F) | 0x80)
-        v >>= 7
-    out.append(v)
+from lucene_spark.codec.batch import BLOCK_SIZE, encode_postings
 
 
 def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
@@ -45,31 +43,8 @@ def _read_varint(buf: bytes, pos: int) -> tuple[int, int]:
         shift += 7
 
 
-def varint_encode_array(vals: np.ndarray) -> bytes:
-    """Vectorized LEB128 varint encoding of a non-negative int64 array —
-    byte-identical to looping ``_write_varint``. One scatter instead of
-    a Python iteration per value (the position stream has one value per
-    token, so this is on the build's hottest path)."""
-    v = np.asarray(vals, dtype=np.uint64)
-    n = len(v)
-    if n == 0:
-        return b""
-    bl = _bit_lengths(v)
-    nb = np.maximum((bl + 6) // 7, 1)
-    offsets = np.concatenate(([0], np.cumsum(nb)[:-1]))
-    total = int(nb.sum())
-    idx = np.arange(total, dtype=np.int64)
-    starts = np.repeat(offsets, nb)
-    rel = idx - starts
-    vr = np.repeat(v, nb)
-    out = ((vr >> (np.uint64(7) * rel.astype(np.uint64))) & np.uint64(0x7F)).astype(np.uint8)
-    cont = rel < np.repeat(nb, nb) - 1
-    out[cont] |= 0x80
-    return out.tobytes()
-
-
 def varint_decode_array(buf: bytes, start: int = 0) -> np.ndarray:
-    """Vectorized inverse of ``varint_encode_array`` over buf[start:]
+    """Vectorized inverse of ``batch.varints`` over buf[start:]
     (must contain only whole varints)."""
     b = np.frombuffer(buf, dtype=np.uint8, offset=start).astype(np.uint64)
     if len(b) == 0:
@@ -84,124 +59,22 @@ def varint_decode_array(buf: bytes, start: int = 0) -> np.ndarray:
     return np.add.reduceat(contrib, starts_idx).astype(np.int64)
 
 
-def _pack_bits(vals: np.ndarray, width: int) -> bytes:
-    """Bit-pack ``vals`` (all < 2**width) at ``width`` bits each."""
-    if width == 0:
-        return b""
-    bits = np.unpackbits(vals.astype(">u8").view(np.uint8).reshape(-1, 8), axis=1)
-    return np.packbits(bits[:, 64 - width :].reshape(-1)).tobytes()
-
-
-def _unpack_bits(buf: bytes, n: int, width: int) -> np.ndarray:
-    if width == 0:
-        return np.zeros(n, dtype=np.uint64)
-    bits = np.unpackbits(np.frombuffer(buf, dtype=np.uint8), count=n * width).reshape(n, width)
-    out = np.zeros((n, 64), dtype=np.uint8)
-    out[:, 64 - width :] = bits
-    return np.packbits(out, axis=1).view(">u8").ravel().astype(np.uint64)
-
-
-def _width(vals: np.ndarray) -> int:
-    m = int(vals.max()) if len(vals) else 0
-    return int(m).bit_length()
-
-
-def _bit_lengths(m: np.ndarray) -> np.ndarray:
-    """Vectorized ``int.bit_length`` over a uint64 array (exact — no
-    float log2 edge cases)."""
-    m = m.astype(np.uint64, copy=True)
-    w = np.zeros(m.shape, dtype=np.int64)
-    for s in (32, 16, 8, 4, 2, 1):
-        gt = m >= np.uint64(1 << s)
-        w[gt] += s
-        m[gt] >>= np.uint64(s)
-    return w + m.astype(np.int64)
-
-
 def pack_postings(doc_ids: np.ndarray, tfs: np.ndarray, norms: np.ndarray | None = None) -> tuple[bytes, np.ndarray]:
-    """Encode one posting list (doc gaps + term freqs + norm bytes).
+    """Encode one posting list (doc gaps + term freqs + norm bytes) — a
+    one-row call into ``batch.encode_postings``.
 
     Parameters: ``doc_ids`` strictly-increasing int64, ``tfs`` positive
     int32, ``norms`` 0..255 norm bytes (inlined so BM25 scoring needs no
     norms join — Lucene reads .nvd per doc during scoring; the columnar
     equivalent is carrying the byte next to the freq). Returns
     ``(blob, block_last_docids)`` where ``block_last_docids`` has one
-    entry per *full* 128-block (the skip-list role: block-level random
-    access / WAND skipping without decoding).
+    entry per block, the tail included (the skip-list role: block-level
+    random access / WAND skipping without decoding).
     """
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    tfs = np.asarray(tfs, dtype=np.int64)
-    norms = np.zeros(len(doc_ids), dtype=np.int64) if norms is None else np.asarray(norms, dtype=np.int64)
-    n = len(doc_ids)
-    if n == 0:
-        return b"\x00", np.empty(0, dtype=np.int64)
-    deltas = np.empty(n, dtype=np.uint64)
-    deltas[0] = doc_ids[0] + 1  # gap from virtual doc -1 → always >= 1
-    if n > 1:
-        gaps = np.diff(doc_ids)
-        if (gaps <= 0).any():
-            raise ValueError("doc_ids must be strictly increasing")
-        deltas[1:] = gaps.astype(np.uint64)
-
-    out = bytearray()
-    _write_varint(out, n)
-    n_full = n // BLOCK_SIZE
-    # last doc of EVERY block (incl. the tail) — the skip-list entries;
-    # exact ends are what lets WAND map blocks to doc intervals.
-    block_last = doc_ids[BLOCK_SIZE - 1 :: BLOCK_SIZE].copy()
-    if n % BLOCK_SIZE:
-        block_last = np.append(block_last, doc_ids[-1])
-    if n_full:
-        # Vectorized across blocks (byte layout identical to the old
-        # per-block loop): per-block widths from a reshape-max, then
-        # pack all same-width blocks of a stream in ONE _pack_bits call
-        # and scatter the bytes to their interleaved offsets. A hot
-        # chunk row (docs_per_chunk postings) packs with ~a dozen numpy
-        # calls instead of 3*n_blocks Python iterations — the pack
-        # stage is the build's long pole, and straggler tasks there are
-        # what erodes N→4N scaling efficiency.
-        streams = (
-            deltas[: n_full * BLOCK_SIZE].reshape(n_full, BLOCK_SIZE),
-            tfs[: n_full * BLOCK_SIZE].astype(np.uint64).reshape(n_full, BLOCK_SIZE),
-            norms[: n_full * BLOCK_SIZE].astype(np.uint64).reshape(n_full, BLOCK_SIZE),
-        )
-        widths = [_bit_lengths(s.max(axis=1)) for s in streams]  # (3, n_full)
-        bytes_per = [w * (BLOCK_SIZE // 8) for w in widths]
-        # per-block segment = [w_d][d..][w_t][t..][w_n][n..]
-        seg = 3 + bytes_per[0] + bytes_per[1] + bytes_per[2]
-        starts = np.concatenate(([0], np.cumsum(seg)[:-1]))
-        total = int(seg.sum())
-        buf = np.zeros(total, dtype=np.uint8)
-        # stream-relative offsets of the width byte within each segment
-        rel = [
-            np.zeros(n_full, dtype=np.int64),
-            1 + bytes_per[0],
-            2 + bytes_per[0] + bytes_per[1],
-        ]
-        for si, stream in enumerate(streams):
-            wpos = starts + rel[si]
-            buf[wpos] = widths[si].astype(np.uint8)
-            dstart = wpos + 1
-            for w in np.unique(widths[si]):
-                if w == 0:
-                    continue
-                sel = widths[si] == w
-                packed = np.frombuffer(_pack_bits(stream[sel].ravel(), int(w)), dtype=np.uint8)
-                nb = int(w) * (BLOCK_SIZE // 8)
-                dest = (
-                    np.repeat(dstart[sel], nb)
-                    + np.tile(np.arange(nb, dtype=np.int64), int(sel.sum()))
-                )
-                buf[dest] = packed
-        out += buf.tobytes()
-    # VInt tail with freq-parity trick (Lucene90PostingsFormat.java:196-211)
-    for i in range(n_full * BLOCK_SIZE, n):
-        d, f = int(deltas[i]), int(tfs[i])
-        _write_varint(out, (d << 1) | (1 if f == 1 else 0))
-        if f != 1:
-            _write_varint(out, f)
-        out.append(int(norms[i]))
-    return bytes(out), block_last
+    norms = np.zeros(len(doc_ids), dtype=np.int64) if norms is None else norms
+    blob, _, block_last, _ = encode_postings(np.array([0, len(doc_ids)]), doc_ids, tfs, norms)
+    return blob.tobytes(), block_last
 
 
 def _unpack_blocks_by_width(

@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from lucene_spark.codec.batch import impacts
+
 
 def competitive_impacts(tfs: np.ndarray, norms: np.ndarray) -> list[tuple[int, int]]:
     """Pareto frontier of (freq, norm_byte) for one block.
@@ -41,50 +43,16 @@ def competitive_impacts(tfs: np.ndarray, norms: np.ndarray) -> list[tuple[int, i
 def competitive_impacts_flat(
     tfs: np.ndarray, norms: np.ndarray, block_size: int = 128
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Pareto frontiers for ALL 128-blocks of a posting list at once —
-    the vectorized form of ``competitive_impacts`` mapped over blocks
-    (one lexsort over the whole list instead of a Python call per
-    block; the pack stage runs this once per chunk row).
+    """Pareto frontiers for ALL blocks of one posting list — the
+    vectorized form of ``competitive_impacts`` mapped over blocks, a
+    one-row call into ``batch.impacts``.
 
     Returns ``(block_ids, freqs, norm_bytes)`` flat arrays, ordered by
     (block, norm ascending) — identical content to looping
     ``competitive_impacts`` per block.
     """
-    tfs = np.asarray(tfs, dtype=np.int64)
-    norms = np.asarray(norms, dtype=np.int64)
-    n = len(tfs)
-    if n == 0:
-        e = np.empty(0, dtype=np.int64)
-        return e, e, e
-    # per-block sort by (norm asc, tf desc) as ONE batched np.sort over
-    # a composite uint64 key (norm<<40 | ~tf) — blocks are contiguous,
-    # so the sort is row-wise on a (n_blocks, block_size) reshape; pad
-    # the tail block with +inf keys that sort last and are dropped.
-    TFM = np.uint64((1 << 40) - 1)
-    comp = (norms.astype(np.uint64) << np.uint64(40)) | (TFM - tfs.astype(np.uint64))
-    n_blocks = -(-n // block_size)
-    pad = n_blocks * block_size - n
-    if pad:
-        comp = np.concatenate([comp, np.full(pad, np.uint64(0xFFFFFFFFFFFFFFFF))])
-    comp = np.sort(comp.reshape(n_blocks, block_size), axis=1).ravel()
-    valid = comp != np.uint64(0xFFFFFFFFFFFFFFFF)
-    b = np.repeat(np.arange(n_blocks, dtype=np.int64), block_size)[valid]
-    comp = comp[valid]
-    nm = (comp >> np.uint64(40)).astype(np.int64)
-    tf = (TFM - (comp & TFM)).astype(np.int64)
-    # max freq per distinct (block, norm): first row of each group
-    first = np.ones(n, dtype=bool)
-    first[1:] = (b[1:] != b[:-1]) | (nm[1:] != nm[:-1])
-    b, nm, tf = b[first], nm[first], tf[first]
-    # within each block (norm ascending) keep rows whose freq exceeds
-    # the running max — segmented cummax via a per-block offset large
-    # enough that a new block always resets the global running max
-    off = int(tf.max()) + 1
-    x = b * off + tf
-    run = np.maximum.accumulate(x)
-    keep = np.ones(len(x), dtype=bool)
-    keep[1:] = x[1:] > run[:-1]
-    return b[keep], tf[keep], nm[keep]
+    ib, if_, in_, _ = impacts(np.array([0, len(tfs)]), tfs, norms, block_size)
+    return ib, if_, in_
 
 
 def block_impacts(doc_tfs: np.ndarray, doc_norms: np.ndarray, block_size: int = 128) -> list[list[tuple[int, int]]]:

@@ -109,76 +109,40 @@ def _decode_kernel(has_pos: bool, has_off: bool, has_pay: bool, doc_base: int):
     SegmentMerger postings re-map with docBase rebasing
     (SegmentMerger.java:41, MappedMultiFields role)."""
 
+    # inverted column → (blob column, its per-doc value in the decoded list)
+    views = (
+        ([("poss", "pos_blob", lambda p: p)] if has_pos else [])
+        + (
+            [("sts", "off_blob", lambda o: o[0]), ("ens", "off_blob", lambda o: o[1])]
+            if has_off
+            else []
+        )
+        + ([("pays", "pay_blob", lambda p: p)] if has_pay else [])
+    )
+
     def kern(pdf_iter):
         import numpy as np
         import pandas as pd
 
         from lucene_spark.codec.forutil import unpack_postings
-        from lucene_spark.codec.positions import (
-            unpack_offsets,
-            unpack_payloads,
-            unpack_positions,
-        )
+        from lucene_spark.index.split import decode_streams
 
-        cols = (
-            ["term", "doc_id", "tf", "norm"]
-            + (["poss"] if has_pos else [])
-            + (["sts", "ens"] if has_off else [])
-            + (["pays"] if has_pay else [])
-        )
         for pdf in pdf_iter:
-            terms: list = []
-            ids_parts: list = []
-            tf_parts: list = []
-            nm_parts: list = []
-            poss: list = []
-            sts: list = []
-            ens: list = []
-            pays: list = []
+            out: dict = {c: [] for c in ["term", "doc_id", "tf", "norm"] + [v[0] for v in views]}
             for row in pdf.itertuples(index=False):
                 ids, tfs, norms = unpack_postings(bytes(row.blob))
-                n = len(ids)
-                terms.extend([row.term] * n)
-                ids_parts.append(ids + doc_base)
-                tf_parts.append(tfs)
-                nm_parts.append(norms)
-                if has_pos:
-                    plists = (
-                        unpack_positions(bytes(row.pos_blob), tfs)
-                        if row.pos_blob is not None
-                        else [None] * n
+                streams = decode_streams(row, tfs)
+                out["term"].extend([row.term] * len(ids))
+                out["doc_id"].append(ids + doc_base)
+                out["tf"].append(tfs.astype(np.int64))
+                out["norm"].append(norms.astype(np.int64))
+                for col, blob_col, view in views:
+                    lists = streams.get(blob_col)
+                    out[col].extend(
+                        [None] * len(ids) if lists is None else [view(x).tolist() for x in lists]
                     )
-                    poss.extend(p.tolist() if p is not None else None for p in plists)
-                if has_off:
-                    olists = (
-                        unpack_offsets(bytes(row.off_blob), tfs)
-                        if row.off_blob is not None
-                        else [(None, None)] * n
-                    )
-                    sts.extend(o[0].tolist() if o[0] is not None else None for o in olists)
-                    ens.extend(o[1].tolist() if o[1] is not None else None for o in olists)
-                if has_pay:
-                    paylists = (
-                        unpack_payloads(bytes(row.pay_blob), tfs)
-                        if row.pay_blob is not None
-                        else [None] * n
-                    )
-                    pays.extend(p.tolist() if p is not None else None for p in paylists)
-            if not terms:
-                yield pd.DataFrame({c: [] for c in cols})
-                continue
-            out = {
-                "term": terms,
-                "doc_id": np.concatenate(ids_parts),
-                "tf": np.concatenate(tf_parts).astype(np.int64),
-                "norm": np.concatenate(nm_parts).astype(np.int64),
-            }
-            if has_pos:
-                out["poss"] = poss
-            if has_off:
-                out["sts"], out["ens"] = sts, ens
-            if has_pay:
-                out["pays"] = pays
+            for c in ("doc_id", "tf", "norm"):
+                out[c] = np.concatenate(out[c]) if out[c] else np.empty(0, dtype=np.int64)
             yield pd.DataFrame(out)
 
     return kern
@@ -216,16 +180,8 @@ def _copy_kernel(doc_base: int, dpc: int):
         import numpy as np
         import pandas as pd
 
-        from lucene_spark.codec.forutil import BLOCK_SIZE, pack_postings, unpack_postings
-        from lucene_spark.codec.impacts import competitive_impacts_flat
-        from lucene_spark.codec.positions import (
-            pack_offsets,
-            pack_payloads,
-            pack_positions,
-            unpack_offsets,
-            unpack_payloads,
-            unpack_positions,
-        )
+        from lucene_spark.codec.forutil import pack_postings, unpack_postings
+        from lucene_spark.index.split import decode_streams, repack_slice
 
         for pdf in pdf_iter:
             out = []
@@ -244,51 +200,14 @@ def _copy_kernel(doc_base: int, dpc: int):
                     out.append(d)
                     continue
                 # spanning cold row: slice at chunk boundaries
-                plists = (
-                    unpack_positions(bytes(row.pos_blob), tfs)
-                    if row.pos_blob is not None
-                    else None
-                )
-                olists = (
-                    unpack_offsets(bytes(row.off_blob), tfs)
-                    if row.off_blob is not None
-                    else None
-                )
-                paylists = (
-                    unpack_payloads(bytes(row.pay_blob), tfs)
-                    if getattr(row, "pay_blob", None) is not None
-                    else None
-                )
+                streams = decode_streams(row, tfs)
                 for c in range(c0, c1 + 1):
                     i0 = int(np.searchsorted(ids, c * dpc))
                     i1 = int(np.searchsorted(ids, (c + 1) * dpc))
-                    if i0 == i1:
-                        continue
-                    d = row._asdict()
-                    sl = slice(i0, i1)
-                    t2 = tfs[sl].astype(np.int64)
-                    n2 = norms[sl].astype(np.int64)
-                    blob2, bl2 = pack_postings(ids[sl], t2, n2)
-                    d["blob"] = blob2
-                    d["block_last"] = bl2.tolist()
-                    d["chunk_id"] = c
-                    d["df"] = i1 - i0
-                    d["ttf"] = int(t2.sum())
-                    ib, if_, in_ = competitive_impacts_flat(t2, n2, BLOCK_SIZE)
-                    d["imp_block"], d["imp_freq"], d["imp_norm"] = (
-                        ib.tolist(),
-                        if_.tolist(),
-                        in_.tolist(),
-                    )
-                    if plists is not None:
-                        d["pos_blob"] = pack_positions(plists[sl])
-                    if olists is not None:
-                        d["off_blob"] = pack_offsets(
-                            [st for st, _ in olists[sl]], [en for _, en in olists[sl]]
-                        )
-                    if paylists is not None:
-                        d["pay_blob"] = pack_payloads(paylists[sl])
-                    out.append(d)
+                    if i0 < i1:
+                        d = repack_slice(row._asdict(), ids, tfs, norms, streams, slice(i0, i1))
+                        d["chunk_id"] = c
+                        out.append(d)
             yield pd.DataFrame(out, columns=list(pdf.columns)) if out else pd.DataFrame(
                 {c: pd.Series(dtype=pdf[c].dtype) for c in pdf.columns}
             )

@@ -7,8 +7,11 @@ as one declarative DataFrame job:
     corpus ──assign_doc_ids──▶ tokenize (pandas UDF) ──▶ explode
       ──▶ groupBy(term, doc_id, norm).count()              [inversion]
       ──▶ hot-term chunking (broadcast join on the hot set) [skew]
-      ──▶ groupBy(term, chunk).agg(sorted arrays)           [flush/merge]
-      ──▶ mapInPandas: FOR/varint pack + impacts            [codec]
+      ──▶ groupBy(term, chunk).agg(posting arrays)          [flush/merge]
+      ──▶ mapInArrow: codec.batch.pack_batches               [codec]
+          (every list of an Arrow batch in one vectorized pass:
+          doc sort, FOR/varint blob, position/offset/payload
+          streams, block skip data, impacts)
       ──▶ parquet tables bucketed/sorted by term            [term dict]
 
 Lucene's DWPT-per-thread segments + k-way merge collapse into Spark's
@@ -37,7 +40,6 @@ import json
 import os
 import time
 from dataclasses import dataclass
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -45,18 +47,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
 )
 
 from lucene_spark.analysis.tokenizer import tokenize_series
-from lucene_spark.codec.forutil import BLOCK_SIZE, pack_postings
-from lucene_spark.codec.impacts import competitive_impacts_flat
+from lucene_spark.codec.batch import pack_batches
 from lucene_spark.codec.smallfloat import int_to_byte4_np
 
 DOC_KEYS = ("repo", "path", "commit")
@@ -190,21 +189,10 @@ class IndexConfig:
     term_vectors: bool = False
 
 
-_POSTINGS_SCHEMA = StructType(
-    [
-        StructField("term", StringType()),
-        StructField("chunk_id", LongType()),
-        StructField("df", IntegerType()),
-        StructField("ttf", LongType()),
-        StructField("blob", BinaryType()),
-        StructField("pos_blob", BinaryType()),
-        StructField("off_blob", BinaryType()),
-        StructField("pay_blob", BinaryType()),
-        StructField("block_last", ArrayType(LongType())),
-        StructField("imp_block", ArrayType(IntegerType())),
-        StructField("imp_freq", ArrayType(IntegerType())),
-        StructField("imp_norm", ArrayType(IntegerType())),
-    ]
+_POSTINGS_SCHEMA = (
+    "term string, chunk_id long, df int, ttf long, blob binary, pos_blob binary, "
+    "off_blob binary, pay_blob binary, block_last array<long>, imp_block array<int>, "
+    "imp_freq array<int>, imp_norm array<int>"
 )
 
 
@@ -212,6 +200,25 @@ def parse_sort_spec(spec: tuple[str, ...]) -> list[tuple[str, bool]]:
     """("-n_chars", "src_id") → [("n_chars", False), ("src_id", True)]
     (col, ascending) pairs; the Sort/SortField parse."""
     return [(c[1:], False) if c.startswith("-") else (c, True) for c in spec]
+
+
+def literal_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A few driver-side rows (``schema`` in DDL) as a JVM-only plan:
+    ``spark.range(1)`` + an inline of one JSON literal. Unlike
+    ``spark.createDataFrame(list)`` — a pickled Python RDD scan that
+    every job over the frame re-runs, ~1.5 s per write — the plan has
+    no Python stage; the columns stay nullable like createDataFrame's."""
+    st = StructType.fromDDL(schema)
+    js = json.dumps([dict(zip(st.names, r)) for r in rows])
+    return spark.range(1).select(F.inline(F.from_json(F.lit(js), ArrayType(st))))
+
+
+def stats_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """The one-file ``collection_stats`` table: one (doc_count,
+    sum_ttf, sum_df, field) row per field."""
+    return literal_frame(
+        spark, rows, "doc_count long, sum_ttf long, sum_df long, field string"
+    ).coalesce(1)
 
 
 def assign_doc_ids(
@@ -253,9 +260,7 @@ def assign_doc_ids(
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], schema="_pid int, _offset long"
-    )
+    off_df = literal_frame(spark, list(offsets.items()), "_pid int, _offset long")
     w = Window.partitionBy("_pid").orderBy(*kcols)
     out = (
         ordered.join(F.broadcast(off_df), "_pid")
@@ -443,9 +448,7 @@ def write_collection_stats_from_tables(spark, index_dir: str, cfg: "IndexConfig"
             else 0
         )
         rows.append((int(dc), int(r[1] or 0), int(r[0] or 0), xf))
-    spark.createDataFrame(
-        rows, schema="doc_count long, sum_ttf long, sum_df long, field string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/collection_stats")
+    stats_frame(spark, rows).write.mode("overwrite").parquet(f"{index_dir}/collection_stats")
     spark.catalog.refreshByPath(f"{index_dir}/collection_stats")
     return int(n_docs)
 
@@ -650,86 +653,6 @@ def _norm_udf():
         return pd.Series(int_to_byte4_np(dl.to_numpy()).astype(np.int32))
 
     return _norm
-
-
-def _pack_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: sorted (doc,tf,norm[,positions[,offsets]])
-    arrays → packed doc/freq/norm blob + separate position/offset blobs
-    + block skip data + competitive impacts. Vectorized per posting
-    list."""
-    from lucene_spark.codec.positions import pack_offsets, pack_payloads, pack_positions
-
-    def _pay_f32(p):
-        try:
-            return np.asarray(p, dtype=np.float32)
-        except (TypeError, ValueError):  # object list with None holes
-            return np.asarray(
-                [np.nan if x is None else float(x) for x in p], dtype=np.float32
-            )
-
-    for pdf in batches:
-        has_pos = "poss" in pdf.columns
-        has_off = "sts" in pdf.columns
-        has_pay = "pays" in pdf.columns
-        rows = []
-        for i in range(len(pdf)):
-            term = pdf["term"].iloc[i]
-            chunk_id = pdf["chunk_id"].iloc[i]
-            d = np.asarray(pdf["docs"].iloc[i], dtype=np.int64)
-            t = np.asarray(pdf["tfs"].iloc[i], dtype=np.int64)
-            nm = np.asarray(pdf["norms"].iloc[i], dtype=np.int64)
-            poss = pdf["poss"].iloc[i] if has_pos else None
-            sts = pdf["sts"].iloc[i] if has_off else None
-            ens = pdf["ens"].iloc[i] if has_off else None
-            pays = pdf["pays"].iloc[i] if has_pay else None
-            if len(d) > 1 and not (np.diff(d) > 0).all():
-                order = np.argsort(d, kind="stable")
-                d, t, nm = d[order], t[order], nm[order]
-                if poss is not None:
-                    poss = [poss[j] for j in order]
-                if sts is not None:
-                    sts = [sts[j] for j in order]
-                    ens = [ens[j] for j in order]
-                if pays is not None:
-                    pays = [pays[j] for j in order]
-            blob, block_last = pack_postings(d, t, nm)
-            pos_blob = pack_positions(poss) if has_pos else None
-            off_blob = pack_offsets(sts, ens) if has_off else None
-            pay_blob = pack_payloads([_pay_f32(p) for p in pays]) if has_pay else None
-            ib, if_, in_ = competitive_impacts_flat(t, nm, BLOCK_SIZE)
-            rows.append(
-                (
-                    term,
-                    int(chunk_id),
-                    len(d),
-                    int(t.sum()),
-                    blob,
-                    pos_blob,
-                    off_blob,
-                    pay_blob,
-                    block_last.tolist(),
-                    ib.tolist(),
-                    if_.tolist(),
-                    in_.tolist(),
-                )
-            )
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "term",
-                "chunk_id",
-                "df",
-                "ttf",
-                "blob",
-                "pos_blob",
-                "off_blob",
-                "pay_blob",
-                "block_last",
-                "imp_block",
-                "imp_freq",
-                "imp_norm",
-            ],
-        )
 
 
 class IndexBuilder:
@@ -969,17 +892,16 @@ class IndexBuilder:
             sel.append(F.expr("transform(plist, x -> x.ens)").alias("ens"))
         if has_pay:
             sel.append(F.expr("transform(plist, x -> x.pays)").alias("pays"))
-        # plain collect_list + numpy argsort in the pack kernel: sorting
-        # structs that carry nested position arrays is much cheaper as a
-        # vectorized argsort + fancy-index over Arrow columns than as a
-        # JVM sort_array over deeply nested rows (measured ~25% of the
-        # pack stage at sf0.1x8)
+        # plain collect_list + the pack kernel's per-row stable doc sort:
+        # sorting structs that carry nested position arrays is much
+        # cheaper as one lexsort + gather over the batch's flat Arrow
+        # buffers than as a JVM sort_array over deeply nested rows
         grouped = (
             chunked.groupBy("term", "chunk_id")
             .agg(F.collect_list(F.struct(*struct_cols)).alias("plist"))
             .select(*sel)
         )
-        packed = grouped.mapInPandas(_pack_partition, schema=_POSTINGS_SCHEMA)
+        packed = grouped.mapInArrow(pack_batches, schema=_POSTINGS_SCHEMA)
         return packed, term_stats
 
     # ---- end-to-end ------------------------------------------------------
@@ -1187,9 +1109,9 @@ class IndexBuilder:
                 rows = [(int(nd), int(st or 0), int(sd or 0), cfg.field)]
             # the tiny collection_stats write rides inside the pool too
             # so the long-pole postings write hides it entirely
-            self.spark.createDataFrame(
-                rows, schema="doc_count long, sum_ttf long, sum_df long, field string"
-            ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/collection_stats")
+            stats_frame(self.spark, rows).write.mode("overwrite").parquet(
+                f"{index_dir}/collection_stats"
+            )
             # vocabulary / partition / skew metrics (terms per postings
             # bucket + hot-term chunking): the bucket id replays the
             # write's HashPartitioning (pmod(murmur3(term), buckets));

@@ -44,9 +44,57 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from lucene_spark.index.builder import FIELD_SEP
+from lucene_spark.index.builder import FIELD_SEP, stats_frame
 
 __all__ = ["split_index"]
+
+
+def decode_streams(row, tfs) -> dict:
+    """The non-null per-occurrence streams of a postings row, decoded
+    once: {blob column: per-doc lists}."""
+    from lucene_spark.codec.positions import unpack_offsets, unpack_payloads, unpack_positions
+
+    out = {}
+    for col, unpack in (
+        ("pos_blob", unpack_positions),
+        ("off_blob", unpack_offsets),
+        ("pay_blob", unpack_payloads),
+    ):
+        if getattr(row, col, None) is not None:
+            out[col] = unpack(bytes(getattr(row, col)), tfs)
+    return out
+
+
+def repack_slice(d: dict, ids, tfs, norms, streams: dict, sl: slice) -> dict:
+    """Re-encode docs ``sl`` of a decoded postings row into its column
+    dict ``d``: blob, block_last, df, ttf, impacts (block boundaries
+    move) and every decoded stream cut to the kept docs."""
+    import numpy as np
+
+    from lucene_spark.codec.forutil import pack_postings
+    from lucene_spark.codec.impacts import competitive_impacts_flat
+    from lucene_spark.codec.positions import pack_offsets, pack_payloads, pack_positions
+
+    t2, n2 = tfs[sl].astype(np.int64), norms[sl].astype(np.int64)
+    blob, block_last = pack_postings(ids[sl], t2, n2)
+    ib, if_, in_ = competitive_impacts_flat(t2, n2)
+    d.update(
+        blob=blob,
+        block_last=block_last.tolist(),
+        df=len(t2),
+        ttf=int(t2.sum()),
+        imp_block=ib.tolist(),
+        imp_freq=if_.tolist(),
+        imp_norm=in_.tolist(),
+    )
+    if "pos_blob" in streams:
+        d["pos_blob"] = pack_positions(streams["pos_blob"][sl])
+    if "off_blob" in streams:
+        o = streams["off_blob"][sl]
+        d["off_blob"] = pack_offsets([st for st, _ in o], [en for _, en in o])
+    if "pay_blob" in streams:
+        d["pay_blob"] = pack_payloads(streams["pay_blob"][sl])
+    return d
 
 
 def _split_kernel(pdf_iter, cut: int, side: str):
@@ -56,16 +104,7 @@ def _split_kernel(pdf_iter, cut: int, side: str):
     import numpy as np
     import pandas as pd
 
-    from lucene_spark.codec.forutil import BLOCK_SIZE, pack_postings, unpack_postings
-    from lucene_spark.codec.impacts import competitive_impacts_flat
-    from lucene_spark.codec.positions import (
-        pack_offsets,
-        pack_payloads,
-        pack_positions,
-        unpack_offsets,
-        unpack_payloads,
-        unpack_positions,
-    )
+    from lucene_spark.codec.forutil import pack_postings, unpack_postings
 
     lo = side == "lo"
     for pdf in pdf_iter:
@@ -96,29 +135,7 @@ def _split_kernel(pdf_iter, cut: int, side: str):
                 # straddling row: slice at the cut
                 sl = slice(0, k) if lo else slice(k, n)
                 base = 0 if lo else cut
-                d2 = ids[sl] - base
-                t2 = tfs[sl].astype(np.int64)
-                n2 = norms[sl].astype(np.int64)
-                blob2, bl2 = pack_postings(d2, t2, n2)
-                d["blob"] = blob2
-                d["block_last"] = bl2.tolist()
-                d["df"] = len(d2)
-                d["ttf"] = int(t2.sum())
-                ib, if_, in_ = competitive_impacts_flat(t2, n2, BLOCK_SIZE)
-                d["imp_block"], d["imp_freq"], d["imp_norm"] = (
-                    ib.tolist(), if_.tolist(), in_.tolist(),
-                )
-                if row.pos_blob is not None:
-                    plists = unpack_positions(bytes(row.pos_blob), tfs)
-                    d["pos_blob"] = pack_positions(plists[sl])
-                if row.off_blob is not None:
-                    olists = unpack_offsets(bytes(row.off_blob), tfs)
-                    d["off_blob"] = pack_offsets(
-                        [st for st, _ in olists[sl]], [en for _, en in olists[sl]]
-                    )
-                if row.pay_blob is not None:
-                    paylists = unpack_payloads(bytes(row.pay_blob), tfs)
-                    d["pay_blob"] = pack_payloads(paylists[sl])
+                repack_slice(d, ids - base, tfs, norms, decode_streams(row, tfs), sl)
             out.append(d)
         yield pd.DataFrame(out, columns=list(pdf.columns)) if out else pd.DataFrame(
             {c: pd.Series(dtype=pdf[c].dtype) for c in pdf.columns}
@@ -264,9 +281,7 @@ def split_index(
             for f in extra_fields:
                 st, sd = agg_rows.get(f, (0, 0))
                 rows.append((dc_rows.get(f, 0), st, sd, f))
-        spark.createDataFrame(
-            rows, schema="doc_count long, sum_ttf long, sum_df long, field string"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{out}/collection_stats")
+        stats_frame(spark, rows).write.mode("overwrite").parquet(f"{out}/collection_stats")
 
         m = dict(manifest)
         m["docs"] = n_docs

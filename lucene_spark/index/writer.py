@@ -506,21 +506,25 @@ class IndexWriter:
         # opened on an existing differently-analyzed index
         chain = self._manifest_chain()
         rec: dict = {}
+        # a merge writes collection_stats itself and returns n_docs; only
+        # a tiered commit leaves them to recompute over all tiers
+        merged = None
         if expunge_deletes and os.path.exists(f"{self.index_dir}/deletes"):
-            purge_deletes(self.spark, self.index_dir, self.config)  # full collapse
-            self._save_commits({"tiers": [{"tier": 0, "segments": self._staged_segments(), "n_docs": -1}]})
+            merged = purge_deletes(self.spark, self.index_dir, self.config)  # full collapse
         elif full:
-            ResumableIndexBuilder(self.spark, self.config).merge(self.index_dir)
-            self._save_commits({"tiers": [{"tier": 0, "segments": self._staged_segments(), "n_docs": -1}]})
+            merged = ResumableIndexBuilder(self.spark, self.config).merge(self.index_dir)
         else:
             rec = self._tiered_commit()
             if len(self._load_commits()["tiers"]) > max_tiers:
                 # over budget → merge down (the policy's big merge)
-                ResumableIndexBuilder(self.spark, self.config).merge(self.index_dir)
-                self._save_commits(
-                    {"tiers": [{"tier": 0, "segments": self._staged_segments(), "n_docs": -1}]}
-                )
-        n_docs = self._write_collection_stats()
+                merged = ResumableIndexBuilder(self.spark, self.config).merge(self.index_dir)
+        if merged is None:
+            n_docs = self._write_collection_stats()
+        else:
+            self._save_commits(
+                {"tiers": [{"tier": 0, "segments": self._staged_segments(), "n_docs": -1}]}
+            )
+            n_docs = merged["docs"]
         # the committed tier changes the term set: drop the reversed-
         # dictionary sidecar (the rewritten manifest below has no
         # reverse_dict flag, so readers fall back to the plain scan)

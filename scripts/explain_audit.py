@@ -6,7 +6,9 @@ hot paths and verify scale-critical plan properties hold:
 2. term-dictionary prefix scan: StartsWith pushed
 3. norms doc-range read: range filter pushed (min/max row-group prune)
 4. index build: inversion is a partial-agg (map-side combine) hash
-   aggregate inside WholeStageCodegen; only ONE shuffle by (term,...)
+   aggregate inside WholeStageCodegen; only ONE shuffle by (term,...);
+   postings pack through MapInArrow (no MapInPandas); the
+   collection_stats write has no Python stage
 5. distributed search: no shuffle beyond the chunk groupBy;
    TakeOrderedAndProject (not a global sort) for the top-k merge
 
@@ -50,7 +52,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from lucene_spark.gate import corpus_df, gate_index
-    from lucene_spark.index.builder import IndexBuilder, IndexConfig
+    from lucene_spark.index.builder import IndexBuilder, IndexConfig, stats_frame
     from lucene_spark.session import get_spark
 
     spark = get_spark("explain_audit", master="local[4]", shuffle_partitions=8)
@@ -117,6 +119,21 @@ def main() -> None:
     n_py = len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M))
     CHECKS.append(("tokenizer UDF evaluated exactly once", f"ArrowEvalPython nodes x{n_py} (want 2: tok+norm)", n_py == 2))
     sections.append(("Index build: inversion aggregation", plan))
+
+    # 4b. postings pack: every posting list of an Arrow batch packs in
+    # one vectorized pass (MapInArrow), no per-row pandas kernel
+    packed, term_stats = b.posting_lists(inv)
+    plan = _capture(packed)
+    check("postings pack is MapInArrow", plan, r"MapInArrow")
+    check_absent("postings pack has no MapInPandas", plan, r"MapInPandas")
+    term_stats.unpersist()
+    sections.append(("Index build: postings pack", plan))
+
+    # 4c. collection_stats write: a literal frame planned in the JVM,
+    # not a pickled Python RDD of driver rows
+    plan = _capture(stats_frame(spark, [(200, 5000, 3000, "content")]))
+    check_absent("collection_stats write has no Python stage", plan, r"ExistingRDD|BatchEvalPython")
+    sections.append(("Index build: collection_stats write", plan))
 
     # codegen on a pure-JVM aggregation (Python stages legitimately
     # break codegen; the JVM-side spans must still fuse). AQE's
