@@ -53,6 +53,9 @@ QUERIES: dict[str, A.Query] = {
     # (round-3 item — must stay within ~2x of the 2-term entries)
     "q_sloppy3": A.PhraseQuery(("table", "hash", "merge"), slop=6),
     "q_spannear3": A.SpanNearQuery(("table", "hash", "merge"), slop=8, in_order=False),
+    # repeated-term span-near: both slots read one term's positions
+    # (same flat interval producer as distinct terms)
+    "q_spannear_rep": A.SpanNearQuery(("table", "table"), slop=4, in_order=True),
     "q_interval3": A.IntervalQuery(
         IMaxGaps(8, IOrdered((ITerm("table"), ITerm("hash"), ITerm("merge"))))
     ),

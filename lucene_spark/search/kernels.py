@@ -133,8 +133,8 @@ class PhraseSpec:
 class SpanNearSpec:
     """Span/interval proximity (SpanNearQuery.java:42, Intervals.java):
     minimal intervals containing all terms (ordered or not) with
-    gap count <= slop; freq = Σ 1/(1+gaps) per SpanScorer's sloppy
-    accumulation."""
+    gap count <= slop; freq = Σ 1/(1+max(gaps, 0)) per SpanScorer's
+    sloppy accumulation."""
 
     terms: tuple[str, ...]
     weight: float
@@ -917,7 +917,7 @@ def _evaluate_payload(spec: PayloadSpec, ctx: ChunkContext) -> tuple[np.ndarray,
             kept &= (~np.isnan(y)) & (y == np.float32(spec.check[i]))
         freq = np.bincount(doc_of[kept], minlength=len(cand))
         m = freq > 0
-        norms_c = _phrase_norms(slot_data[0], cand)
+        norms_c = _norms_of(ctx, spec.terms[:1], cand)
         return cand[m], ctx.score(
             spec.weight, freq[m].astype(np.float32), norms_c[m], spec.field
         )
@@ -936,249 +936,82 @@ def _evaluate_payload(spec: PayloadSpec, ctx: ChunkContext) -> tuple[np.ndarray,
     factor = _payload_factor(spec.function, cnt, sums, mins, maxs)
     freq = np.bincount(doc_of, minlength=len(cand))[mdocs].astype(np.float32)
     out_docs = cand[mdocs]
-    norms_c = _phrase_norms(slot_data[0], cand)[mdocs]
+    norms_c = _norms_of(ctx, spec.terms[:1], cand)[mdocs]
     if not spec.include_span_score:
         return out_docs, factor
     span = ctx.score(spec.weight, freq, norms_c, spec.field)
     return out_docs, (span * factor).astype(np.float32)
 
 
-def _phrase_norms(slot0, cand: np.ndarray) -> np.ndarray:
-    """Norms of the candidate docs (from the first slot's postings)."""
-    docs, _tfs, norms, _flat, _bounds = slot0
-    mask, idx = _membership(docs, cand)
-    return norms[idx[mask]]
+def _slot_conjunction(ctx: ChunkContext, slots) -> np.ndarray:
+    """Docs holding a term of every slot, a slot being a tuple of
+    alternative terms whose docs union (UnionPostingsEnum in
+    MultiPhraseQuery; phrase and span-near slots hold one term)."""
+    cand = None
+    for slot in slots:
+        ds = [d for d in (ctx.term(t)[0] for t in slot) if len(d)]
+        if not ds:
+            return EMPTY_I
+        d = ds[0] if len(ds) == 1 else np.unique(np.concatenate(ds))
+        cand = d if cand is None else np.intersect1d(cand, d, assume_unique=True)
+    return EMPTY_I if cand is None else cand
 
 
-def minimal_intervals(pos_lists: list[np.ndarray], in_order: bool) -> list[tuple[int, int]]:
-    """Minimal intervals containing one occurrence of every list
-    (ordered: occurrences strictly increasing in clause order).
-    "Minimal" = no emitted interval nests inside another (the interval
-    semantics of Intervals.ordered/unordered, Intervals.java;
-    NearSpansOrdered.java:40 stretch-to-minimal loop). Returns
-    (start, end) position pairs, start ascending."""
-    n = len(pos_lists)
-    out: list[tuple[int, int]] = []
-    if any(len(p) == 0 for p in pos_lists):
-        return out
-    if in_order:
-        first = pos_lists[0]
-        i0 = 0
-        while i0 < len(first):
-            # forward greedy chain: each next term strictly after the
-            # previous → the minimal end for any start >= first[i0]
-            prev = int(first[i0])
-            chain_ok = True
-            for j in range(1, n):
-                pj = pos_lists[j]
-                k = int(np.searchsorted(pj, prev, side="right"))
-                if k >= len(pj):
-                    chain_ok = False
-                    break
-                prev = int(pj[k])
-            if not chain_ok:
-                break
-            # backward maximization: latest chain reaching this end —
-            # c_j = max position of list j strictly before c_{j+1}
-            # (NearSpansOrdered.java:40 stretch-to-minimal role)
-            c = prev
-            for j in range(n - 2, -1, -1):
-                pj = pos_lists[j]
-                c = int(pj[int(np.searchsorted(pj, c, side="left")) - 1])
-            out.append((c, prev))
-            i0 = int(np.searchsorted(first, c, side="right"))
-        return out
-    # unordered: sliding window over the merged streams; a window is
-    # emitted when advancing the minimum would grow the right edge
-    # (equivalently: no later window nests inside it)
-    idx = [0] * n
-    cur = [int(p[0]) for p in pos_lists]
-    hi = max(cur)
-    pending: tuple[int, int] | None = None
-    while True:
-        lo_list = min(range(n), key=lambda i: cur[i])
-        cand = (cur[lo_list], hi)
-        idx[lo_list] += 1
-        if idx[lo_list] >= len(pos_lists[lo_list]):
-            out.append(cand)
-            return out
-        cur[lo_list] = int(pos_lists[lo_list][idx[lo_list]])
-        if cur[lo_list] > hi:
-            out.append(cand)
-            hi = cur[lo_list]
+def _slot_keys(ctx: ChunkContext, slot, cand: np.ndarray) -> np.ndarray:
+    """Sorted flat (cand_index << 32 | position) keys of one slot: the
+    union of its terms' keys (co-positioned alternatives count once)."""
+    ks = [k for k in (_term_keys_ctx(ctx, t, cand) for t in slot) if len(k)]
+    if not ks:
+        return EMPTY_I
+    return ks[0] if len(ks) == 1 else np.unique(np.concatenate(ks))
 
 
-def _mutual_pairs_py(a, b) -> list[tuple[int, int]]:
-    """Minimal ordered 2-term intervals as (pa, pb) pairs: pb is the
-    FIRST b after its nearest a-predecessor pa (the mutual-nearest
-    characterization the gate oracle uses, fuzz-verified against
-    minimal_intervals). Pure-int two-pointer — O(len(a)+len(b)) with no
-    per-step numpy overhead (the same trick as the 2-slot sloppy
-    kernel)."""
-    out: list[tuple[int, int]] = []
-    i, la = 0, len(a)
-    prev_pa = -1
-    for pb in b:
-        while i < la and a[i] < pb:
-            i += 1
-        if i == 0:
+def _norms_of(ctx: ChunkContext, terms, docs: np.ndarray) -> np.ndarray:
+    """Norm of each doc from the first of ``terms`` holding it (a norm
+    is per doc, so every holder stores the same value)."""
+    out = got = None
+    for t in terms:
+        d, _, nm = ctx.term(t)
+        if not len(d):
             continue
-        pa = a[i - 1]
-        if pa != prev_pa:  # later pb with the same pa nests this one
-            out.append((pa, pb))
-            prev_pa = pa
-    return out
+        idx = np.minimum(np.searchsorted(d, docs), len(d) - 1)
+        hit = d[idx] == docs
+        if out is None:
+            if hit.all():
+                return nm[idx]
+            out, got = np.where(hit, nm[idx], 0), hit
+        else:
+            fill = hit & ~got
+            out[fill] = nm[idx[fill]]
+            got |= hit
+    return np.zeros(len(docs), dtype=np.int64) if out is None else out
 
 
-def _mutual_pairs_flat(A: np.ndarray, B: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized :func:`_mutual_pairs_py` over FLAT (ci<<32 | pos) key
-    arrays covering every candidate doc at once: mutual-nearest (a, b)
-    pairs — b is the first B-key after a, a is the last A-key before b,
-    both in the same doc. One searchsorted + two masks instead of a
-    Python two-pointer per candidate."""
-    if not len(A) or not len(B):
-        return EMPTY_I, EMPTY_I
-    j = np.searchsorted(B, A, side="right")
-    valid = j < len(B)
-    jc = np.minimum(j, len(B) - 1)
-    valid &= (B[jc] >> 32) == (A >> 32)
-    Ai, Bj = A[valid], B[jc[valid]]
-    if not len(Ai):
-        return EMPTY_I, EMPTY_I
-    keep = np.ones(len(Bj), dtype=bool)
-    keep[:-1] = Bj[1:] != Bj[:-1]  # duplicate next-b → keep the LAST a
-    return Ai[keep], Bj[keep]
-
-
-def _two_term_flat_freqs(
-    A: np.ndarray, B: np.ndarray, in_order: bool, cap, n_cand: int
-) -> np.ndarray:
-    """Sloppy freqs (float32, per candidate index) of the 2-term
-    ordered/unordered minimal-interval source over flat key arrays —
-    the whole-corpus-at-once form of the per-candidate
-    :func:`_two_term_minimal` loop (identical pair sets, identical
-    float32 accumulation order: pairs are monotone per doc and the
-    flat arrays are ci-major). ``cap`` = max gaps (None = unbounded).
-    Cross-doc safety of the containment sweep: composite keys of a
-    later doc are strictly larger, so the suffix-min can never mark a
-    pair as containing one from another doc."""
-    if in_order:
-        S, E = _mutual_pairs_flat(A, B)
-    else:
-        s1, e1 = _mutual_pairs_flat(A, B)
-        s2, e2 = _mutual_pairs_flat(B, A)
-        S = np.concatenate([s1, s2])
-        E = np.concatenate([e1, e2])
-        if len(S) > 1:
-            order = np.lexsort((E, S))
-            S, E = S[order], E[order]
-            dup = np.zeros(len(S), dtype=bool)
-            dup[1:] = (S[1:] == S[:-1]) & (E[1:] == E[:-1])
-            S, E = S[~dup], E[~dup]
-            # drop pairs properly containing a later-sorted pair, and
-            # same-start pairs longer than the first (the suffix-min +
-            # same-start sweep of _two_term_minimal, vectorized)
-            suf_excl = np.full(len(E), np.int64(2**62))
-            if len(E) > 1:
-                suf_excl[:-1] = np.minimum.accumulate(E[::-1])[::-1][1:]
-            same_start = np.zeros(len(S), dtype=bool)
-            same_start[1:] = S[1:] == S[:-1]
-            keep = ~((suf_excl <= E) | same_start)
-            S, E = S[keep], E[keep]
-    freqs = np.zeros(n_cand, dtype=np.float32)
-    if not len(S):
-        return freqs
-    gaps = E - S - 1  # same doc → high bits cancel
-    if cap is not None:
-        m = gaps <= cap
-        S, gaps = S[m], gaps[m]
-        if not len(S):
-            return freqs
-    ci = (S >> 32).astype(np.int64)
-    contrib = np.float32(1.0) / (np.float32(1.0) + gaps.astype(np.float32))
-    np.add.at(freqs, ci, contrib)  # sequential f32 adds in pair order
-    return freqs
-
-
-def _two_term_minimal(a, b, in_order: bool) -> list[tuple[int, int]]:
-    """Minimal intervals for a 2-term ordered/unordered source over
-    plain int lists. Unordered = union of both orientations with
-    cross-orientation nesting removed."""
-    if in_order:
-        return _mutual_pairs_py(a, b)
-    iv = _mutual_pairs_py(a, b) + _mutual_pairs_py(b, a)
-    if len(iv) <= 1:
-        return iv
-    iv = sorted(set(iv))
-    n = len(iv)
-    suf = [1 << 62] * (n + 1)
-    for i in range(n - 1, -1, -1):
-        suf[i] = min(iv[i][1], suf[i + 1])
-    out: list[tuple[int, int]] = []
-    for i, (s, e) in enumerate(iv):
-        if suf[i + 1] <= e:  # properly contains a later-sorted pair
-            continue
-        if out and out[-1][0] == s:  # shorter same-start already kept
-            continue
-        out.append((s, e))
-    return out
+def _positional_hits(spec, ctx: ChunkContext, cand: np.ndarray, freqs: np.ndarray, norm_terms):
+    """(docs, scores) of the candidates with freq > 0, scored by the
+    field similarity over their freqs and norms."""
+    matched = freqs > 0
+    if not matched.any():
+        return EMPTY_I, EMPTY_F
+    docs = cand[matched]
+    norms = _norms_of(ctx, norm_terms, docs)
+    return docs, ctx.score(spec.weight, freqs[matched], norms, spec.field)
 
 
 def _evaluate_spannear(spec: SpanNearSpec, ctx: ChunkContext) -> tuple[np.ndarray, np.ndarray]:
     """Span-near over the positions index: candidate docs = term
-    conjunction (position-filtered first, like the phrase kernels), then
-    per-candidate minimal-interval matching; freq = Σ 1/(1+gaps) over
-    matches with gaps = width - n_terms <= slop."""
-    parts = [ctx.term(t) for t in spec.terms]
-    if any(not len(p[0]) for p in parts):
-        return EMPTY_I, EMPTY_F
-    cand = parts[0][0]
-    for d, _, _ in parts[1:]:
-        cand = np.intersect1d(cand, d, assume_unique=True)
+    conjunction, then the flat minimal-interval producer over every
+    candidate at once; freq = Σ 1/(1+max(gaps, 0)) over intervals with
+    gaps = width - n_terms <= slop. Repeated terms and co-positioned
+    stacked tokens make zero-width windows, which count as gaps 0."""
+    slots = [(t,) for t in spec.terms]
+    cand = _slot_conjunction(ctx, slots)
     if not len(cand):
         return EMPTY_I, EMPTY_F
-    plists = []
-    for t in spec.terms:
-        plist = ctx.positions.get(t)
-        if plist is None:
-            raise ValueError(f"no positions available for term {t!r}")
-        plists.append(plist)
-    n = len(spec.terms)
-    one = np.float32(1.0)
-    freqs = np.zeros(len(cand), dtype=np.float64)
-    keys = [_term_keys_ctx(ctx, t, cand) for t in spec.terms]
-    fast_ok = len(set(spec.terms)) == n and not _keys_collide(keys)
-    if fast_ok and n == 2:
-        # flat vectorized fast path: every candidate in a handful of
-        # numpy passes (same pair sets + float32 accumulation order as
-        # the per-candidate two-pointer)
-        freqs = _two_term_flat_freqs(
-            keys[0], keys[1], spec.in_order, spec.slop, len(cand)
-        ).astype(np.float64)
-    elif fast_ok:
-        # n >= 3 distinct terms: lockstep-vectorized minimal intervals
-        kern = _ordered_flat_freqs if spec.in_order else _unordered_flat_freqs
-        freqs = kern(keys, spec.slop, len(cand)).astype(np.float64)
-    else:
-        # repeated terms or co-positioned stacked tokens: per-candidate
-        # tree path; gaps clamp at 0 (zero-width windows from posInc-0
-        # stacks contribute 1/(1+0), the interval-evaluator convention)
-        idxs = [np.searchsorted(p[0], cand) for p in parts]
-        for ci in range(len(cand)):
-            pls = [np.asarray(plists[j][idxs[j][ci]], dtype=np.int64) for j in range(n)]
-            f = np.float32(0.0)
-            for lo, hi in minimal_intervals(pls, spec.in_order):
-                gaps = (hi - lo + 1) - n
-                if gaps <= spec.slop:
-                    f = np.float32(f + one / (one + np.float32(max(gaps, 0))))
-            freqs[ci] = f
-    matched = freqs > 0
-    if not matched.any():
-        return EMPTY_I, EMPTY_F
-    docs0, _, norms0 = parts[0]
-    idx0 = np.searchsorted(docs0, cand[matched])
-    scores = ctx.score(spec.weight, freqs[matched], norms0[idx0], spec.field)
-    return cand[matched], scores
+    keys = [_slot_keys(ctx, s, cand) for s in slots]
+    S, E = _flat_intervals(keys, spec.in_order, spec.slop, len(cand))
+    freqs = _interval_freqs(S, E, len(keys), len(cand))
+    return _positional_hits(spec, ctx, cand, freqs.astype(np.float64), spec.terms[:1])
 
 
 def _fast_nterm_shape(src):
@@ -1251,26 +1084,36 @@ def _fast_or_shape(src):
     return branches, cap
 
 
+def _slot_intervals(descr, slot_keys, n_cand: int):
+    """Minimal intervals (S, E, covered) of a ``(slots, in_order, cap)``
+    shape descriptor, or None when two slots share a (doc, position)
+    key: stacked tokens, which the tree evaluator handles. A single
+    slot's intervals are its own positions."""
+    slots, in_order, cap = descr
+    keys = [slot_keys(s) for s in slots]
+    if _keys_collide(keys):
+        return None
+    if len(slots) == 1:
+        return keys[0], keys[0], 1
+    S, E = _flat_intervals(keys, in_order, cap, n_cand)
+    return S, E, len(slots)
+
+
 def _filtered_intervals_from_keys(ffd, slot_keys, term_keys, n_cand: int):
     """Filtered-shape intervals (S, E, covered) from a
     :func:`_fast_filtered_shape` descriptor, or None on stacked-token
     key collisions (tree evaluator territory). ``slot_keys(slot)`` and
     ``term_keys(term)`` supply flat composite-key position arrays."""
-    (slots, in_order, cap), kind, rterm, pre, post = ffd
-    keys = [slot_keys(s) for s in slots]
-    if _keys_collide(keys) or (
-        rterm is not None
-        and rterm[0] == "pairs"
-        and _keys_collide([slot_keys(s) for s in rterm[1][0]])
-    ):
+    descr, kind, rterm, pre, post = ffd
+    pos = _slot_intervals(descr, slot_keys, n_cand)
+    ref = None
+    if rterm is not None and rterm[0] == "pairs":
+        ref = _slot_intervals(rterm[1], slot_keys, n_cand)
+        if ref is None:
+            return None
+    if pos is None:
         return None
-    if len(slots) == 1:
-        S = E = keys[0]
-        covered = 1
-    else:
-        coll = _ordered_flat_intervals if in_order else _unordered_flat_intervals
-        S, E = coll(keys, cap, n_cand)
-        covered = len(slots)
+    S, E, covered = pos
     if len(S):
         if kind == "endingwithin":
             # SpanFirst/position-range: exclusive span end <= limit
@@ -1278,74 +1121,23 @@ def _filtered_intervals_from_keys(ffd, slot_keys, term_keys, n_cand: int):
             keep = ((E & _LOW32) + 1) <= pre
             if post:
                 keep &= (S & _LOW32) >= post
-        elif rterm[0] == "pairs":
-            rslots, r_order, r_cap = rterm[1]
-            rkeys = [slot_keys(s) for s in rslots]
-            rcoll = _ordered_flat_intervals if r_order else _unordered_flat_intervals
-            Sr, Er = rcoll(rkeys, r_cap, n_cand)
+        elif ref is not None:
+            Sr, Er, _ = ref
+            exists = np.zeros(len(S), dtype=bool)
             if len(Sr):
+                # the producers order starts per doc only: containment
+                # needs one global start order for the prefix-max
+                o = np.argsort(Sr, kind="stable")
+                Sr, Er = Sr[o], Er[o]
                 pref = np.maximum.accumulate(Er)
                 idx = np.searchsorted(Sr, S, side="right") - 1
                 valid = idx >= 0
-                exists = np.zeros(len(S), dtype=bool)
                 exists[valid] = pref[idx[valid]] >= E[valid]
-            else:
-                exists = np.zeros(len(S), dtype=bool)
             keep = exists if kind == "containedby" else ~exists
         else:
             keep = _filtered_interval_keep(S, E, term_keys(rterm[1]), kind, pre, post)
         S, E = S[keep], E[keep]
     return S, E, covered
-
-
-def _or_flat_freqs(
-    branch_ivs: list[tuple[np.ndarray, np.ndarray, int]], outer_cap, n_cand: int
-) -> np.ndarray:
-    """Union-minimalize branch interval sets and accumulate freqs —
-    the vectorized twin of intervals._minimalize + the per-interval
-    1/(1+gaps) accumulation (DisjunctionIntervalsSource semantics:
-    dedupe identical spans keeping max covered, drop spans properly
-    containing another span of the union). All arrays are composite
-    doc<<32|pos keys, so every comparison is automatically per-doc
-    (doc bits dominate — a later doc's end can never fake containment
-    in an earlier doc)."""
-    parts = [(S, E, c) for S, E, c in branch_ivs if len(S)]
-    freqs = np.zeros(n_cand, dtype=np.float32)
-    if not parts:
-        return freqs
-    S = np.concatenate([p[0] for p in parts])
-    E = np.concatenate([p[1] for p in parts])
-    C = np.concatenate([np.full(len(p[0]), p[2], dtype=np.int64) for p in parts])
-    order = np.lexsort((-C, E, S))
-    S, E, C = S[order], E[order], C[order]
-    # dedupe identical (start, end): first occurrence carries max covered
-    keep = np.ones(len(S), dtype=bool)
-    keep[1:] = (S[1:] != S[:-1]) | (E[1:] != E[:-1])
-    S, E, C = S[keep], E[keep], C[keep]
-    # same start: the shortest end survives (a longer same-start span
-    # properly contains it)
-    keep = np.ones(len(S), dtype=bool)
-    keep[1:] = S[1:] != S[:-1]
-    S, E, C = S[keep], E[keep], C[keep]
-    # (s,e) properly contains a later-starting span iff some later row
-    # has end <= e — suffix-min of ends, excluding self
-    if len(S) > 1:
-        sufmin = np.minimum.accumulate(E[::-1])[::-1]
-        nxt = np.empty(len(S), dtype=np.int64)
-        nxt[:-1] = sufmin[1:]
-        nxt[-1] = np.iinfo(np.int64).max
-        keep = nxt > E
-        S, E, C = S[keep], E[keep], C[keep]
-    width_minus_c = (E & _LOW32) - (S & _LOW32) + 1 - C
-    if outer_cap is not None:
-        ok = width_minus_c <= outer_cap
-        S, width_minus_c = S[ok], width_minus_c[ok]
-    if not len(S):
-        return freqs
-    gaps = np.maximum(width_minus_c, 0).astype(np.float32)
-    one = np.float32(1.0)
-    np.add.at(freqs, (S >> np.int64(32)).astype(np.int64), one / (one + gaps))
-    return freqs
 
 
 def _fast_filtered_shape(src):
@@ -1472,291 +1264,157 @@ def _filtered_interval_keep(
     return ~exists
 
 
+def _or_intervals(branch_ivs: list[tuple[np.ndarray, np.ndarray, int]]):
+    """Union-minimalize branch interval sets into (S, E, covered) — the
+    vectorized twin of intervals._minimalize (DisjunctionIntervalsSource
+    semantics: dedupe identical spans keeping max covered, drop spans
+    properly containing another span of the union), globally sorted by
+    start. All arrays are composite doc<<32|pos keys, so every
+    comparison is automatically per-doc (doc bits dominate — a later
+    doc's end can never fake containment in an earlier doc)."""
+    parts = [(S, E, c) for S, E, c in branch_ivs if len(S)]
+    if not parts:
+        return EMPTY_I, EMPTY_I, EMPTY_I
+    S = np.concatenate([p[0] for p in parts])
+    E = np.concatenate([p[1] for p in parts])
+    C = np.concatenate([np.full(len(p[0]), p[2], dtype=np.int64) for p in parts])
+    order = np.lexsort((-C, E, S))
+    S, E, C = S[order], E[order], C[order]
+    # dedupe identical (start, end): first occurrence carries max covered
+    keep = np.ones(len(S), dtype=bool)
+    keep[1:] = (S[1:] != S[:-1]) | (E[1:] != E[:-1])
+    S, E, C = S[keep], E[keep], C[keep]
+    # same start: the shortest end survives (a longer same-start span
+    # properly contains it)
+    keep = np.ones(len(S), dtype=bool)
+    keep[1:] = S[1:] != S[:-1]
+    S, E, C = S[keep], E[keep], C[keep]
+    # (s,e) properly contains a later-starting span iff some later row
+    # has end <= e — suffix-min of ends, excluding self
+    if len(S) > 1:
+        sufmin = np.minimum.accumulate(E[::-1])[::-1]
+        nxt = np.empty(len(S), dtype=np.int64)
+        nxt[:-1] = sufmin[1:]
+        nxt[-1] = _I64_MAX
+        keep = nxt > E
+        S, E, C = S[keep], E[keep], C[keep]
+    return S, E, C
+
+
+def _interval_flat(src, slot_keys, term_keys, n_cand: int):
+    """Flat lowering of an interval source over every candidate doc at
+    once: (S, E, covered, cap) for :func:`_interval_freqs`, or None
+    when the shape is outside the flat family (n-slot proximity,
+    filtered combinators, or-of-those) or its inputs collide — the tree
+    evaluator's territory. ``slot_keys(slot)`` / ``term_keys(term)``
+    supply the flat composite-key position arrays."""
+    d = _fast_nterm_shape(src)
+    if d is not None:
+        iv = _slot_intervals(d, slot_keys, n_cand)
+        return None if iv is None else (*iv, None)
+    ff = _fast_filtered_shape(src)
+    if ff is not None:
+        iv = _filtered_intervals_from_keys(ff, slot_keys, term_keys, n_cand)
+        return None if iv is None else (*iv, None)
+    orr = _fast_or_shape(src)
+    if orr is None:
+        return None
+    branches, outer_cap = orr
+    branch_ivs = []
+    for tag, descr in branches:
+        if tag == "filtered":
+            iv = _filtered_intervals_from_keys(descr, slot_keys, term_keys, n_cand)
+        else:
+            iv = _slot_intervals(descr, slot_keys, n_cand)
+        if iv is None:
+            return None
+        branch_ivs.append(iv)
+    return (*_or_intervals(branch_ivs), outer_cap)
+
+
 def _evaluate_interval(spec: IntervalSpec, ctx: ChunkContext) -> tuple[np.ndarray, np.ndarray]:
     """Interval-algebra kernel: doc-level candidate pruning via the
-    source's conjunction/union structure, then per-candidate minimal-
-    interval evaluation over the positions index. freq accumulates
-    1/(1 + gaps) per emitted interval with gaps = max(0, width -
-    covered) (overlapping unordered operands can cover more than the
-    width; clamped like SloppyPhraseMatcher clamps negative slop)."""
+    source's conjunction/union structure, then minimal-interval
+    evaluation over the positions index — the flat lowering
+    (:func:`_interval_flat`) over every candidate at once, or the
+    per-candidate tree evaluator for the shapes and stacked-token
+    inputs outside it. freq accumulates 1/(1 + gaps) per emitted
+    interval with gaps = max(0, width - covered) (overlapping unordered
+    operands can cover more than the width; clamped like
+    SloppyPhraseMatcher clamps negative slop)."""
     from lucene_spark.search.intervals import candidate_docs, eval_source
 
-    def _score(freq_arr: np.ndarray, norm_arr: np.ndarray) -> np.ndarray:
-        if spec.score_mode == "saturation":
-            # IntervalScoreFunction.SaturationFunction: weight *
-            # (1 - pivot/(freq + pivot)) in float32, norm-free
-            f = freq_arr.astype(np.float32)
-            p = np.float32(spec.pivot)
-            return (np.float32(spec.weight) * (np.float32(1.0) - p / (f + p))).astype(
-                np.float32
-            )
-        return ctx.score(spec.weight, freq_arr, norm_arr, spec.field)
-
-    parts = {t: ctx.term(t) for t in spec.terms}
-    doc_arrays = {t: p[0] for t, p in parts.items()}
-    cand = candidate_docs(spec.source, doc_arrays)
+    cand = candidate_docs(spec.source, {t: ctx.term(t)[0] for t in spec.terms})
     if cand is None or not len(cand):
         return EMPTY_I, EMPTY_F
-    # per-term row index of each candidate (−1 = doc absent from term)
-    idxs: dict[str, np.ndarray] = {}
-    present: dict[str, np.ndarray] = {}
-    plists: dict[str, object] = {}
-    for t in spec.terms:
-        d = doc_arrays[t]
-        i = np.searchsorted(d, cand)
-        i_clip = np.minimum(i, max(len(d) - 1, 0))
-        present[t] = (len(d) > 0) & (d[i_clip] == cand) if len(d) else np.zeros(len(cand), bool)
-        idxs[t] = i_clip
-        pl = ctx.positions.get(t)
-        if pl is None and len(d):
-            raise ValueError(f"no positions available for term {t!r}")
-        plists[t] = pl
-    one = np.float32(1.0)
-    empty = np.empty(0, dtype=np.int64)
-    freqs = np.zeros(len(cand), dtype=np.float64)
-    norms = np.zeros(len(cand), dtype=np.int64)
-    has_norm = np.zeros(len(cand), dtype=bool)
-    def _slot_keys(slot):
-        ks = [_term_keys_ctx(ctx, t, cand) for t in slot if len(doc_arrays[t])]
-        ks = [k for k in ks if len(k)]
-        if not ks:
-            return EMPTY_I
-        return ks[0] if len(ks) == 1 else np.unique(np.concatenate(ks))
-
-    def _slot_norms(slot, matched):
-        """per-matched-doc norm from any slot term present (norms are
-        per doc; every matched doc holds >= 1 term of the slot)."""
-        mc = cand[matched]
-        norms_m = np.zeros(len(mc), dtype=np.int64)
-        got = np.zeros(len(mc), dtype=bool)
-        for t in slot:
-            d, _, nm = parts[t]
+    n = len(cand)
+    flat = _interval_flat(
+        spec.source,
+        lambda slot: _slot_keys(ctx, slot, cand),
+        lambda t: _term_keys_ctx(ctx, t, cand),
+        n,
+    )
+    if flat is None:
+        # per-candidate tree path over slices of the flat position
+        # buffers; its intervals feed the same accumulator
+        rows = {}
+        for t in spec.terms:
+            d = ctx.term(t)[0]
             if len(d):
-                mask, idx = _membership(d, mc)
-                fill = mask & ~got
-                norms_m[fill] = nm[idx[fill]]
-                got |= mask
-        return norms_m
+                mask, idx = _membership(d, cand)
+                pos, offs = _flat_of(ctx, t)
+                rows[t] = (mask, offs[idx], offs[idx + 1], pos)
+        S, E, C = [], [], []
+        for ci in range(n):
 
-    fast = _fast_nterm_shape(spec.source)
-    if fast is not None:
-        slots, in_order, cap = fast
-        keys = [_slot_keys(s) for s in slots]
-        if _keys_collide(keys):
-            fast = None  # co-positioned stacked tokens → tree evaluator
-    if fast is not None:
-        slots, in_order, cap = fast
-        if len(slots) == 2 and all(len(s) == 1 for s in slots):
-            freqs = _two_term_flat_freqs(keys[0], keys[1], in_order, cap, len(cand)).astype(
-                np.float64
-            )
-        else:
-            kern = _ordered_flat_freqs if in_order else _unordered_flat_freqs
-            freqs = kern(keys, cap, len(cand)).astype(np.float64)
+            def pos_of(t: str, _ci=ci):
+                r = rows.get(t)
+                if r is None or not r[0][_ci]:
+                    return EMPTY_I
+                return r[3][r[1][_ci] : r[2][_ci]]
+
+            hi = ci << 32
+            for s, e, c in eval_source(spec.source, pos_of):
+                S.append(hi | s)
+                E.append(hi | e)
+                C.append(c)
+        flat = (
+            np.array(S, dtype=np.int64),
+            np.array(E, dtype=np.int64),
+            np.array(C, dtype=np.int64),
+            None,
+        )
+    S, E, covered, cap = flat
+    freqs = _interval_freqs(S, E, covered, n, cap).astype(np.float64)
+    if spec.score_mode == "saturation":
+        # IntervalScoreFunction.SaturationFunction: weight *
+        # (1 - pivot/(freq + pivot)) in float32, norm-free
         matched = freqs > 0
         if not matched.any():
             return EMPTY_I, EMPTY_F
-        norms_m = _slot_norms(slots[0], matched)
-        scores = _score(freqs[matched], norms_m)
-        return cand[matched], scores
-    def _term_keys(t):
-        return _term_keys_ctx(ctx, t, cand)
-
-    def _ff_branch_ivs(ffd):
-        return _filtered_intervals_from_keys(ffd, _slot_keys, _term_keys, len(cand))
-
-    ff = _fast_filtered_shape(spec.source)
-    ffres = _ff_branch_ivs(ff) if ff is not None else None
-    if ffres is not None:
-        S, E, covered = ffres
-        if not len(S):
-            return EMPTY_I, EMPTY_F
-        gaps = np.maximum((E & _LOW32) - (S & _LOW32) + 1 - covered, 0)
-        freqs = np.zeros(len(cand), dtype=np.float32)
-        contrib = np.float32(1.0) / (np.float32(1.0) + gaps.astype(np.float32))
-        # S is per-doc start-ascending → sequential f32 adds in the
-        # same order as the per-doc tree evaluator
-        np.add.at(freqs, (S >> np.int64(32)).astype(np.int64), contrib)
-        freqs = freqs.astype(np.float64)
-        matched = freqs > 0
-        if not matched.any():
-            return EMPTY_I, EMPTY_F
-        norms_m = _slot_norms(ff[0][0][0], matched)
-        scores = _score(freqs[matched], norms_m)
-        return cand[matched], scores
-    orr = _fast_or_shape(spec.source) if ff is None else None
-    if orr is not None:
-        branches, outer_cap = orr
-        branch_ivs = []
-        for tag, descr in branches:
-            if tag == "filtered":
-                res = _ff_branch_ivs(descr)
-                if res is None:
-                    branch_ivs = None
-                    break
-                branch_ivs.append(res)
-                continue
-            slots, in_order, cap = descr
-            keys = [_slot_keys(s) for s in slots]
-            if _keys_collide(keys):
-                branch_ivs = None  # co-positioned stacked tokens → tree
-                break
-            if len(slots) == 1:
-                K = keys[0]
-                branch_ivs.append((K, K, 1))
-            else:
-                coll = _ordered_flat_intervals if in_order else _unordered_flat_intervals
-                S, E = coll(keys, cap, len(cand))
-                branch_ivs.append((S, E, len(slots)))
-        if branch_ivs is not None:
-            freqs = _or_flat_freqs(branch_ivs, outer_cap, len(cand)).astype(np.float64)
-            matched = freqs > 0
-            if not matched.any():
-                return EMPTY_I, EMPTY_F
-            norms_m = _slot_norms(tuple(spec.terms), matched)
-            scores = _score(freqs[matched], norms_m)
-            return cand[matched], scores
-    for ci in range(len(cand)):
-
-        def pos_of(t: str, _ci=ci):
-            if not present[t][_ci]:
-                return empty
-            return np.asarray(plists[t][idxs[t][_ci]], dtype=np.int64)
-
-        f = np.float32(0.0)
-        for s, e, c in eval_source(spec.source, pos_of):
-            gaps = max(0, (e - s + 1) - c)
-            f = np.float32(f + one / (one + np.float32(gaps)))
-        freqs[ci] = f
-        if f > 0 and not has_norm[ci]:
-            for t in spec.terms:  # norm from any term containing the doc
-                if present[t][ci]:
-                    norms[ci] = parts[t][2][idxs[t][ci]]
-                    has_norm[ci] = True
-                    break
-    matched = freqs > 0
-    if not matched.any():
-        return EMPTY_I, EMPTY_F
-    scores = _score(freqs[matched], norms[matched])
-    return cand[matched], scores
-
-
-def _slot_union(ctx: ChunkContext, slot: tuple[str, ...]):
-    """Merged (docs, norms, per-doc sorted position arrays) over a
-    slot's alternative terms (UnionPostingsEnum in MultiPhraseQuery)."""
-    parts = []
-    for t in slot:
-        d, _, nm = ctx.term(t)
-        if len(d):
-            pl = ctx.positions.get(t)
-            if pl is None:
-                raise ValueError(f"no positions for term {t!r}")
-            parts.append((d, nm, pl))
-    if not parts:
-        return EMPTY_I, EMPTY_I, []
-    docs = np.unique(np.concatenate([p[0] for p in parts]))
-    norms = np.zeros(len(docs), dtype=np.int64)
-    positions = [None] * len(docs)
-    for d, nm, pl in parts:
-        mask, idx = _membership(d, docs)
-        norms[mask] = nm[idx[mask]]
-        for di in np.nonzero(mask)[0]:
-            mine = pl[idx[di]]
-            positions[di] = mine if positions[di] is None else np.union1d(positions[di], mine)
-    return docs, norms, positions
+        f = freqs[matched].astype(np.float32)
+        p = np.float32(spec.pivot)
+        w = np.float32(spec.weight)
+        return cand[matched], (w * (np.float32(1.0) - p / (f + p))).astype(np.float32)
+    return _positional_hits(spec, ctx, cand, freqs, spec.terms)
 
 
 def _evaluate_multiphrase(spec: MultiPhraseSpec, ctx: ChunkContext) -> tuple[np.ndarray, np.ndarray]:
-    if spec.slop == 0:
-        # vectorized: slot doc-union + flattened key unions, no per-doc loop
-        slot_docs = []
-        for slot in spec.slots:
-            ds = [ctx.term(t)[0] for t in slot if len(ctx.term(t)[0])]
-            if not ds:
-                return EMPTY_I, EMPTY_F
-            slot_docs.append(ds[0] if len(ds) == 1 else np.unique(np.concatenate(ds)))
-        cand = slot_docs[0]
-        for d in slot_docs[1:]:
-            cand = np.intersect1d(cand, d, assume_unique=True)
-        if not len(cand):
-            return EMPTY_I, EMPTY_F
-        keys = []
-        for slot in spec.slots:
-            parts = []
-            for t in slot:
-                d = ctx.term(t)[0]
-                if not len(d):
-                    continue
-                pl = ctx.positions.get(t)
-                if pl is None:
-                    raise ValueError(f"no positions for term {t!r}")
-                k = _term_keys_ctx(ctx, t, cand)
-                if len(k):
-                    parts.append(k)
-            if not parts:
-                return EMPTY_I, EMPTY_F
-            keys.append(parts[0] if len(parts) == 1 else np.unique(np.concatenate(parts)))
-        freqs = _exact_phrase_freqs_keys(keys, len(cand))
-        matched = freqs > 0
-        if not matched.any():
-            return EMPTY_I, EMPTY_F
-        # norms of the matched docs from any slot-0 term containing them
-        norms_out = np.zeros(len(cand), dtype=np.int64)
-        for t in spec.slots[0]:
-            d, _, nm = ctx.term(t)
-            if len(d):
-                mask, idx = _membership(d, cand)
-                norms_out[mask] = nm[idx[mask]]
-        scores = ctx.score(spec.weight, freqs[matched], norms_out[matched], spec.field)
-        return cand[matched], scores
-
-    slots = [_slot_union(ctx, s) for s in spec.slots]
-    if any(not len(s[0]) for s in slots):
-        return EMPTY_I, EMPTY_F
-    cand = slots[0][0]
-    for d, _, _ in slots[1:]:
-        cand = np.intersect1d(cand, d, assume_unique=True)
+    """MultiPhraseQuery: each slot's postings are the union of its
+    alternative terms (UnionPostingsEnum — one flat sorted key array per
+    slot), then the exact or sloppy phrase matcher over the slots.
+    Slots that SHARE a term take the multi-term repeat-group path of
+    :func:`_sloppy_freqs` (hasMultiTermRpts,
+    SloppyPhraseMatcher.java:435-453,562-585)."""
+    cand = _slot_conjunction(ctx, spec.slots)
     if not len(cand):
         return EMPTY_I, EMPTY_F
-    # disjoint slots → exact simple matcher over slot unions; slots that
-    # SHARE a term run the exact multi-term repeat-group algorithm
-    # (hasMultiTermRpts, SloppyPhraseMatcher.java:435-453,562-585)
-    all_terms = [t for slot in spec.slots for t in slot]
-    disjoint = len(set(all_terms)) == len(all_terms)
-    if disjoint:
-        # lockstep-vectorized PQ over the slot-union key streams (the
-        # UnionPostingsEnum merge as one flat sorted array per slot) —
-        # no per-candidate Python; bit-equal to _sloppy_freq_exact
-        keys = []
-        for slot in spec.slots:
-            parts = []
-            for t in slot:
-                d = ctx.term(t)[0]
-                if len(d):
-                    pl = ctx.positions.get(t)
-                    if pl is None:
-                        raise ValueError(f"no positions for term {t!r}")
-                    k = _term_keys_ctx(ctx, t, cand)
-                    if len(k):
-                        parts.append(k)
-            keys.append(parts[0] if len(parts) == 1 else np.unique(np.concatenate(parts)))
-        freqs = _sloppy_flat_freqs_n(keys, spec.slop, len(cand)).astype(np.float64)
+    keys = [_slot_keys(ctx, s, cand) for s in spec.slots]
+    if spec.slop == 0:
+        freqs = _exact_phrase_freqs_keys(keys, len(cand))
     else:
-        pos_lists = []
-        for d, _, pl in slots:
-            idx = np.searchsorted(d, cand)
-            pos_lists.append([pl[i] for i in idx])
-        freqs = np.zeros(len(cand), dtype=np.float64)
-        for ci in range(len(cand)):
-            plc = [np.asarray(pl[ci]) for pl in pos_lists]
-            freqs[ci] = _lucene_sloppy_freq(plc, spec.slop, slot_terms=spec.slots)
-    matched = freqs > 0
-    if not matched.any():
-        return EMPTY_I, EMPTY_F
-    d0, nm0, _ = slots[0]
-    idx0 = np.searchsorted(d0, cand[matched])
-    scores = ctx.score(spec.weight, freqs[matched], nm0[idx0], spec.field)
-    return cand[matched], scores
+        freqs = _sloppy_freqs(keys, spec.slop, len(cand), spec.slots).astype(np.float64)
+    return _positional_hits(spec, ctx, cand, freqs, spec.slots[0])
 
 
 def _evaluate_phrase(spec: PhraseSpec, ctx: ChunkContext) -> tuple[np.ndarray, np.ndarray]:
@@ -1765,74 +1423,23 @@ def _evaluate_phrase(spec: PhraseSpec, ctx: ChunkContext) -> tuple[np.ndarray, n
     #positions p of term0 with p+i present for every term i. The freq
     then feeds BM25 with the summed-idf weight (PhraseWeight).
 
-    slop > 0 (SloppyPhraseMatcher.java:53): for every occurrence p of
-    the first term, greedily align each later term i to its position
-    nearest p+i; a match needs total displacement d <= slop and
-    contributes sloppyFreq = 1/(1+d) (Similarity.SloppySimScorer
-    weighting). This reproduces Lucene's scoring for non-repeating
-    phrase terms (the common case); Lucene's full repeat-group handling
-    (SloppyPhraseMatcher.java:200+) is not replicated. slop=0 reduces
-    exactly to the exact matcher (d must be 0)."""
-    parts = [ctx.term(t) for t in spec.terms]
-    if any(not len(p[0]) for p in parts):
-        return EMPTY_I, EMPTY_F
-    cand = parts[0][0]
-    for d, _, _ in parts[1:]:
-        cand = np.intersect1d(cand, d, assume_unique=True)
+    slop > 0 (SloppyPhraseMatcher.java:53): the reference's
+    priority-queue matcher (:func:`_sloppy_freqs`) — a match needs
+    matchLength <= slop and contributes sloppyFreq = 1/(1+matchLength)
+    (Similarity.SloppySimScorer weighting), accumulated in float32.
+    Repeated terms take Lucene's repeat-group handling
+    (SloppyPhraseMatcher.java:286-470): two slots carrying the same
+    term never sit on the same token position."""
+    slots = tuple((t,) for t in spec.terms)
+    cand = _slot_conjunction(ctx, slots)
     if not len(cand):
         return EMPTY_I, EMPTY_F
-    plists = []
-    for t in spec.terms:
-        plist = ctx.positions.get(t)
-        if plist is None:
-            raise ValueError(f"no positions available for term {t!r}")
-        plists.append(plist)
+    keys = [_slot_keys(ctx, s, cand) for s in slots]
     if spec.slop == 0:
-        keys = [_term_keys_ctx(ctx, t, cand) for t in spec.terms]
         freqs = _exact_phrase_freqs_keys(keys, len(cand))
-    elif len(spec.terms) == 2 and spec.terms[0] != spec.terms[1]:
-        # flat vectorized 2-slot sloppy matcher (the dominant shape)
-        A = _term_keys_ctx(ctx, spec.terms[0], cand)
-        B = _term_keys_ctx(ctx, spec.terms[1], cand)
-        freqs = _sloppy2_flat_freqs(A, B, spec.slop, len(cand)).astype(np.float64)
-    elif len(set(spec.terms)) == len(spec.terms):
-        # n >= 3 distinct terms: lockstep-vectorized PQ (no repeats —
-        # initSimple branch), every candidate doc advanced per numpy pass
-        keys = [_term_keys_ctx(ctx, t, cand) for t in spec.terms]
-        freqs = _sloppy_flat_freqs_n(keys, spec.slop, len(cand)).astype(np.float64)
     else:
-        # repeating terms: per-candidate exact PQ with repeat groups
-        pos_lists = []
-        for (d, _, _), plist in zip(parts, plists):
-            idx = np.searchsorted(d, cand)
-            pos_lists.append([plist[i] for i in idx])
-        freqs = np.zeros(len(cand), dtype=np.float64)
-        for ci in range(len(cand)):
-            freqs[ci] = _sloppy_freq_exact(
-                [pl[ci] for pl in pos_lists], spec.slop, terms=spec.terms
-            )
-    matched = freqs > 0
-    if not matched.any():
-        return EMPTY_I, EMPTY_F
-    docs0, _, norms0 = parts[0]
-    idx0 = np.searchsorted(docs0, cand[matched])
-    scores = ctx.score(spec.weight, freqs[matched], norms0[idx0], spec.field)
-    return cand[matched], scores
-
-
-def _term_flat_keys(d: np.ndarray, plist: list, cand: np.ndarray) -> np.ndarray:
-    """Sorted flattened (cand_index << 32 | position) keys of one term's
-    occurrences restricted to the candidate docs (positions < 2^32 —
-    Lucene caps per-doc positions at Integer.MAX_VALUE)."""
-    mask, idx = _membership(d, cand)
-    ci = np.nonzero(mask)[0].astype(np.int64)
-    sel = idx[mask]
-    lens = np.fromiter((len(plist[i]) for i in sel), dtype=np.int64, count=len(sel))
-    if not int(lens.sum()):
-        return EMPTY_I
-    di = np.repeat(ci, lens)
-    pos = np.concatenate([np.asarray(plist[i], dtype=np.int64) for i in sel if len(plist[i])])
-    return (di << np.int64(32)) | pos
+        freqs = _sloppy_freqs(keys, spec.slop, len(cand), slots).astype(np.float64)
+    return _positional_hits(spec, ctx, cand, freqs, spec.terms[:1])
 
 
 def _flat_of(ctx: "ChunkContext", t: str) -> tuple[np.ndarray, np.ndarray]:
@@ -1843,11 +1450,19 @@ def _flat_of(ctx: "ChunkContext", t: str) -> tuple[np.ndarray, np.ndarray]:
     phrases) never re-flatten it. Offsets come from the tf array (a
     term's per-doc position-list length IS its tf); the flat array is
     zero-copy when the per-doc lists are np.split views of one decode
-    buffer (unpack_positions' output shape)."""
+    buffer (unpack_positions' output shape).
+
+    The one missing-positions check of the positional kernels: a term
+    with postings in this context but no position stream raises
+    ValueError instead of reading as "no match"."""
     fo = ctx.pos_flats.get(t)
     if fo is not None:
         return fo
-    plist = ctx.positions.get(t) or []
+    plist = ctx.positions.get(t)
+    if plist is None:
+        if len(ctx.term(t)[0]):
+            raise ValueError(f"no positions available for term {t!r}")
+        plist = []
     tfs = ctx.term(t)[1]
     offs = np.zeros(len(plist) + 1, dtype=np.int64)
     if len(plist):
@@ -1881,9 +1496,11 @@ def _flat_of(ctx: "ChunkContext", t: str) -> tuple[np.ndarray, np.ndarray]:
 def _keys_from_flat(
     d: np.ndarray, flat: np.ndarray, offs: np.ndarray, cand: np.ndarray
 ) -> np.ndarray:
-    """_term_flat_keys over the flattened representation: a pure
-    vectorized ragged gather (no per-doc Python), same sorted
-    (cand_index << 32 | position) output."""
+    """Sorted flat (cand_index << 32 | position) keys of one term's
+    occurrences in the candidate docs, gathered from its flattened
+    positions (see :func:`_flat_of`) — a pure vectorized ragged gather,
+    no per-doc Python (positions < 2^32: Lucene caps per-doc positions
+    at Integer.MAX_VALUE)."""
     mask, idx = _membership(d, cand)
     ci = np.nonzero(mask)[0].astype(np.int64)
     sel = idx[mask]
@@ -1903,8 +1520,8 @@ def _keys_from_flat(
 
 
 def _term_keys_ctx(ctx: "ChunkContext", t: str, cand: np.ndarray) -> np.ndarray:
-    """Context-aware _term_flat_keys: memoized flat representation +
-    vectorized gather."""
+    """Flat keys of term ``t`` over the candidates: the context's
+    memoized flat positions + :func:`_keys_from_flat`."""
     flat, offs = _flat_of(ctx, t)
     return _keys_from_flat(ctx.term(t)[0], flat, offs, cand)
 
@@ -2123,124 +1740,34 @@ def _lucene_sloppy_freq(
     return freq
 
 
-def _sloppy_freq2(a_raw, b_raw, slop: int) -> np.float32:
-    """Specialized 2-slot (distinct terms) sloppy matcher — exact same
-    emissions as ``_lucene_sloppy_freq`` (property-tested equal in
-    tests/test_sloppy.py) without the queue machinery: for two
-    monotonically increasing iterators, end == max(pos_a, pos_b) at all
-    times, so the PQ loop collapses to a two-pointer merge. The lead
-    (smaller adjusted position; slot 0 on ties, PhraseQueue order)
-    advances through its run; a match is emitted at a STRICT crossing
-    (or at exhaustion) with matchLength = the run's closest approach to
-    the stationary pointer. ~10x less Python overhead per candidate doc
-    on the phrase hot path."""
-    A = a_raw.tolist() if hasattr(a_raw, "tolist") else list(a_raw)
-    B = [p - 1 for p in (b_raw.tolist() if hasattr(b_raw, "tolist") else b_raw)]
-    na, nb = len(A), len(B)
-    ia = ib = 0
-    pa, pb = A[0], B[0]
-    one = np.float32(1.0)
-    freq = np.float32(0.0)
-    while True:
-        if pa <= pb:  # lead = slot 0 (wins ties, PhraseQueue order)
-            ml = pb - pa
-            crossed = False
-            while ia + 1 < na:
-                ia += 1
-                pa = A[ia]
-                if pa > pb:
-                    crossed = True
-                    break
-                if pb - pa < ml:
-                    ml = pb - pa
-            if ml <= slop:
-                freq = np.float32(freq + one / (one + np.float32(ml)))
-            if not crossed:
-                return freq
-        else:  # lead = slot 1
-            ml = pa - pb
-            crossed = False
-            while ib + 1 < nb:
-                ib += 1
-                pb = B[ib]
-                if pb > pa:
-                    crossed = True
-                    break
-                if pa - pb < ml:
-                    ml = pa - pb
-            if ml <= slop:
-                freq = np.float32(freq + one / (one + np.float32(ml)))
-            if not crossed:
-                return freq
-
-
-def _sloppy2_flat_freqs(A: np.ndarray, B: np.ndarray, slop: int, n_cand: int) -> np.ndarray:
-    """Flat vectorized :func:`_sloppy_freq2` over every candidate at
-    once. The alternating run-crossing two-pointer emits exactly one
-    match per ADJACENT CROSS-LIST pair in the merged order of
-    (A-positions + 1) and B-positions, with A winning ties (the
-    PhraseQueue slot-0 tie rule) — so the whole PQ simulation collapses
-    to one merge-sort plus a boundary mask. matchLength = the adjacent
-    gap; emissions accumulate in merged (ascending) order, preserving
-    the reference's float32 add sequence. Fuzz-verified bit-equal to
-    _sloppy_freq2 (tests/test_sloppy.py)."""
-    freqs = np.zeros(n_cand, dtype=np.float32)
-    if not len(A) or not len(B):
-        return freqs
-    # adjusted A' = A + 1 (phrase offset: slot-1 expected at pos+1)
-    m = np.concatenate([((A + 1) << 1), (B << 1) | 1])
-    m.sort(kind="stable")
-    keys = m >> 1
-    tags = (m & 1).astype(np.int8)
-    if len(m) < 2:
-        return freqs
-    ci = keys >> 32
-    # tie pairs (same adjusted position, one from each list): the pair
-    # joins the CURRENTLY LEADING run — its order is (previous
-    # element's tag, other), defaulting to slot 0 at a run start
-    # (PhraseQueue pa <= pb tie rule). Resolved sequentially since a
-    # tie's outcome feeds the next tie's "previous tag".
-    tie_idx = np.nonzero((keys[1:] == keys[:-1]) & (ci[1:] == ci[:-1]))[0]
-    for i in tie_idx:
-        prev = tags[i - 1] if i > 0 and ci[i - 1] == ci[i] else 0
-        if prev == 1 and tags[i] == 0:  # b leads → b's element first
-            tags[i], tags[i + 1] = np.int8(1), np.int8(0)
-    boundary = (tags[1:] != tags[:-1]) & (ci[1:] == ci[:-1])
-    if not boundary.any():
-        return freqs
-    gaps = (keys[1:] - keys[:-1])[boundary]
-    bci = ci[1:][boundary]
-    ok = gaps <= slop
-    if not ok.any():
-        return freqs
-    contrib = np.float32(1.0) / (np.float32(1.0) + gaps[ok].astype(np.float32))
-    np.add.at(freqs, bci[ok].astype(np.int64), contrib)
-    return freqs
-
-
-def _sloppy_freq_exact(pos_lists: list, slop: int, terms: tuple | None = None) -> np.float32:
-    """Dispatch: tight 2-slot kernel for the dominant two-distinct-term
-    case, full reference PQ simulation otherwise."""
-    if len(pos_lists) == 2 and (terms is None or terms[0] != terms[1]):
-        return _sloppy_freq2(pos_lists[0], pos_lists[1], slop)
-    return _lucene_sloppy_freq(pos_lists, slop, terms=terms)
-
-
-# ---- lockstep vectorized n-slot positional kernels ---------------------------
+# ---- flat positional kernels ----------------------------------------------
 #
-# The per-candidate-doc Python loops (_lucene_sloppy_freq /
-# minimal_intervals) are exact but Python-bound: a 3-term sloppy phrase
-# whose rarest term is still hot runs one interpreter loop per candidate
-# doc. The kernels below run the SAME state machines for every candidate
-# doc simultaneously — one numpy pass advances one step of every active
-# doc — so the cost per step is O(active_docs) vectorized instead of
-# O(1) interpreted. Emissions accumulate per-doc in the same order as
-# the sequential algorithms (each doc's state advances through the
-# identical sequence), so float32 freq accumulation is bit-identical
-# (fuzz-verified in tests/test_sloppy.py / test_spannear.py).
+# Every positional semantic runs over FLAT composite keys (cand_index << 32
+# | position, one sorted array per slot) for every candidate doc at once:
+#
+# - minimal intervals: one producer per semantic behind _flat_intervals
+#   (ordered: mutual-nearest pairs for two slots, the greedy-chain +
+#   backward-stretch machine for more; unordered: the closed-form pair
+#   windows for two disjoint slots, the sliding-window machine
+#   otherwise), and one float32 accumulator, _interval_freqs, deriving
+#   every span-near and interval freq from them. Repeated terms and
+#   co-positioned stacked tokens run the same machines (their zero-width
+#   windows count as gaps 0), so span-near has no per-candidate path.
+# - sloppy phrases: one dispatcher, _sloppy_freqs, for phrases,
+#   multiphrases and the percolator.
+#
+# The n-slot machines run the per-doc state machines of the scalar
+# references (tests/positional_oracle.py) for all docs in lockstep — one
+# numpy pass advances one step of every active doc — so each doc emits
+# the same sequence and float32 accumulation is bit-identical
+# (fuzz-verified in tests/test_sloppy.py / test_spannear.py). Two cases
+# stay per candidate: sloppy phrases whose slots share a term (Lucene's
+# repeat groups, _lucene_sloppy_freq) and interval sources whose inputs
+# collide or fall outside the flat lowering (intervals.eval_source).
 
 _HI64 = np.int64((1 << 62))
 _LOW32 = np.int64((1 << 32) - 1)
+_I64_MAX = np.int64(np.iinfo(np.int64).max)
 
 
 def _flat_slots(key_arrays: list[np.ndarray], n_cand: int):
@@ -2281,14 +1808,257 @@ def _init_slot_state(slots, n_cand: int, offsets: bool = False):
 def _keys_collide(key_arrays: list[np.ndarray]) -> bool:
     """True when two slots share a (doc, position) composite key —
     possible only on stacked-token indexes (posInc-0 shingles/ngrams).
-    The flat minimal-interval kernels assume distinct positions across
-    slots (zero-width windows would need the tree evaluator's clamped
-    semantics), so colliding inputs fall back to the per-candidate
-    tree path."""
+    The interval tree evaluator's semantics differ from the flat
+    machines' on such inputs (intervals._unordered minimalizes emitted
+    windows), so colliding interval inputs take the per-candidate tree
+    path."""
     total = sum(len(k) for k in key_arrays)
     if total == 0:
         return False
     return len(np.unique(np.concatenate(key_arrays))) < total
+
+
+def _flat_intervals(
+    keys: list[np.ndarray], in_order: bool, cap, n_cand: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """Minimal intervals of n >= 2 slots (Intervals.ordered/unordered;
+    NearSpansOrdered.java:40 stretch-to-minimal) as flat composite-key
+    (start, end) arrays over every candidate doc at once, each doc's
+    intervals in ascending start order (docs may interleave). Keeps
+    the intervals with gaps = width - n <= cap (None = all)."""
+    if n_cand == 0 or any(not len(K) for K in keys):
+        return EMPTY_I, EMPTY_I
+    S, E = (_ordered_intervals if in_order else _unordered_intervals)(keys, n_cand)
+    if cap is not None and len(S):
+        keep = (E & _LOW32) - (S & _LOW32) + 1 - len(keys) <= cap
+        S, E = S[keep], E[keep]
+    return S, E
+
+
+def _ordered_intervals(keys: list[np.ndarray], n_cand: int) -> tuple[np.ndarray, np.ndarray]:
+    """Ordered minimal intervals: mutual-nearest pairs for two slots;
+    for more, lockstep rounds of the greedy forward chain (each next
+    slot strictly after the previous) plus the backward stretch to the
+    latest chain reaching the same end — one round emits one interval
+    per live doc, every chain step one composite-key searchsorted
+    across all docs."""
+    if len(keys) == 2:
+        return _mutual_pairs_flat(keys[0], keys[1])
+    n = len(keys)
+    K0 = keys[0]
+    seg_len0 = np.bincount(K0 >> np.int64(32), minlength=n_cand)
+    seg_start0 = np.concatenate([[0], np.cumsum(seg_len0)[:-1]]).astype(np.int64)
+    cur = K0[seg_start0[seg_len0 > 0]]  # each doc's current chain start
+    S_out: list[np.ndarray] = []
+    E_out: list[np.ndarray] = []
+    while len(cur):
+        prev = cur
+        okm = np.ones(len(cur), dtype=bool)
+        for j in range(1, n):
+            Kj = keys[j]
+            kk = np.searchsorted(Kj, prev, side="right")
+            v = kk < len(Kj)
+            kc = np.minimum(kk, len(Kj) - 1)
+            v &= (Kj[kc] >> 32) == (prev >> 32)
+            okm &= v
+            prev = np.where(okm, Kj[kc], prev)
+        cur, prev = cur[okm], prev[okm]
+        if not len(cur):
+            break
+        c = prev
+        for j in range(n - 2, -1, -1):
+            Kj = keys[j]
+            c = Kj[np.searchsorted(Kj, c, side="left") - 1]
+        S_out.append(c)
+        E_out.append(prev)
+        # next chain starts strictly past this one's start
+        kk = np.searchsorted(K0, c, side="right")
+        v = kk < len(K0)
+        kc = np.minimum(kk, len(K0) - 1)
+        v &= (K0[kc] >> 32) == (c >> 32)
+        cur = K0[kc[v]]
+    if not S_out:
+        return EMPTY_I, EMPTY_I
+    return np.concatenate(S_out), np.concatenate(E_out)
+
+
+def _mutual_pairs_flat(A: np.ndarray, B: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Ordered 2-slot minimal intervals over flat key arrays:
+    mutual-nearest (a, b) pairs — b is the first B-key after a, a is the
+    last A-key before b, both in the same doc (the scalar two-pointer is
+    tests/positional_oracle.py's _mutual_pairs_py). One searchsorted +
+    two masks; pairs come out in A order, so starts ascend."""
+    if not len(A) or not len(B):
+        return EMPTY_I, EMPTY_I
+    j = np.searchsorted(B, A, side="right")
+    valid = j < len(B)
+    jc = np.minimum(j, len(B) - 1)
+    valid &= (B[jc] >> 32) == (A >> 32)
+    Ai, Bj = A[valid], B[jc[valid]]
+    if not len(Ai):
+        return EMPTY_I, EMPTY_I
+    keep = np.ones(len(Bj), dtype=bool)
+    keep[:-1] = Bj[1:] != Bj[:-1]  # duplicate next-b → keep the LAST a
+    return Ai[keep], Bj[keep]
+
+
+def _unordered_intervals(keys: list[np.ndarray], n_cand: int) -> tuple[np.ndarray, np.ndarray]:
+    """Unordered minimal intervals. Two disjoint slots take the closed
+    form: A-started windows [a, first B >= a] kept iff the next A lies
+    beyond the window (else the later start yields a contained
+    interval), plus the symmetric B-started windows. Otherwise — more
+    slots, or two slots sharing a key (repeated terms, stacked tokens),
+    where the closed form differs — the sliding window over the merged
+    streams runs in lockstep: one numpy pass advances every live doc's
+    minimum, emitting a window when that grows the right edge or
+    exhausts its slot (ties advance the lowest slot)."""
+    if len(keys) == 2:
+        A, B = keys
+        ja = np.searchsorted(B, A)  # first B >= a
+        hiA = B[np.minimum(ja, len(B) - 1)]
+        if not (hiA == A).any():  # disjoint: >= and > coincide
+            va = (ja < len(B)) & ((hiA >> 32) == (A >> 32))
+            nxtA = np.empty(len(A), dtype=np.int64)
+            nxtA[:-1] = A[1:]
+            nxtA[-1] = _I64_MAX
+            va &= nxtA > hiA
+            jb = np.searchsorted(A, B)  # first A >= b
+            hiB = A[np.minimum(jb, len(A) - 1)]
+            vb = (jb < len(A)) & ((hiB >> 32) == (B >> 32))
+            nxtB = np.empty(len(B), dtype=np.int64)
+            nxtB[:-1] = B[1:]
+            nxtB[-1] = _I64_MAX
+            vb &= nxtB > hiB
+            S = np.concatenate([A[va], B[vb]])
+            E = np.concatenate([hiA[va], hiB[vb]])
+            order = np.argsort(S, kind="stable")
+            return S[order], E[order]
+    slots = _flat_slots(keys, n_cand)
+    pos, ptr, lim, active = _init_slot_state(slots, n_cand)
+    hi = pos.max(axis=1)
+    S_out: list[np.ndarray] = []
+    E_out: list[np.ndarray] = []
+    while True:
+        act = np.nonzero(active)[0]
+        if not len(act):
+            break
+        lo_slot = np.argmin(pos[act], axis=1).astype(np.int64)
+        lo = pos[act, lo_slot]
+        window_hi = hi[act]
+        exhausted = ptr[act, lo_slot] >= lim[act, lo_slot]
+        newpos = np.empty(len(act), dtype=np.int64)
+        for j, (P, _s, _ln) in enumerate(slots):
+            m = (lo_slot == j) & ~exhausted
+            if m.any():
+                newpos[m] = P[ptr[act[m], j]]
+        grow = ~exhausted & (newpos > window_hi)
+        em = np.nonzero(exhausted | grow)[0]
+        if len(em):
+            ci = act[em].astype(np.int64) << np.int64(32)
+            S_out.append(ci | lo[em])
+            E_out.append(ci | window_hi[em])
+        lv = np.nonzero(~exhausted)[0]
+        pos[act[lv], lo_slot[lv]] = newpos[lv]
+        ptr[act[lv], lo_slot[lv]] += 1
+        g = np.nonzero(grow)[0]
+        hi[act[g]] = newpos[g]
+        active[act[exhausted]] = False
+    if not S_out:
+        return EMPTY_I, EMPTY_I
+    return np.concatenate(S_out), np.concatenate(E_out)
+
+
+def _interval_freqs(S: np.ndarray, E: np.ndarray, covered, n_cand: int, cap=None) -> np.ndarray:
+    """float32 freq per candidate: Σ 1/(1 + max(gaps, 0)) over the
+    intervals, gaps = width - covered (an int, or one per interval),
+    keeping those with gaps <= cap (None = all). np.add.at adds in array
+    order, so each doc accumulates in its intervals' start order — the
+    float32 sequence of the per-doc evaluators (SpanScorer /
+    IntervalScorer sloppy freq)."""
+    freqs = np.zeros(n_cand, dtype=np.float32)
+    if not len(S):
+        return freqs
+    gaps = (E & _LOW32) - (S & _LOW32) + 1 - covered
+    if cap is not None:
+        keep = gaps <= cap
+        S, gaps = S[keep], gaps[keep]
+    one = np.float32(1.0)
+    np.add.at(freqs, S >> np.int64(32), one / (one + np.maximum(gaps, 0).astype(np.float32)))
+    return freqs
+
+
+def _sloppy_freqs(keys: list[np.ndarray], slop: int, n_cand: int, slot_terms) -> np.ndarray:
+    """Sloppy-phrase freqs (float32 per candidate) of the slots whose
+    flat keys are ``keys``; ``slot_terms`` holds each slot's terms.
+    Slots with no term in common run the reference priority-queue
+    matcher (SloppyPhraseMatcher.java:174-206, initSimple) vectorized
+    over every candidate: the 2-slot merge form or the n-slot lockstep.
+    Slots sharing a term need Lucene's repeat groups, which run per
+    candidate (:func:`_lucene_sloppy_freq`) over the keys split by
+    candidate."""
+    terms = [t for slot in slot_terms for t in slot]
+    if len(set(terms)) == len(terms):
+        if len(keys) == 2:
+            return _sloppy2_flat_freqs(keys[0], keys[1], slop, n_cand)
+        return _sloppy_flat_freqs_n(keys, slop, n_cand)
+    if all(len(slot) == 1 for slot in slot_terms):
+        groups = {"terms": tuple(terms)}  # single-term repeat groups
+    else:
+        groups = {"slot_terms": slot_terms}
+    bounds = np.arange(n_cand + 1, dtype=np.int64) << np.int64(32)
+    cuts = [np.searchsorted(K, bounds).tolist() for K in keys]
+    pos = [K & _LOW32 for K in keys]
+    freqs = np.zeros(n_cand, dtype=np.float32)
+    for ci in range(n_cand):
+        pl = [P[c[ci] : c[ci + 1]] for P, c in zip(pos, cuts)]
+        if all(len(p) for p in pl):
+            freqs[ci] = _lucene_sloppy_freq(pl, slop, **groups)
+    return freqs
+
+
+def _sloppy2_flat_freqs(A: np.ndarray, B: np.ndarray, slop: int, n_cand: int) -> np.ndarray:
+    """Flat vectorized 2-slot sloppy matcher over every candidate at
+    once. The alternating run-crossing two-pointer emits exactly one
+    match per ADJACENT CROSS-LIST pair in the merged order of
+    (A-positions + 1) and B-positions, with A winning ties (the
+    PhraseQueue slot-0 tie rule) — so the whole PQ simulation collapses
+    to one merge-sort plus a boundary mask. matchLength = the adjacent
+    gap; emissions accumulate in merged (ascending) order, preserving
+    the reference's float32 add sequence. Fuzz-verified bit-equal to
+    the per-doc 2-slot matcher (tests/test_sloppy.py, against
+    positional_oracle._sloppy_freq2)."""
+    freqs = np.zeros(n_cand, dtype=np.float32)
+    if not len(A) or not len(B):
+        return freqs
+    # adjusted A' = A + 1 (phrase offset: slot-1 expected at pos+1)
+    m = np.concatenate([((A + 1) << 1), (B << 1) | 1])
+    m.sort(kind="stable")
+    keys = m >> 1
+    tags = (m & 1).astype(np.int8)
+    if len(m) < 2:
+        return freqs
+    ci = keys >> 32
+    # tie pairs (same adjusted position, one from each list): the pair
+    # joins the CURRENTLY LEADING run — its order is (previous
+    # element's tag, other), defaulting to slot 0 at a run start
+    # (PhraseQueue pa <= pb tie rule). Resolved sequentially since a
+    # tie's outcome feeds the next tie's "previous tag".
+    tie_idx = np.nonzero((keys[1:] == keys[:-1]) & (ci[1:] == ci[:-1]))[0]
+    for i in tie_idx:
+        prev = tags[i - 1] if i > 0 and ci[i - 1] == ci[i] else 0
+        if prev == 1 and tags[i] == 0:  # b leads → b's element first
+            tags[i], tags[i + 1] = np.int8(1), np.int8(0)
+    boundary = (tags[1:] != tags[:-1]) & (ci[1:] == ci[:-1])
+    if not boundary.any():
+        return freqs
+    gaps = (keys[1:] - keys[:-1])[boundary]
+    bci = ci[1:][boundary]
+    ok = gaps <= slop
+    if not ok.any():
+        return freqs
+    contrib = np.float32(1.0) / (np.float32(1.0) + gaps[ok].astype(np.float32))
+    np.add.at(freqs, bci[ok].astype(np.int64), contrib)
+    return freqs
 
 
 def _sloppy_flat_freqs_n(key_arrays: list[np.ndarray], slop: int, n_cand: int) -> np.ndarray:
@@ -2367,302 +2137,6 @@ def _sloppy_flat_freqs_n(key_arrays: list[np.ndarray], slop: int, n_cand: int) -
     return freqs
 
 
-def _ordered_flat_freqs(
-    key_arrays: list[np.ndarray], cap, n_cand: int
-) -> np.ndarray:
-    """Lockstep-vectorized ordered minimal-interval freqs for n terms
-    (:func:`minimal_intervals` in_order=True, the NearSpansOrdered.java:40
-    greedy-chain + backward-stretch algorithm) over every candidate doc
-    at once. One round = one emitted interval per active doc; every
-    forward/backward chain step is a single composite-key searchsorted
-    across all docs. freq += 1/(1+gaps) per interval with gaps =
-    width - n <= cap (None = unbounded), float32 in start order."""
-    n = len(key_arrays)
-    freqs = np.zeros(n_cand, dtype=np.float32)
-    if n_cand == 0 or any(not len(K) for K in key_arrays):
-        return freqs
-    K0 = key_arrays[0]
-    ci0 = (K0 >> np.int64(32)).astype(np.int64)
-    seg_len0 = np.bincount(ci0, minlength=n_cand).astype(np.int64)
-    seg_start0 = np.concatenate([[0], np.cumsum(seg_len0)[:-1]]).astype(np.int64)
-    one = np.float32(1.0)
-    # cur = composite key of the current first-list chain start
-    docs_alive = np.nonzero(seg_len0 > 0)[0]
-    cur = K0[seg_start0[docs_alive]]
-    alive_ci = docs_alive.astype(np.int64)
-    while len(cur):
-        # forward greedy chain: first element of each later list > prev
-        prev = cur
-        okm = np.ones(len(cur), dtype=bool)
-        for j in range(1, n):
-            Kj = key_arrays[j]
-            kk = np.searchsorted(Kj, prev, side="right")
-            v = kk < len(Kj)
-            kc = np.minimum(kk, len(Kj) - 1)
-            v &= (Kj[kc] >> 32) == (prev >> 32)
-            okm &= v
-            prev = np.where(okm, Kj[kc], prev)
-        alive_ci, cur, prev = alive_ci[okm], cur[okm], prev[okm]
-        if not len(cur):
-            break
-        # backward stretch-to-minimal: latest chain reaching this end
-        c = prev
-        for j in range(n - 2, -1, -1):
-            Kj = key_arrays[j]
-            kk = np.searchsorted(Kj, c, side="left") - 1
-            c = Kj[kk]
-        # distinct terms occupy distinct positions, so width >= n and
-        # gaps >= 0 (callers dispatch here only for distinct-term slots)
-        gaps = (prev & _LOW32) - (c & _LOW32) + 1 - n
-        ok = gaps <= cap if cap is not None else np.ones(len(gaps), dtype=bool)
-        e = alive_ci[ok]
-        freqs[e] += one / (one + gaps[ok].astype(np.float32))
-        # advance i0 strictly past this chain's start
-        kk = np.searchsorted(K0, c, side="right")
-        v = kk < len(K0)
-        kc = np.minimum(kk, len(K0) - 1)
-        v &= (K0[kc] >> 32) == (c >> 32)
-        alive_ci, cur = alive_ci[v], K0[kc[v]]
-    return freqs
-
-
-def _ordered_flat_intervals(
-    key_arrays: list[np.ndarray], cap, n_cand: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Ordered minimal intervals as flat composite-key (start, end)
-    arrays, per-doc ascending — the interval-collecting twin of
-    :func:`_ordered_flat_freqs` (same chains, same order), for filtered
-    combinators that post-process the interval set."""
-    if n_cand == 0 or any(not len(K) for K in key_arrays):
-        return EMPTY_I, EMPTY_I
-    if len(key_arrays) == 2:
-        return _two_term_flat_intervals(key_arrays[0], key_arrays[1], True, cap)
-    return _ordered_flat_intervals_nary(key_arrays, cap, n_cand)
-
-
-def _ordered_flat_intervals_nary(
-    key_arrays: list[np.ndarray], cap, n_cand: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """The n-ary lazy-advance machine (kept directly callable for the
-    pair-kernel equivalence tests)."""
-    n = len(key_arrays)
-    S_out: list[np.ndarray] = []
-    E_out: list[np.ndarray] = []
-    if n_cand == 0 or any(not len(K) for K in key_arrays):
-        return EMPTY_I, EMPTY_I
-    K0 = key_arrays[0]
-    ci0 = (K0 >> np.int64(32)).astype(np.int64)
-    seg_len0 = np.bincount(ci0, minlength=n_cand).astype(np.int64)
-    seg_start0 = np.concatenate([[0], np.cumsum(seg_len0)[:-1]]).astype(np.int64)
-    docs_alive = np.nonzero(seg_len0 > 0)[0]
-    cur = K0[seg_start0[docs_alive]]
-    while len(cur):
-        prev = cur
-        okm = np.ones(len(cur), dtype=bool)
-        for j in range(1, n):
-            Kj = key_arrays[j]
-            kk = np.searchsorted(Kj, prev, side="right")
-            v = kk < len(Kj)
-            kc = np.minimum(kk, len(Kj) - 1)
-            v &= (Kj[kc] >> 32) == (prev >> 32)
-            okm &= v
-            prev = np.where(okm, Kj[kc], prev)
-        cur, prev = cur[okm], prev[okm]
-        if not len(cur):
-            break
-        c = prev
-        for j in range(n - 2, -1, -1):
-            Kj = key_arrays[j]
-            c = Kj[np.searchsorted(Kj, c, side="left") - 1]
-        gaps = (prev & _LOW32) - (c & _LOW32) + 1 - n
-        ok = gaps <= cap if cap is not None else np.ones(len(gaps), dtype=bool)
-        S_out.append(c[ok])
-        E_out.append(prev[ok])
-        kk = np.searchsorted(K0, c, side="right")
-        v = kk < len(K0)
-        kc = np.minimum(kk, len(K0) - 1)
-        v &= (K0[kc] >> 32) == (c >> 32)
-        cur = K0[kc[v]]
-    if not S_out:
-        return EMPTY_I, EMPTY_I
-    S = np.concatenate(S_out)
-    E = np.concatenate(E_out)
-    order = np.argsort(S, kind="stable")  # per-doc ascending (rounds interleave docs)
-    return S[order], E[order]
-
-
-_I64_MAX = np.int64(np.iinfo(np.int64).max)
-
-
-def _two_term_flat_intervals(
-    A: np.ndarray, B: np.ndarray, in_order: bool, cap
-) -> tuple[np.ndarray, np.ndarray]:
-    """Closed-form minimal intervals for TWO disjoint sorted key
-    streams (the dominant pair shape) — no lockstep loop, a handful of
-    searchsorted passes. Emits exactly the n-ary machines' set:
-
-    ordered: mutual-nearest crossings (c, b) with c = last A < b and
-    b = first B > c (the lazy-advance rounds of
-    :func:`_ordered_flat_intervals`).
-
-    unordered: A-started windows [a, firstB>=a] kept iff the next A
-    lies beyond the window (else the later start yields a contained
-    interval), plus the symmetric B-started windows — the emissions of
-    :func:`_unordered_flat_intervals`'s sliding window. Streams are
-    collision-checked upstream (A ∩ B = ∅), so >= and > coincide."""
-    if not len(A) or not len(B):
-        return EMPTY_I, EMPTY_I
-    if in_order:
-        i = np.searchsorted(A, B) - 1  # last A < b (disjoint: < == <=)
-        vb = i >= 0
-        c = A[np.maximum(i, 0)]
-        vb &= (c >> 32) == (B >> 32)
-        # b must be the FIRST B after c — later Bs over the same c
-        # would properly contain the first crossing
-        vb &= np.searchsorted(B, c, side="right") == np.arange(len(B))
-        S, E = c[vb], B[vb]
-        # starts strictly increase with b: already per-doc ascending
-    else:
-        ja = np.searchsorted(B, A)  # first B >= a
-        va = ja < len(B)
-        hiA = B[np.minimum(ja, len(B) - 1)]
-        va &= (hiA >> 32) == (A >> 32)
-        nxtA = np.empty(len(A), dtype=np.int64)
-        nxtA[:-1] = A[1:]
-        nxtA[-1] = _I64_MAX
-        va &= nxtA > hiA
-        jb = np.searchsorted(A, B)  # first A >= b
-        vb = jb < len(A)
-        hiB = A[np.minimum(jb, len(A) - 1)]
-        vb &= (hiB >> 32) == (B >> 32)
-        nxtB = np.empty(len(B), dtype=np.int64)
-        nxtB[:-1] = B[1:]
-        nxtB[-1] = _I64_MAX
-        vb &= nxtB > hiB
-        S = np.concatenate([A[va], B[vb]])
-        E = np.concatenate([hiA[va], hiB[vb]])
-        order = np.argsort(S, kind="stable")
-        S, E = S[order], E[order]
-    if cap is not None and len(S):
-        keep = (E & _LOW32) - (S & _LOW32) - 1 <= cap  # gaps = width - 2
-        S, E = S[keep], E[keep]
-    return S, E
-
-
-def _unordered_flat_intervals(
-    key_arrays: list[np.ndarray], cap, n_cand: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """Unordered minimal intervals as flat composite-key (start, end)
-    arrays, per-doc ascending — the collecting twin of
-    :func:`_unordered_flat_freqs`. Two streams dispatch to the
-    closed-form pair kernel; n >= 3 runs the lockstep machine
-    (:func:`_unordered_flat_intervals_nary`)."""
-    if n_cand == 0 or any(not len(K) for K in key_arrays):
-        return EMPTY_I, EMPTY_I
-    if len(key_arrays) == 2:
-        return _two_term_flat_intervals(key_arrays[0], key_arrays[1], False, cap)
-    return _unordered_flat_intervals_nary(key_arrays, cap, n_cand)
-
-
-def _unordered_flat_intervals_nary(
-    key_arrays: list[np.ndarray], cap, n_cand: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """The n-ary sliding-window machine (kept directly callable — the
-    pair-kernel equivalence tests run it at n == 2 against the closed
-    form)."""
-    n = len(key_arrays)
-    if n_cand == 0 or any(not len(K) for K in key_arrays):
-        return EMPTY_I, EMPTY_I
-    slots = _flat_slots(key_arrays, n_cand)
-    pos, ptr, lim, ok_docs = _init_slot_state(slots, n_cand)
-    hi = pos.max(axis=1)
-    active = ok_docs
-    S_out: list[np.ndarray] = []
-    E_out: list[np.ndarray] = []
-    while True:
-        act = np.nonzero(active)[0]
-        if not len(act):
-            break
-        lo_slot = np.argmin(pos[act], axis=1).astype(np.int64)
-        lo = pos[act, lo_slot]
-        window_hi = hi[act]
-        exhausted = ptr[act, lo_slot] >= lim[act, lo_slot]
-        newpos = np.empty(len(act), dtype=np.int64)
-        for j, (P, _s, _ln) in enumerate(slots):
-            m = (lo_slot == j) & ~exhausted
-            if m.any():
-                newpos[m] = P[ptr[act[m], j]]
-        grow = ~exhausted & (newpos > window_hi)
-        emit = exhausted | grow
-        em = np.nonzero(emit)[0]
-        if len(em):
-            gaps = window_hi[em] - lo[em] + 1 - n
-            ok = gaps <= cap if cap is not None else np.ones(len(gaps), dtype=bool)
-            ci = act[em[ok]].astype(np.int64)
-            S_out.append((ci << np.int64(32)) | lo[em][ok])
-            E_out.append((ci << np.int64(32)) | window_hi[em][ok])
-        lv = np.nonzero(~exhausted)[0]
-        pos[act[lv], lo_slot[lv]] = newpos[lv]
-        ptr[act[lv], lo_slot[lv]] += 1
-        g = np.nonzero(grow)[0]
-        hi[act[g]] = newpos[g]
-        active[act[exhausted]] = False
-    if not S_out:
-        return EMPTY_I, EMPTY_I
-    S = np.concatenate(S_out)
-    E = np.concatenate(E_out)
-    order = np.argsort(S, kind="stable")
-    return S[order], E[order]
-
-
-def _unordered_flat_freqs(
-    key_arrays: list[np.ndarray], cap, n_cand: int
-) -> np.ndarray:
-    """Lockstep-vectorized unordered minimal-interval freqs
-    (:func:`minimal_intervals` in_order=False: sliding window over the
-    merged streams, emitting when advancing the minimum grows the right
-    edge or exhausts its list). One numpy iteration = one window advance
-    per active doc."""
-    n = len(key_arrays)
-    freqs = np.zeros(n_cand, dtype=np.float32)
-    if n_cand == 0 or any(not len(K) for K in key_arrays):
-        return freqs
-    slots = _flat_slots(key_arrays, n_cand)
-    pos, ptr, lim, ok_docs = _init_slot_state(slots, n_cand)
-    hi = pos.max(axis=1)
-    one = np.float32(1.0)
-    active = ok_docs
-    while True:
-        act = np.nonzero(active)[0]
-        if not len(act):
-            break
-        lo_slot = np.argmin(pos[act], axis=1).astype(np.int64)  # ties → lowest slot
-        lo = pos[act, lo_slot]
-        window_hi = hi[act]
-        exhausted = ptr[act, lo_slot] >= lim[act, lo_slot]
-        # emission set: exhausted docs always emit; live docs emit when
-        # the advanced value grows the right edge
-        newpos = np.empty(len(act), dtype=np.int64)
-        for j, (P, _s, _ln) in enumerate(slots):
-            m = (lo_slot == j) & ~exhausted
-            if m.any():
-                newpos[m] = P[ptr[act[m], j]]
-        grow = ~exhausted & (newpos > window_hi)
-        emit = exhausted | grow
-        em = np.nonzero(emit)[0]
-        if len(em):
-            gaps = window_hi[em] - lo[em] + 1 - n
-            ok = gaps <= cap if cap is not None else np.ones(len(gaps), dtype=bool)
-            e = act[em[ok]]
-            freqs[e] += one / (one + gaps[ok].astype(np.float32))
-        live = ~exhausted
-        lv = np.nonzero(live)[0]
-        pos[act[lv], lo_slot[lv]] = newpos[lv]
-        ptr[act[lv], lo_slot[lv]] += 1
-        g = np.nonzero(grow)[0]
-        hi[act[g]] = newpos[g]
-        active[act[exhausted]] = False
-    return freqs
 
 
 def _evaluate_bool(spec: BoolSpec, ctx: ChunkContext) -> tuple[np.ndarray, np.ndarray]:

@@ -20,8 +20,8 @@ it. Two stages, exactly as the reference:
    (document, query) pairs are re-checked with the full matcher over
    the document's token stream, Arrow-batched via mapInPandas (the
    per-segment in-memory index the reference builds per doc batch).
-   Sloppy phrases reuse the engine's exact reference kernel
-   (kernels._sloppy_freq_exact).
+   Sloppy phrases reuse the engine's sloppy-phrase dispatcher
+   (kernels._sloppy_freqs) on the document as its one candidate.
 
 Scale: the registered query set is the SMALL side (broadcast); the
 document stream is the big side and is touched once — tokenize +
@@ -38,7 +38,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from lucene_spark.analysis.tokenizer import tokenize
+from lucene_spark.analysis.tokenizer import tokenize_with_positions
 from lucene_spark.search import ast as A
 from lucene_spark.search.parser import parse_query
 
@@ -96,8 +96,10 @@ def trigger_terms(q: A.Query) -> set[str] | None:
     return None  # MatchAll, multi-term expansions, field queries, ...
 
 
-def _matches(q: A.Query, toks: list[str], tset: set[str]) -> bool:
-    """Full matcher over one doc's token stream (binary; no scoring)."""
+def _matches(q: A.Query, toks: list[tuple[str, int]], tset: set[str]) -> bool:
+    """Full matcher over one doc's (token, position) stream (binary; no
+    scoring). Positions are the index's: a dropped over-length token
+    still consumes one."""
     if isinstance(q, A.TermQuery):
         return q.term in tset
     if isinstance(q, A.MatchAllDocsQuery):
@@ -139,16 +141,18 @@ def _matches(q: A.Query, toks: list[str], tset: set[str]) -> bool:
     if isinstance(q, A.PhraseQuery):
         if any(t not in tset for t in q.terms):
             return False
-        pos = {t: [i for i, tok in enumerate(toks) if tok == t] for t in set(q.terms)}
+        pos = {t: [p for tok, p in toks if tok == t] for t in set(q.terms)}
         if q.slop == 0:
             later = [set(pos[t]) for t in q.terms[1:]]
             return any(
                 all((p + i + 1) in s for i, s in enumerate(later)) for p in pos[q.terms[0]]
             )
-        from lucene_spark.search.kernels import _sloppy_freq_exact
+        from lucene_spark.search.kernels import _sloppy_freqs
 
-        plists = [np.asarray(pos[t], dtype=np.int64) for t in q.terms]
-        return float(_sloppy_freq_exact(plists, q.slop, terms=q.terms)) > 0.0
+        # one candidate (index 0), so each flat key is the bare position
+        keys = [np.asarray(pos[t], dtype=np.int64) for t in q.terms]
+        slots = tuple((t,) for t in q.terms)
+        return float(_sloppy_freqs(keys, q.slop, 1, slots)[0]) > 0.0
     if isinstance(q, A.BooleanQuery):
         should_hits = 0
         has_should = False
@@ -205,8 +209,9 @@ class QueryMonitor:
             for pdf in batches:
                 rows_doc, rows_q = [], []
                 for did, text in zip(pdf[id_col], pdf[text_col]):
-                    toks = tokenize(text or "")
-                    tset = set(toks)
+                    words, positions = tokenize_with_positions(text or "")
+                    toks = list(zip(words, positions))
+                    tset = set(words)
                     cand: set[str] = set(scan_all)
                     for t in tset:
                         cand.update(trig_map.get(t, ()))

@@ -205,9 +205,12 @@ class TestEvalVsBrute:
         assert got == [(3, 3, 1)]
 
     def test_two_term_fast_kernel_equals_generic(self):
-        # the kernels' two-pointer fast path must emit exactly the
-        # generic evaluator's minimal intervals for both orders
-        from lucene_spark.search.kernels import _two_term_minimal
+        # the scalar two-pointer pair reference and the engine's flat
+        # producer must emit exactly the generic evaluator's minimal
+        # intervals for both orders
+        from positional_oracle import _two_term_minimal
+
+        from lucene_spark.search.kernels import _flat_intervals
 
         rng = np.random.default_rng(5)
         for _ in range(300):
@@ -227,6 +230,8 @@ class TestEvalVsBrute:
                 want = [(s, e) for s, e, _c in eval_source(src, pos_of)]
                 got = _two_term_minimal(list(a), list(b), ordered)
                 assert got == want, (ordered, a, b, got, want)
+                S, E = _flat_intervals([a, b], ordered, None, 1)  # one doc: key = position
+                assert list(zip(S.tolist(), E.tolist())) == want, (ordered, a, b)
 
     def test_terms_of(self):
         src = IContaining(IOrdered((ITerm("a"), ITerm("b"))), IOr((ITerm("c"), ITerm("a"))))
@@ -347,11 +352,9 @@ class TestFilteredFastPath:
             eval_source,
         )
         from lucene_spark.search.kernels import (
-            _LOW32,
             _fast_filtered_shape,
-            _filtered_interval_keep,
-            _ordered_flat_intervals,
-            _unordered_flat_intervals,
+            _interval_flat,
+            _interval_freqs,
         )
 
         one = np.float32(1.0)
@@ -364,9 +367,7 @@ class TestFilteredFastPath:
             return float(f)
 
         def fast_freqs(src, docs):
-            ff = _fast_filtered_shape(src)
-            assert ff is not None, src
-            (slots, in_order, cap), kind, rterm, pre, post = ff
+            assert _fast_filtered_shape(src) is not None, src
             n_docs = len(docs)
 
             def keys_of(t):
@@ -382,38 +383,10 @@ class TestFilteredFastPath:
                     return np.empty(0, dtype=np.int64)
                 return ks[0] if len(ks) == 1 else np.unique(np.concatenate(ks))
 
-            keys = [slot_keys(s) for s in slots]
-            if len(slots) == 1:
-                S = E = keys[0]
-                covered = 1
-            else:
-                coll = _ordered_flat_intervals if in_order else _unordered_flat_intervals
-                S, E = coll(keys, cap, n_docs)
-                covered = len(slots)
-            if len(S):
-                if kind == "endingwithin":
-                    keep = ((E & _LOW32) + 1) <= pre
-                elif rterm[0] == "pairs":
-                    rslots, r_order, r_cap = rterm[1]
-                    rkeys = [slot_keys(s) for s in rslots]
-                    rcoll = _ordered_flat_intervals if r_order else _unordered_flat_intervals
-                    Sr, Er = rcoll(rkeys, r_cap, n_docs)
-                    exists = np.zeros(len(S), dtype=bool)
-                    if len(Sr):
-                        pref = np.maximum.accumulate(Er)
-                        idx = np.searchsorted(Sr, S, side="right") - 1
-                        valid = idx >= 0
-                        exists[valid] = pref[idx[valid]] >= E[valid]
-                    keep = exists if kind == "containedby" else ~exists
-                else:
-                    keep = _filtered_interval_keep(S, E, keys_of(rterm[1]), kind, pre, post)
-                S, E = S[keep], E[keep]
-            freqs = np.zeros(n_docs, dtype=np.float32)
-            if len(S):
-                gaps = np.maximum((E & _LOW32) - (S & _LOW32) + 1 - covered, 0)
-                contrib = np.float32(1.0) / (np.float32(1.0) + gaps.astype(np.float32))
-                np.add.at(freqs, (S >> np.int64(32)).astype(np.int64), contrib)
-            return freqs
+            flat = _interval_flat(src, slot_keys, keys_of, n_docs)
+            assert flat is not None, src
+            S, E, covered, cap = flat
+            return _interval_freqs(S, E, covered, n_docs, cap)
 
         rng = random.Random(77)
         for trial in range(250):
@@ -448,6 +421,10 @@ class TestFilteredFastPath:
                     IEndingWithin(p, rng.randint(1, 20)),
                     IContainedBy(p, IMaxGaps(slop + 2, IOrdered((ITerm("b"), ITerm("c"))))),
                     INotContainedBy(p, IMaxGaps(slop + 2, IUnordered((ITerm("b"), ITerm("c"))))),
+                    # 3-slot big: the n-ary machine's starts interleave docs
+                    IContainedBy(
+                        p, IMaxGaps(slop + 4, IOrdered((ITerm("a"), ITerm("b"), ITerm("c"))))
+                    ),
                 ]
                 for src in shapes:
                     got = fast_freqs(src, docs)
@@ -478,8 +455,8 @@ class TestOrSlotFastPath:
         )
         from lucene_spark.search.kernels import (
             _fast_nterm_shape,
-            _ordered_flat_freqs,
-            _unordered_flat_freqs,
+            _flat_intervals,
+            _interval_freqs,
         )
 
         one = np.float32(1.0)
@@ -521,8 +498,8 @@ class TestOrSlotFastPath:
                 for s in slots:
                     ks = [keys_of(t) for t in s]
                     keys.append(ks[0] if len(ks) == 1 else np.unique(np.concatenate(ks)))
-                kern = _ordered_flat_freqs if in_order else _unordered_flat_freqs
-                got = kern(keys, cap, n_docs)
+                S, E = _flat_intervals(keys, in_order, cap, n_docs)
+                got = _interval_freqs(S, E, len(keys), n_docs)
                 want = np.zeros(n_docs, dtype=np.float32)
                 for ci, d in enumerate(docs):
                     f = np.float32(0.0)
@@ -536,7 +513,7 @@ class TestOrSlotFastPath:
 class TestOrFastPath:
     """or(...) whose branches are fast shapes / terms / term-unions —
     the Intervals.or and fn:atLeast rewrite family — routes through
-    _or_flat_freqs (vectorized union-minimalize) and must be
+    _or_intervals (vectorized union-minimalize) and must be
     freq-identical to the per-doc tree evaluator, including duplicate
     spans across branches (atLeast shares every term pairwise),
     same-start containment, and an outer maxgaps."""
@@ -556,10 +533,8 @@ class TestOrFastPath:
         )
         from lucene_spark.search.kernels import (
             _fast_or_shape,
-            _filtered_intervals_from_keys,
-            _or_flat_freqs,
-            _ordered_flat_intervals,
-            _unordered_flat_intervals,
+            _interval_flat,
+            _interval_freqs,
         )
 
         one = np.float32(1.0)
@@ -572,9 +547,7 @@ class TestOrFastPath:
             return float(f)
 
         def fast_freqs(src, docs):
-            orr = _fast_or_shape(src)
-            assert orr is not None, src
-            branches, outer_cap = orr
+            assert _fast_or_shape(src) is not None, src
             n_docs = len(docs)
 
             def keys_of(t):
@@ -590,23 +563,10 @@ class TestOrFastPath:
                     return np.empty(0, dtype=np.int64)
                 return ks[0] if len(ks) == 1 else np.unique(np.concatenate(ks))
 
-            branch_ivs = []
-            for tag, descr in branches:
-                if tag == "filtered":
-                    res = _filtered_intervals_from_keys(descr, slot_keys, keys_of, n_docs)
-                    assert res is not None
-                    branch_ivs.append(res)
-                    continue
-                slots, in_order, cap = descr
-                keys = [slot_keys(s) for s in slots]
-                if len(slots) == 1:
-                    K = keys[0]
-                    branch_ivs.append((K, K, 1))
-                else:
-                    coll = _ordered_flat_intervals if in_order else _unordered_flat_intervals
-                    S, E = coll(keys, cap, n_docs)
-                    branch_ivs.append((S, E, len(slots)))
-            return _or_flat_freqs(branch_ivs, outer_cap, n_docs)
+            flat = _interval_flat(src, slot_keys, keys_of, n_docs)
+            assert flat is not None, src
+            S, E, covered, cap = flat
+            return _interval_freqs(S, E, covered, n_docs, cap)
 
         rng = random.Random(99)
         for trial in range(300):

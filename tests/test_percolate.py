@@ -26,11 +26,14 @@ QUERIES: dict[str, A.Query] = {
     ),
     "q_phrase": A.PhraseQuery(("return", "if")),
     "q_sloppy": A.PhraseQuery(("return", "if"), slop=2),
+    "q_sloppy_rep": A.PhraseQuery(("return", "return"), slop=3),
+    "q_sloppy3": A.PhraseQuery(("return", "if", "int"), slop=4),
     "q_prefix": A.PrefixQuery("ret"),
     "q_all": A.MatchAllDocsQuery(),
     "q_synonym": A.SynonymQuery(("int", "class")),
     "q_dismax": A.DisjunctionMaxQuery((A.TermQuery("int"), A.TermQuery("class")), 0.3),
 }
+SLOPPY = {"q_sloppy", "q_sloppy_rep", "q_sloppy3"}
 
 
 @pytest.fixture(scope="module")
@@ -48,7 +51,7 @@ def percolated(spark, corpus_pdf):
 
 
 class TestPercolate:
-    @pytest.mark.parametrize("qid", sorted(set(QUERIES) - {"q_sloppy"}))
+    @pytest.mark.parametrize("qid", sorted(set(QUERIES) - SLOPPY))
     def test_match_set_equals_oracle(self, percolated, oracle, qid):
         want = set(oracle.score(A.rewrite(QUERIES[qid])))
         assert percolated[qid] == want, qid
@@ -59,8 +62,11 @@ class TestPercolate:
         percolator's tokenize-per-doc path)."""
         from lucene_spark.search.engine import Searcher
 
-        td = Searcher(search_index).search(QUERIES["q_sloppy"], k=10**6)
-        assert percolated["q_sloppy"] == {d for d, _ in td.hits}
+        s = Searcher(search_index)
+        for qid in sorted(SLOPPY):  # 2-term, repeated-term, 3-term
+            td = s.search(QUERIES[qid], k=10**6)
+            assert td.hits, qid
+            assert percolated[qid] == {d for d, _ in td.hits}, qid
 
     def test_triggers_sound(self):
         assert trigger_terms(A.TermQuery("x")) == {"x"}

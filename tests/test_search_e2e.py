@@ -24,6 +24,34 @@ def query_set(corpus_pdf):
     return make_queries(corpus_pdf, n_per_band=2)
 
 
+@pytest.fixture(scope="module")
+def nopos_index(spark, tmp_path_factory):
+    """600 docs cycling four short texts (exact-score ties across doc
+    ids), indexed WITHOUT positions."""
+    import shutil
+
+    import pandas as pd
+
+    from lucene_spark.index.builder import IndexBuilder, IndexConfig
+
+    texts = [
+        "alpha beta gamma delta",
+        "alpha epsilon zeta eta",
+        "beta theta iota kappa",
+        "alpha beta lam mu",
+    ]
+    rows = []
+    for i in range(600):
+        rows.append((i, "r", f"p{i}", "c", "en", texts[i % 4]))
+    pdf = pd.DataFrame(rows, columns=["doc_id", "repo", "path", "commit", "lang", "content"])
+    d = str(tmp_path_factory.mktemp("wandtie"))
+    IndexBuilder(
+        spark, IndexConfig(docs_per_chunk=128, term_buckets=2, positions=False)
+    ).build(spark.createDataFrame(pdf), d, assign_ids=False)
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
+
+
 def assert_rank_identical(engine_hits, oracle_hits, msg=""):
     assert len(engine_hits) == len(oracle_hits), f"{msg}: sizes {len(engine_hits)} vs {len(oracle_hits)}"
     for i, ((ed, es), (od, os_)) in enumerate(zip(engine_hits, oracle_hits)):
@@ -130,36 +158,17 @@ class TestWand:
         assert_rank_identical(wand_hits, exh.hits, f"wand-vs-exhaustive k={k}")
         assert_rank_identical(wand_hits, oracle.top_k(q, k), f"wand-vs-oracle k={k}")
 
-    def test_tie_heavy_trimmed_wand_equals_exhaustive(self, spark, tmp_path_factory):
+    def test_tie_heavy_trimmed_wand_equals_exhaustive(self, spark, nopos_index):
         """Exact-score ties across doc ids (duplicated docs) + heap
         trims + low threshold: WAND must keep the exhaustive doc-asc
         tie-break (prune strictly BELOW kth — interval order is not
         doc order, so nextUp pruning could drop an equal-scoring
         smaller id) and hits_seen must never double-count docs
         re-pulled after a trim."""
-        import shutil
-
-        import pandas as pd
-
-        from lucene_spark.index.builder import IndexBuilder, IndexConfig
         from lucene_spark.index.reader import SearchIndex
         from lucene_spark.search.engine import Searcher as S
 
-        texts = [
-            "alpha beta gamma delta",
-            "alpha epsilon zeta eta",
-            "beta theta iota kappa",
-            "alpha beta lam mu",
-        ]
-        rows = []
-        for i in range(600):
-            rows.append((i, "r", f"p{i}", "c", "en", texts[i % 4]))
-        pdf = pd.DataFrame(rows, columns=["doc_id", "repo", "path", "commit", "lang", "content"])
-        d = str(tmp_path_factory.mktemp("wandtie"))
-        IndexBuilder(
-            spark, IndexConfig(docs_per_chunk=128, term_buckets=2, positions=False)
-        ).build(spark.createDataFrame(pdf), d, assign_ids=False)
-        s = S(SearchIndex(spark, d), total_hits_threshold=10)
+        s = S(SearchIndex(spark, nopos_index), total_hits_threshold=10)
         q = A.BooleanQuery(
             ((A.Occur.SHOULD, A.TermQuery("alpha")), (A.Occur.SHOULD, A.TermQuery("beta")))
         )
@@ -172,7 +181,6 @@ class TestWand:
                 assert td.total_hits == exh.total_hits, f"k={k}"
             else:
                 assert td.total_hits <= exh.total_hits, f"k={k}"
-        shutil.rmtree(d, ignore_errors=True)
 
     def test_pruning_engages(self, searcher):
         td = searcher.search(parse_query("return OR if"), k=3)
@@ -187,6 +195,26 @@ class TestWand:
         td = s.search(q, k=5)
         assert td.relation == "EQUAL_TO"
         assert_rank_identical(td.hits, oracle.top_k(q, 5), "no-prune")
+
+
+class TestMissingPositions:
+    def test_positional_queries_raise_without_positions(self, spark, nopos_index):
+        """On an index built without positions, every positional query
+        over co-occurring terms fails loudly: a missing position stream
+        must not read as "no match"."""
+        from lucene_spark.index.reader import SearchIndex
+        from lucene_spark.search.intervals import IOrdered, ITerm
+
+        s = Searcher(SearchIndex(spark, nopos_index))
+        queries = [
+            A.PhraseQuery(("alpha", "beta")),
+            A.PhraseQuery(("alpha", "beta"), slop=2),
+            A.SpanNearQuery(("alpha", "beta"), slop=2),
+            A.IntervalQuery(IOrdered((ITerm("alpha"), ITerm("beta")))),
+        ]
+        for q in queries:
+            with pytest.raises(ValueError, match="no positions"):
+                s.search(q, k=10)
 
 
 class TestDistributed:

@@ -249,8 +249,11 @@ class TestFreq2Equivalence:
 
         import numpy as np
 
-        from lucene_spark.search.kernels import _lucene_sloppy_freq, _sloppy_freq2
+        from positional_oracle import _sloppy_freq2
 
+        from lucene_spark.search.kernels import _lucene_sloppy_freq, _sloppy_freqs
+
+        slots = (("x",), ("y",))
         for na in range(1, 4):
             for nb in range(1, 4):
                 for A in itertools.combinations(range(6), na):
@@ -261,13 +264,20 @@ class TestFreq2Equivalence:
                             )
                             got = float(_sloppy_freq2(np.array(A), np.array(B), slop))
                             assert ref == got, (A, B, slop, ref, got)
+                            # the engine's dispatcher (flat 2-slot form),
+                            # one candidate: keys are bare positions
+                            keys = [np.array(A, dtype=np.int64), np.array(B, dtype=np.int64)]
+                            flat = float(_sloppy_freqs(keys, slop, 1, slots)[0])
+                            assert ref == flat, (A, B, slop, ref, flat)
 
     def test_randomized(self):
         import random
 
         import numpy as np
 
-        from lucene_spark.search.kernels import _lucene_sloppy_freq, _sloppy_freq2
+        from positional_oracle import _sloppy_freq2
+
+        from lucene_spark.search.kernels import _lucene_sloppy_freq, _sloppy_freqs
 
         rng = random.Random(7)
         for _ in range(3000):
@@ -278,6 +288,9 @@ class TestFreq2Equivalence:
             ref = float(_lucene_sloppy_freq([np.array(A), np.array(B)], slop, terms=("x", "y")))
             got = float(_sloppy_freq2(np.array(A), np.array(B), slop))
             assert ref == got, (A, B, slop, ref, got)
+            keys = [np.array(A, dtype=np.int64), np.array(B, dtype=np.int64)]
+            flat = float(_sloppy_freqs(keys, slop, 1, (("x",), ("y",)))[0])
+            assert ref == flat, (A, B, slop, ref, flat)
 
 
 class TestTwoTermChainClosedForm:
@@ -322,26 +335,45 @@ class TestTwoTermChainClosedForm:
 
 
 class TestLockstepNSlotEquivalence:
-    """The lockstep-vectorized n-slot kernels must be bit-equal (same
-    emissions, same float32 accumulation order) to the per-candidate
-    reference simulations they replace: _sloppy_flat_freqs_n vs
-    _lucene_sloppy_freq (distinct terms), _ordered_flat_freqs /
-    _unordered_flat_freqs vs minimal_intervals-based accumulation AND
-    vs the interval tree evaluator (eval_source) over the same shapes."""
+    """The flat positional kernels must be bit-equal (same emissions,
+    same float32 accumulation order) to the per-candidate reference
+    simulations they replace: _sloppy_flat_freqs_n and the _sloppy_freqs
+    dispatcher vs _lucene_sloppy_freq, and _flat_intervals +
+    _interval_freqs vs minimal_intervals-based accumulation (incl.
+    repeated-term slots and shared positions) AND vs the interval tree
+    evaluator (eval_source) over distinct-slot shapes."""
 
     @staticmethod
-    def _make_docs(rng, n_slots, n_docs, max_pos=40, max_len=8):
+    def _make_docs(rng, n_slots, n_docs, max_pos=40, max_len=8, repeat=None, shared=False):
+        """Per-doc slot position lists; distinct positions across slots
+        unless ``shared`` (stacked tokens: slots draw independently, so
+        they may share positions). ``repeat[j] = i`` makes slot j repeat
+        slot i's term (the same list)."""
         docs = []
         for _ in range(n_docs):
             universe = list(range(max_pos))
             rng.shuffle(universe)
             lists, i = [], 0
-            for _j in range(n_slots):
+            for j in range(n_slots):
+                if repeat and j in repeat:
+                    lists.append(lists[repeat[j]])
+                    continue
                 ln = rng.randint(1, max_len)
-                lists.append(np.array(sorted(universe[i : i + ln]), dtype=np.int64))
-                i += ln
+                if shared:
+                    lists.append(np.array(sorted(rng.sample(range(max_pos // 2), ln)), dtype=np.int64))
+                else:
+                    lists.append(np.array(sorted(universe[i : i + ln]), dtype=np.int64))
+                    i += ln
             docs.append(lists)
         return docs
+
+    @staticmethod
+    def _repeat_of(rng, n_slots):
+        """Random repeated-term layout: slot j → earlier slot it repeats."""
+        if n_slots < 2 or rng.random() < 0.5:
+            return None
+        j = rng.randint(1, n_slots - 1)
+        return {j: rng.randint(0, j - 1)}
 
     @staticmethod
     def _keys(docs, n_slots):
@@ -353,43 +385,67 @@ class TestLockstepNSlotEquivalence:
     def test_sloppy_n_slots(self):
         import random
 
-        from lucene_spark.search.kernels import _lucene_sloppy_freq, _sloppy_flat_freqs_n
+        from lucene_spark.search.kernels import (
+            _lucene_sloppy_freq,
+            _sloppy_flat_freqs_n,
+            _sloppy_freqs,
+        )
 
         rng = random.Random(42)
+        rng_rep = random.Random(45)
         for _ in range(300):
             n_slots, n_docs = rng.randint(2, 5), rng.randint(1, 20)
             slop = rng.randint(0, 6)
             docs = self._make_docs(rng, n_slots, n_docs)
-            got = _sloppy_flat_freqs_n(self._keys(docs, n_slots), slop, n_docs)
+            keys = self._keys(docs, n_slots)
+            slots = tuple((f"t{j}",) for j in range(n_slots))
+            got = _sloppy_flat_freqs_n(keys, slop, n_docs)
             want = np.array([_lucene_sloppy_freq(d, slop) for d in docs], dtype=np.float32)
             assert np.array_equal(got, want), (docs, slop, got, want)
+            got = _sloppy_freqs(keys, slop, n_docs, slots)
+            assert np.array_equal(got, want), (docs, slop, got, want)
+            # repeated terms: the dispatcher's per-candidate repeat-group
+            # path over the flat keys split by candidate
+            repeat = self._repeat_of(rng_rep, n_slots) or {n_slots - 1: 0}
+            docs = self._make_docs(rng_rep, n_slots, n_docs, repeat=repeat)
+            terms = tuple(f"t{repeat.get(j, j)}" for j in range(n_slots))
+            got = _sloppy_freqs(
+                self._keys(docs, n_slots), slop, n_docs, tuple((t,) for t in terms)
+            )
+            want = np.array(
+                [_lucene_sloppy_freq(d, slop, terms=terms) for d in docs], dtype=np.float32
+            )
+            assert np.array_equal(got, want), (docs, terms, slop, got, want)
 
     def test_minimal_interval_kernels(self):
         import random
 
-        from lucene_spark.search.kernels import (
-            _ordered_flat_freqs,
-            _unordered_flat_freqs,
-            minimal_intervals,
-        )
+        from positional_oracle import minimal_intervals
+
+        from lucene_spark.search.kernels import _flat_intervals, _interval_freqs
 
         rng = random.Random(43)
+        rng_rep = random.Random(46)
         one = np.float32(1.0)
-        for _ in range(300):
-            n_slots, n_docs = rng.randint(2, 5), rng.randint(1, 20)
-            cap = rng.choice([None, 0, 1, 2, 4, 8])
-            docs = self._make_docs(rng, n_slots, n_docs)
+        for trial in range(900):
+            # 300 distinct-slot cases, then repeated-term slots and
+            # shared (stacked) positions, where windows can be zero-width
+            r = rng if trial < 300 else rng_rep
+            n_slots, n_docs = r.randint(2, 5), r.randint(1, 20)
+            cap = r.choice([None, 0, 1, 2, 4, 8])
+            repeat = self._repeat_of(r, n_slots) if trial >= 300 else None
+            docs = self._make_docs(r, n_slots, n_docs, repeat=repeat, shared=trial >= 600)
             Ks = self._keys(docs, n_slots)
             for in_order in (True, False):
-                kern = _ordered_flat_freqs if in_order else _unordered_flat_freqs
-                got = kern(Ks, cap, n_docs)
+                S, E = _flat_intervals(Ks, in_order, cap, n_docs)
+                got = _interval_freqs(S, E, n_slots, n_docs)
                 want = np.zeros(n_docs, dtype=np.float32)
                 for ci, d in enumerate(docs):
                     f = np.float32(0.0)
                     for lo, hi in minimal_intervals(d, in_order):
                         gaps = (hi - lo + 1) - n_slots
                         if cap is None or gaps <= cap:
-                            f = np.float32(f + one / (one + np.float32(gaps)))
+                            f = np.float32(f + one / (one + np.float32(max(gaps, 0))))
                     want[ci] = f
                 assert np.array_equal(got, want), (docs, cap, in_order, got, want)
 
@@ -403,7 +459,7 @@ class TestLockstepNSlotEquivalence:
             IUnordered,
             eval_source,
         )
-        from lucene_spark.search.kernels import _ordered_flat_freqs, _unordered_flat_freqs
+        from lucene_spark.search.kernels import _flat_intervals, _interval_freqs
 
         rng = random.Random(44)
         one = np.float32(1.0)
@@ -417,8 +473,8 @@ class TestLockstepNSlotEquivalence:
                 src = (IOrdered if in_order else IUnordered)(tuple(ITerm(t) for t in terms))
                 if cap is not None:
                     src = IMaxGaps(cap, src)
-                kern = _ordered_flat_freqs if in_order else _unordered_flat_freqs
-                got = kern(Ks, cap, n_docs)
+                S, E = _flat_intervals(Ks, in_order, cap, n_docs)
+                got = _interval_freqs(S, E, n_slots, n_docs)
                 want = np.zeros(n_docs, dtype=np.float32)
                 for ci, d in enumerate(docs):
                     f = np.float32(0.0)

@@ -14,8 +14,9 @@ import random
 import numpy as np
 import pytest
 
+from positional_oracle import minimal_intervals
+
 from lucene_spark.search import ast as A
-from lucene_spark.search.kernels import minimal_intervals
 
 
 def brute_minimal(pos_lists, in_order):
@@ -99,24 +100,46 @@ class TestSpanNearEngine:
         assert len(u_docs) >= len(o_docs)
 
     def test_ordered_matches_oracle(self, searcher, docs_by_id):
-        """Engine span-near scores == independent per-doc recomputation
-        from the raw corpus token streams."""
-        from lucene_spark.analysis.tokenizer import tokenize
+        """Engine span-near hits and scores == independent per-doc
+        recomputation from the raw corpus token streams: the scalar
+        minimal-interval walk, freq = Σ 1/(1+max(gaps, 0)) over gaps <=
+        slop, BM25 over that freq. Distinct and repeated terms, ordered
+        and unordered (a repeated term's slots share every position, so
+        its unordered windows can be zero-width)."""
+        from lucene_spark.analysis import tokenize_with_positions
+        from lucene_spark.codec.smallfloat import int_to_byte4_np
+        from lucene_spark.search.similarity import score_freqs
 
-        slop = 2
-        td = searcher.search(A.SpanNearQuery(("return", "if"), slop=slop, in_order=True), k=10)
-        assert td.hits, "expected matches in fixture corpus"
-        for doc_id, _score in td.hits:
-            toks = tokenize(docs_by_id[doc_id])
-            pa = np.array([i for i, t in enumerate(toks) if t == "return"])
-            pb = np.array([i for i, t in enumerate(toks) if t == "if"])
-            ivs = minimal_intervals([pa, pb], True)
-            f = np.float32(0.0)
-            for lo, hi in ivs:
-                gaps = (hi - lo + 1) - 2
-                if gaps <= slop:
-                    f = np.float32(f + np.float32(1.0) / (np.float32(1.0) + np.float32(gaps)))
-            assert f > 0
+        toks = {d: tokenize_with_positions(t) for d, t in docs_by_id.items()}
+        one = np.float32(1.0)
+        cases = [
+            (("return", "if"), 2, True),
+            (("return", "return"), 3, True),
+            (("return", "return"), 3, False),
+            (("if", "return", "if"), 6, True),
+            (("return", "if", "return"), 6, False),
+        ]
+        for terms, slop, in_order in cases:
+            q = A.SpanNearQuery(terms, slop=slop, in_order=in_order)
+            td = searcher.search(q, k=10)
+            assert td.hits, ("expected matches in fixture corpus", terms, in_order)
+            _, spec, stats, _ = searcher.prepare(q)
+            want = []
+            for d, (v, pos) in toks.items():
+                pls = [np.array([p for t, p in zip(v, pos) if t == term]) for term in terms]
+                f = np.float32(0.0)
+                for lo, hi in minimal_intervals(pls, in_order):
+                    gaps = (hi - lo + 1) - len(terms)
+                    if gaps <= slop:
+                        f = np.float32(f + one / (one + np.float32(max(gaps, 0))))
+                if f > 0:
+                    nb = int(int_to_byte4_np(np.array([len(v)]))[0])
+                    sc = score_freqs(spec.weight, np.array([f]), np.array([nb]), stats.cache())
+                    want.append((d, float(sc[0])))
+            want.sort(key=lambda h: (-h[1], h[0]))
+            assert [d for d, _ in td.hits] == [d for d, _ in want[:10]], (terms, in_order)
+            for (_, a), (_, b) in zip(td.hits, want):
+                assert a == b, (terms, in_order)
 
     def test_spannear_in_boolean(self, searcher):
         q = A.BooleanQuery(

@@ -1,5 +1,6 @@
-"""_two_term_flat_intervals (closed-form pair kernel) vs from-definition
-brute force: minimal intervals over two disjoint position streams.
+"""The 2-slot pair forms of _flat_intervals (ordered mutual-nearest
+pairs, unordered closed-form windows) vs from-definition brute force:
+minimal intervals over two disjoint position streams.
 
 Definition (Intervals.ordered/unordered minimal-interval semantics,
 lucene/queries/src/java/org/apache/lucene/queries/intervals/
@@ -13,11 +14,9 @@ properly contain another matching window. Pure numpy — no Spark.
 import numpy as np
 import pytest
 
-from lucene_spark.search.kernels import (
-    _ordered_flat_intervals_nary,
-    _two_term_flat_intervals,
-    _unordered_flat_intervals_nary,
-)
+from positional_oracle import minimal_intervals
+
+from lucene_spark.search.kernels import _flat_intervals
 
 
 def _brute_doc(a: list, b: list, in_order: bool) -> list[tuple[int, int]]:
@@ -74,7 +73,7 @@ def test_pair_kernel_matches_brute(in_order, cap):
             # disjoint streams (the kernels' collision-checked contract)
             A_docs[d] = sorted(int(p) for p in pool[:na])
             B_docs[d] = sorted(int(p) for p in pool[na : na + nb])
-        S, E = _two_term_flat_intervals(_keys(A_docs), _keys(B_docs), in_order, cap)
+        S, E = _flat_intervals([_keys(A_docs), _keys(B_docs)], in_order, cap, n_docs)
         got = sorted(zip(S.tolist(), E.tolist()))
         assert got == _expected(A_docs, B_docs, in_order, cap), (
             trial,
@@ -90,11 +89,13 @@ def test_pair_kernel_matches_brute(in_order, cap):
 @pytest.mark.parametrize("in_order", [True, False])
 @pytest.mark.parametrize("cap", [None, 0, 3, 9])
 def test_nary_machine_equals_pair_kernel(in_order, cap):
-    """The closed-form pair kernel must emit EXACTLY what the n-ary
-    lockstep machine emits when run with the same two streams — set,
-    order, and gap filtering (the machine bodies stay directly
-    callable for this check; the public entry points dispatch n == 2
-    to the pair kernel)."""
+    """The pair forms must emit EXACTLY what the n-ary machine emits
+    for the same two streams — set, per-doc order, and gap filtering.
+    The machine is the per-doc walk of the scalar reference
+    (positional_oracle.minimal_intervals), which the lockstep machine
+    replicates step for step (test_sloppy.py
+    test_minimal_interval_kernels), so the pair forms are checked
+    against that walk doc by doc."""
     rng = np.random.default_rng(7 + (cap or 0))
     for _ in range(100):
         n_docs = int(rng.integers(1, 4))
@@ -104,18 +105,22 @@ def test_nary_machine_equals_pair_kernel(in_order, cap):
             na, nb = int(rng.integers(0, 7)), int(rng.integers(0, 7))
             A[d] = sorted(int(p) for p in pool[:na])
             B[d] = sorted(int(p) for p in pool[na : na + nb])
-        ka, kb = _keys(A), _keys(B)
-        fn = _ordered_flat_intervals_nary if in_order else _unordered_flat_intervals_nary
-        S1, E1 = fn([ka, kb], cap, n_docs)
-        S2, E2 = _two_term_flat_intervals(ka, kb, in_order, cap)
-        assert S1.tolist() == S2.tolist() and E1.tolist() == E2.tolist()
+        want = []
+        for d in range(n_docs):
+            if not A[d] or not B[d]:
+                continue
+            for s, e in minimal_intervals([np.array(A[d]), np.array(B[d])], in_order):
+                if cap is None or e - s - 1 <= cap:
+                    want.append(((d << 32) | s, (d << 32) | e))
+        S, E = _flat_intervals([_keys(A), _keys(B)], in_order, cap, n_docs)
+        assert list(zip(S.tolist(), E.tolist())) == want
 
 
 def test_empty_streams():
     e = np.empty(0, dtype=np.int64)
     k = _keys({0: [1, 2]})
     for in_order in (True, False):
-        S, E = _two_term_flat_intervals(e, k, in_order, None)
+        S, E = _flat_intervals([e, k], in_order, None, 1)
         assert not len(S) and not len(E)
-        S, E = _two_term_flat_intervals(k, e, in_order, None)
+        S, E = _flat_intervals([k, e], in_order, None, 1)
         assert not len(S) and not len(E)
