@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lucene_spark.codec.forutil import unpack_postings
+from lucene_spark.index.cache import MISS, ReaderCache
 from lucene_spark.search.similarity import BM25Stats
 
 MAX_EXPANSION = 1024  # IndexSearcher.maxClauseCount analogue
@@ -41,78 +42,15 @@ class PostingList:
     payloads: list | None = None  # per-doc float32 payload arrays (position-aligned)
 
 
-MAX_CACHED_TERMS = 4096  # LRUQueryCache.java:86 role (per-reader cache)
-
-
-class ChunkDecodeCache:
-    """Per-reader LRU of fully-decoded posting chunks, keyed
-    (term, chunk_ordinal) and bounded by TOTAL CACHED POSTINGS (not
-    entry count — one 8M-df hot term would blow a count bound). The
-    page-cache/LRUQueryCache role for the WAND/conjunction kernels:
-    Lucene re-reads hot .doc pages from the OS cache; the relational
-    engine's analog is keeping the bit-unpacked (docs, tfs, norms)
-    triples of recently-touched chunks. Driver-mode only — the
-    distributed kernels decode inside executors where the chunk rows
-    are already partition-local."""
-
-    def __init__(self, max_postings: int = 32_000_000):
-        from collections import OrderedDict
-
-        self._od: "OrderedDict[tuple, tuple]" = OrderedDict()
-        self._total = 0
-        self.max_postings = max_postings
-
-    def get(self, key: tuple):
-        got = self._od.get(key)
-        if got is not None:
-            self._od.move_to_end(key)
-        return got
-
-    def put(self, key: tuple, val: tuple) -> None:
-        if key in self._od:
-            return
-        n = len(val[0])
-        if n > self.max_postings:
-            return  # a single over-budget chunk would just thrash
-        self._od[key] = val
-        self._total += n
-        while self._total > self.max_postings and self._od:
-            _k, v = self._od.popitem(last=False)
-            self._total -= len(v[0])
-
-
 class SearchIndex:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        # per-reader LRU of term → chunk rows (an index is immutable for
-        # a reader's lifetime — reopen a SearchIndex to see updates, the
-        # DirectoryReader contract). Repeat queries touch no Spark job.
-        from collections import OrderedDict
-
-        self._row_cache: "OrderedDict[str, list]" = OrderedDict()
-        # MultiTermQuery expansion cache (kind, arg) → term list, and
-        # decoded-postings cache (term, with_positions) → PostingList:
-        # the LRUQueryCache role for the two remaining per-query costs
-        # (term-dict scan job; blob decode) on repeated query shapes
-        self._expand_cache: "OrderedDict[tuple, list[str]]" = OrderedDict()
-        self._decoded_cache: "OrderedDict[tuple, object]" = OrderedDict()
-        # keyword/range field filters → sorted doc-id tuples (the
-        # LRUQueryCache's actual job in Lucene: cached filter doc sets)
-        self._docset_cache: "OrderedDict[tuple, tuple]" = OrderedDict()
-        # distributed-mode per-term caches: (df, ttf) stats and the
-        # chunk layout [(tier, n_rows, max_chunk_id), ...]. Both are
-        # immutable for the reader's lifetime (DirectoryReader
-        # contract), so repeat queries skip the two per-query driver
-        # jobs the distributed path otherwise pays (stats lookup +
-        # layout group-by) — the TermStates/per-leaf-TermsEnum caching
-        # role of the reference's per-reader state
-        self._tstats_cache: "OrderedDict[str, tuple | None]" = OrderedDict()
-        self._layout_cache: "OrderedDict[str, list]" = OrderedDict()
+        # all a repeat query reads (rows, decoded, chunk, expand, docset,
+        # docvals, tstats, layout; the Searcher's fieldcond and plan):
+        # the index is immutable for a reader's lifetime (DirectoryReader)
+        self.cache = ReaderCache()
         self._term_grams: DataFrame | None = None
-        # fully-decoded chunk triples for the WAND/conjunction kernels
-        # (page-cache role; postings-bounded LRU)
-        self._chunk_decode_cache = ChunkDecodeCache()
         self._chunked_postings: DataFrame | None = None
 
     def close(self) -> None:
@@ -145,16 +83,11 @@ class SearchIndex:
         """doc ids matching a docs-table predicate, cached per reader.
         ``key`` identifies the predicate; ``cond`` is the Catalyst
         Column (pushed to the parquet scan on miss)."""
-        hit = self._docset_cache.get(key)
-        if hit is not None:
-            self._docset_cache.move_to_end(key)
+        hit = self.cache.get("docset", key)
+        if hit is not MISS:
             return hit
         rows = self.docs.filter(cond).select("doc_id").orderBy("doc_id").collect()
-        out = tuple(int(r["doc_id"]) for r in rows)
-        self._docset_cache[key] = out
-        while len(self._docset_cache) > 256:
-            self._docset_cache.popitem(last=False)
-        return out
+        return self.cache.put("docset", key, tuple(int(r["doc_id"]) for r in rows))
 
     def field_doc_values(self, key: tuple, cond, cols) -> tuple:
         """(doc_ids, per-doc value tuples) for docs matching a
@@ -162,12 +95,8 @@ class SearchIndex:
         behind FeatureQuery / DistanceFeatureQuery (driver-mode
         interactive convenience like :meth:`field_doc_set`; the
         distributed path keeps values lazy and bucketed per chunk)."""
-        from pyspark.sql import functions as F
-
-        ck = ("__vals__",) + key
-        hit = self._docset_cache.get(ck)
-        if hit is not None:
-            self._docset_cache.move_to_end(ck)
+        hit = self.cache.get("docvals", key)
+        if hit is not MISS:
             return hit
         rows = (
             self.docs.filter(cond)
@@ -177,16 +106,11 @@ class SearchIndex:
         )
         docs = tuple(int(r[0]) for r in rows)
         vals = tuple(tuple(float(x) for x in r[1:]) for r in rows)
-        out = (docs, vals)
-        self._docset_cache[ck] = out
-        while len(self._docset_cache) > 256:
-            self._docset_cache.popitem(last=False)
-        return out
+        return self.cache.put("docvals", key, (docs, vals))
 
     @cached_property
     def manifest(self) -> dict:
         import json
-        import os
 
         path = os.path.join(self.index_dir, "manifest.json")
         if os.path.exists(path):
@@ -225,8 +149,6 @@ class SearchIndex:
     def vectors(self) -> DataFrame:
         """The KNN vector sidecar (doc_id, vec, vnorm) — the .vec/.vem
         role. Raises if the index was built without a vector_field."""
-        import os
-
         if not os.path.exists(f"{self.index_dir}/vectors"):
             raise ValueError("index has no vector field (built without IndexConfig.vector_field)")
         return self.spark.read.parquet(f"{self.index_dir}/vectors")
@@ -236,8 +158,6 @@ class SearchIndex:
         """The doc-keyed term-vector table (doc_id, term, tf [, poss])
         — Lucene90CompressingTermVectorsFormat role. Raises if the
         index was built without IndexConfig.term_vectors."""
-        import os
-
         if not os.path.exists(f"{self.index_dir}/term_vectors"):
             raise ValueError("index has no term vectors (built without IndexConfig.term_vectors)")
         return self.spark.read.parquet(f"{self.index_dir}/term_vectors")
@@ -267,6 +187,21 @@ class SearchIndex:
         return self.spark.read.parquet(f"{self.index_dir}/postings")
 
     @cached_property
+    def dist_spark(self) -> SparkSession:
+        """Child session with AQE off, opened once per reader: the
+        distributed plan is rooted in it, so its fixed shape skips
+        adaptive stage materialization (~60 ms per query at local[32])
+        and the caller's session conf is never written. It shares the
+        SparkContext and cache manager with the caller's session."""
+        child = self.spark.newSession()
+        child.conf.set("spark.sql.adaptive.enabled", "false")
+        return child
+
+    @cached_property
+    def dist_postings(self) -> DataFrame:
+        return self.dist_spark.read.parquet(f"{self.index_dir}/postings")
+
+    @cached_property
     def term_stats_df(self) -> DataFrame:
         return self.spark.read.parquet(f"{self.index_dir}/term_stats")
 
@@ -289,8 +224,6 @@ class SearchIndex:
         index has none — distributed mode buckets these by doc-range
         chunk instead of collecting them (liveDocs-at-search contract,
         Lucene90LiveDocsFormat)."""
-        import os
-
         path = f"{self.index_dir}/deletes"
         if not os.path.exists(path):
             return None
@@ -347,8 +280,12 @@ class SearchIndex:
         repeat queries in distributed mode cost zero stats jobs."""
         if not terms:
             return {}
-        cache = self._tstats_cache
-        missing = [t for t in terms if t not in cache]
+        # snapshot THIS call's answers before storing the fetched ones:
+        # a query can carry more terms than the cache holds (stacked
+        # multi-clause expansions), and eviction racing the read would
+        # silently score the evicted terms as absent
+        got = self.cache.get_many("tstats", terms)
+        missing = [t for t in terms if t not in got]
         if missing:
             rows = (
                 self.term_stats_df.filter(F.col("term").isin(missing))
@@ -359,19 +296,9 @@ class SearchIndex:
             fetched: dict[str, tuple | None] = {t: None for t in missing}
             for r in rows:
                 fetched[r["term"]] = (int(r["df"]), int(r["ttf"]))
-            cache.update(fetched)
-        # snapshot THIS call's answers BEFORE trimming: a query can
-        # carry more terms than the cap (stacked multi-clause
-        # expansions), and eviction racing the read would silently
-        # score the evicted terms as absent
-        out: dict[str, tuple[int, int]] = {}
-        for t in terms:
-            v = cache.get(t)
-            if v is not None:
-                out[t] = v
-        while len(cache) > MAX_CACHED_TERMS:
-            cache.popitem(last=False)
-        return out
+            for t, v in fetched.items():
+                got[t] = self.cache.put("tstats", t, v)
+        return {t: got[t] for t in terms if got[t] is not None}
 
     def chunk_layout(self, terms: list[str]) -> list[tuple]:
         """Per-(term, tier) posting-row layout: (term, tier, n_rows,
@@ -380,8 +307,10 @@ class SearchIndex:
         queries skip the layout group-by job. ``tier`` is None on
         non-tiered indexes."""
         tiered = "tier" in self.postings.columns
-        cache = self._layout_cache
-        missing = [t for t in terms if t not in cache]
+        # snapshot before storing (same race as term_stats — eviction
+        # of this call's entries would misclassify hot terms)
+        got = self.cache.get_many("layout", terms)
+        missing = [t for t in terms if t not in got]
         if missing:
             gcols = ["term", "tier"] if tiered else ["term"]
             rows = (
@@ -395,16 +324,9 @@ class SearchIndex:
                 fetched[r["term"]].append(
                     (r["tier"] if tiered else None, int(r["n"]), int(r["maxc"]))
                 )
-            cache.update(fetched)
-        # snapshot before trimming (same race as term_stats — eviction
-        # of this call's entries would misclassify hot terms)
-        out = []
-        for t in terms:
-            for tier, n, maxc in cache.get(t, ()):
-                out.append((t, tier, n, maxc))
-        while len(cache) > MAX_CACHED_TERMS:
-            cache.popitem(last=False)
-        return out
+            for t, v in fetched.items():
+                got[t] = self.cache.put("layout", t, v)
+        return [(t, tier, n, maxc) for t in terms for tier, n, maxc in got[t]]
 
     def term_grams_df(self) -> DataFrame:
         """Lazy (term, gram) DISTINCT-bigram relation over the term
@@ -484,9 +406,8 @@ class SearchIndex:
 
         keyprefix = "" if field in (None, self.primary_field) else field + FIELD_SEP
         ckey = (kind, arg if not isinstance(arg, list) else tuple(arg), limit, keyprefix)
-        cached = self._expand_cache.get(ckey)
-        if cached is not None:
-            self._expand_cache.move_to_end(ckey)
+        cached = self.cache.get("expand", ckey)
+        if cached is not MISS:
             return list(cached)
         t = self.term_stats_df
         if kind == "suffix" and self._manifest.get("reverse_dict"):
@@ -588,10 +509,7 @@ class SearchIndex:
                 r["term"]
                 for r in t.filter(cond).select("term").distinct().orderBy("term").limit(limit).collect()
             ]
-        self._expand_cache[ckey] = out
-        while len(self._expand_cache) > 1024:
-            self._expand_cache.popitem(last=False)
-        return list(out)
+        return list(self.cache.put("expand", ckey, out))
 
     # ---- postings ------------------------------------------------------------
 
@@ -633,7 +551,7 @@ class SearchIndex:
                 max(8, math.ceil(n_chunks / 6)),
             )
             self._chunked_postings = (
-                self.postings.repartition(n, "chunk_id")
+                self.dist_postings.repartition(n, "chunk_id")
                 .sortWithinPartitions("term", "chunk_id")
                 .persist()
             )
@@ -650,8 +568,8 @@ class SearchIndex:
         is a single Spark job (SURVEY §3.1 Spark design: shuffle-free)."""
         if not terms:
             return {}
-        cache = self._row_cache
-        missing = [t for t in terms if t not in cache]
+        got = self.cache.get_many("rows", terms)
+        missing = [t for t in terms if t not in got]
         if missing:
             # tiered indexes: tiers cover increasing doc-id ranges, so
             # (chunk_id, tier) order = global doc order within a term
@@ -663,17 +581,8 @@ class SearchIndex:
             for r in rows:
                 fetched[r["term"]].append(r)
             for t, rs in fetched.items():
-                cache[t] = rs  # negative results cached too (empty list)
-            while len(cache) > MAX_CACHED_TERMS:
-                cache.popitem(last=False)
-        out: dict[str, list] = {}
-        for t in terms:
-            rs = cache.get(t)
-            if rs is not None:
-                cache.move_to_end(t)
-                if rs:
-                    out[t] = rs
-        return out
+                got[t] = self.cache.put("rows", t, rs)  # negative results cached too ([])
+        return {t: got[t] for t in terms if got[t]}
 
     def collect_postings(
         self,
@@ -709,12 +618,12 @@ class SearchIndex:
         )
 
         out: dict[str, PostingList] = {}
+        flags = (with_positions, with_offsets, with_payloads)
+        hits = self.cache.get_many("decoded", [(t, *flags) for t in by_term]) if use_cache else {}
         for term, rs in by_term.items():
-            dkey = (term, with_positions, with_offsets, with_payloads)
-            hit = self._decoded_cache.get(dkey) if use_cache else None
-            if hit is not None:
-                self._decoded_cache.move_to_end(dkey)
-                out[term] = hit
+            dkey = (term, *flags)
+            if dkey in hits:
+                out[term] = hits[dkey]
                 continue
             parts = [unpack_postings(bytes(r["blob"])) for r in rs]
             docs = np.concatenate([p[0] for p in parts])
@@ -765,9 +674,7 @@ class SearchIndex:
                 term, -1, len(docs), docs, tfs, norms.astype(np.int64), positions, offsets, payloads
             )
             if use_cache:
-                self._decoded_cache[dkey] = out[term]
-                while len(self._decoded_cache) > MAX_CACHED_TERMS:
-                    self._decoded_cache.popitem(last=False)
+                self.cache.put("decoded", dkey, out[term])
         return out
 
     @cached_property

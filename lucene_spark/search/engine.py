@@ -31,6 +31,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
+from lucene_spark.index.cache import MISS
 from lucene_spark.index.reader import MAX_EXPANSION, SearchIndex
 from lucene_spark.search import ast as A
 from lucene_spark.search.kernels import (
@@ -92,13 +93,6 @@ class Searcher:
         # PredDocSetQuery key → Catalyst Column (distributed mode keeps
         # field predicates lazy; the ids never land on the driver)
         self._pred_conds: dict[tuple, object] = {}
-        self._fieldcond_memo: dict = {}
-        # (rewritten query, k) → chunked scoring plan DataFrame for
-        # distributed mode: the plan is a pure function of the query
-        # within a reader's lifetime (stats, deletes, docsets all
-        # immutable per the DirectoryReader contract), and rebuilding
-        # it cost ~95 ms of Py4J round trips per repeat query
-        self._dist_plan_cache: dict = {}
         # PredValueScoreQuery key → (Catalyst cond, [value Columns])
         # (feature / distance-feature queries, same lazy contract)
         self._val_conds: dict[tuple, tuple] = {}
@@ -133,14 +127,10 @@ class Searcher:
         conditions (per-triangle SAT over the tessellation column) run
         to hundreds of ms of pure expression construction — a repeated
         filter must not pay that per query."""
-        hit = self._fieldcond_memo.get(q)
-        if hit is not None:
+        hit = self.index.cache.get("fieldcond", q)
+        if hit is not MISS:
             return hit
-        out = self._field_cond_build(q)
-        self._fieldcond_memo[q] = out
-        while len(self._fieldcond_memo) > 256:
-            self._fieldcond_memo.pop(next(iter(self._fieldcond_memo)))
-        return out
+        return self.index.cache.put("fieldcond", q, self._field_cond_build(q))
 
     def _field_cond_build(self, q):
         import pyspark.sql.functions as F
@@ -764,7 +754,7 @@ class Searcher:
                 by_term[ts.term],
                 sim=self.sim.for_field(ts.field),
                 term=ts.term,
-                decode_cache=self.index._chunk_decode_cache,
+                reader_cache=self.index.cache,
             )
             for ts in term_specs
             if ts.term in by_term
@@ -1250,22 +1240,19 @@ class Searcher:
         per-chunk (purged/gappy index)."""
         import pyspark.sql.functions as F
 
-        ck = None
-        payload = None
-        if plan_key is not None:
-            try:
-                ck = (plan_key, k)
-                payload = self._dist_plan_cache.get(ck)
-            except TypeError:  # unhashable query shape: skip caching
-                ck = None
-        if payload is None:
+        # the plan is a pure function of (query, k, similarity — its norm
+        # tables) for the reader's lifetime; a rebuild cost ~95 ms of Py4J
+        ck = (plan_key, k, self.sim) if plan_key is not None else None
+        try:
+            payload = self.index.cache.get("plan", ck) if ck is not None else MISS
+        except TypeError:  # unhashable query shape: skip caching
+            ck, payload = None, MISS
+        if payload is MISS:
             kind, payload = self._distributed_plan(spec, k, cache)
             if kind == "topdocs":
                 return payload
             if ck is not None:
-                self._dist_plan_cache[ck] = payload
-                while len(self._dist_plan_cache) > 64:
-                    self._dist_plan_cache.pop(next(iter(self._dist_plan_cache)))
+                self.index.cache.put("plan", ck, payload)
         # ONE action: the global merge is a TakeOrderedAndProject
         # (TopDocs.merge role) and the total rides an Observation over
         # the per-chunk COUNT rows (doc_id NULL, score NULL, n_matched
@@ -1280,18 +1267,10 @@ class Searcher:
             .orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
         )
-        # AQE off for THIS action only: the plan is a fixed one-or-two
-        # stage shape (group sizes are bounded by chunking, nothing to
-        # re-plan) and adaptive stage materialization costs a measured
-        # ~60 ms per query at local[32]; builds and pipeline jobs keep
-        # their session AQE setting
-        conf = self.index.spark.conf
-        prev = conf.get("spark.sql.adaptive.enabled")
-        try:
-            conf.set("spark.sql.adaptive.enabled", "false")
-            top_rows = plan.collect()
-        finally:
-            conf.set("spark.sql.adaptive.enabled", prev)
+        # the plan is rooted in the reader's AQE-off child session
+        # (SearchIndex.dist_spark), so this action runs non-adaptive
+        # while builds and pipeline jobs keep the session's setting
+        top_rows = plan.collect()
         hits = [(r["doc_id"], r["score"]) for r in top_rows if r["doc_id"] is not None]
         total = obs.get.get("total")
         return TopDocs(hits, int(total or 0), "EQUAL_TO", {"mode": "distributed"})
@@ -1343,9 +1322,9 @@ class Searcher:
             # stage. Resolved lazily so all-small-term queries (the
             # driver fallback) never pay the one-time persist.
             chunked = index.chunked_postings()
-            if chunked is not None:
-                return chunked.filter(F.col("term").isin(list(ts)))
-            return index.postings_rows(ts)
+            if chunked is None:
+                chunked = index.dist_postings
+            return chunked.filter(F.col("term").isin(list(ts)))
         # Row classification. A row is CONFINED when all its docs lie in
         # [chunk_id*dpc, (chunk_id+1)*dpc) — true for every hot-term
         # doc-range chunk and for every chunk_all tier row. A tier's
@@ -1665,7 +1644,7 @@ class Searcher:
                 }
             )
 
-        spark = index.spark
+        spark = index.dist_spark
         # pos_blob is the LARGEST postings column (ttf-sized varints vs
         # df-sized) — scan it only for positional queries; the column
         # set stays schema-consistent across every unioned part
@@ -1707,6 +1686,10 @@ class Searcher:
             parts.append(
                 _pad_select(spark.createDataFrame([(int(c),) for c in extra], "chunk_id long"))
             )
+        elif hot_rows is None:
+            # aux rows only (parent session): an always-empty frame roots
+            # the plan in the AQE-off session; the optimizer prunes it
+            parts.append(_pad_select(spark.range(1).selectExpr("id AS chunk_id").where("false")))
         for aux in aux_parts:
             parts.append(_pad_select(aux))
         grouped_src = parts[0]

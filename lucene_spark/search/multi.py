@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from lucene_spark.index.cache import ReaderCache
 from lucene_spark.index.reader import MAX_EXPANSION, PostingList, SearchIndex
 from lucene_spark.search.engine import Searcher, TopDocs
 from lucene_spark.search.kernels import NoneSpec
@@ -41,6 +42,7 @@ class MultiSearchIndex:
             if len(ix.text_fields) > 1 or len(indexes[0].text_fields) > 1:
                 raise ValueError("multi-index search supports single-field sub-indexes")
         self.indexes = indexes
+        self.cache = ReaderCache()  # the composite's own (field conditions)
         # BaseCompositeReader.java:58-77 — starts[i] = Σ maxDoc(<i)
         bases = [0]
         for ix in indexes[:-1]:

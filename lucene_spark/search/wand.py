@@ -48,7 +48,7 @@ class PostingSource:
         chunks: list[tuple[bytes, np.ndarray, np.ndarray, np.ndarray, np.ndarray, int]],
         sim=None,
         term: str | None = None,
-        decode_cache=None,
+        reader_cache=None,
     ):
         """chunks: list of (blob, block_last, imp_block, imp_freq, imp_norm, df)
         in ascending doc-range order (chunk rows from the index). ``sim``
@@ -86,11 +86,12 @@ class PostingSource:
         self.block_ub = np.array(ubs, dtype=np.float32)
         self.owner = owner
         self._decoded: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        # (term, chunk ordinal)-keyed FULL-chunk decode LRU shared
-        # across queries (reader.ChunkDecodeCache); keys are stable
-        # because collect_rows is reader-cached with a fixed row order
+        # FULL-chunk decodes shared across queries in the reader's
+        # cache under "chunk", keyed (term, chunk ordinal); keys are
+        # stable because collect_rows is reader-cached with a fixed
+        # row order
         self.term = term
-        self.decode_cache = decode_cache
+        self.reader_cache = reader_cache
 
     def block_ranges(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(start_doc, end_doc, ub) per block; start = prev end + 1."""
@@ -156,17 +157,18 @@ class PostingSource:
         for b in block_indices:
             ci, lb = self.owner[int(b)]
             need.setdefault(ci, []).append(lb)
+        # only whole chunks are shared across queries (one lookup per source)
+        full = {ci for ci, lbs in need.items() if len(lbs) == (self.chunks[ci][5] + BLOCK_SIZE - 1) // BLOCK_SIZE}
+        rc = self.reader_cache if self.term is not None else None
+        cached = rc.get_many("chunk", [(self.term, ci) for ci in full]) if rc is not None else {}
         dparts, tparts, nparts = [], [], []
         for ci in sorted(need):
-            blob, block_last, _ib, _if, _in, df = self.chunks[ci]
-            lbs = sorted(need[ci])
-            full = len(lbs) == (df + BLOCK_SIZE - 1) // BLOCK_SIZE
-            key = (self.term, ci) if (full and self.decode_cache is not None and self.term is not None) else None
-            got = self.decode_cache.get(key) if key is not None else None
+            blob, block_last, *_ = self.chunks[ci]
+            got = cached.get((self.term, ci))
             if got is None:
-                got = decode_blocks(blob, lbs, np.asarray(block_last, dtype=np.int64))
-                if key is not None:
-                    self.decode_cache.put(key, got)
+                got = decode_blocks(blob, sorted(need[ci]), np.asarray(block_last, dtype=np.int64))
+                if rc is not None and ci in full:
+                    rc.put("chunk", (self.term, ci), got)
             d, t, nm = got
             dparts.append(d)
             tparts.append(t)

@@ -15,6 +15,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """SPARK_DRIVER_MEMORY, else min(16g, RAM / 4): the heap is pre-touched."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return os.environ.get("SPARK_DRIVER_MEMORY") or f"{min(16 << 10, ram_mb // 4)}m"
+
+
 def get_spark(
     app_name: str = "lucene_spark",
     master: str | None = None,
@@ -22,6 +28,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[%s]" % os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    mem = default_driver_memory()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -31,7 +38,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or 32))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", mem)
         # fixed pre-touched heap: at high task concurrency a growing heap
         # turns into a kernel page-allocation storm (30+ cores of pure
         # sys time observed at local[32]); pre-touching pays the cost
@@ -39,7 +46,7 @@ def get_spark(
         # profile. On a cluster these become executor JVM options.
         .config(
             "spark.driver.extraJavaOptions",
-            "-Xms" + os.environ.get("SPARK_DRIVER_MEMORY", "16g") + " -XX:+AlwaysPreTouch -XX:+UseParallelGC",
+            "-Xms" + mem + " -XX:+AlwaysPreTouch -XX:+UseParallelGC",
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

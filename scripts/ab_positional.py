@@ -9,10 +9,13 @@ builder, then trials run in ABBA order within one host session so host
 drift shows up as t1-vs-t2 spread instead of biasing one side.
 
 Usage (one trial; the ABBA driver runs this four times):
-  python scripts/ab_positional.py --repo /tmp/r3wt --label r3_t1 \
+  python scripts/ab_positional.py --repo ../other_checkout --label r3_t1 \
       --reps 30 [--out FILE]
 
-Prints one JSON line {label, queries: {name: p50_sec}}.
+Prints one JSON line {label, queries: {name: p50_sec}}. Indexes (one
+per target codebase and scale, reused across its trials) and Spark
+local dirs live in the git-ignored ``.ab_positional/`` of this
+checkout; delete it to rebuild.
 """
 
 from __future__ import annotations
@@ -24,6 +27,8 @@ import shutil
 import statistics
 import sys
 import time
+
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".ab_positional")
 
 POSITIONAL = [
     "q_phrase",
@@ -44,7 +49,7 @@ def main() -> int:
     ap.add_argument("--label", required=True)
     ap.add_argument("--reps", type=int, default=30)
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count()))
     ap.add_argument("--out", default=None)
     args = ap.parse_args()
 
@@ -66,19 +71,20 @@ def main() -> int:
         "imported lucene_spark is not the target repo's copy"
     )
 
-    os.makedirs("/dev/shm/spark_local", exist_ok=True)
+    local_dir = os.path.join(SCRATCH, "spark_local")
+    os.makedirs(local_dir, exist_ok=True)
     spark = get_spark(
         f"ab_positional_{args.label}",
         master=f"local[{args.cpus}]",
         extra_conf={
             "spark.sql.files.maxPartitionBytes": "8m",
-            "spark.local.dir": "/dev/shm/spark_local",
+            "spark.local.dir": local_dir,
         },
     )
 
     # per-codebase index, built once and reused across this codebase's trials
     tag = os.path.basename(repo.rstrip("/"))
-    idx_dir = f"/tmp/lucene_spark_ab/{tag}_{os.path.basename(os.path.normpath(args.sf_dir))}"
+    idx_dir = os.path.join(SCRATCH, f"{tag}_{os.path.basename(os.path.normpath(args.sf_dir))}")
     if not os.path.exists(os.path.join(idx_dir, "manifest.json")):
         shutil.rmtree(idx_dir, ignore_errors=True)
         corpus = corpus_df(spark, args.sf_dir)

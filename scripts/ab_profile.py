@@ -38,7 +38,9 @@ def main() -> int:
 
     spark = get_spark("ab_profile", master=f"local[{args.cpus}]")
     tag = os.path.basename(repo.rstrip("/"))
-    idx_dir = f"/tmp/lucene_spark_ab/{tag}_{os.path.basename(os.path.normpath(args.sf_dir))}"
+    # the index ab_positional.py builds for the same codebase and scale
+    scratch = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".ab_positional")
+    idx_dir = os.path.join(scratch, f"{tag}_{os.path.basename(os.path.normpath(args.sf_dir))}")
     if not os.path.exists(os.path.join(idx_dir, "manifest.json")):
         shutil.rmtree(idx_dir, ignore_errors=True)
         IndexBuilder(spark, IndexConfig(docs_per_chunk=1 << 12, term_buckets=8, positions=True)).build(

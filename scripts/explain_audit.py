@@ -35,6 +35,19 @@ def _capture(df) -> str:
     return buf.getvalue()
 
 
+def _stable(plan: str) -> str:
+    """The plan text PLANS.md records: expression, plan and RDD ids,
+    numbered lambda variables and the audit's temporary index directory
+    change on every run, so they are replaced by placeholders and an
+    unchanged plan rewrites the same bytes. Checks run on the raw
+    capture."""
+    plan = re.sub(r"#\d+", "#N", plan)
+    plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
+    plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
+    plan = re.sub(r"\b(lambda \w+)_\d+\b", r"\1_N", plan)
+    return re.sub(r"/[^\s\[,]*/audit_dv_\w+", "<tmp>/audit_dv", plan)
+
+
 def check(name: str, plan: str, pattern: str) -> None:
     ok = re.search(pattern, plan) is not None
     CHECKS.append((name, pattern, ok))
@@ -483,7 +496,7 @@ def main() -> None:
         for name, pat, ok in CHECKS:
             fh.write(f"| {name} | `{pat}` | {'PASS' if ok else 'FAIL'} |\n")
         for title, plan in sections:
-            fh.write(f"\n## {title}\n\n```\n{plan.strip()}\n```\n")
+            fh.write(f"\n## {title}\n\n```\n{_stable(plan).strip()}\n```\n")
     print(f"wrote {out}")
     for name, _, ok in CHECKS:
         print(("PASS " if ok else "FAIL ") + name)

@@ -108,10 +108,11 @@ class TestGramPruning:
 
 class TestReaderCacheWorkingSet:
     def test_term_stats_oversized_call_not_self_evicting(self, search_index):
-        # a single call carrying more terms than MAX_CACHED_TERMS must
-        # still return every present term — the LRU trim runs AFTER the
-        # call's answers are snapshotted (regression: the first-listed
-        # term used to be evicted before the read and scored as absent)
+        # a single call carrying more terms than the cache holds must
+        # still return every present term — the call's answers are
+        # snapshotted before its fetched entries are stored (regression:
+        # the first-listed term used to be evicted before the read and
+        # scored as absent)
         terms = ["return"] + [f"zzmissing{i}" for i in range(5000)]
         out = search_index.term_stats(terms)
         assert "return" in out and out["return"][0] > 0

@@ -67,7 +67,7 @@ class TestQueryCache:
     def test_repeat_query_uses_cache(self, spark, search_index):
         s = Searcher(search_index)
         a = s.search("return AND if", k=10).hits
-        assert "return" in search_index._row_cache and "if" in search_index._row_cache
+        assert set(search_index.cache.get_many("rows", ["return", "if"])) == {"return", "if"}
         t0 = time.time()
         b = s.search("return AND if", k=10).hits
         warm = time.time() - t0
@@ -77,5 +77,5 @@ class TestQueryCache:
     def test_negative_cache(self, spark, search_index):
         s = Searcher(search_index)
         assert s.search("zzzznosuchterm", k=10).hits == []
-        assert search_index._row_cache.get("zzzznosuchterm") == []
+        assert search_index.cache.get("rows", "zzzznosuchterm") == []
         assert s.search("zzzznosuchterm", k=10).hits == []

@@ -1,0 +1,175 @@
+"""ReaderCache: one byte-bounded, lock-guarded LRU per reader with
+per-namespace hit / miss / eviction / byte counts."""
+
+from __future__ import annotations
+
+import sys
+import threading
+from dataclasses import dataclass
+
+import numpy as np
+
+from lucene_spark.index.cache import ENTRY_BYTES, MISS, OPAQUE_BYTES, ReaderCache, nbytes
+from lucene_spark.search.engine import Searcher
+
+
+def _small(budget: int) -> ReaderCache:
+    rc = ReaderCache()
+    rc.BUDGET_BYTES = budget
+    return rc
+
+
+class TestNbytes:
+    def test_sizes(self):
+        @dataclass
+        class PL:
+            docs: np.ndarray
+            positions: list | None = None
+
+        a = np.zeros(10, dtype=np.int64)
+        assert nbytes(a) == 80
+        assert nbytes(b"abc") == 3 and nbytes(bytearray(5)) == 5 and nbytes("term") == 4
+        assert nbytes([a, (a, b"xy")]) == 80 + 80 + 2
+        assert nbytes(PL(a, [a[:4], a[4:]])) == 160
+        assert nbytes(None) == 8 and nbytes((3, 4)) == 16
+        assert nbytes([]) == 0
+
+    def test_jvm_backed_values_charged_fixed(self):
+        class Column:  # stands in for any value Python cannot size
+            pass
+
+        assert nbytes(Column()) == OPAQUE_BYTES
+        assert nbytes((("eq", "lang", "java"), Column())) == 2 + 4 + 4 + OPAQUE_BYTES
+
+
+class TestReaderCacheUnit:
+    def test_miss_sentinel_and_negative_entries(self):
+        rc = ReaderCache()
+        assert rc.get("tstats", "t") is MISS
+        rc.put("tstats", "t", None)
+        rc.put("rows", "t", [])
+        assert rc.get("tstats", "t") is None and rc.get("rows", "t") == []
+        assert rc.stats()["tstats"] == {"hits": 1, "misses": 1, "evictions": 0, "bytes": 8 + ENTRY_BYTES}
+
+    def test_lru_eviction_by_bytes(self):
+        size = 1000 + ENTRY_BYTES
+        rc = _small(3 * size)
+        for k in "abc":
+            rc.put("ns", k, b"x" * 1000)
+        assert rc.get("ns", "a") == b"x" * 1000  # a is now most recent
+        rc.put("ns", "d", b"x" * 1000)  # evicts b, the least recent
+        assert rc.get("ns", "b") is MISS
+        assert all(rc.get("ns", k) is not MISS for k in "acd")
+        st = rc.stats()["ns"]
+        assert st["evictions"] == 1 and st["bytes"] == 3 * size
+
+    def test_put_existing_key_refreshes_recency_and_size(self):
+        rc = _small(2 * (1000 + ENTRY_BYTES))
+        rc.put("ns", "a", b"x" * 1000)
+        rc.put("ns", "b", b"x" * 1000)
+        rc.put("ns", "a", b"x" * 10)  # re-put: a becomes most recent, smaller
+        rc.put("ns", "c", b"x" * 1000)
+        assert rc.get("ns", "a") == b"x" * 10 and rc.get("ns", "b") is MISS
+        assert rc.stats()["ns"]["bytes"] == 1010 + 2 * ENTRY_BYTES
+
+    def test_over_budget_value_returned_not_stored(self):
+        rc = _small(1000)
+        rc.put("ns", "small", b"x")
+        v = b"y" * 2000
+        assert rc.put("ns", "big", v) is v
+        assert rc.get("ns", "big") is MISS and rc.get("ns", "small") == b"x"
+        assert rc.stats()["ns"]["evictions"] == 0
+
+    def test_namespaces_share_one_budget(self):
+        size = 1000 + ENTRY_BYTES
+        rc = _small(2 * size)
+        rc.put("rows", "t", b"x" * 1000)
+        rc.put("decoded", "t", b"x" * 1000)
+        rc.put("chunk", ("t", 0), b"x" * 1000)
+        st = rc.stats()
+        assert rc.get("rows", "t") is MISS
+        assert st["rows"]["evictions"] == 1 and st["rows"]["bytes"] == 0
+        assert st["decoded"]["bytes"] == st["chunk"]["bytes"] == size
+
+    def test_get_many_is_a_snapshot(self):
+        rc = _small(2 * (1000 + ENTRY_BYTES))
+        rc.put("ns", "a", b"x" * 1000)
+        got = rc.get_many("ns", ["a", "zz"])
+        rc.put("ns", "b", b"x" * 1000)
+        rc.put("ns", "c", b"x" * 1000)  # evicts a from the cache...
+        assert got == {"a": b"x" * 1000}  # ...not from the snapshot
+        assert rc.get("ns", "a") is MISS
+
+    def test_clear_keeps_counters(self):
+        rc = ReaderCache()
+        rc.put("ns", "a", b"x")
+        rc.get("ns", "a")
+        rc.clear()
+        assert rc.get("ns", "a") is MISS
+        assert rc.stats()["ns"] == {"hits": 1, "misses": 1, "evictions": 0, "bytes": 0}
+
+    def test_threads_keep_byte_accounting_exact(self):
+        rc = _small(40 * (100 + ENTRY_BYTES))
+        errors = []
+
+        def work(seed):
+            rng = np.random.default_rng(seed)
+            try:
+                for _ in range(3000):
+                    k = int(rng.integers(0, 100))
+                    if rc.get("ns", k) is MISS:
+                        rc.put("ns", k, b"x" * (50 + k))
+            except Exception as e:  # pragma: no cover - reported below
+                errors.append(e)
+
+        threads = [threading.Thread(target=work, args=(s,)) for s in range(8)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)  # switch threads mid-update as often as possible
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads) and not errors
+        st = rc.stats()["ns"]
+        held = sum(size for (_v, size) in rc._od.values())
+        assert st["bytes"] == held <= rc.BUDGET_BYTES
+        assert st["hits"] + st["misses"] == 8 * 3000 and st["evictions"] > 0
+
+
+class TestReaderCacheOnIndex:
+    def test_repeat_driver_query_hits_without_new_misses(self, spark, index_dir):
+        from lucene_spark.index.reader import SearchIndex
+
+        idx = SearchIndex(spark, index_dir)
+        s = Searcher(idx)
+        for q in ("return AND if", "return OR int", '"return if"'):
+            first = s.search(q, k=10).hits
+            before = idx.cache.stats()
+            assert s.search(q, k=10).hits == first
+            after = idx.cache.stats()
+            for ns, st in after.items():
+                assert st["misses"] == before.get(ns, {}).get("misses", 0), (q, ns)
+            assert sum(st["hits"] for st in after.values()) > sum(st["hits"] for st in before.values())
+        assert after["rows"]["hits"] > 0 and after["rows"]["bytes"] > 0
+
+    def test_budget_holds_and_hits_match_unbounded(self, spark, index_dir, search_index):
+        from lucene_spark.index.reader import SearchIndex
+
+        queries = [
+            "return", "if", "int", "return AND if", "return OR int OR if",
+            '"return if"', '"return if"~3', "ret*", "+return -if",
+        ]
+        want = {q: Searcher(search_index).search(q, k=10).hits for q in queries}
+        small = SearchIndex(spark, index_dir)
+        # a few hot-term row sets' worth: the loop below must evict
+        small.cache.BUDGET_BYTES = 64 << 10
+        s = Searcher(small)
+        for _round in range(3):
+            for q in queries:
+                assert s.search(q, k=10).hits == want[q], q
+                st = small.cache.stats()
+                assert sum(v["bytes"] for v in st.values()) <= small.cache.BUDGET_BYTES
+        assert sum(v["evictions"] for v in small.cache.stats().values()) > 0

@@ -67,11 +67,11 @@ class TestReverseDict:
         orig = search_index._manifest
         try:
             search_index.__dict__["_manifest"] = m
-            search_index._expand_cache.clear()
+            search_index.cache.clear()
             via_scan = sorted(search_index.expand_terms("suffix", "urn"))
         finally:
             search_index.__dict__["_manifest"] = orig
-            search_index._expand_cache.clear()
+            search_index.cache.clear()
         assert via_scan == sorted(search_index.expand_terms("regexp", ".*urn"))
 
     def test_sidecar_plan_pushes_startswith(self, spark, search_index, index_dir):

@@ -6,7 +6,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from lucene_spark.analysis.tokenizer import tokenize
+from lucene_spark.analysis.tokenizer import tokenize, tokenize_with_positions
 from lucene_spark.search import ast as A
 from lucene_spark.search.engine import Searcher
 from lucene_spark.search.similarity import BM25Stats, idf, norm_inverse_cache, score_freqs
@@ -58,19 +58,20 @@ def _sloppy_freq32(plists: list[list[int]], slop: int) -> np.float32:
 
 def _brute_sloppy(corpus_texts: dict[int, str], terms: tuple[str, ...], slop: int, k: int):
     """Independent implementation: tokenize per doc, reference sloppy
-    traversal over raw token positions, BM25."""
-    toks = {d: tokenize(t) for d, t in corpus_texts.items()}
+    traversal over Lucene token positions (a dropped over-length token
+    still consumes one), BM25 with doc length = emitted tokens."""
+    toks = {d: tokenize_with_positions(t) for d, t in corpus_texts.items()}
     n_docs = len(toks)
-    sum_ttf = sum(len(v) for v in toks.values())
-    dfs = {t: sum(1 for v in toks.values() if t in v) for t in terms}
+    sum_ttf = sum(len(v) for v, _ in toks.values())
+    dfs = {t: sum(1 for v, _ in toks.values() if t in v) for t in terms}
     if any(dfs[t] == 0 for t in terms):
         return []
     stats = BM25Stats(n_docs, sum_ttf)
     weight = np.float32(np.sum([float(idf(dfs[t], n_docs)) for t in terms]))
     cache = stats.cache()
     hits = []
-    for d, v in toks.items():
-        pos = {t: [i for i, x in enumerate(v) if x == t] for t in terms}
+    for d, (v, positions) in toks.items():
+        pos = {t: [p for x, p in zip(v, positions) if x == t] for t in terms}
         if any(not pos[t] for t in terms):
             continue
         freq = _sloppy_freq32([pos[t] for t in terms], slop)
@@ -89,16 +90,19 @@ def corpus_texts(corpus_pdf):
 
 
 class TestSloppyPhrases:
-    @pytest.mark.parametrize("terms,slop", [
-        (("return", "if"), 1),
-        (("return", "if"), 3),
-        (("int", "return"), 2),
-        (("return", "if", "int"), 4),
+    @pytest.mark.parametrize("terms,slop,k", [
+        (("return", "if"), 1, 10),
+        (("return", "if"), 3, 10),
+        (("int", "return"), 2, 10),
+        (("return", "if", "int"), 4, 10),
+        # every match: reaches fixture doc 195, whose dropped >255-char
+        # token shifts every later position
+        (("return", "if", "int"), 4, 200),
     ])
-    def test_vs_brute_force(self, spark, search_index, corpus_texts, terms, slop):
+    def test_vs_brute_force(self, spark, search_index, corpus_texts, terms, slop, k):
         s = Searcher(search_index)
-        got = s.search(A.PhraseQuery(terms, slop=slop), k=10).hits
-        want = _brute_sloppy(corpus_texts, terms, slop, 10)
+        got = s.search(A.PhraseQuery(terms, slop=slop), k=k).hits
+        want = _brute_sloppy(corpus_texts, terms, slop, k)
         assert [d for d, _ in got] == [d for d, _ in want]
         for (_, a), (_, b) in zip(got, want):
             assert a == pytest.approx(b, rel=1e-6)
