@@ -55,7 +55,13 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lucene_spark.index.builder import IndexBuilder, IndexConfig, chain_manifest_keys
+from lucene_spark.index.builder import (
+    IndexBuilder,
+    IndexConfig,
+    chain_manifest_keys,
+    write_reverse_dict,
+    write_table,
+)
 
 __all__ = ["add_indexes"]
 
@@ -259,40 +265,18 @@ def _copy_into(
         tier = tier0 + 1 + i
         tiers.append(tier)
         p = spark.read.parquet(f"{src}/postings")
-        (
-            p.mapInPandas(_copy_kernel(off, dpc), schema=p.schema)
-            .repartition(buckets, "term")
-            .sortWithinPartitions("term", "chunk_id")
-            .write.mode("overwrite")
-            .parquet(f"{stage}/postings_t{tier}")
-        )
+        p = p.mapInPandas(_copy_kernel(off, dpc), schema=p.schema)
+        write_table(p, "postings", f"{stage}/postings_t{tier}", buckets)
         # the source's term dictionary IS this tier's (df/ttf invariant
         # under id shifts; the reader sums across tiers)
-        spark.read.parquet(f"{src}/term_stats").write.mode("overwrite").parquet(
-            f"{stage}/term_stats_t{tier}"
-        )
+        ts = spark.read.parquet(f"{src}/term_stats")
+        write_table(ts, "term_stats", f"{stage}/term_stats_t{tier}", buckets)
         for t in doc_tables:
-            _rebase_docs(spark.read.parquet(f"{src}/{t}"), off).write.mode(
-                "overwrite"
-            ).parquet(f"{stage}/{t}_t{tier}")
+            rebased = _rebase_docs(spark.read.parquet(f"{src}/{t}"), off)
+            write_table(rebased, t, f"{stage}/{t}_t{tier}", buckets)
 
     # collection stats: additive per field over the INPUT dirs
-    cs = None
-    for d in [dest_dir, *src_dirs]:
-        part = spark.read.parquet(f"{d}/collection_stats")
-        cs = part if cs is None else cs.unionByName(part)
-    (
-        cs.groupBy("field")
-        .agg(
-            F.sum("doc_count").cast("long").alias("doc_count"),
-            F.sum("sum_ttf").cast("long").alias("sum_ttf"),
-            F.sum("sum_df").cast("long").alias("sum_df"),
-        )
-        .select("doc_count", "sum_ttf", "sum_df", "field")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{stage}/collection_stats")
-    )
+    _write_summed_stats(spark, [dest_dir, *src_dirs], f"{stage}/collection_stats")
 
     # publish: tier dirs by rename, doc-keyed tables by file moves
     for tier in tiers:
@@ -308,15 +292,8 @@ def _copy_into(
 
     # reversed-dictionary sidecar: regenerate from the tier union
     if dest_m.get("reverse_dict") and os.path.exists(f"{dest_dir}/term_stats_rev"):
-        (
-            spark.read.parquet(f"{dest_dir}/term_stats")
-            .select("term", F.reverse("term").alias("term_rev"))
-            .distinct()
-            .repartition(buckets, "term_rev")
-            .sortWithinPartitions("term_rev")
-            .write.mode("overwrite")
-            .parquet(f"{stage}/term_stats_rev")
-        )
+        terms = spark.read.parquet(f"{dest_dir}/term_stats").select("term").distinct()
+        write_reverse_dict(terms, f"{stage}/term_stats_rev", buckets)
         shutil.rmtree(f"{dest_dir}/term_stats_rev")
         os.rename(f"{stage}/term_stats_rev", f"{dest_dir}/term_stats_rev")
         spark.catalog.refreshByPath(f"{dest_dir}/term_stats_rev")
@@ -335,6 +312,27 @@ def _copy_into(
     with open(f"{dest_dir}/manifest.json", "w") as fh:
         json.dump(metrics, fh, indent=2)
     return metrics
+
+
+def _write_summed_stats(spark: SparkSession, dirs, path: str) -> None:
+    """``collection_stats`` of indexes over disjoint doc sets: doc_count,
+    sum_ttf and sum_df are additive per field."""
+    cs = None
+    for d in dirs:
+        part = spark.read.parquet(f"{d}/collection_stats")
+        cs = part if cs is None else cs.unionByName(part)
+    (
+        cs.groupBy("field")
+        .agg(
+            F.sum("doc_count").cast("long").alias("doc_count"),
+            F.sum("sum_ttf").cast("long").alias("sum_ttf"),
+            F.sum("sum_df").cast("long").alias("sum_df"),
+        )
+        .select("doc_count", "sum_ttf", "sum_df", "field")
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(path)
+    )
 
 
 def _append_files(stage_table: str, dest_table: str) -> None:
@@ -367,8 +365,9 @@ def add_indexes(
     becomes a new postings/term_stats TIER with a map-only doc-id
     re-encode (doc bases chunk-aligned, so only cold rows straddling
     chunk boundaries re-pack more than the id stream) and doc-keyed
-    tables are appended as files — NO shuffle anywhere, ~the cost of
-    one postings read+write per source, at the price of per-source
+    tables are appended as files — no term-keyed aggregation (only
+    the table-layout writes shuffle), ~the cost of one read+write of
+    each source table, at the price of per-source
     chunk layout (the reader's tier union) instead of a globally
     re-chunked dictionary; chunk-aligned rebasing leaves doc-id gaps
     (supported, like Lucene's deleted-doc gaps).
@@ -506,12 +505,8 @@ def add_indexes(
 
     builder = IndexBuilder(spark, cfg)
     postings, term_stats = builder.posting_lists(inverted)
-    postings.repartition(buckets, "term").sortWithinPartitions("term", "chunk_id").write.mode(
-        "overwrite"
-    ).parquet(f"{stage}/postings")
-    term_stats.repartition(buckets, "term").sortWithinPartitions("term").write.mode(
-        "overwrite"
-    ).parquet(f"{stage}/term_stats")
+    write_table(postings, "postings", f"{stage}/postings", buckets)
+    write_table(term_stats, "term_stats", f"{stage}/term_stats", buckets)
     term_stats.unpersist()
 
     # doc-keyed tables: rebased relational unions, no decode
@@ -527,37 +522,14 @@ def add_indexes(
         for d, off in zip(all_dirs, doc_bases):
             part = _rebase_docs(spark.read.parquet(f"{d}/{t}"), off)
             merged = part if merged is None else merged.unionByName(part)
-        merged.repartitionByRange(buckets, "doc_id").sortWithinPartitions("doc_id").write.mode(
-            "overwrite"
-        ).parquet(f"{stage}/{t}")
+        write_table(merged, t, f"{stage}/{t}", buckets)
 
     if dest_m.get("reverse_dict"):
-        (
-            spark.read.parquet(f"{stage}/term_stats")
-            .select("term", F.reverse("term").alias("term_rev"))
-            .repartition(buckets, "term_rev")
-            .sortWithinPartitions("term_rev")
-            .write.mode("overwrite")
-            .parquet(f"{stage}/term_stats_rev")
-        )
+        terms = spark.read.parquet(f"{stage}/term_stats")
+        write_reverse_dict(terms, f"{stage}/term_stats_rev", buckets)
 
     # collection stats: additive per field over disjoint doc sets
-    cs = None
-    for d in all_dirs:
-        part = spark.read.parquet(f"{d}/collection_stats")
-        cs = part if cs is None else cs.unionByName(part)
-    (
-        cs.groupBy("field")
-        .agg(
-            F.sum("doc_count").cast("long").alias("doc_count"),
-            F.sum("sum_ttf").cast("long").alias("sum_ttf"),
-            F.sum("sum_df").cast("long").alias("sum_df"),
-        )
-        .select("doc_count", "sum_ttf", "sum_df", "field")
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{stage}/collection_stats")
-    )
+    _write_summed_stats(spark, all_dirs, f"{stage}/collection_stats")
 
     n_docs = spark.read.parquet(f"{stage}/norms").count()
     metrics = {

@@ -25,8 +25,8 @@ rows BEFORE the list aggregation, bounding every aggregation buffer and
 every output row; the hot-term set is discovered by a lightweight
 pre-aggregation and broadcast. Rare terms keep one row each.
 
-Output tables (all Parquet here; Iceberg is a writer swap — layout
-notes in each write):
+Output tables (all Parquet here; Iceberg is a writer swap — the one
+layout of every table is TABLE_LAYOUT, written by ``write_table``):
 - ``docs``              doc_id ↔ (repo, path, commit, lang) + content_sha256
 - ``norms``             doc_id, dl, norm (SmallFloat byte; Lucene .nvd)
 - ``postings``          term, chunk_id, df, blob, block_last, impacts
@@ -221,6 +221,45 @@ def stats_frame(spark: SparkSession, rows: list[tuple]) -> DataFrame:
     ).coalesce(1)
 
 
+# The physical layout of every index table: (partition key, sort keys).
+# Term-keyed tables hash-bucket on the key and sort within files, so a
+# term lookup touches 1/buckets of the files and parquet dictionary /
+# min-max stats narrow it to row groups (the FST/.tip role; Iceberg:
+# bucket(term, n) + sort_order(term)). Doc-keyed tables range-partition
+# on doc_id, so min/max prunes doc-range point reads (Iceberg:
+# sort_order(doc_id)).
+TABLE_LAYOUT = {
+    "postings": ("term", ("term", "chunk_id")),
+    "term_stats": ("term", ("term",)),
+    "term_stats_rev": ("term_rev", ("term_rev",)),
+    "docs": ("doc_id", ("doc_id",)),
+    "norms": ("doc_id", ("doc_id",)),
+    "vectors": ("doc_id", ("doc_id",)),
+    "term_vectors": ("doc_id", ("doc_id", "term")),
+}
+
+
+def write_table(df: DataFrame, table: str, path: str, buckets: int) -> None:
+    """Write ``df`` to ``path`` as index table ``table``, laid out per
+    TABLE_LAYOUT in ``buckets`` files."""
+    key, sort = TABLE_LAYOUT[table]
+    parts = df.repartitionByRange(buckets, key) if key == "doc_id" else df.repartition(buckets, key)
+    parts.sortWithinPartitions(*sort).write.mode("overwrite").parquet(path)
+
+
+def write_reverse_dict(terms: DataFrame, path: str, buckets: int) -> None:
+    """ReverseStringFilter role (analysis/common/.../reverse/
+    ReverseStringFilter.java:30-60, Solr's leading-wildcard trick): the
+    ``term_stats_rev`` sidecar of the ``term`` column of ``terms``,
+    sorted by reverse(term) so a leading wildcard (*suffix) becomes a
+    pushed-down startswith on term_rev — row-group min/max pruning
+    instead of a full-dictionary regexp scan. Vocabulary-sized (no
+    postings duplicated); IndexWriter commits drop it (their manifest
+    has no reverse_dict flag)."""
+    rev = terms.select("term", F.reverse("term").alias("term_rev"))
+    write_table(rev, "term_stats_rev", path, buckets)
+
+
 def assign_doc_ids(
     df: DataFrame,
     keys: tuple[str, ...] = DOC_KEYS,
@@ -274,107 +313,99 @@ def assign_doc_ids(
     return out
 
 
-def _tokenize_udf(stem=False, char_filters=()):
+def _tokenize_udf(cfg: "IndexConfig"):
+    """The one analysis UDF of every write path: content → a struct of
+    ``tokens`` plus exactly the per-token streams ``cfg`` indexes —
+    ``positions`` (Lucene positions: a dropped >255-char token consumes
+    one, StandardTokenizer.java:158-166), ``starts``/``ends`` (the
+    OffsetAttribute contract), float ``payloads`` (the
+    DelimitedPayloadTokenFilter stage) and, behind a stacked-token
+    stage, ``dl`` = the non-stacked token count (the discountOverlaps
+    field length, FieldInvertState.getLength() - getNumOverlap()). With
+    no stream beyond the tokens it returns the bare token array from
+    ``tokenize_series``, which never computes positions."""
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf(ArrayType(StringType()))
-    def _tok(content: pd.Series) -> pd.Series:
-        return tokenize_series(content, stem=stem, char_filters=char_filters)
+    stack = _stacker_of(cfg)
+    delim = cfg.delimited_payloads
+    if delim and stack is not None:
+        raise ValueError("delimited_payloads is mutually exclusive with stacked-token stages")
+    if delim and cfg.analyzer != "whitespace":
+        raise ValueError(
+            "delimited_payloads requires analyzer='whitespace' "
+            "(the DelimitedPayloadTokenFilter pairing — a splitting "
+            "tokenizer would cut the payload off the token)"
+        )
+    if delim and (cfg.offsets or not cfg.positions):
+        raise ValueError("delimited_payloads requires positions=True and offsets=False")
+    stem, cfs, off = cfg.analyzer, tuple(cfg.char_filters), cfg.offsets
+    ints = ArrayType(IntegerType())
+    fields = [StructField("tokens", ArrayType(StringType()))]
+    if cfg.positions or off:
+        fields.append(StructField("positions", ints))
+    if off:
+        fields += [StructField("starts", ints), StructField("ends", ints)]
+    if delim:
+        fields.append(StructField("payloads", ArrayType(FloatType())))
+    if stack is not None:
+        fields.append(StructField("dl", IntegerType()))
+    names = [f.name for f in fields]
+    bare = len(fields) == 1
+
+    @pandas_udf(fields[0].dataType if bare else StructType(fields))
+    def _tok(content: pd.Series) -> pd.DataFrame:  # a Series when bare
+        from lucene_spark.analysis.tokenizer import (
+            tokenize_pos_off_series,
+            tokenize_pos_series,
+        )
+
+        if bare:
+            return tokenize_series(content, stem=stem, char_filters=cfs)
+        if off:
+            cols = tokenize_pos_off_series(content, stem=stem, char_filters=cfs)
+        else:
+            cols = tokenize_pos_series(content, stem=stem, char_filters=cfs)
+        cols = dict(zip(("tokens", "positions", "starts", "ends"), cols))
+        if stack is not None:
+            # per row: (tokens, positions, overlaps[, starts, ends])
+            rows = [stack(*r) for r in zip(*cols.values())]
+            outs = ("tokens", "positions", "ov", "starts", "ends")[: 5 if off else 3]
+            cols = {k: [r[i] for r in rows] for i, k in enumerate(outs)}
+            cols["dl"] = [sum(1 for o in ov if not o) for ov in cols.pop("ov")]
+        if delim:
+            cols["tokens"], cols["payloads"] = _strip_payloads(cols["tokens"], delim)
+            cols["positions"] = list(cols["positions"])
+        return pd.DataFrame({n: cols[n] for n in names})
 
     return _tok
 
 
-def _tokenize_pos_udf(stem=False, char_filters=()):
-    """Tokens + Lucene positions (dropped >255-char tokens consume a
-    position — StandardTokenizer.java:158-166) as a struct of arrays."""
-    from pyspark.sql.functions import pandas_udf
-
-    schema = StructType(
-        [
-            StructField("tokens", ArrayType(StringType())),
-            StructField("positions", ArrayType(IntegerType())),
-        ]
-    )
-
-    @pandas_udf(schema)
-    def _tok(content: pd.Series) -> pd.DataFrame:
-        from lucene_spark.analysis.tokenizer import tokenize_pos_series
-
-        toks, poss = tokenize_pos_series(content, stem=stem, char_filters=char_filters)
-        return pd.DataFrame({"tokens": toks, "positions": poss})
-
-    return _tok
-
-
-def _tokenize_pos_off_udf(stem=False, char_filters=()):
-    """Tokens + positions + char offsets (OffsetAttribute contract)."""
-    from pyspark.sql.functions import pandas_udf
-
-    schema = StructType(
-        [
-            StructField("tokens", ArrayType(StringType())),
-            StructField("positions", ArrayType(IntegerType())),
-            StructField("starts", ArrayType(IntegerType())),
-            StructField("ends", ArrayType(IntegerType())),
-        ]
-    )
-
-    @pandas_udf(schema)
-    def _tok(content: pd.Series) -> pd.DataFrame:
-        from lucene_spark.analysis.tokenizer import tokenize_pos_off_series
-
-        toks, poss, sts, ens = tokenize_pos_off_series(content, stem=stem, char_filters=char_filters)
-        return pd.DataFrame({"tokens": toks, "positions": poss, "starts": sts, "ends": ens})
-
-    return _tok
-
-
-def _tokenize_pos_pay_udf(stem, delim: str, char_filters=()):
-    """Tokens + positions + per-occurrence float payloads — the
-    DelimitedPayloadTokenFilter stage (DelimitedPayloadTokenFilter
-    .java:60-70: scan the token from the END for the delimiter, strip
-    the suffix, decode it with FloatEncoder; no delimiter = null
-    payload, here NaN). Unparsable payload text raises, matching
+def _strip_payloads(toks_s, delim: str) -> tuple[list, list]:
+    """DelimitedPayloadTokenFilter (DelimitedPayloadTokenFilter.java:
+    60-70): scan each token from the END for the delimiter, strip the
+    suffix and decode it with FloatEncoder; no delimiter = null
+    payload, here NaN. Unparsable payload text raises, matching
     FloatEncoder's NumberFormatException."""
-    from pyspark.sql.functions import pandas_udf
-
-    schema = StructType(
-        [
-            StructField("tokens", ArrayType(StringType())),
-            StructField("positions", ArrayType(IntegerType())),
-            StructField("payloads", ArrayType(FloatType())),
-        ]
-    )
-
-    @pandas_udf(schema)
-    def _tok(content: pd.Series) -> pd.DataFrame:
-        from lucene_spark.analysis.tokenizer import tokenize_pos_series
-
-        toks_s, poss_s = tokenize_pos_series(content, stem=stem, char_filters=char_filters)
-        out_t, out_p, out_y = [], [], []
-        for toks, poss in zip(toks_s, poss_s):
-            terms, pays = [], []
-            for tok in toks:
-                i = tok.rfind(delim)
-                if i < 0:
-                    terms.append(tok)
-                    pays.append(float("nan"))
-                else:
-                    body, ptxt = tok[:i], tok[i + 1 :]
-                    try:
-                        pays.append(float(ptxt))
-                    except ValueError as e:
-                        raise ValueError(
-                            f"undecodable payload {ptxt!r} in token {tok!r} "
-                            "(FloatEncoder contract)"
-                        ) from e
-                    terms.append(body)
-            out_t.append(terms)
-            out_p.append(poss)
-            out_y.append(pays)
-        return pd.DataFrame({"tokens": out_t, "positions": out_p, "payloads": out_y})
-
-    return _tok
+    out_t, out_y = [], []
+    for toks in toks_s:
+        terms, pays = [], []
+        for tok in toks:
+            i = tok.rfind(delim)
+            if i < 0:
+                terms.append(tok)
+                pays.append(float("nan"))
+                continue
+            body, ptxt = tok[:i], tok[i + 1 :]
+            try:
+                pays.append(float(ptxt))
+            except ValueError as e:
+                raise ValueError(
+                    f"undecodable payload {ptxt!r} in token {tok!r} (FloatEncoder contract)"
+                ) from e
+            terms.append(body)
+        out_t.append(terms)
+        out_y.append(pays)
+    return out_t, out_y
 
 
 def chain_manifest_keys(cfg: "IndexConfig", index_dir: str | None = None) -> dict:
@@ -593,58 +624,6 @@ def _stacker_of(cfg):
     return stack
 
 
-def _tokenize_stacked_udf(stem, cfg, offsets: bool):
-    """Tokenize + stacked-token stages in ONE Arrow batch UDF; emits an
-    extra ``dl`` field = count of non-stacked tokens (the
-    discountOverlaps field length, FieldInvertState.getLength() -
-    getNumOverlap())."""
-    from pyspark.sql.functions import pandas_udf
-
-    stack = _stacker_of(cfg)
-    cfs = tuple(cfg.char_filters)
-    fields = [
-        StructField("tokens", ArrayType(StringType())),
-        StructField("positions", ArrayType(IntegerType())),
-    ]
-    if offsets:
-        fields += [
-            StructField("starts", ArrayType(IntegerType())),
-            StructField("ends", ArrayType(IntegerType())),
-        ]
-    fields.append(StructField("dl", IntegerType()))
-    schema = StructType(fields)
-
-    @pandas_udf(schema)
-    def _tok(content: pd.Series) -> pd.DataFrame:
-        from lucene_spark.analysis.tokenizer import (
-            tokenize_pos_off_series,
-            tokenize_pos_series,
-        )
-
-        out: dict = {k.name: [] for k in fields}
-        if offsets:
-            toks_s, poss_s, sts_s, ens_s = tokenize_pos_off_series(
-                content, stem=stem, char_filters=cfs
-            )
-            for toks, poss, sts, ens in zip(toks_s, poss_s, sts_s, ens_s):
-                t, p, ov, s, e = stack(toks, poss, sts, ens)
-                out["tokens"].append(t)
-                out["positions"].append(p)
-                out["starts"].append(s)
-                out["ends"].append(e)
-                out["dl"].append(sum(1 for o in ov if not o))
-        else:
-            toks_s, poss_s = tokenize_pos_series(content, stem=stem, char_filters=cfs)
-            for toks, poss in zip(toks_s, poss_s):
-                t, p, ov = stack(toks, poss)
-                out["tokens"].append(t)
-                out["positions"].append(p)
-                out["dl"].append(sum(1 for o in ov if not o))
-        return pd.DataFrame(out)
-
-    return _tok
-
-
 def _norm_udf():
     from pyspark.sql.functions import pandas_udf
 
@@ -663,186 +642,190 @@ class IndexBuilder:
     # ---- stages ----------------------------------------------------------
 
     def tokenized(self, corpus: DataFrame, field: str | None = None) -> DataFrame:
-        """corpus (+doc_id) → + tokens [, positions [, offsets]], dl, norm
-        for ``field`` (default the primary field); dl/norm are the
-        FIELD's own length stats (per-field norms, FieldInfos role)."""
-        field = field or self.config.field
-        norm = _norm_udf()
-        # the analyzer name selects the whole post-tokenizer filter
-        # chain (standard / porter / english) — tokenizer._emitter
-        stem = self.config.analyzer
-        if self.config.delimited_payloads and _stacker_of(self.config) is not None:
-            raise ValueError("delimited_payloads is mutually exclusive with stacked-token stages")
-        if _stacker_of(self.config) is not None:
-            # stacked-token stages (shingles / common grams): the UDF
-            # emits dl = non-overlap token count (discountOverlaps) —
-            # size(tokens) would over-count the posInc-0 stack
-            tok = _tokenize_stacked_udf(stem, self.config, self.config.offsets)
-            out = corpus.withColumn("_tp", tok(F.col(field)))
-            for c in ("tokens", "positions") + (
-                ("starts", "ends") if self.config.offsets else ()
-            ):
-                out = out.withColumn(c, F.col(f"_tp.{c}"))
-            return (
-                out.withColumn("dl", F.col("_tp.dl"))
-                .drop("_tp")
-                .withColumn("norm", norm(F.col("dl")))
-            )
-        if self.config.delimited_payloads:
-            if self.config.analyzer != "whitespace":
-                raise ValueError(
-                    "delimited_payloads requires analyzer='whitespace' "
-                    "(the DelimitedPayloadTokenFilter pairing — a splitting "
-                    "tokenizer would cut the payload off the token)"
-                )
-            if self.config.offsets or not self.config.positions:
-                raise ValueError("delimited_payloads requires positions=True and offsets=False")
-            tok = _tokenize_pos_pay_udf(
-                stem, self.config.delimited_payloads, self.config.char_filters
-            )
-            out = (
-                corpus.withColumn("_tp", tok(F.col(field)))
-                .withColumn("tokens", F.col("_tp.tokens"))
-                .withColumn("positions", F.col("_tp.positions"))
-                .withColumn("payloads", F.col("_tp.payloads"))
-                .drop("_tp")
-            )
-            return out.withColumn("dl", F.size("tokens")).withColumn("norm", norm(F.col("dl")))
-        if self.config.offsets:
-            tok = _tokenize_pos_off_udf(stem, self.config.char_filters)
-            out = (
-                corpus.withColumn("_tp", tok(F.col(field)))
-                .withColumn("tokens", F.col("_tp.tokens"))
-                .withColumn("positions", F.col("_tp.positions"))
-                .withColumn("starts", F.col("_tp.starts"))
-                .withColumn("ends", F.col("_tp.ends"))
-                .drop("_tp")
-            )
-        elif self.config.positions:
-            tok = _tokenize_pos_udf(stem, self.config.char_filters)
-            out = (
-                corpus.withColumn("_tp", tok(F.col(field)))
-                .withColumn("tokens", F.col("_tp.tokens"))
-                .withColumn("positions", F.col("_tp.positions"))
-                .drop("_tp")
-            )
+        """corpus (+doc_id) → + tokens [, positions [, starts, ends]]
+        [, payloads], dl, norm for ``field`` (default the primary
+        field); dl/norm are the FIELD's own length stats (per-field
+        norms, FieldInfos role). The analyzer name selects the whole
+        post-tokenizer filter chain (tokenizer._emitter)."""
+        tok = _tokenize_udf(self.config)
+        col = tok(F.col(field or self.config.field))
+        names = tok.returnType.fieldNames() if isinstance(tok.returnType, StructType) else []
+        if not names:
+            out = corpus.withColumn("tokens", col)
         else:
-            tok = _tokenize_udf(stem, self.config.char_filters)
-            out = corpus.withColumn("tokens", tok(F.col(field)))
-        return out.withColumn("dl", F.size("tokens")).withColumn("norm", norm(F.col("dl")))
+            out = corpus.withColumn("_tp", col)
+            for c in names:
+                out = out.withColumn(c, F.col(f"_tp.{c}"))
+            out = out.drop("_tp")
+        if "dl" not in names:
+            # stacked stages carry their discounted dl from the UDF —
+            # size(tokens) would over-count the posInc-0 stack
+            out = out.withColumn("dl", F.size("tokens"))
+        return out.withColumn("norm", _norm_udf()(F.col("dl")))
 
     def inverted(self, tokenized: DataFrame, prefix: str = "") -> DataFrame:
-        """(term, doc_id, tf, norm [, poss]) — the IndexingChain
-        inversion (IndexingChain.java:519,674) as explode + partial-agg
-        groupBy; positions collected sorted per (term, doc). ``prefix``
+        """(term, doc_id, norm [, dl], tf [, poss [, sts, ens] [, pays]])
+        — the IndexingChain inversion (IndexingChain.java:519,674) as
+        explode + partial-agg groupBy; every indexed occurrence stream
+        is collected per (term, doc) in position order. ``prefix``
         (field + FIELD_SEP for non-primary fields) keys the rows into
         that field's postings space — applied AFTER the aggregation so
         the concat touches one row per (term, doc)."""
-        out = self._inverted_unprefixed(tokenized)
-        if prefix:
-            out = out.withColumn("term", F.concat(F.lit(prefix), F.col("term")))
-        return out
-
-    def _inverted_unprefixed(self, tokenized: DataFrame) -> DataFrame:
+        cfg = self.config
         # stacked-token stages: the discounted field length can't be
         # recovered from Σ tf (posInc-0 tokens inflate it), so the
         # tokenize-stage dl rides through the inversion — one small int
         # per (term, doc) row, only on stacked builds
-        carry_dl = _stacker_of(self.config) is not None
+        keys = ["doc_id", "norm"] + (["dl"] if _stacker_of(cfg) is not None else [])
+        # (tokenized column, occurrence column, per-(term, doc) list)
+        streams = [("positions", "pos", "poss")] if cfg.positions or cfg.offsets else []
+        if cfg.offsets:
+            streams += [("starts", "st", "sts"), ("ends", "en", "ens")]
+        if cfg.delimited_payloads:
+            streams.append(("payloads", "pay", "pays"))
         # explode_outer, NOT explode: Catalyst guards a plain explode
         # with an injected `size(col) > 0` filter, and with a Python-UDF
         # input that filter re-evaluates the UDF — the tokenizer would
         # run TWICE per row (two ArrowEvalPython nodes; caught by
         # scripts/explain_audit.py). outer + null-filter keeps one UDF
         # evaluation; the null filter is JVM-side on exploded rows.
-        dlc = ["dl"] if carry_dl else []
-        if self.config.offsets:
-            return (
-                tokenized.select(
-                    "doc_id",
-                    "norm",
-                    *dlc,
-                    F.explode_outer(F.arrays_zip("tokens", "positions", "starts", "ends")).alias("tp"),
-                )
-                .select(
-                    "doc_id",
-                    "norm",
-                    *dlc,
-                    F.col("tp.tokens").alias("term"),
-                    F.col("tp.positions").alias("pos"),
-                    F.col("tp.starts").alias("st"),
-                    F.col("tp.ends").alias("en"),
-                )
-                .filter(F.col("term").isNotNull())
-                .groupBy("term", "doc_id", "norm", *dlc)
-                .agg(
-                    F.count("*").alias("tf"),
-                    F.sort_array(F.collect_list(F.struct("pos", "st", "en"))).alias("occ"),
-                )
-                .select(
-                    "term",
-                    "doc_id",
-                    "norm",
-                    *dlc,  # stacked stages carry the discounted dl through
-                    "tf",
-                    F.expr("transform(occ, x -> x.pos)").alias("poss"),
-                    F.expr("transform(occ, x -> x.st)").alias("sts"),
-                    F.expr("transform(occ, x -> x.en)").alias("ens"),
-                )
+        zipped = F.arrays_zip("tokens", *[src for src, _, _ in streams]) if streams else "tokens"
+        occ = tokenized.select(*keys, F.explode_outer(zipped).alias("tp" if streams else "term"))
+        if streams:
+            cols = [F.col("tp.tokens").alias("term")]
+            for src, o, _ in streams:
+                c = F.col(f"tp.{src}")
+                # NaN payloads can't ride the position sort (NaN
+                # ordering), so "no payload" travels as null and
+                # decodes back to NaN
+                cols.append((F.when(~F.isnan(c), c) if src == "payloads" else c).alias(o))
+            occ = occ.select(*keys, *cols)
+        grouped = occ.filter(F.col("term").isNotNull()).groupBy("term", *keys)
+        tf = F.count("*").alias("tf")
+        if not streams:
+            out = grouped.agg(tf)
+        elif len(streams) == 1:
+            out = grouped.agg(tf, F.sort_array(F.collect_list("pos")).alias("poss"))
+        else:
+            # sort_array on the occurrence structs orders by position,
+            # keeping every stream position-aligned (the .pay/offsets
+            # contract)
+            out = grouped.agg(
+                tf, F.sort_array(F.collect_list(F.struct(*[o for _, o, _ in streams]))).alias("occ")
+            ).select(
+                "term",
+                *keys,
+                "tf",
+                *[F.expr(f"transform(occ, x -> x.{o})").alias(lst) for _, o, lst in streams],
             )
-        if self.config.delimited_payloads:
-            # payloads ride the same (term, doc) aggregation as
-            # positions: sort_array on (pos, pay) structs orders by pos,
-            # keeping the payload stream position-aligned (the .pay file
-            # contract). NaN payloads can't ride the sort (NaN ordering)
-            # so "no payload" travels as null and decodes back to NaN.
-            return (
-                tokenized.select(
-                    "doc_id",
-                    "norm",
-                    *dlc,
-                    F.explode_outer(F.arrays_zip("tokens", "positions", "payloads")).alias("tp"),
-                )
-                .select(
-                    "doc_id",
-                    "norm",
-                    *dlc,
-                    F.col("tp.tokens").alias("term"),
-                    F.col("tp.positions").alias("pos"),
-                    F.when(~F.isnan(F.col("tp.payloads")), F.col("tp.payloads")).alias("pay"),
-                )
-                .filter(F.col("term").isNotNull())
-                .groupBy("term", "doc_id", "norm", *dlc)
-                .agg(
-                    F.count("*").alias("tf"),
-                    F.sort_array(F.collect_list(F.struct("pos", "pay"))).alias("occ"),
-                )
-                .select(
-                    "term",
-                    "doc_id",
-                    "norm",
-                    *dlc,
-                    "tf",
-                    F.expr("transform(occ, x -> x.pos)").alias("poss"),
-                    F.expr("transform(occ, x -> x.pay)").alias("pays"),
-                )
+        if prefix:
+            out = out.withColumn("term", F.concat(F.lit(prefix), F.col("term")))
+        return out
+
+    def stage(self, base: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """An id-assigned corpus → lazy (docs, norms, inverted): the
+        one write-path front end behind the one-shot build, every
+        segment writer (IndexWriter, resumable, streaming) and
+        ``write_segment``. ``inverted`` is the all-field relation —
+        each extra field's inversion unions in under its prefixed key
+        space (FieldInfos union: one shuffle, one pack stage, one
+        postings table for every field)."""
+        cfg = self.config
+        inverted = self.inverted(self.tokenized(base))
+        for f in cfg.extra_fields:
+            inverted = inverted.unionByName(
+                self.inverted(self.tokenized(base, field=f), prefix=f + FIELD_SEP)
             )
-        if self.config.positions:
-            return (
-                tokenized.select(
-                    "doc_id", "norm", *dlc, F.explode_outer(F.arrays_zip("tokens", "positions")).alias("tp")
-                )
-                .select("doc_id", "norm", *dlc, F.col("tp.tokens").alias("term"), F.col("tp.positions").alias("pos"))
-                .filter(F.col("term").isNotNull())
-                .groupBy("term", "doc_id", "norm", *dlc)
-                .agg(F.count("*").alias("tf"), F.sort_array(F.collect_list("pos")).alias("poss"))
-            )
-        return (
-            tokenized.select("doc_id", "norm", *dlc, F.explode_outer("tokens").alias("term"))
-            .filter(F.col("term").isNotNull())
-            .groupBy("term", "doc_id", "norm", *dlc)
-            .agg(F.count("*").alias("tf"))
+        # all non-content columns ride along as stored fields/DocValues
+        # (SURVEY §1.1: DocValues = ordinary DataFrame columns) — they
+        # serve keyword-field equality and numeric-range queries with
+        # Catalyst pushdown on the doc_id-sorted table. Derived from
+        # the SOURCE relation (columnar scan + JVM sha2), not the
+        # tokenize pass — no Python in this branch at all.
+        meta_cols = [
+            c for c in base.columns if c not in (cfg.field, "doc_id", "content_sha256", cfg.vector_field)
+        ]
+        docs = base.select(
+            "doc_id", *meta_cols, F.sha2(F.col(cfg.field), 256).alias("content_sha256")
         )
+        return docs, self.norms(docs, inverted), inverted
+
+    def norms(self, docs: DataFrame, inverted: DataFrame) -> DataFrame:
+        """(doc_id, dl, norm [, norm_<field>…]) derived from the
+        inverted relation, never from a second tokenize pass: dl = Σ tf
+        per doc (identical to len(tokens) — overlong tokens were
+        dropped before inversion), or the carried discounted dl on
+        stacked builds; docs with zero surviving tokens are absent
+        from ``inverted`` and re-attach from ``docs`` with dl=0,
+        norm=intToByte4(0)."""
+        from lucene_spark.codec.smallfloat import int_to_byte4
+
+        cfg = self.config
+        primary = inverted.filter(~F.col("term").contains(FIELD_SEP)) if cfg.extra_fields else inverted
+        dl = F.min("dl") if _stacker_of(cfg) is not None else F.sum("tf")
+        norms = (
+            docs.select("doc_id")
+            .join(primary.groupBy("doc_id", "norm").agg(dl.cast("int").alias("dl")), "doc_id", "left")
+            .select(
+                "doc_id",
+                F.coalesce(F.col("dl"), F.lit(0)).alias("dl"),
+                F.coalesce(F.col("norm"), F.lit(int(int_to_byte4(0)))).cast("int").alias("norm"),
+            )
+        )
+        # dense per-extra-field norm bytes (Lucene stores norms PER
+        # FIELD — reader.getNormValues(field)): CombinedFieldQuery's
+        # MultiNormsLeafSimScorer needs a doc's norm for EVERY queried
+        # field, including fields whose postings the doc doesn't match,
+        # so the sparse inline-per-posting copies aren't enough. NULL =
+        # the doc has no tokens of the field (advanceExact false).
+        for xf in cfg.extra_fields:
+            agg_f = (
+                inverted.filter(F.col("term").startswith(xf + FIELD_SEP))
+                .groupBy("doc_id")
+                .agg(F.max("norm").cast("int").alias(f"norm_{xf}"))
+            )
+            norms = norms.join(agg_f, "doc_id", "left")
+        return norms
+
+    def write_segment(self, base: DataFrame, seg_dir: str) -> None:
+        """Stage one id-assigned batch as segment intermediates under
+        ``seg_dir`` (a DWPT flush): docs (no Python stage), then the
+        inverted relation (the batch's one tokenize pass), then norms
+        derived from the written inverted files. ``base`` is read once
+        per write, so its doc ids must be stable across jobs."""
+        docs, _, inverted = self.stage(base)
+        docs.write.mode("overwrite").parquet(f"{seg_dir}/docs")
+        inverted.write.mode("overwrite").parquet(f"{seg_dir}/inverted")
+        read = self.spark.read.parquet
+        self.norms(read(f"{seg_dir}/docs"), read(f"{seg_dir}/inverted")).write.mode(
+            "overwrite"
+        ).parquet(f"{seg_dir}/norms")
+
+    def merge_segments(self, seg_dirs: list[str], index_dir: str, tier: int | None = None) -> None:
+        """Segment intermediates → the final docs/norms/postings/
+        term_stats tables (SegmentMerger.merge ≅ one shuffle by term):
+        flat under ``index_dir``, or as the ``tier=K`` hive partition of
+        a tiered commit. A tier chunks EVERY term by doc range
+        (``chunk_all``) so the distributed leaf grouping stays
+        doc-range-partitioned across tiers."""
+        read = self.spark.read.parquet
+        postings, term_stats = self.posting_lists(
+            read(*[f"{d}/inverted" for d in seg_dirs]), chunk_all=tier is not None
+        )
+        tables = {
+            "docs": read(*[f"{d}/docs" for d in seg_dirs]),
+            "norms": read(*[f"{d}/norms" for d in seg_dirs]),
+            "postings": postings,
+            "term_stats": term_stats,
+        }
+        part = "" if tier is None else f"/tier={tier}"
+        for t, df in tables.items():
+            write_table(df, t, f"{index_dir}/{t}{part}", self.config.term_buckets)
+        term_stats.unpersist()
+        # a session that read these paths before the overwrite would see
+        # stale file listings (Spark caches the FileIndex per path)
+        for t in tables:
+            self.spark.catalog.refreshByPath(f"{index_dir}/{t}")
 
     def posting_lists(
         self, inverted: DataFrame, chunk_all: bool = False
@@ -929,78 +912,12 @@ class IndexBuilder:
         # biggest memory-bandwidth consumer (three re-reads of the wide
         # rows), which is what inflated core-seconds as parallelism
         # grew (N→4N efficiency).
-        tokenized = self.tokenized(base)
-        inverted = self.inverted(tokenized)
-        # extra tokenized fields: each field's inversion unions into the
-        # same relation under its prefixed key space — ONE shuffle, one
-        # pack stage, one postings table for every field (FieldInfos
-        # union; per-field norms ride inline per posting row)
-        for f in cfg.extra_fields:
-            inverted = inverted.unionByName(
-                self.inverted(self.tokenized(base, field=f), prefix=f + FIELD_SEP)
-            )
+        docs, norms, inverted = self.stage(base)
+        # persisted after staging: every plan over ``inverted`` (norms,
+        # term_stats, the posting lists, term vectors, the stats)
+        # resolves to the cached relation when it executes
         inverted = inverted.persist(StorageLevel.DISK_ONLY)
         postings, term_stats = self.posting_lists(inverted)
-
-        # all non-content columns ride along as stored fields/DocValues
-        # (SURVEY §1.1: DocValues = ordinary DataFrame columns) — they
-        # serve keyword-field equality and numeric-range queries with
-        # Catalyst pushdown on this doc_id-sorted table. Derived from
-        # the SOURCE relation (columnar scan + JVM sha2), not the
-        # tokenize pass — no Python in this branch at all.
-        meta_cols = [
-            c
-            for c in corpus.columns
-            if c not in (cfg.field, "doc_id", "content_sha256", cfg.vector_field)
-        ]
-        docs = base.select(
-            "doc_id",
-            *[F.col(c) for c in meta_cols],
-            F.sha2(F.col(cfg.field), 256).alias("content_sha256"),
-        )
-        # norms derive from inverted: dl == Σ tf per doc (identical to
-        # len(tokens) — overlong tokens were already dropped before
-        # inversion); docs with zero surviving tokens are absent from
-        # inverted, so re-attach them from the docs relation with
-        # dl=0, norm=intToByte4(0).
-        from lucene_spark.codec.smallfloat import int_to_byte4
-
-        primary_inv = (
-            inverted.filter(~F.col("term").contains(FIELD_SEP)) if cfg.extra_fields else inverted
-        )
-        if _stacker_of(cfg) is not None:
-            # stacked builds carry the tokenize-stage DISCOUNTED dl
-            # (norm byte's exact domain); Σ tf would count the stack
-            dl_agg = primary_inv.groupBy("doc_id", "norm").agg(
-                F.min("dl").cast("int").alias("dl")
-            )
-        else:
-            dl_agg = primary_inv.groupBy("doc_id", "norm").agg(
-                F.sum("tf").cast("int").alias("dl")
-            )
-        norms = (
-            docs.select("doc_id")
-            .join(dl_agg, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce(F.col("dl"), F.lit(0)).alias("dl"),
-                F.coalesce(F.col("norm"), F.lit(int(int_to_byte4(0)))).cast("int").alias("norm"),
-            )
-        )
-        # dense per-extra-field norm bytes (Lucene stores norms PER
-        # FIELD — reader.getNormValues(field)): CombinedFieldQuery's
-        # MultiNormsLeafSimScorer needs a doc's norm for EVERY queried
-        # field, including fields whose postings the doc doesn't match,
-        # so the sparse inline-per-posting copies aren't enough. NULL =
-        # the doc has no tokens of the field (advanceExact false).
-        for xf in cfg.extra_fields:
-            pre = xf + FIELD_SEP
-            agg_f = (
-                inverted.filter(F.col("term").startswith(pre))
-                .groupBy("doc_id")
-                .agg(F.max("norm").cast("int").alias(f"norm_{xf}"))
-            )
-            norms = norms.join(agg_f, "doc_id", "left")
 
         os.makedirs(index_dir, exist_ok=True)
         # materialize each persisted intermediate exactly once (a count
@@ -1014,47 +931,40 @@ class IndexBuilder:
         inverted.count()
         t_inv = time.time()
 
-        def _write_docs():
-            # docs/norms: sorted by doc_id → parquet min/max prunes
-            # doc-range point reads (Iceberg: sort_order(doc_id)).
-            docs.repartitionByRange(cfg.term_buckets, "doc_id").sortWithinPartitions(
-                "doc_id"
-            ).write.mode("overwrite").parquet(f"{index_dir}/docs")
-
-        def _write_norms():
-            norms.repartitionByRange(cfg.term_buckets, "doc_id").sortWithinPartitions(
-                "doc_id"
-            ).write.mode("overwrite").parquet(f"{index_dir}/norms")
-
-        def _write_postings():
-            # postings/term_stats: hash-bucketed by term, sorted within
-            # files → a term lookup touches 1/term_buckets of files,
-            # then parquet dictionary/min-max narrows to row groups
-            # (the FST/.tip role).
-            postings.repartition(cfg.term_buckets, "term").sortWithinPartitions(
-                "term", "chunk_id"
-            ).write.mode("overwrite").parquet(f"{index_dir}/postings")
-
-        def _write_term_stats():
-            term_stats.repartition(cfg.term_buckets, "term").sortWithinPartitions(
-                "term"
-            ).write.mode("overwrite").parquet(f"{index_dir}/term_stats")
-            # ReverseStringFilter role (analysis/common/.../reverse/
-            # ReverseStringFilter.java:30-60, Solr's leading-wildcard
-            # trick): a reversed-key dictionary sidecar, sorted by
-            # reverse(term) so a leading wildcard (*suffix) becomes a
-            # pushed-down startswith on term_rev — row-group min/max
-            # pruning instead of a full-dictionary regexp scan.
-            # Vocabulary-sized (no postings duplicated); invalidated by
-            # IndexWriter commits (which rewrite the manifest without
-            # the reverse_dict flag).
-            (
-                term_stats.select("term", F.reverse("term").alias("term_rev"))
-                .repartition(cfg.term_buckets, "term_rev")
-                .sortWithinPartitions("term_rev")
-                .write.mode("overwrite")
-                .parquet(f"{index_dir}/term_stats_rev")
+        tables = {"postings": postings, "docs": docs, "norms": norms, "term_stats": term_stats}
+        if cfg.vector_field:
+            # vectors sidecar (.vec/.vem role): doc-range partitioned
+            # like docs/norms so knn + filter co-locates; vnorm is
+            # precomputed JVM-side (cosine denominators at build time)
+            vnorm = F.sqrt(
+                F.aggregate(
+                    F.transform(cfg.vector_field, lambda x: x.cast("double") * x),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                )
+            ).alias("vnorm")
+            # docs without the vector field are absent from the sidecar
+            # (Lucene: no vector value → not in the HNSW graph)
+            tables["vectors"] = base.filter(F.col(cfg.vector_field).isNotNull()).select(
+                "doc_id", F.col(cfg.vector_field).alias("vec"), vnorm
             )
+        if cfg.term_vectors:
+            # the doc-keyed copy of the inverted relation; positions and
+            # char offsets ride along when indexed (the TermVectorsFormat
+            # positions/offsets bits — offsets make the vectors a
+            # FastVectorHighlighter source, vectorhighlight/
+            # FastVectorHighlighter.java)
+            tables["term_vectors"] = inverted.select(
+                "doc_id",
+                "term",
+                "tf",
+                *[c for c in ("poss", "sts", "ens") if c in inverted.columns],
+            )
+
+        def _write(t: str) -> None:
+            write_table(tables[t], t, f"{index_dir}/{t}", cfg.term_buckets)
+            if t == "term_stats":
+                write_reverse_dict(term_stats, f"{index_dir}/term_stats_rev", cfg.term_buckets)
 
         # the collection-stats aggregations read the SAME persisted
         # intermediates as the writes — run them as a fifth concurrent
@@ -1144,56 +1054,12 @@ class IndexBuilder:
             }
             return nd, st, sd, vocab
 
-        def _write_vectors():
-            # vectors sidecar (.vec/.vem role): doc-range partitioned
-            # like docs/norms so knn + filter co-locates; vnorm is
-            # precomputed JVM-side (cosine denominators at build time)
-            vec = F.col(cfg.vector_field).alias("vec")
-            vnorm = F.sqrt(
-                F.aggregate(
-                    F.transform(cfg.vector_field, lambda x: x.cast("double") * x),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ).alias("vnorm")
-            # docs without the vector field are absent from the sidecar
-            # (Lucene: no vector value → not in the HNSW graph)
-            base.filter(F.col(cfg.vector_field).isNotNull()).select(
-                "doc_id", vec, vnorm
-            ).repartitionByRange(
-                cfg.term_buckets, "doc_id"
-            ).sortWithinPartitions("doc_id").write.mode("overwrite").parquet(
-                f"{index_dir}/vectors"
-            )
-
-        def _write_term_vectors():
-            # the doc-keyed copy of the inverted relation; positions and
-            # char offsets ride along when indexed (the TermVectorsFormat
-            # positions/offsets bits — offsets make the vectors a
-            # FastVectorHighlighter source, vectorhighlight/
-            # FastVectorHighlighter.java)
-            cols = (
-                ["doc_id", "term", "tf"]
-                + (["poss"] if "poss" in inverted.columns else [])
-                + (["sts", "ens"] if "sts" in inverted.columns else [])
-            )
-            inverted.select(*cols).repartitionByRange(
-                cfg.term_buckets, "doc_id"
-            ).sortWithinPartitions("doc_id", "term").write.mode("overwrite").parquet(
-                f"{index_dir}/term_vectors"
-            )
-
         from concurrent.futures import ThreadPoolExecutor
 
         t_writes = time.time()
-        writers = [_write_postings, _write_docs, _write_norms, _write_term_stats]
-        if cfg.vector_field:
-            writers.append(_write_vectors)
-        if cfg.term_vectors:
-            writers.append(_write_term_vectors)
         with ThreadPoolExecutor(max_workers=6) as pool:
             stats_fut = pool.submit(_collect_stats)
-            futures = [pool.submit(f) for f in writers]
+            futures = [pool.submit(_write, t) for t in tables]
             for fut in futures:
                 fut.result()
             n_docs, sum_ttf, sum_df, vocab_metrics = stats_fut.result()

@@ -39,7 +39,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lucene_spark.index.builder import DOC_KEYS, IndexBuilder, IndexConfig, assign_doc_ids
+from lucene_spark.index.builder import IndexBuilder, IndexConfig, assign_doc_ids
 
 
 def _fingerprint(seg_corpus: DataFrame, field: str) -> str:
@@ -89,50 +89,14 @@ class ResumableIndexBuilder:
             return rec
 
         d = self._seg_dir(index_dir, seg)
-        tokenized = self._inner.tokenized(seg_corpus).persist()
-        # keep EVERY metadata column (the one-shot build() contract:
-        # docs = stored fields / doc-values store — keyword filters,
-        # numeric ranges, and DV updates on those columns must work
-        # identically on a resumable build)
-        meta_cols = [
-            c
-            for c in corpus_ids.columns
-            if c not in (cfg.field, "doc_id", "content_sha256", cfg.vector_field)
-        ]
-        docs = tokenized.select(
-            "doc_id",
-            *[F.col(c) for c in meta_cols],
-            F.sha2(F.col(cfg.field), 256).alias("content_sha256"),
-        )
-        norms = tokenized.select("doc_id", "dl", "norm")
-        inverted = self._inner.inverted(tokenized)
-        # extra tokenized fields: prefixed inversion union + per-field
-        # norm bytes, exactly like build() (FieldInfos union)
-        from lucene_spark.index.builder import FIELD_SEP
-
-        for xf in cfg.extra_fields:
-            inv_x = self._inner.inverted(
-                self._inner.tokenized(seg_corpus, field=xf), prefix=xf + FIELD_SEP
-            )
-            inverted = inverted.unionByName(inv_x)
-            norms = norms.join(
-                inv_x.groupBy("doc_id").agg(F.max("norm").cast("int").alias(f"norm_{xf}")),
-                "doc_id",
-                "left",
-            )
-
-        docs.write.mode("overwrite").parquet(f"{d}/docs")
-        norms.write.mode("overwrite").parquet(f"{d}/norms")
-        inverted.write.mode("overwrite").parquet(f"{d}/inverted")
-
-        n_docs = norms.count()
+        self._inner.write_segment(seg_corpus, d)
+        n_docs = self.spark.read.parquet(f"{d}/norms").count()
         inv = self.spark.read.parquet(f"{d}/inverted")
         n_postings = inv.count()
         skew = [
             {"term": r["term"], "df": r["df"]}
             for r in inv.groupBy("term").agg(F.count("*").alias("df")).orderBy(F.desc("df"), "term").limit(10).collect()
         ]
-        tokenized.unpersist()
         elapsed = time.time() - t0
         rec = {
             "segment": seg,
@@ -161,31 +125,11 @@ class ResumableIndexBuilder:
         segs = sorted(
             p.split("=")[1] for p in os.listdir(f"{index_dir}/segments") if p.startswith("seg=")
         )
-        inverted = self.spark.read.parquet(*[f"{self._seg_dir(index_dir, s)}/inverted" for s in segs])
-        docs = self.spark.read.parquet(*[f"{self._seg_dir(index_dir, s)}/docs" for s in segs])
-        norms = self.spark.read.parquet(*[f"{self._seg_dir(index_dir, s)}/norms" for s in segs])
-
-        postings, term_stats = self._inner.posting_lists(inverted)
-        docs.repartitionByRange(cfg.term_buckets, "doc_id").sortWithinPartitions("doc_id").write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/docs")
-        norms.repartitionByRange(cfg.term_buckets, "doc_id").sortWithinPartitions("doc_id").write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/norms")
-        postings.repartition(cfg.term_buckets, "term").sortWithinPartitions("term", "chunk_id").write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/postings")
-        term_stats.repartition(cfg.term_buckets, "term").sortWithinPartitions("term").write.mode(
-            "overwrite"
-        ).parquet(f"{index_dir}/term_stats")
-
+        self._inner.merge_segments([self._seg_dir(index_dir, s) for s in segs], index_dir)
         # the merged term set changed: a reversed-dictionary sidecar
         # from an earlier one-shot build would be stale
         shutil.rmtree(f"{index_dir}/term_stats_rev", ignore_errors=True)
-        # a session that read these paths before the overwrite would see
-        # stale file listings (Spark caches the FileIndex per path)
-        for t in ("docs", "norms", "postings", "term_stats", "collection_stats"):
-            self.spark.catalog.refreshByPath(f"{index_dir}/{t}")
+        self.spark.catalog.refreshByPath(f"{index_dir}/collection_stats")
 
         from lucene_spark.index.builder import write_collection_stats_from_tables
 

@@ -15,6 +15,7 @@ from dataclasses import dataclass
 from functools import cached_property
 
 import os
+import threading
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +26,13 @@ from lucene_spark.index.cache import MISS, ReaderCache
 from lucene_spark.search.similarity import BM25Stats
 
 MAX_EXPANSION = 1024  # IndexSearcher.maxClauseCount analogue
+
+# Open holders of each persisted per-directory relation. A persisted
+# plan that depends only on the index directory is ONE cache-manager
+# entry for every reader of that directory on a SparkContext, so only
+# the last holder's close() may unpersist it.
+_SHARED_LOCK = threading.RLock()
+_SHARED_HOLDERS: dict[tuple, int] = {}
 
 
 @dataclass
@@ -40,6 +48,36 @@ class PostingList:
     positions: list | None = None  # per-doc position arrays (aligned with docs)
     offsets: list | None = None  # per-doc (starts, ends) arrays (aligned with docs)
     payloads: list | None = None  # per-doc float32 payload arrays (position-aligned)
+
+
+def concat_doc_order(parts: list[tuple]) -> tuple:
+    """One term's posting parts — (docs, tfs, norms, positions, *more
+    per-doc streams) tuples, one per chunk or tier row — as one part in
+    doc order. Tier rows cover disjoint, increasing doc ranges, so the
+    concatenation is normally ordered already; otherwise one stable
+    argsort reorders every column. A stream that is None in any part is
+    None in the result; positions keep their flat decode buffer
+    (PositionLists) for the positional kernels."""
+    from lucene_spark.codec.positions import concat_position_lists, repack_position_lists
+
+    if len(parts) == 1:
+        return parts[0]
+    cols = [np.concatenate([p[i] for p in parts]) for i in range(3)]
+    streams = []
+    for i in range(3, len(parts[0])):
+        if any(p[i] is None for p in parts):
+            streams.append(None)
+        elif i == 3:
+            streams.append(concat_position_lists([p[3] for p in parts]))
+        else:
+            streams.append([v for p in parts for v in p[i]])
+    if len(cols[0]) > 1 and not (np.diff(cols[0]) > 0).all():
+        order = np.argsort(cols[0], kind="stable")
+        cols = [c[order] for c in cols]
+        streams = [None if st is None else [st[j] for j in order] for st in streams]
+        if streams[0] is not None:
+            streams[0] = repack_position_lists(streams[0])
+    return (*cols, *streams)
 
 
 class SearchIndex:
@@ -59,13 +97,37 @@ class SearchIndex:
         the gram relation just rebuilds (and re-persists) on next use.
         Sessions that open many readers should close them, or the
         per-reader persisted (term, gram) relations accumulate until
-        executor storage evicts them."""
-        if self._term_grams is not None:
-            self._term_grams.unpersist()
-            self._term_grams = None
-        if self._chunked_postings is not None:
-            self._chunked_postings.unpersist()
-            self._chunked_postings = None
+        executor storage evicts them. Both relations are shared with
+        every other open reader of this directory (one cache-manager
+        entry), so only the last one to close unpersists them."""
+        for attr in ("_term_grams", "_chunked_postings"):
+            frame = getattr(self, attr, None)
+            if frame is None:
+                continue
+            setattr(self, attr, None)
+            with _SHARED_LOCK:
+                key = self._shared_key(attr)
+                _SHARED_HOLDERS[key] -= 1
+                if not _SHARED_HOLDERS[key]:
+                    del _SHARED_HOLDERS[key]
+                    frame.unpersist()
+
+    def _shared_key(self, attr: str) -> tuple:
+        return (
+            self.spark.sparkContext.applicationId,
+            os.path.realpath(self.index_dir),
+            attr,
+        )
+
+    def _hold(self, attr: str, frame: DataFrame) -> DataFrame:
+        """Persist ``frame`` as this reader's ``attr`` relation and count
+        this reader as one more holder of the shared cache entry."""
+        with _SHARED_LOCK:
+            frame = frame.persist()
+            key = self._shared_key(attr)
+            _SHARED_HOLDERS[key] = _SHARED_HOLDERS.get(key, 0) + 1
+            setattr(self, attr, frame)
+        return frame
 
     def __del__(self):  # best-effort backstop; close() is the contract
         try:
@@ -359,7 +421,7 @@ class SearchIndex:
                     ).alias("gram"),
                 )
             )
-            self._term_grams = g.persist()
+            self._hold("_term_grams", g)
         return self._term_grams
 
     def fuzzy_candidates(self, full_term: str, max_edits: int, transpositions: bool):
@@ -550,10 +612,9 @@ class SearchIndex:
                 self.spark.sparkContext.defaultParallelism,
                 max(8, math.ceil(n_chunks / 6)),
             )
-            self._chunked_postings = (
-                self.dist_postings.repartition(n, "chunk_id")
-                .sortWithinPartitions("term", "chunk_id")
-                .persist()
+            self._hold(
+                "_chunked_postings",
+                self.dist_postings.repartition(n, "chunk_id").sortWithinPartitions("term", "chunk_id"),
             )
             self._chunked_postings.count()  # materialize once, eagerly
         return self._chunked_postings
@@ -609,13 +670,7 @@ class SearchIndex:
         ``use_cache=False`` for PARTIAL row sets (e.g. only a term's
         spanning rows): the cache is keyed by term alone and must only
         ever hold full decodes."""
-        from lucene_spark.codec.positions import (
-            concat_position_lists,
-            repack_position_lists,
-            unpack_offsets,
-            unpack_payloads,
-            unpack_positions,
-        )
+        from lucene_spark.codec.positions import unpack_offsets, unpack_payloads, unpack_positions
 
         out: dict[str, PostingList] = {}
         flags = (with_positions, with_offsets, with_payloads)
@@ -625,51 +680,34 @@ class SearchIndex:
             if dkey in hits:
                 out[term] = hits[dkey]
                 continue
-            parts = [unpack_postings(bytes(r["blob"])) for r in rs]
-            docs = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            norms = np.concatenate([p[2] for p in parts])
-            positions = None
-            if with_positions:
-                pparts = []
-                for r, p in zip(rs, parts):
+            parts = []
+            for r in rs:
+                ids, tfs, norms = unpack_postings(bytes(r["blob"]))
+                part = [ids, tfs, norms, None, None, None]
+                if with_positions:
                     if r["pos_blob"] is None:
                         raise ValueError(f"index has no positions for term {term!r} (built with positions=False)")
-                    pparts.append(unpack_positions(bytes(r["pos_blob"]), p[1]))
-                # keep the flat decode buffer attached (PositionLists):
-                # the positional kernels' zero-copy fast path reads it,
-                # and this decode is cached across queries
-                positions = concat_position_lists(pparts)
-            offsets = None
-            if with_offsets:
-                offsets = []
-                for r, p in zip(rs, parts):
+                    # keep the flat decode buffer attached (PositionLists):
+                    # the positional kernels' zero-copy fast path reads it,
+                    # and this decode is cached across queries
+                    part[3] = unpack_positions(bytes(r["pos_blob"]), tfs)
+                if with_offsets:
                     ob = r["off_blob"] if "off_blob" in r.__fields__ else None
                     if ob is None:
                         raise ValueError(
                             f"index has no offsets for term {term!r} (built with offsets=False)"
                         )
-                    offsets.extend(unpack_offsets(bytes(ob), p[1]))
-            payloads = None
-            if with_payloads:
-                payloads = []
-                for r, p in zip(rs, parts):
+                    part[4] = unpack_offsets(bytes(ob), tfs)
+                if with_payloads:
                     pb = r["pay_blob"] if "pay_blob" in r.__fields__ else None
                     if pb is None:
                         raise ValueError(
                             f"index has no payloads for term {term!r} "
                             "(built without delimited_payloads)"
                         )
-                    payloads.extend(unpack_payloads(bytes(pb), p[1]))
-            if not (len(docs) < 2 or (np.diff(docs) > 0).all()):
-                order = np.argsort(docs, kind="stable")
-                docs, tfs, norms = docs[order], tfs[order], norms[order]
-                if positions is not None:
-                    positions = repack_position_lists(positions[i] for i in order)
-                if offsets is not None:
-                    offsets = [offsets[i] for i in order]
-                if payloads is not None:
-                    payloads = [payloads[i] for i in order]
+                    part[5] = unpack_payloads(bytes(pb), tfs)
+                parts.append(part)
+            docs, tfs, norms, positions, offsets, payloads = concat_doc_order(parts)
             out[term] = PostingList(
                 term, -1, len(docs), docs, tfs, norms.astype(np.int64), positions, offsets, payloads
             )

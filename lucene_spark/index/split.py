@@ -44,7 +44,7 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from lucene_spark.index.builder import FIELD_SEP, stats_frame
+from lucene_spark.index.builder import FIELD_SEP, stats_frame, write_reverse_dict, write_table
 
 __all__ = ["split_index"]
 
@@ -200,39 +200,24 @@ def split_index(
                 F.when(F.col("chunk_id") >= cut_chunk, F.col("chunk_id") - cut_chunk).otherwise(F.lit(0)),
             )
 
-        d.repartitionByRange(buckets, "doc_id").sortWithinPartitions("doc_id").write.mode(
-            "overwrite"
-        ).parquet(f"{out}/docs")
-        nr.repartitionByRange(buckets, "doc_id").sortWithinPartitions("doc_id").write.mode(
-            "overwrite"
-        ).parquet(f"{out}/norms")
-        p.repartition(buckets, "term").sortWithinPartitions("term", "chunk_id").write.mode(
-            "overwrite"
-        ).parquet(f"{out}/postings")
+        write_table(d, "docs", f"{out}/docs", buckets)
+        write_table(nr, "norms", f"{out}/norms", buckets)
+        write_table(p, "postings", f"{out}/postings", buckets)
         if has_tv:
             tv = spark.read.parquet(f"{index_dir}/term_vectors")
             tv = tv.filter(F.col("doc_id") < cut) if lo else (
                 tv.filter(F.col("doc_id") >= cut).withColumn("doc_id", F.col("doc_id") - cut)
             )
-            tv.repartitionByRange(buckets, "doc_id").sortWithinPartitions("doc_id").write.mode(
-                "overwrite"
-            ).parquet(f"{out}/term_vectors")
+            write_table(tv, "term_vectors", f"{out}/term_vectors", buckets)
 
         # term dictionary + reversed sidecar re-derived from this half's
         # postings rows (df/ttf are additive over chunks)
         pw = spark.read.parquet(f"{out}/postings")
         ts = pw.groupBy("term").agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
-        ts.repartition(buckets, "term").sortWithinPartitions("term").write.mode(
-            "overwrite"
-        ).parquet(f"{out}/term_stats")
+        write_table(ts, "term_stats", f"{out}/term_stats", buckets)
         if manifest.get("reverse_dict"):
-            (
-                spark.read.parquet(f"{out}/term_stats")
-                .select("term", F.reverse("term").alias("term_rev"))
-                .repartition(buckets, "term_rev")
-                .sortWithinPartitions("term_rev")
-                .write.mode("overwrite")
-                .parquet(f"{out}/term_stats_rev")
+            write_reverse_dict(
+                spark.read.parquet(f"{out}/term_stats"), f"{out}/term_stats_rev", buckets
             )
 
         # per-field CollectionStatistics: sum_ttf / sum_df are additive

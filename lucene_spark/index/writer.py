@@ -39,7 +39,6 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from lucene_spark.index.builder import DOC_KEYS, IndexBuilder, IndexConfig
 from lucene_spark.index.reader import SearchIndex
@@ -124,40 +123,7 @@ class IndexWriter:
         pers = getattr(ided, "_assign_ids_persisted", None)
         with_ids = ided.withColumn("doc_id", (F.col("doc_id") + F.lit(base)).cast("long"))
         d = f"{self.index_dir}/segments/seg=w{gen}"
-        tokenized = self._inner.tokenized(with_ids)
-        # keep EVERY metadata column (the one-shot builder contract:
-        # docs = doc values store; extra columns pass through)
-        meta_cols = [
-            c
-            for c in df.columns
-            if c not in (cfg.field, "doc_id", "content_sha256", cfg.vector_field)
-        ]
-        tokenized.select(
-            "doc_id",
-            *[F.col(c) for c in meta_cols],
-            F.sha2(F.col(cfg.field), 256).alias("content_sha256"),
-        ).write.mode("overwrite").parquet(f"{d}/docs")
-        # extra tokenized fields union into the same inverted relation
-        # under their prefixed key space, and the segment norms carry
-        # the per-field norm byte — the one-shot build() contract
-        # (FieldInfos union; CombinedFieldQuery needs every field's
-        # norm), so appended docs stay searchable on every field
-        from lucene_spark.index.builder import FIELD_SEP
-
-        inverted = self._inner.inverted(tokenized)
-        norms_df = tokenized.select("doc_id", "dl", "norm")
-        for xf in cfg.extra_fields:
-            inv_x = self._inner.inverted(
-                self._inner.tokenized(with_ids, field=xf), prefix=xf + FIELD_SEP
-            )
-            inverted = inverted.unionByName(inv_x)
-            norms_df = norms_df.join(
-                inv_x.groupBy("doc_id").agg(F.max("norm").cast("int").alias(f"norm_{xf}")),
-                "doc_id",
-                "left",
-            )
-        norms_df.write.mode("overwrite").parquet(f"{d}/norms")
-        inverted.write.mode("overwrite").parquet(f"{d}/inverted")
+        self._inner.write_segment(with_ids, d)
         if pers is not None:
             pers.unpersist()
         n = self.spark.read.parquet(f"{d}/norms").count()
@@ -455,29 +421,8 @@ class IndexWriter:
             return {"mode": "tiered", "packed_segments": [], "packed_docs": 0}
         tier = max((t["tier"] for t in commits["tiers"]), default=-1) + 1
         seg_root = f"{self.index_dir}/segments"
-        inverted = self.spark.read.parquet(*[f"{seg_root}/seg={s}/inverted" for s in new])
-        docs = self.spark.read.parquet(*[f"{seg_root}/seg={s}/docs" for s in new])
-        norms = self.spark.read.parquet(*[f"{seg_root}/seg={s}/norms" for s in new])
-        cfg = self.config
-        # chunk_all: a tier's rows must live in their true doc-range
-        # chunk (cold terms included) so distributed leaf grouping
-        # stays doc-range-partitioned across tiers
-        postings, term_stats = self._inner.posting_lists(inverted, chunk_all=True)
-        postings.repartition(cfg.term_buckets, "term").sortWithinPartitions(
-            "term", "chunk_id"
-        ).write.mode("overwrite").parquet(f"{self.index_dir}/postings/tier={tier}")
-        term_stats.repartition(cfg.term_buckets, "term").sortWithinPartitions("term").write.mode(
-            "overwrite"
-        ).parquet(f"{self.index_dir}/term_stats/tier={tier}")
-        docs.repartitionByRange(cfg.term_buckets, "doc_id").sortWithinPartitions("doc_id").write.mode(
-            "overwrite"
-        ).parquet(f"{self.index_dir}/docs/tier={tier}")
-        norms.repartitionByRange(cfg.term_buckets, "doc_id").sortWithinPartitions("doc_id").write.mode(
-            "overwrite"
-        ).parquet(f"{self.index_dir}/norms/tier={tier}")
-        for t in self._TABLES:
-            self.spark.catalog.refreshByPath(f"{self.index_dir}/{t}")
-        n_new = norms.count()
+        self._inner.merge_segments([f"{seg_root}/seg={s}" for s in new], self.index_dir, tier=tier)
+        n_new = self.spark.read.parquet(f"{self.index_dir}/norms/tier={tier}").count()
         commits["tiers"].append({"tier": tier, "segments": new, "n_docs": int(n_new)})
         self._save_commits(commits)
         return {

@@ -32,7 +32,7 @@ import numpy as np
 import pandas as pd
 
 from lucene_spark.index.cache import MISS
-from lucene_spark.index.reader import MAX_EXPANSION, SearchIndex
+from lucene_spark.index.reader import MAX_EXPANSION, SearchIndex, concat_doc_order
 from lucene_spark.search import ast as A
 from lucene_spark.search.kernels import (
     BoolSpec,
@@ -620,11 +620,11 @@ class Searcher:
             )
         return q
 
-    def prepare(self, query: str | A.Query, collect_rows: bool = False, lazy_docsets: bool = False):
-        """Parse → rewrite → Weight creation. With ``collect_rows``
-        (driver mode) the query's posting rows are point-read in ONE
-        Spark job and df/ttf derive from their columns — no separate
-        term_stats lookup; the whole driver query path is one job."""
+    def _analyze(self, query: str | A.Query) -> A.Query:
+        """Parse and analyze ``query`` with the index's own chain: the
+        parser flags, then the stem / stem_repeat / multi-field
+        composite-key rewrites. Every query entry point (prepare,
+        count) analyzes through here, so they cannot disagree."""
         from lucene_spark.analysis.tokenizer import _expander
 
         analyzer = self.index.analyzer
@@ -643,13 +643,20 @@ class Searcher:
             )
         else:
             q = query if one_to_n else A.rewrite(query)
-        if self.index.analyzer not in ("standard", None):
+        if analyzer not in ("standard", None):
             q = self._stem_query(q)
         if self.index.stem_repeat:
             q = self._stem_repeat_query(q)
         if len(self.index.text_fields) > 1:
             q = self._fieldize(q)
-        q = A.rewrite(self._expand_multiterm(q, lazy_docsets))
+        return q
+
+    def prepare(self, query: str | A.Query, collect_rows: bool = False, lazy_docsets: bool = False):
+        """Parse → rewrite → Weight creation. With ``collect_rows``
+        (driver mode) the query's posting rows are point-read in ONE
+        Spark job and df/ttf derive from their columns — no separate
+        term_stats lookup; the whole driver query path is one job."""
+        q = A.rewrite(self._expand_multiterm(self._analyze(query), lazy_docsets))
         terms = sorted(A.extract_terms(q))
         stats = self.index.stats
         rows_by_term = None
@@ -962,26 +969,18 @@ class Searcher:
             lo, hi = c * dpc, (c + 1) * dpc
             arrays: dict = {}
             positions: dict = {}
+            tparts: dict = {}
             for term, r in hot_rows_by_chunk.get(c, ()):
                 d, tf, nm = unpack_postings(bytes(r["blob"]))
-                nm = nm.astype(np.int64)
                 pos = (
                     unpack_positions(bytes(r["pos_blob"]), tf)
                     if with_pos and r["pos_blob"] is not None
                     else None
                 )
-                prev = arrays.get(term)
-                if prev is not None:  # tiered: one row per tier, concat in doc order
-                    d = np.concatenate([prev[0], d])
-                    tf = np.concatenate([prev[1], tf])
-                    nm = np.concatenate([prev[2], nm])
-                    if pos is not None and term in positions:
-                        pos = positions[term] + pos
-                    if len(d) > 1 and not (np.diff(d) > 0).all():
-                        order = np.argsort(d, kind="stable")
-                        d, tf, nm = d[order], tf[order], nm[order]
-                        if pos is not None:
-                            pos = [pos[i] for i in order]
+                # tiered: one row per tier
+                tparts.setdefault(term, []).append((d, tf, nm.astype(np.int64), pos))
+            for term, ps in tparts.items():
+                d, tf, nm, pos = concat_doc_order(ps)
                 arrays[term] = (d, tf, nm)
                 if pos is not None:
                     positions[term] = pos
@@ -1183,32 +1182,11 @@ class Searcher:
         instead of decoding any postings. mode="distributed" counts
         over the chunked match relation (one long per chunk reaches the
         driver — the cluster shape for non-selective queries)."""
-        # analyze EXACTLY like prepare() (same parser flags, stem /
-        # stem_repeat / code-chain / fieldize rewrites) and take the
-        # shortcut only if the ANALYZED query is still a plain term —
-        # a count() that analyzes differently from search() would
-        # disagree with it (e.g. stem_repeat rewrites a term to a
-        # SynonymQuery; the cased "code" chain must not pre-lowercase)
-        from lucene_spark.analysis.tokenizer import _expander
-
-        an = self.index.analyzer
-        one_to_n = _expander(an) is not None
-        q0 = (
-            parse_query(
-                query,
-                preserve_case=one_to_n,
-                rewrite_tree=not one_to_n,
-                analyzer=an if an in ("whitespace", "keyword") else None,
-            )
-            if isinstance(query, str)
-            else (query if one_to_n else A.rewrite(query))
-        )
-        if an not in ("standard", None):
-            q0 = self._stem_query(q0)
-        if self.index.stem_repeat:
-            q0 = self._stem_repeat_query(q0)
-        if len(self.index.text_fields) > 1:
-            q0 = self._fieldize(q0)  # composite-key the df point-read too
+        # analyze EXACTLY like prepare() and take the shortcut only if
+        # the ANALYZED query is still a plain term (e.g. stem_repeat
+        # rewrites a term to a SynonymQuery; fieldize composite-keys
+        # the df point-read)
+        q0 = self._analyze(query)
         if not len(self.index.deleted_ids):
             if isinstance(q0, A.TermQuery):
                 return self.index.term_stats([q0.term]).get(q0.term, (0, 0))[0]
@@ -1510,6 +1488,7 @@ class Searcher:
             docvals: dict = {}
             deleted = None
             all_docs = None
+            tparts: dict = {}
             for r in pdf.itertuples(index=False):
                 t = r.term
                 if t is None:
@@ -1528,7 +1507,6 @@ class Searcher:
                         docsets[pred_keys[t]] = ds
                     continue
                 d, tf, nm = unpack_postings(bytes(r.blob))
-                nm = nm.astype(np.int64)
                 pos = (
                     unpack_positions(bytes(r.pos_blob), tf)
                     if with_pos and r.pos_blob is not None
@@ -1539,68 +1517,35 @@ class Searcher:
                     if with_pay and getattr(r, "pay_blob", None) is not None
                     else None
                 )
-                prev = arrays.get(t)
-                if prev is not None:
-                    # tiered index: a boundary chunk can hold one row
-                    # per tier for the same term — concatenate in doc
-                    # order (tiers cover disjoint, increasing ranges)
-                    d = np.concatenate([prev[0], d])
-                    tf = np.concatenate([prev[1], tf])
-                    nm = np.concatenate([prev[2], nm])
-                    if pos is not None and t in positions:
-                        pos = positions[t] + pos
-                    if pay is not None and t in payloads:
-                        pay = payloads[t] + pay
-                    if len(d) > 1 and not (np.diff(d) > 0).all():
-                        order = np.argsort(d, kind="stable")
-                        d, tf, nm = d[order], tf[order], nm[order]
-                        if pos is not None:
-                            pos = [pos[i] for i in order]
-                        if pay is not None:
-                            pay = [pay[i] for i in order]
+                # tiered index: a boundary chunk can hold one row per
+                # tier for the same term
+                tparts.setdefault(t, []).append((d, tf, nm.astype(np.int64), pos, pay))
+            for t, (d, tf, nm) in small_arrays.items():
+                i0, i1 = np.searchsorted(d, lo), np.searchsorted(d, hi)
+                if t in tparts and i0 == i1:
+                    continue
+                # a term with confined rows in this chunk too (mixed
+                # spanning/hot layout) concatenates with them
+                tparts.setdefault(t, []).append(
+                    (
+                        d[i0:i1],
+                        tf[i0:i1],
+                        nm[i0:i1],
+                        small_positions[t][i0:i1]
+                        if with_pos and small_positions.get(t) is not None
+                        else None,
+                        small_payloads[t][i0:i1]
+                        if with_pay and small_payloads.get(t) is not None
+                        else None,
+                    )
+                )
+            for t, ps in tparts.items():
+                d, tf, nm, pos, pay = concat_doc_order(ps)
                 arrays[t] = (d, tf, nm)
                 if pos is not None:
                     positions[t] = pos
                 if pay is not None:
                     payloads[t] = pay
-            for t, (d, tf, nm) in small_arrays.items():
-                i0, i1 = np.searchsorted(d, lo), np.searchsorted(d, hi)
-                sd, stf, snm = d[i0:i1], tf[i0:i1], nm[i0:i1]
-                spos = (
-                    small_positions[t][i0:i1]
-                    if with_pos and small_positions.get(t) is not None
-                    else None
-                )
-                spay = (
-                    small_payloads[t][i0:i1]
-                    if with_pay and small_payloads.get(t) is not None
-                    else None
-                )
-                prev = arrays.get(t)
-                if prev is not None:
-                    # term has confined rows in this chunk too (mixed
-                    # spanning/hot layout): concatenate in doc order
-                    if not len(sd):
-                        continue
-                    sd = np.concatenate([prev[0], sd])
-                    stf = np.concatenate([prev[1], stf])
-                    snm = np.concatenate([prev[2], snm])
-                    if spos is not None and t in positions:
-                        spos = positions[t] + spos
-                    if spay is not None and t in payloads:
-                        spay = payloads[t] + spay
-                    if len(sd) > 1 and not (np.diff(sd) > 0).all():
-                        order = np.argsort(sd, kind="stable")
-                        sd, stf, snm = sd[order], stf[order], snm[order]
-                        if spos is not None:
-                            spos = [spos[i] for i in order]
-                        if spay is not None:
-                            spay = [spay[i] for i in order]
-                arrays[t] = (sd, stf, snm)
-                if spos is not None:
-                    positions[t] = spos
-                if spay is not None:
-                    payloads[t] = spay
             if all_contiguous:
                 all_docs = np.arange(lo, min(hi, max_doc), dtype=np.int64)
             ctx = ChunkContext(

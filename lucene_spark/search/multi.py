@@ -264,19 +264,10 @@ class MultiSearcher(Searcher):
             )
         from lucene_spark.search import ast as A
         from lucene_spark.search.kernels import evaluate
-        from lucene_spark.search.parser import parse_query
 
-        q0 = parse_query(query) if isinstance(query, str) else A.rewrite(query)
-        # the docFreq shortcut is only sound when this parse IS the
-        # full analysis (see Searcher.count: stem chains, stem_repeat,
-        # and multi-field composite keys all rewrite the query) —
-        # otherwise fall through to prepare(), which applies them
-        plain_chain = (
-            self.index.analyzer in ("standard", None)
-            and not self.index.stem_repeat
-            and len(self.index.text_fields) <= 1
-        )
-        if plain_chain and not len(self.index.deleted_ids):
+        # the shortcuts read the ANALYZED query, like Searcher.count
+        q0 = self._analyze(query)
+        if not len(self.index.deleted_ids):
             if isinstance(q0, A.TermQuery):
                 return self.index.term_stats([q0.term]).get(q0.term, (0, 0))[0]
             if isinstance(q0, A.MatchAllDocsQuery):

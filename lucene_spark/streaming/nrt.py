@@ -24,8 +24,6 @@ resumable builder's checkpoint records).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -81,48 +79,14 @@ class StreamingIndexer:
         )
         from pyspark import StorageLevel
 
-        # ONE materialization of the id-assigned tokenized relation:
-        # the three writes below must all see the same doc_id per row
-        # (an uncached plan would re-run the window per write)
-        tokenized = self._inner.tokenized(base).persist(StorageLevel.DISK_ONLY)
+        # ONE materialization of the window-id base: the segment writes
+        # must all see the same doc_id per row (an uncached plan would
+        # re-run the window per write)
+        base = base.persist(StorageLevel.DISK_ONLY)
         try:
-            d = f"{self.index_dir}/segments/seg=s{batch_id}"
-            # EVERY metadata column rides along (same docs-table
-            # contract as the batch build_segment — doc values /
-            # keyword filters must work on streamed docs too)
-            meta_cols = [
-                c
-                for c in batch_df.columns
-                if c not in (cfg.field, "doc_id", "content_sha256", cfg.vector_field)
-            ]
-            tokenized.select(
-                "doc_id",
-                *[F.col(c) for c in meta_cols],
-                F.sha2(F.col(cfg.field), 256).alias("content_sha256"),
-            ).write.mode("overwrite").parquet(f"{d}/docs")
-            # extra tokenized fields: prefixed inversion union +
-            # per-field norm bytes, matching build_segment — streamed
-            # segments must merge schema-identically with batch ones
-            from lucene_spark.index.builder import FIELD_SEP
-
-            inverted = self._inner.inverted(tokenized)
-            norms_df = tokenized.select("doc_id", "dl", "norm")
-            for xf in cfg.extra_fields:
-                inv_x = self._inner.inverted(
-                    self._inner.tokenized(base, field=xf), prefix=xf + FIELD_SEP
-                )
-                inverted = inverted.unionByName(inv_x)
-                norms_df = norms_df.join(
-                    inv_x.groupBy("doc_id").agg(
-                        F.max("norm").cast("int").alias(f"norm_{xf}")
-                    ),
-                    "doc_id",
-                    "left",
-                )
-            norms_df.write.mode("overwrite").parquet(f"{d}/norms")
-            inverted.write.mode("overwrite").parquet(f"{d}/inverted")
+            self._inner.write_segment(base, f"{self.index_dir}/segments/seg=s{batch_id}")
         finally:
-            tokenized.unpersist()
+            base.unpersist()
 
     def start(self, stream_df: DataFrame, checkpoint_dir: str, trigger_available_now: bool = True):
         """Attach the indexer to a streaming DataFrame of corpus rows.

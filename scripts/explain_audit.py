@@ -8,7 +8,8 @@ hot paths and verify scale-critical plan properties hold:
 4. index build: inversion is a partial-agg (map-side combine) hash
    aggregate inside WholeStageCodegen; only ONE shuffle by (term,...);
    postings pack through MapInArrow (no MapInPandas); the
-   collection_stats write has no Python stage
+   collection_stats write has no Python stage; a staged segment
+   tokenizes once (only its inverted write has Python stages)
 5. distributed search: no shuffle beyond the chunk groupBy;
    TakeOrderedAndProject (not a global sort) for the top-k merge
 
@@ -45,7 +46,7 @@ def _stable(plan: str) -> str:
     plan = re.sub(r"plan_id=\d+", "plan_id=N", plan)
     plan = re.sub(r"RDD\[\d+\]", "RDD[N]", plan)
     plan = re.sub(r"\b(lambda \w+)_\d+\b", r"\1_N", plan)
-    return re.sub(r"/[^\s\[,]*/audit_dv_\w+", "<tmp>/audit_dv", plan)
+    return re.sub(r"/[^\s\[,]*/audit_(dv|seg)_\w+", r"<tmp>/audit_\1", plan)
 
 
 def check(name: str, plan: str, pattern: str) -> None:
@@ -147,6 +148,32 @@ def main() -> None:
     plan = _capture(stats_frame(spark, [(200, 5000, 3000, "content")]))
     check_absent("collection_stats write has no Python stage", plan, r"ExistingRDD|BatchEvalPython")
     sections.append(("Index build: collection_stats write", plan))
+
+    # 4d. segment staging (IndexWriter.add_documents, resumable and
+    # streaming segments): the tokenizer runs once per segment — only
+    # the inverted write carries the tokenize + norm UDFs; docs come
+    # from the source relation and norms from the written inverted rows
+    import shutil as _sh
+    import tempfile
+
+    seg_dir = tempfile.mkdtemp(prefix="audit_seg_")
+    sb = IndexBuilder(spark, IndexConfig())
+    base = corpus_df(spark, sf).filter(F.col("doc_id") < 50)
+    seg_docs, _, seg_inv = sb.stage(base)
+    sb.write_segment(base, seg_dir)
+    seg_norms = sb.norms(
+        spark.read.parquet(f"{seg_dir}/docs"), spark.read.parquet(f"{seg_dir}/inverted")
+    )
+    for what, frame, want in (("docs", seg_docs, 0), ("norms", seg_norms, 0), ("inverted", seg_inv, 2)):
+        plan = _capture(frame)
+        n_py = len(re.findall(r"^\(\d+\) (?:ArrowEvalPython|BatchEvalPython)", plan, re.M))
+        CHECKS.append((
+            f"segment {what} write: Python stages = {'tokenize + norm' if want else 'none'}",
+            f"EvalPython nodes x{n_py} (want {want})",
+            n_py == want,
+        ))
+        sections.append((f"Segment staging: {what} write", plan))
+    _sh.rmtree(seg_dir, ignore_errors=True)
 
     # codegen on a pure-JVM aggregation (Python stages legitimately
     # break codegen; the JVM-side spans must still fuse). AQE's

@@ -173,3 +173,37 @@ class TestReaderCacheOnIndex:
                 st = small.cache.stats()
                 assert sum(v["bytes"] for v in st.values()) <= small.cache.BUDGET_BYTES
         assert sum(v["evictions"] for v in small.cache.stats().values()) > 0
+
+
+class TestSharedPersistedRelations:
+    """The chunk-partitioned postings and the fuzzy gram relation are
+    persisted plans of the index directory alone: every reader of that
+    directory shares one cache-manager entry, so closing one reader
+    must leave another's cached data in place."""
+
+    def test_close_releases_only_after_the_last_reader(self, spark, corpus_pdf, tmp_path_factory):
+        from pyspark import StorageLevel
+
+        from lucene_spark.index.builder import IndexBuilder, IndexConfig
+        from lucene_spark.index.reader import SearchIndex
+
+        d = str(tmp_path_factory.mktemp("shared_rel"))
+        IndexBuilder(spark, IndexConfig(docs_per_chunk=32, term_buckets=2)).build(
+            spark.createDataFrame(corpus_pdf.head(80)).drop("content_sha256"), d
+        )
+        r1, r2 = SearchIndex(spark, d), SearchIndex(spark, d)
+        hits = []
+        for r in (r1, r2):
+            s = Searcher(r)
+            hits.append(s.search("return", k=5, mode="distributed").hits)
+            s.search("retrun~1", k=5)
+        assert hits[0] == hits[1] and hits[0]
+        frames = [r1._chunked_postings, r1._term_grams]
+        assert all(f is not None for f in frames)
+        assert all(f.storageLevel != StorageLevel.NONE for f in frames)
+        r2.close()
+        assert all(f.storageLevel != StorageLevel.NONE for f in frames)
+        assert Searcher(r1).search("return", k=5, mode="distributed").hits == hits[0]
+        r1.close()
+        assert all(f.storageLevel == StorageLevel.NONE for f in frames)
+        r1.close()  # idempotent
