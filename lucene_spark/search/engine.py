@@ -45,7 +45,7 @@ from lucene_spark.search.kernels import (
     top_k_from_arrays,
 )
 from lucene_spark.search.parser import parse_query
-from lucene_spark.search.wand import PostingSource, conjunction_top_k, wand_top_k
+from lucene_spark.search.wand import PostingSource, TermBlocks, conjunction_top_k, wand_top_k
 
 
 # distributed search: hot-term chunk rows at or below this count are
@@ -732,21 +732,16 @@ class Searcher:
         )
 
     def _posting_sources(self, term_specs, cache, rows_by_term=None) -> list[PostingSource]:
+        terms = [t.term for t in term_specs]
         if rows_by_term is None:
-            rows_by_term = self.index.collect_rows([t.term for t in term_specs])
-        by_term: dict[str, list] = {}
-        for term, rs in rows_by_term.items():
-            by_term[term] = [
-                (
-                    bytes(r["blob"]),
-                    np.array(r["block_last"], dtype=np.int64),
-                    np.array(r["imp_block"], dtype=np.int64),
-                    np.array(r["imp_freq"], dtype=np.int64),
-                    np.array(r["imp_norm"], dtype=np.int64),
-                    int(r["df"]),
-                )
-                for r in rs
-            ]
+            rows_by_term = self.index.collect_rows(terms)
+        terms = [t for t in dict.fromkeys(terms) if t in rows_by_term]
+        # a term's block table is built from its chunk rows once per reader
+        by_term = self.index.cache.get_many("source", terms)
+        for t in terms:
+            if t not in by_term:
+                by_term[t] = self.index.cache.put("source", t, TermBlocks.from_rows(rows_by_term[t]))
+
         def _c(ts):
             # per-field norm-inverse cache (multi-field: per-field avgdl)
             return cache[ts.field] if isinstance(cache, dict) else cache

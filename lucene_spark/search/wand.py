@@ -14,12 +14,19 @@ as an interval sweep:
 2. block boundaries across all query terms cut doc-id space into
    elementary intervals; each interval's upper bound = Σ (per-term
    block-max of the covering block),
-3. intervals are scored exhaustively in descending upper-bound order;
-   once the top-k heap is full (and the totalHitsThreshold — default
-   1000, IndexSearcher.java:104 — has been crossed), any interval with
-   upper bound below minCompetitiveScore = nextUp(kth score)
-   (TopScoreDocCollector.java:335-355) is pruned: its blocks are never
-   bit-unpacked.
+3. intervals are taken in descending upper-bound order, a batch at a
+   time. Every elementary interval lies inside exactly one block of
+   each term, so a batch is scored in one pass: each term's covering
+   blocks are decoded once per reader (the reader cache's "block"
+   entries) and scored once per query, the docs whose interval is in
+   the batch are kept, and their scores are summed in float64 term by
+   term, then cast to float32 — the exhaustive kernel's accumulation.
+   Each doc lies in exactly one interval, so it is scored exactly once.
+   Once the top-k heap is full (and the totalHitsThreshold — default
+   1000, IndexSearcher.java:104 — has been crossed), every interval
+   whose upper bound is below minCompetitiveScore = kth score
+   (TopScoreDocCollector.java:335-355) is pruned: the blocks only it
+   needs are never bit-unpacked.
 
 Like the reference (WANDScorer.java:88-118 rounds max scores UP),
 pruning is by true upper bounds, so the returned top-k is EXACTLY the
@@ -28,116 +35,142 @@ exhaustive result — verified by equivalence tests.
 
 from __future__ import annotations
 
+import time
+from dataclasses import dataclass
+
 import numpy as np
 
 from lucene_spark.codec.forutil import BLOCK_SIZE, decode_blocks
 from lucene_spark.search.kernels import top_k_from_arrays
 from lucene_spark.search.similarity import BM25_SIM
 
-_INF_DOC = np.int64(2**62)
+BATCH = 8  # intervals in the first batch; each later batch doubles
+
+
+@dataclass
+class TermBlocks:
+    """One term's posting chunks as the reader holds them, in ascending
+    doc-range order, plus the global block table over all its chunks:
+    built once per reader from the term's chunk rows (reader cache
+    "source" entries) and shared by every query on the term."""
+
+    blobs: list  # encoded postings per chunk
+    chunk_last: list  # per chunk: exact last doc of each block (incl. tail)
+    chunk_df: np.ndarray
+    block_end: np.ndarray  # per global block: its last doc
+    block_chunk: np.ndarray  # per global block: owning chunk
+    block_local: np.ndarray  # per global block: block index inside its chunk
+    imp_block: np.ndarray  # per competitive impact: its global block
+    imp_freq: np.ndarray
+    imp_norm: np.ndarray
+    df: int
+
+    @classmethod
+    def from_rows(cls, rows) -> "TermBlocks":
+        chunk_df = np.array([int(r["df"]) for r in rows], dtype=np.int64)
+        n_blocks = (chunk_df + BLOCK_SIZE - 1) // BLOCK_SIZE
+        first = np.concatenate([[0], np.cumsum(n_blocks)[:-1]]).astype(np.int64)
+        chunk_last = [np.asarray(r["block_last"], dtype=np.int64)[:n] for r, n in zip(rows, n_blocks)]
+        block_chunk = np.repeat(np.arange(len(rows), dtype=np.int64), n_blocks)
+        imp_chunk = [np.asarray(r["imp_block"], dtype=np.int64) + f for r, f in zip(rows, first)]
+        return cls(
+            blobs=[r["blob"] for r in rows],
+            chunk_last=chunk_last,
+            chunk_df=chunk_df,
+            block_end=np.concatenate(chunk_last),
+            block_chunk=block_chunk,
+            block_local=np.arange(len(block_chunk), dtype=np.int64) - first[block_chunk],
+            imp_block=np.concatenate(imp_chunk),
+            imp_freq=np.concatenate([np.asarray(r["imp_freq"], dtype=np.int64) for r in rows]),
+            imp_norm=np.concatenate([np.asarray(r["imp_norm"], dtype=np.int64) for r in rows]),
+            df=int(chunk_df.sum()),
+        )
+
+    def block_size(self, chunk: int, local: int) -> int:
+        df = int(self.chunk_df[chunk])
+        n_full = df // BLOCK_SIZE
+        return BLOCK_SIZE if local < n_full else df - n_full * BLOCK_SIZE
 
 
 class PostingSource:
-    """Lazily-decodable posting list for one term: block upper bounds
-    from impacts, selective block decode on demand."""
+    """One query term over its TermBlocks: per-block score upper bounds
+    from the impacts, selective block decode on demand."""
 
     def __init__(
         self,
         weight,
         cache: np.ndarray,
-        chunks: list[tuple[bytes, np.ndarray, np.ndarray, np.ndarray, np.ndarray, int]],
+        blocks: TermBlocks,
         sim=None,
         term: str | None = None,
         reader_cache=None,
     ):
-        """chunks: list of (blob, block_last, imp_block, imp_freq, imp_norm, df)
-        in ascending doc-range order (chunk rows from the index). ``sim``
-        is the pluggable Similarity (BM25 default); every model is
-        monotone in freq and anti-monotone in length, so block maxima
-        over the competitive-impact Pareto pairs stay true upper bounds."""
+        """``sim`` is the pluggable Similarity (BM25 default); every
+        model is monotone in freq and anti-monotone in length, so block
+        maxima over the competitive-impact Pareto pairs stay true upper
+        bounds. Decoded blocks are shared across queries in
+        ``reader_cache`` keyed by ``term``: its chunk rows, and so its
+        block numbering, are fixed for the reader's lifetime."""
         self.sim = sim if sim is not None else BM25_SIM
         self.weight = weight
         self.cache = cache
-        self.chunks = chunks
-        # global block table: (chunk_idx, local_block, end_doc, ub_score)
-        ends, ubs, owner = [], [], []
-        for ci, (blob, block_last, ib, if_, in_, df) in enumerate(chunks):
-            n_blocks = (df + BLOCK_SIZE - 1) // BLOCK_SIZE
-            ub = np.zeros(n_blocks, dtype=np.float32)
-            if len(ib):
-                in_arr = np.asarray(in_)
-                if not getattr(self.sim, "length_monotone", True):
-                    # models whose lengthNorm is NOT non-increasing
-                    # (SweetSpotSimilarity's plateau): the competitive
-                    # impacts' Pareto frontier (max freq, min norm) no
-                    # longer contains the max scorer, so substitute the
-                    # globally-best norm byte — a true (looser) upper
-                    # bound that keeps dynamic pruning exact
-                    best = int(np.argmax(np.asarray(cache, dtype=np.float64)))
-                    in_arr = np.full(len(in_arr), best, dtype=np.int64)
-                s = self.sim.score(self.weight, np.asarray(if_), in_arr, cache)
-                np.maximum.at(ub, np.asarray(ib, dtype=np.int64), s)
-            for b in range(n_blocks):
-                end = int(block_last[b])  # exact per-block last doc (incl. tail)
-                ends.append(end)
-                ubs.append(float(ub[b]))
-                owner.append((ci, b))
-        self.block_end = np.array(ends, dtype=np.int64)
-        self.block_ub = np.array(ubs, dtype=np.float32)
-        self.owner = owner
-        self._decoded: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-        # FULL-chunk decodes shared across queries in the reader's
-        # cache under "chunk", keyed (term, chunk ordinal); keys are
-        # stable because collect_rows is reader-cached with a fixed
-        # row order
+        self.blocks = blocks
+        self.block_end = blocks.block_end
+        self.block_ub = np.zeros(len(blocks.block_end), dtype=np.float32)
+        if len(blocks.imp_block):
+            norms = blocks.imp_norm
+            if not getattr(self.sim, "length_monotone", True):
+                # models whose lengthNorm is NOT non-increasing
+                # (SweetSpotSimilarity's plateau): the competitive
+                # impacts' Pareto frontier (max freq, min norm) no
+                # longer contains the max scorer, so substitute the
+                # globally-best norm byte — a true (looser) upper
+                # bound that keeps dynamic pruning exact
+                best = int(np.argmax(np.asarray(cache, dtype=np.float64)))
+                norms = np.full(len(norms), best, dtype=np.int64)
+            s = self.sim.score(self.weight, blocks.imp_freq, norms, cache)
+            np.maximum.at(self.block_ub, blocks.imp_block, s)
         self.term = term
-        self.reader_cache = reader_cache
+        self.reader_cache = reader_cache if term is not None else None
+        self._scored: dict[int, tuple[np.ndarray, np.ndarray]] = {}  # this query's scored blocks
 
-    def block_ranges(self) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(start_doc, end_doc, ub) per block; start = prev end + 1."""
-        starts = np.empty_like(self.block_end)
-        starts[0] = 0
-        starts[1:] = self.block_end[:-1] + 1
-        return starts, self.block_end, self.block_ub
-
-    def decode(self, block_idx: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        got = self._decoded.get(block_idx)
-        if got is None:
-            ci, lb = self.owner[block_idx]
-            blob, block_last, *_ = self.chunks[ci]
-            got = decode_blocks(blob, [lb], np.asarray(block_last, dtype=np.int64))
-            self._decoded[block_idx] = got
-        return got
-
-    def decoded_blocks_scored(self, block_indices: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        if not len(block_indices):
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
-        # group uncached blocks by owning chunk and decode each chunk's
-        # set in ONE decode_blocks call — decode_blocks walks the blob's
-        # block headers once per CALL, so per-block calls would cost
-        # O(blocks^2) header walks on long posting lists (measured 100x
-        # on a 400k-doc corpus: q_or 1.4s -> 14ms)
-        need: dict[int, list[int]] = {}
-        for b in block_indices:
-            if int(b) not in self._decoded:
-                ci, _ = self.owner[int(b)]
-                need.setdefault(ci, []).append(int(b))
-        for ci, bs in need.items():
-            blob, block_last, _ib, _if, _in, df = self.chunks[ci]
-            bs.sort(key=lambda b: self.owner[b][1])
-            lbs = [self.owner[b][1] for b in bs]
-            d, t, nm = decode_blocks(blob, lbs, np.asarray(block_last, dtype=np.int64))
-            n_full = df // BLOCK_SIZE
+    def scored_blocks(self, block_indices: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(docs, scores) of the given ascending global blocks,
+        concatenated. Each block is scored once per query; the blocks
+        not scored yet are read from the reader cache in ONE lookup and
+        the rest decoded with one decode_blocks call per chunk —
+        decode_blocks walks the blob's block headers once per CALL."""
+        new = [b for b in block_indices.tolist() if b not in self._scored]
+        if new:
+            tb = self.blocks
+            owners = zip(tb.block_chunk[new].tolist(), tb.block_local[new].tolist())
+            keys = [(self.term, ci, lb) for ci, lb in owners]
+            rc = self.reader_cache
+            got = rc.get_many("block", keys) if rc is not None else {}
+            need: dict[int, list[int]] = {}
+            for key in keys:
+                if key not in got:
+                    need.setdefault(key[1], []).append(key[2])
+            for ci, lbs in need.items():  # keys ascend, so each lbs does too
+                d, t, nm = decode_blocks(tb.blobs[ci], lbs, tb.chunk_last[ci])
+                off = 0
+                for lb in lbs:
+                    size = tb.block_size(ci, lb)
+                    part = (d[off : off + size], t[off : off + size], nm[off : off + size])
+                    if rc is not None:
+                        rc.put("block", (self.term, ci, lb), part)
+                    got[(self.term, ci, lb)] = part
+                    off += size
+            parts = [got[key] for key in keys]
+            scores = self.score_at(
+                np.concatenate([p[1] for p in parts]), np.concatenate([p[2] for p in parts])
+            )
             off = 0
-            for gb, lb in zip(bs, lbs):
-                size = BLOCK_SIZE if lb < n_full else df - n_full * BLOCK_SIZE
-                self._decoded[gb] = (d[off : off + size], t[off : off + size], nm[off : off + size])
-                off += size
-        parts = [self._decoded[int(b)] for b in block_indices]
-        docs = np.concatenate([p[0] for p in parts])
-        tfs = np.concatenate([p[1] for p in parts])
-        norms = np.concatenate([p[2] for p in parts])
-        return docs, self.sim.score(self.weight, tfs, norms, self.cache)
+            for b, p in zip(new, parts):
+                self._scored[b] = (p[0], scores[off : off + len(p[0])])
+                off += len(p[0])
+        parts = [self._scored[b] for b in block_indices.tolist()]
+        return np.concatenate([p[0] for p in parts]), np.concatenate([p[1] for p in parts])
 
     def decoded_blocks_arrays(
         self, block_indices: np.ndarray
@@ -153,20 +186,21 @@ class PostingSource:
         if not len(block_indices):
             e = np.empty(0, dtype=np.int64)
             return e, e, np.empty(0, dtype=np.int64)
+        tb = self.blocks
         need: dict[int, list[int]] = {}
-        for b in block_indices:
-            ci, lb = self.owner[int(b)]
+        owners = zip(tb.block_chunk[block_indices].tolist(), tb.block_local[block_indices].tolist())
+        for ci, lb in owners:
             need.setdefault(ci, []).append(lb)
         # only whole chunks are shared across queries (one lookup per source)
-        full = {ci for ci, lbs in need.items() if len(lbs) == (self.chunks[ci][5] + BLOCK_SIZE - 1) // BLOCK_SIZE}
-        rc = self.reader_cache if self.term is not None else None
+        n_blocks = (tb.chunk_df + BLOCK_SIZE - 1) // BLOCK_SIZE
+        full = {ci for ci, lbs in need.items() if len(lbs) == n_blocks[ci]}
+        rc = self.reader_cache
         cached = rc.get_many("chunk", [(self.term, ci) for ci in full]) if rc is not None else {}
         dparts, tparts, nparts = [], [], []
-        for ci in sorted(need):
-            blob, block_last, *_ = self.chunks[ci]
+        for ci, lbs in need.items():  # ascending blocks: ascending chunks
             got = cached.get((self.term, ci))
             if got is None:
-                got = decode_blocks(blob, sorted(need[ci]), np.asarray(block_last, dtype=np.int64))
+                got = decode_blocks(tb.blobs[ci], lbs, tb.chunk_last[ci])
                 if rc is not None and ci in full:
                     rc.put("chunk", (self.term, ci), got)
             d, t, nm = got
@@ -193,134 +227,128 @@ def wand_top_k(
     minimumNumberShouldMatch pruning (WANDScorer.java:38,146): an
     interval covered by fewer than msm sources cannot contain a hit —
     its blocks are never decoded — and scored docs matching fewer than
-    msm terms are discarded. Returns (hits, info)."""
+    msm terms are discarded. Returns (hits, info); ``hits_seen`` counts
+    every hit of the scored intervals, so it is the exact total when no
+    interval was pruned."""
     msm = max(1, msm)
-    # ---- elementary intervals from all block boundaries
+    # ---- elementary intervals from all block boundaries: interval j
+    # covers (all_ends[j-1], all_ends[j]], inside one block of every
+    # source whose last block ends at or after all_ends[j]
     all_ends = np.unique(np.concatenate([s.block_end for s in sources]))
     n_iv = len(all_ends)
-    # interval j covers (all_ends[j-1], all_ends[j]]
     ub_sum = np.zeros(n_iv, dtype=np.float64)
     n_cover = np.zeros(n_iv, dtype=np.int64)
-    term_block_of_iv = []  # per source: block index covering each interval (or -1)
+    cover = []  # per source: its block holding each interval, or -1
     for s in sources:
-        starts, ends, ub = s.block_ranges()
-        # interval j's end doc all_ends[j] falls in source block: first block with end >= all_ends[j]
-        bidx = np.searchsorted(ends, all_ends)
-        valid = bidx < len(ends)
-        contrib = np.zeros(n_iv, dtype=np.float64)
-        # block covers interval only if block start <= interval start region;
-        # using block [start,end] vs interval (prev_end, end]: overlap iff
-        # block_end >= iv_end is chosen via searchsorted and block_start <= iv_end
-        iv_lo = np.empty(n_iv, dtype=np.int64)
-        iv_lo[0] = 0
-        iv_lo[1:] = all_ends[:-1] + 1
-        bidx_c = np.minimum(bidx, len(ends) - 1)
-        overlap = valid & (starts[bidx_c] <= all_ends)
-        contrib[overlap] = ub[bidx_c[overlap]]
-        ub_sum += contrib
-        n_cover += overlap.astype(np.int64)
-        tb = np.where(overlap, bidx_c, -1)
-        term_block_of_iv.append(tb)
-
+        b = np.searchsorted(s.block_end, all_ends)
+        inside = b < len(s.block_end)
+        b[~inside] = -1
+        ub_sum[inside] += s.block_ub[b[inside]]
+        n_cover += inside
+        cover.append(b)
     if msm > 1:
         # coverage pruning: < msm covering sources → no possible hit
         ub_sum = np.where(n_cover >= msm, ub_sum, -np.inf)
     order = np.argsort(-ub_sum, kind="stable")
     if msm > 1:
         order = order[ub_sum[order] > -np.inf]
+    # a doc's score is float32(its float64 sum), so float32(bound) bounds
+    # it; the negated bounds ascend along ``order``
+    neg_bound = -ub_sum[order].astype(np.float32)
     heap_docs = np.empty(0, dtype=np.int64)
     heap_scores = np.empty(0, dtype=np.float32)
     hits = 0
-    scored_blocks: list[set] = [set() for _ in sources]
     pruned_intervals = 0
-    min_competitive = -np.inf
-
-    BATCH = 8
-    i = 0
+    min_competitive = None
+    in_batch = np.zeros(n_iv, dtype=bool)
+    i, n, size = 0, len(order), BATCH
     timed_out = False
-    while i < len(order):
+    while i < n:
         # QueryTimeout checkpoint (IndexSearcher.setTimeout /
         # TimeLimitingCollector role): between interval batches — every
         # doc already in the heap is fully scored, so the partial
         # result is a correct (possibly incomplete) top-k
-        if deadline is not None:
-            import time
-
-            if time.monotonic() > deadline:
-                timed_out = True
-                pruned_intervals = len(order) - i
-                break
-        batch = []
-        while i < len(order) and len(batch) < BATCH:
-            j = order[i]
-            if hits >= total_hits_threshold and len(heap_docs) >= k and ub_sum[j] < min_competitive:
-                # everything after j in desc order is also below: prune the rest
-                pruned_intervals = len(order) - i
-                i = len(order)
-                break
-            batch.append(j)
-            i += 1
-        if not batch:
+        if deadline is not None and time.monotonic() > deadline:
+            timed_out = True
+            pruned_intervals = n - i
             break
-        # decode the covering blocks (dedup per source)
-        need = [set() for _ in sources]
-        for j in batch:
-            for si, tb in enumerate(term_block_of_iv):
-                b = tb[j]
-                if b >= 0 and b not in scored_blocks[si]:
-                    need[si].add(int(b))
-        new_docs, new_scores, new_counts = _score_union(sources, need, scored_blocks)
-        for si in range(len(sources)):
-            scored_blocks[si] |= need[si]
-        if msm > 1 and len(new_docs):
-            enough = new_counts >= msm
-            new_docs, new_scores = new_docs[enough], new_scores[enough]
-        if allowed is not None and len(new_docs):
+        end = min(n, i + size)
+        size *= 2
+        if min_competitive is not None and hits >= total_hits_threshold:
+            # the competitive intervals are a prefix of the rest; every
+            # interval after it is pruned
+            cut = i + int(np.searchsorted(neg_bound[i:end], -min_competitive, side="right"))
+            if cut < end:
+                pruned_intervals = n - cut
+                end = n = cut
+        if end == i:
+            break
+        batch = order[i:end]
+        i = end
+        in_batch[batch] = True
+        parts = []
+        for s, blk in zip(sources, cover):
+            need = np.unique(blk[batch])
+            need = need[need >= 0]
+            if len(need):
+                d, sc = s.scored_blocks(need)
+                keep = in_batch[np.searchsorted(all_ends, d)]
+                parts.append((d[keep], sc[keep]))
+        in_batch[batch] = False
+        if len(parts) == 1:  # one source: its float32 scores are the sums
+            docs, scores = parts[0]
+            counts = np.ones(len(docs), dtype=np.int64)
+        else:
+            docs = np.unique(np.concatenate([d for d, _ in parts]))
+            acc = np.zeros(len(docs), dtype=np.float64)
+            counts = np.zeros(len(docs), dtype=np.int64)
+            for d, sc in parts:  # source order: the exhaustive accumulation
+                idx = np.searchsorted(docs, d)
+                acc[idx] += sc.astype(np.float64)
+                counts[idx] += 1
+            scores = acc.astype(np.float32)
+        if msm > 1 and len(docs):
+            enough = counts >= msm
+            docs, scores = docs[enough], scores[enough]
+        if allowed is not None and len(docs):
             # FILTER-clause doc-set mask (sorted): the filtered WAND of
             # Boolean2ScorerSupplier's req(filter)+opt(TOP_SCORES)
             # branch — pruning bounds stay true upper bounds because a
             # filter only removes hits
-            idx = np.searchsorted(allowed, new_docs)
-            idx_c = np.minimum(idx, max(len(allowed) - 1, 0))
-            inset = (idx < len(allowed)) & (allowed[idx_c] == new_docs) if len(allowed) else np.zeros(len(new_docs), bool)
-            new_docs, new_scores = new_docs[inset], new_scores[inset]
-        if deleted is not None and len(new_docs):
+            idx = np.minimum(np.searchsorted(allowed, docs), max(len(allowed) - 1, 0))
+            inset = allowed[idx] == docs if len(allowed) else np.zeros(len(docs), dtype=bool)
+            docs, scores = docs[inset], scores[inset]
+        if deleted is not None and len(docs):
             # liveDocs mask (scorer.score(collector, liveDocs) role)
-            live = ~np.isin(new_docs, deleted, assume_unique=False)
-            new_docs, new_scores = new_docs[live], new_scores[live]
-        if len(new_docs):
-            # drop docs already in heap (blocks span multiple intervals)
-            if len(heap_docs):
-                fresh = ~np.isin(new_docs, heap_docs)
-                new_docs, new_scores = new_docs[fresh], new_scores[fresh]
-            hits += len(new_docs)
-            heap_docs = np.concatenate([heap_docs, new_docs])
-            heap_scores = np.concatenate([heap_scores, new_scores])
-            if len(heap_docs) > 4 * k:
-                top = top_k_from_arrays(heap_docs, heap_scores, k)
-                heap_docs = np.array([d for d, _ in top], dtype=np.int64)
-                heap_scores = np.array([s for _, s in top], dtype=np.float32)
-            if len(heap_docs) >= k:
-                kth = np.partition(heap_scores, len(heap_scores) - k)[len(heap_scores) - k]
-                # the reference prunes at Math.nextUp(kth)
-                # (TopScoreDocCollector.java:335-355) — sound there
-                # because docs are scored in docID order, so a later
-                # equal-scoring doc always loses the doc-asc tie-break.
-                # THIS scorer visits intervals in upper-bound order, so
-                # an unvisited interval can still hold an equal-scoring
-                # SMALLER doc id that wins the tie-break — prune
-                # strictly below kth to stay exactly ≡ exhaustive.
-                min_competitive = float(kth)
-    result = top_k_from_arrays(heap_docs, heap_scores, k)
+            live = ~np.isin(docs, deleted, assume_unique=False)
+            docs, scores = docs[live], scores[live]
+        if not len(docs):
+            continue
+        hits += len(docs)
+        heap_docs = np.concatenate([heap_docs, docs])
+        heap_scores = np.concatenate([heap_scores, scores])
+        if len(heap_docs) > 4 * k:
+            top = np.lexsort((heap_docs, -heap_scores))[:k]
+            heap_docs, heap_scores = heap_docs[top], heap_scores[top]
+        if len(heap_docs) >= k:
+            # the reference prunes at Math.nextUp(kth)
+            # (TopScoreDocCollector.java:335-355) — sound there because
+            # docs are scored in docID order, so a later equal-scoring
+            # doc always loses the doc-asc tie-break. THIS scorer visits
+            # intervals in upper-bound order, so an unvisited interval
+            # can still hold an equal-scoring SMALLER doc id that wins
+            # the tie-break — prune strictly below kth to stay exactly
+            # ≡ exhaustive.
+            min_competitive = np.partition(heap_scores, len(heap_scores) - k)[len(heap_scores) - k]
     info = {
         "pruned_intervals": int(pruned_intervals),
         "total_intervals": int(n_iv),
-        "decoded_blocks": int(sum(len(s) for s in scored_blocks)),
+        "decoded_blocks": int(sum(len(s._scored) for s in sources)),
         "total_blocks": int(sum(len(s.block_end) for s in sources)),
         "hits_seen": int(hits),
         "timed_out": timed_out,
     }
-    return result, info
+    return top_k_from_arrays(heap_docs, heap_scores, k), info
 
 
 def conjunction_top_k(
@@ -346,7 +374,7 @@ def conjunction_top_k(
     Boolean2ScorerSupplier.java req+opt branch): optional clauses add
     score to surviving MUST candidates only — each SHOULD term decodes
     just the blocks containing a candidate, the same skip-data bound."""
-    sources = sorted(sources, key=lambda s: sum(c[5] for c in s.chunks))
+    sources = sorted(sources, key=lambda s: s.blocks.df)
     lead = sources[0]
     cand, lead_tf, lead_nm = lead.decoded_blocks_arrays(np.arange(len(lead.block_end)))
     acc = lead.score_at(lead_tf, lead_nm).astype(np.float64)
@@ -355,8 +383,6 @@ def conjunction_top_k(
     timed_out = False
     for s in sources[1:]:
         if deadline is not None:
-            import time
-
             if time.monotonic() > deadline:
                 # mid-intersection candidates are NOT verified matches —
                 # the only correct partial here is the empty one
@@ -419,68 +445,3 @@ def conjunction_top_k(
         "timed_out": timed_out,
     }
     return top_k_from_arrays(cand, scores, k), info
-
-
-def _score_union(
-    sources: list[PostingSource], need: list[set], scored: list[set] | None = None
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Disjunction-sum over the decoded blocks of each source →
-    (docs, scores, per-doc match counts).
-
-    Contract (required for the caller's ``scored_blocks`` bookkeeping):
-    EVERY doc of EVERY block in the final (mutated) ``need`` sets is
-    emitted, with its FULL score across all sources. To complete
-    scores, other sources' covering blocks are pulled in, iterating to
-    a fixpoint (a pulled block may introduce docs needing further
-    blocks at its edges). Blocks in ``scored`` were fully emitted by an
-    EARLIER call (inductively: every doc of a scored block already left
-    with its full score — its covering blocks in every other source
-    were pulled then), so the fixpoint never re-pulls them; re-emitting
-    their docs would double-count hits after a heap trim dropped them."""
-    scored = scored if scored is not None else [set() for _ in sources]
-    if not any(need):
-        e = np.empty(0, dtype=np.int64)
-        return e, np.empty(0, dtype=np.float32), e
-    # fixpoint: docs of all needed blocks → covering blocks of all docs
-    while True:
-        doc_parts = []
-        for si, s in enumerate(sources):
-            if need[si]:
-                d, _ = s.decoded_blocks_scored(np.array(sorted(need[si]), dtype=np.int64))
-                doc_parts.append(d)
-        docs = np.unique(np.concatenate(doc_parts))
-        grew = False
-        for si, s in enumerate(sources):
-            covering = np.unique(np.searchsorted(s.block_end, docs))
-            covering = covering[covering < len(s.block_end)]
-            # only blocks that actually contain one of `docs` matter;
-            # searchsorted gives the candidate block, membership is
-            # settled by the final scoring pass either way.
-            new = set(int(b) for b in covering) - need[si] - scored[si]
-            if new:
-                # a candidate block is only *required* if one of `docs`
-                # is really inside it — bulk-decode the candidates
-                # (one header walk per chunk, fills the block cache),
-                # then check membership per block against the cache
-                s.decoded_blocks_scored(np.array(sorted(new), dtype=np.int64))
-                for b in new:
-                    d, _, _ = s.decode(b)
-                    i0 = np.searchsorted(docs, d[0]) if len(d) else 0
-                    i1 = np.searchsorted(docs, d[-1], side="right") if len(d) else 0
-                    if len(d) and i0 < i1 and np.isin(docs[i0:i1], d, assume_unique=True).any():
-                        need[si].add(b)
-                        grew = True
-        if not grew:
-            break
-    acc = np.zeros(len(docs), dtype=np.float64)
-    counts = np.zeros(len(docs), dtype=np.int64)
-    for si, s in enumerate(sources):
-        if not need[si]:
-            continue
-        d, sc = s.decoded_blocks_scored(np.array(sorted(need[si]), dtype=np.int64))
-        idx = np.searchsorted(d, docs)
-        idx_c = np.minimum(idx, max(len(d) - 1, 0))
-        mask = (idx < len(d)) & (d[idx_c] == docs) if len(d) else np.zeros(len(docs), bool)
-        acc[mask] += sc[idx_c[mask]].astype(np.float64)
-        counts += mask
-    return docs, acc.astype(np.float32), counts

@@ -26,9 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from lucene_spark.index.builder import DOC_KEYS, IndexBuilder, IndexConfig
+from lucene_spark.index.builder import DOC_KEYS, IndexBuilder, IndexConfig, assign_doc_ids
 from lucene_spark.index.reader import SearchIndex
 
 
@@ -49,44 +48,41 @@ class StreamingIndexer:
     def _write_segment(self, batch_df: DataFrame, batch_id: int) -> None:
         """One micro-batch → one stream segment (idempotent on replay)."""
         cfg = self.config
-        # per-batch doc ids: deterministic rank within the batch, offset
-        # into a per-batch id space (ids need not be contiguous, only
-        # unique + stable; 2^33 docs per batch headroom)
+        # per-batch doc ids: deterministic 1-based rank within the batch,
+        # offset into a per-batch id space (ids need not be contiguous,
+        # only unique + stable; 2^33 docs per batch headroom)
         keyset = [k for k in DOC_KEYS if k in batch_df.columns]
-        kcols = [F.col(k) for k in keyset] or [F.col(cfg.field)]
+        keys = list(keyset or [cfg.field])
         # a TOTAL deterministic order: rows tied on the doc keys break
         # on every remaining column, so replays assign identical ids
         # and rows equal in every column are genuinely interchangeable.
         # Complex columns (array/map/struct/binary) are not directly
         # orderable-by-value across all types, so they participate via
-        # a deterministic digest — without it two rows equal on every
-        # scalar but differing in a complex column could swap ids
-        # across a window re-execution
-        tie = []
+        # a deterministic digest column — without it two rows equal on
+        # every scalar but differing in a complex column could swap ids
+        # across a re-execution
+        staged, digests = batch_df, []
         for c, t in sorted(batch_df.dtypes):
             if c in keyset:
                 continue
-            if t.startswith(("array", "map", "struct")):
-                tie.append(F.xxhash64(F.to_json(F.col(c))))
-            elif t == "binary":
-                tie.append(F.xxhash64(F.col(c)))
+            if t.startswith(("array", "map", "struct")) or t == "binary":
+                name = f"_nrt_tie{len(digests)}"
+                src = F.to_json(F.col(c)) if t != "binary" else F.col(c)
+                staged = staged.withColumn(name, F.xxhash64(src))
+                digests.append(name)
+                keys.append(name)
             else:
-                tie.append(F.col(c))
-        w = Window.orderBy(*kcols, *tie)
-        base = batch_df.withColumn(
-            "doc_id",
-            (F.row_number().over(w).cast("long") + F.lit(batch_id * (1 << 33)).cast("long")),
-        )
-        from pyspark import StorageLevel
-
-        # ONE materialization of the window-id base: the segment writes
-        # must all see the same doc_id per row (an uncached plan would
-        # re-run the window per write)
-        base = base.persist(StorageLevel.DISK_ONLY)
+                keys.append(c)
+        # range-partitioned rank (the IndexWriter's id path): an
+        # unpartitioned window would run the whole batch in one task
+        ided = assign_doc_ids(staged, keys=tuple(keys))
+        base = ided.withColumn(
+            "doc_id", (F.col("doc_id") + F.lit(batch_id * (1 << 33) + 1)).cast("long")
+        ).drop(*digests)
         try:
             self._inner.write_segment(base, f"{self.index_dir}/segments/seg=s{batch_id}")
         finally:
-            base.unpersist()
+            ided._assign_ids_persisted.unpersist()
 
     def start(self, stream_df: DataFrame, checkpoint_dir: str, trigger_available_now: bool = True):
         """Attach the indexer to a streaming DataFrame of corpus rows.

@@ -4,9 +4,11 @@ command-line tool; see lucene_spark/search/profiler.py).
 Usage:
   python scripts/profile_query.py --index-dir DIR 'QUERY' [-k N]
 
-Prints the phase buckets and the per-node timing tree, then one JSON
-line with the full profile. Cluster form: spark-submit --py-files
-lucene_spark.zip scripts/profile_query.py ...
+Prints the phase buckets, the per-node timing tree and the reader
+cache's hits / misses / evictions / bytes per namespace after the
+query, then one JSON line with the full profile and those cache counts
+(key "cache"). Cluster form: spark-submit --py-files lucene_spark.zip
+scripts/profile_query.py ...
 """
 
 from __future__ import annotations
@@ -37,7 +39,8 @@ def main(argv: list[str]) -> int:
     from lucene_spark.session import get_spark
 
     spark = get_spark("profile_query")
-    searcher = Searcher(SearchIndex(spark, index_dir))
+    index = SearchIndex(spark, index_dir)
+    searcher = Searcher(index)
     p = profile(searcher, query, k=k)
     print(f"query: {p['query']}")
     for name, sec in p["phases"].items():
@@ -55,7 +58,12 @@ def main(argv: list[str]) -> int:
     show(p["tree"], 2)
     print(f"  optimized search: {p['search_sec'] * 1000:.3f} ms, "
           f"{p['total_matched']} matched, top hit {p['hits'][:1]}")
-    print(json.dumps(p))
+    cache = index.cache.stats()
+    print("  reader cache:")
+    for ns, st in sorted(cache.items()):
+        print(f"    {ns:<10} hits={st['hits']:<6} misses={st['misses']:<6} "
+              f"evictions={st['evictions']:<6} bytes={st['bytes']}")
+    print(json.dumps({**p, "cache": cache}))
     return 0
 
 

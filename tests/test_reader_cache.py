@@ -155,12 +155,40 @@ class TestReaderCacheOnIndex:
             assert sum(st["hits"] for st in after.values()) > sum(st["hits"] for st in before.values())
         assert after["rows"]["hits"] > 0 and after["rows"]["bytes"] > 0
 
+    def test_repeat_wand_query_decodes_nothing(self, spark, index_dir, monkeypatch):
+        """A WAND disjunction's decoded blocks are reader-cached: the
+        second run reads every block it scores from the cache (hits, no
+        misses) and makes no decode_blocks call."""
+        from lucene_spark.codec import forutil
+        from lucene_spark.index.reader import SearchIndex
+        from lucene_spark.search import wand
+
+        idx = SearchIndex(spark, index_dir)
+        s = Searcher(idx, total_hits_threshold=10)
+        q = "return OR if OR class OR import"
+        first = s.search(q, k=10)
+        assert first.info["decoded_blocks"] > 0, "must take the WAND path"
+        calls = []
+
+        def counted(*args, **kwargs):
+            calls.append(args[1])
+            return forutil.decode_blocks(*args, **kwargs)
+
+        monkeypatch.setattr(wand, "decode_blocks", counted)
+        before = idx.cache.stats()["block"]
+        again = s.search(q, k=10)
+        after = idx.cache.stats()["block"]
+        assert (again.hits, again.info) == (first.hits, first.info)
+        assert after["misses"] == before["misses"]
+        assert after["hits"] - before["hits"] == first.info["decoded_blocks"]
+        assert calls == []
+
     def test_budget_holds_and_hits_match_unbounded(self, spark, index_dir, search_index):
         from lucene_spark.index.reader import SearchIndex
 
         queries = [
             "return", "if", "int", "return AND if", "return OR int OR if",
-            '"return if"', '"return if"~3', "ret*", "+return -if",
+            '"return if"', '"return if"~3', "ret*", "+return -if", "class OR import OR if",
         ]
         want = {q: Searcher(search_index).search(q, k=10).hits for q in queries}
         small = SearchIndex(spark, index_dir)
@@ -173,6 +201,8 @@ class TestReaderCacheOnIndex:
                 st = small.cache.stats()
                 assert sum(v["bytes"] for v in st.values()) <= small.cache.BUDGET_BYTES
         assert sum(v["evictions"] for v in small.cache.stats().values()) > 0
+        # the WAND disjunctions' decoded blocks were cached under the cap too
+        assert small.cache.stats()["block"]["misses"] > 0
 
 
 class TestSharedPersistedRelations:

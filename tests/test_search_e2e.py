@@ -197,6 +197,95 @@ class TestWand:
         assert_rank_identical(td.hits, oracle.top_k(q, 5), "no-prune")
 
 
+@pytest.fixture(scope="module")
+def writer_index(spark, corpus_df, tmp_path_factory):
+    """The fixture corpus through an IndexWriter: a tiered commit, then
+    a full one, in 32-doc chunks (hot terms span several chunks), with
+    every 9th doc tombstoned."""
+    import shutil
+
+    from lucene_spark.index.builder import IndexConfig
+    from lucene_spark.index.deletes import delete_docs
+    from lucene_spark.index.reader import SearchIndex
+    from lucene_spark.index.writer import IndexWriter
+
+    df = corpus_df.drop("content_sha256")
+    d = str(tmp_path_factory.mktemp("wandgen") / "w")
+    w = IndexWriter(spark, d, IndexConfig(docs_per_chunk=32, term_buckets=2))
+    w.add_documents(df.filter("lang = 'python'"))
+    w.commit()
+    w.add_documents(df.filter("lang != 'python'"))
+    w.commit(full=True)
+    delete_docs(spark, d, SearchIndex(spark, d).all_doc_ids()[::9])
+    yield d
+    shutil.rmtree(d, ignore_errors=True)
+
+
+def _wand_queries(rng, vocab, universe, n):
+    """``n`` seeded term disjunctions: 2-5 terms, msm 1-3, optional
+    FILTER / MUST_NOT doc sets, optional tombstones, threshold and k."""
+    for _ in range(n):
+        terms = rng.choice(vocab, int(rng.integers(2, 6)), replace=False)
+        clauses = [(A.Occur.SHOULD, A.TermQuery(str(t))) for t in terms]
+        if rng.random() < 0.3:
+            keep = universe[rng.random(len(universe)) < 0.6]
+            clauses.append((A.Occur.FILTER, A.DocSetQuery(tuple(int(d) for d in keep))))
+        if rng.random() < 0.3:
+            drop = universe[rng.random(len(universe)) < 0.15]
+            clauses.append((A.Occur.MUST_NOT, A.DocSetQuery(tuple(int(d) for d in drop))))
+        msm = int(rng.integers(1, min(3, len(terms)) + 1))
+        tombs = universe[rng.random(len(universe)) < 0.1] if rng.random() < 0.3 else None
+        yield (
+            A.BooleanQuery(tuple(clauses), minimum_should_match=msm),
+            tombs,
+            int(rng.choice([1, 10, 1000])),
+            int(rng.choice([1, 10, 100])),
+        )
+
+
+class TestGeneratedWand:
+    """Seeded term disjunctions on three indexes: WAND hits and float32
+    scores equal the exhaustive kernel's bitwise; ``total_hits`` is
+    exact under EQUAL_TO and a lower bound under GREATER_THAN_OR_EQUAL_TO."""
+
+    @pytest.mark.parametrize("which", ["fixture", "nopos", "writer"])
+    def test_generated_wand_equals_exhaustive(self, spark, index_dir, nopos_index, writer_index, which):
+        from lucene_spark.index.reader import SearchIndex
+
+        d = {"fixture": index_dir, "nopos": nopos_index, "writer": writer_index}[which]
+        idx = SearchIndex(spark, d)
+        real_tombs = idx.deleted_ids
+        universe = idx.all_doc_ids()
+        dfs = {r["term"]: r["df"] for r in idx.postings.groupBy("term").agg({"df": "sum"})
+               .withColumnRenamed("sum(df)", "df").collect()}
+        ranked = sorted((t for t in dfs if ":" not in t), key=lambda t: (-dfs[t], t))
+        rng = np.random.default_rng(20261019)
+        vocab = ranked[:6] + [str(t) for t in rng.choice(ranked[6:], min(8, len(ranked) - 6), replace=False)]
+        idx.collect_rows(vocab)
+        pruned = 0
+        for n, (q, tombs, thr, k) in enumerate(_wand_queries(rng, np.asarray(vocab), universe, 30)):
+            if tombs is not None:
+                idx.deleted_ids = np.union1d(real_tombs, tombs)
+            s = Searcher(idx, total_hits_threshold=thr)
+            td = s.search(q, k=k)
+            _, spec, stats, _ = s.prepare(q)
+            exh = s._search_exhaustive(spec, k, s._norm_caches(stats))
+            idx.deleted_ids = real_tombs
+            msg = f"{which} #{n} k={k} thr={thr} {q}"
+            assert "decoded_blocks" in td.info or not exh.hits, msg
+            assert [h for h, _ in td.hits] == [h for h, _ in exh.hits], msg
+            assert [np.float32(x).tobytes() for _, x in td.hits] == [
+                np.float32(x).tobytes() for _, x in exh.hits
+            ], msg
+            if td.relation == "EQUAL_TO":
+                assert td.total_hits == exh.total_hits, msg
+            else:
+                assert td.total_hits <= exh.total_hits, msg
+                pruned += 1
+        # the 200-doc fixture has too few blocks per term to prune
+        assert pruned or which == "fixture", "no generated query pruned an interval"
+
+
 class TestMissingPositions:
     def test_positional_queries_raise_without_positions(self, spark, nopos_index):
         """On an index built without positions, every positional query

@@ -77,6 +77,35 @@ class TestStreamingIndex:
             assert sorted(round(s, 5) for _, s in a.hits) == sorted(round(s, 5) for _, s in b.hits), query
 
 
+    def test_two_micro_batches_keep_doc_ids(self, spark, tmp_path):
+        """Each micro-batch's doc ids are its 1-based rank over the doc
+        keys, then every other column by name (content before lang),
+        offset by batch_id << 33: rows that tie on the keys keep their
+        order."""
+        import hashlib
+
+        pdf = make_corpus(n_docs=40, seed=5).drop(columns=["content_sha256"])
+        twins = pdf.iloc[[3, 25]].copy()
+        twins["content"] = "zz " + twins["content"]  # same keys, later content
+        pdf = __import__("pandas").concat([pdf, twins], ignore_index=True)
+        batches = [pdf.iloc[::2], pdf.iloc[1::2]]
+        src, idx, ckpt = (str(tmp_path / n) for n in ("src", "ix", "ckpt"))
+        schema = spark.createDataFrame(pdf.head(1)).schema
+        indexer = StreamingIndexer(spark, idx, IndexConfig(**CFG))
+        for part in batches:
+            spark.createDataFrame(part).coalesce(1).write.mode("append").parquet(src)
+            indexer.start(spark.readStream.schema(schema).parquet(src), ckpt).awaitTermination(120)
+        for bid, part in enumerate(batches):
+            want = part.sort_values(["repo", "path", "commit", "content", "lang"])
+            want = {
+                (r.repo, r.path, r.commit, hashlib.sha256(r.content.encode()).hexdigest()): n + 1 + (bid << 33)
+                for n, r in enumerate(want.itertuples())
+            }
+            rows = spark.read.parquet(f"{idx}/segments/seg=s{bid}/docs").collect()
+            got = {(r["repo"], r["path"], r["commit"], r["content_sha256"]): r["doc_id"] for r in rows}
+            assert got == want, bid
+
+
 def indexer_index(spark, idx):
     from lucene_spark.index.reader import SearchIndex
 
