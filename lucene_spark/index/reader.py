@@ -22,6 +22,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lucene_spark.codec.forutil import unpack_postings
+from lucene_spark.codec.positions import (
+    concat_position_lists,
+    repack_position_lists,
+    unpack_offsets,
+    unpack_payloads,
+    unpack_positions,
+)
 from lucene_spark.index.cache import MISS, ReaderCache
 from lucene_spark.search.similarity import BM25Stats
 
@@ -58,8 +65,6 @@ def concat_doc_order(parts: list[tuple]) -> tuple:
     argsort reorders every column. A stream that is None in any part is
     None in the result; positions keep their flat decode buffer
     (PositionLists) for the positional kernels."""
-    from lucene_spark.codec.positions import concat_position_lists, repack_position_lists
-
     if len(parts) == 1:
         return parts[0]
     cols = [np.concatenate([p[i] for p in parts]) for i in range(3)]
@@ -78,6 +83,32 @@ def concat_doc_order(parts: list[tuple]) -> tuple:
         if streams[0] is not None:
             streams[0] = repack_position_lists(streams[0])
     return (*cols, *streams)
+
+
+def decode_row(
+    term: str,
+    row,
+    with_positions: bool = False,
+    with_offsets: bool = False,
+    with_payloads: bool = False,
+) -> tuple:
+    """One posting row (a Spark Row or a pandas itertuples record) →
+    (docs, tfs, int64 norms, positions, offsets, payloads); a stream not
+    asked for is None. Asking for a stream the index was built without
+    (its blob is null or its column absent) raises ValueError, so a
+    missing stream never reads as "no match"."""
+    docs, tfs, norms = unpack_postings(bytes(row.blob))
+    streams = []
+    for want, col, unpack, what, built in (
+        (with_positions, "pos_blob", unpack_positions, "positions", "with positions=False"),
+        (with_offsets, "off_blob", unpack_offsets, "offsets", "with offsets=False"),
+        (with_payloads, "pay_blob", unpack_payloads, "payloads", "without delimited_payloads"),
+    ):
+        blob = getattr(row, col, None) if want else None
+        if want and blob is None:
+            raise ValueError(f"index has no {what} for term {term!r} (built {built})")
+        streams.append(None if blob is None else unpack(bytes(blob), tfs))
+    return (docs, tfs, norms.astype(np.int64), *streams)
 
 
 class SearchIndex:
@@ -664,55 +695,24 @@ class SearchIndex:
         with_positions: bool = False,
         with_offsets: bool = False,
         with_payloads: bool = False,
-        use_cache: bool = True,
     ) -> dict[str, PostingList]:
-        """Decode already-collected chunk rows (no Spark job).
-        ``use_cache=False`` for PARTIAL row sets (e.g. only a term's
-        spanning rows): the cache is keyed by term alone and must only
-        ever hold full decodes."""
-        from lucene_spark.codec.positions import unpack_offsets, unpack_payloads, unpack_positions
-
+        """Decode already-collected chunk rows (no Spark job), cached
+        per (term, streams): ``by_term`` holds each term's FULL row set
+        (the cache is keyed by term alone)."""
         out: dict[str, PostingList] = {}
         flags = (with_positions, with_offsets, with_payloads)
-        hits = self.cache.get_many("decoded", [(t, *flags) for t in by_term]) if use_cache else {}
+        hits = self.cache.get_many("decoded", [(t, *flags) for t in by_term])
         for term, rs in by_term.items():
             dkey = (term, *flags)
-            if dkey in hits:
-                out[term] = hits[dkey]
-                continue
-            parts = []
-            for r in rs:
-                ids, tfs, norms = unpack_postings(bytes(r["blob"]))
-                part = [ids, tfs, norms, None, None, None]
-                if with_positions:
-                    if r["pos_blob"] is None:
-                        raise ValueError(f"index has no positions for term {term!r} (built with positions=False)")
-                    # keep the flat decode buffer attached (PositionLists):
-                    # the positional kernels' zero-copy fast path reads it,
-                    # and this decode is cached across queries
-                    part[3] = unpack_positions(bytes(r["pos_blob"]), tfs)
-                if with_offsets:
-                    ob = r["off_blob"] if "off_blob" in r.__fields__ else None
-                    if ob is None:
-                        raise ValueError(
-                            f"index has no offsets for term {term!r} (built with offsets=False)"
-                        )
-                    part[4] = unpack_offsets(bytes(ob), tfs)
-                if with_payloads:
-                    pb = r["pay_blob"] if "pay_blob" in r.__fields__ else None
-                    if pb is None:
-                        raise ValueError(
-                            f"index has no payloads for term {term!r} "
-                            "(built without delimited_payloads)"
-                        )
-                    part[5] = unpack_payloads(bytes(pb), tfs)
-                parts.append(part)
-            docs, tfs, norms, positions, offsets, payloads = concat_doc_order(parts)
-            out[term] = PostingList(
-                term, -1, len(docs), docs, tfs, norms.astype(np.int64), positions, offsets, payloads
-            )
-            if use_cache:
-                self.cache.put("decoded", dkey, out[term])
+            if dkey not in hits:
+                # the flat position decode buffer stays attached
+                # (PositionLists): the positional kernels' zero-copy fast
+                # path reads it, and this decode is cached across queries
+                docs, *streams = concat_doc_order([decode_row(term, r, *flags) for r in rs])
+                hits[dkey] = self.cache.put(
+                    "decoded", dkey, PostingList(term, -1, len(docs), docs, *streams)
+                )
+            out[term] = hits[dkey]
         return out
 
     @cached_property

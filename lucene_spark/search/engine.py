@@ -32,7 +32,7 @@ import numpy as np
 import pandas as pd
 
 from lucene_spark.index.cache import MISS
-from lucene_spark.index.reader import MAX_EXPANSION, SearchIndex, concat_doc_order
+from lucene_spark.index.reader import MAX_EXPANSION, SearchIndex, decode_row
 from lucene_spark.search import ast as A
 from lucene_spark.search.kernels import (
     BoolSpec,
@@ -41,19 +41,12 @@ from lucene_spark.search.kernels import (
     TermSpec,
     compile_query,
     evaluate,
+    leaf_context,
     spec_terms,
     top_k_from_arrays,
 )
 from lucene_spark.search.parser import parse_query
 from lucene_spark.search.wand import PostingSource, TermBlocks, conjunction_top_k, wand_top_k
-
-
-# distributed search: hot-term chunk rows at or below this count are
-# served from the per-reader row cache (driver-bounded: rows are
-# <= ~100 KB each); above it, the pushed-down parquet scan is the
-# scale path (a corpus-hot term at 10^12 docs has ~10^7 chunk rows —
-# those must never transit the driver)
-DRIVER_HOT_ROWS_MAX = 1024
 
 
 @dataclass
@@ -834,39 +827,23 @@ class Searcher:
         return TopDocs(hits, info["hits_seen"], relation, info)
 
     def _driver_context(self, spec, cache, rows_by_term=None) -> ChunkContext:
-        terms = sorted(spec_terms(spec))
-        with_pos = _has_phrase(spec)
-        pay_terms = _payload_terms(spec)
+        """The whole-index kernel context: each term's cached decode is
+        its one part (no window), so it reaches the kernels uncopied."""
         if rows_by_term is not None:
-            plists = self.index.postings_from_rows(
-                rows_by_term, with_positions=with_pos, with_payloads=bool(pay_terms)
-            )
+            plists = self.index.postings_from_rows(rows_by_term, *_streams(spec))
         else:
-            plists = self.index.collect_postings(
-                terms, with_positions=with_pos, with_payloads=bool(pay_terms)
-            )
-        arrays = {t: (p.docs, p.tfs, p.norms) for t, p in plists.items()}
-        positions = {t: p.positions for t, p in plists.items()} if with_pos else None
-        payloads = (
-            {t: p.payloads for t, p in plists.items() if p.payloads is not None}
-            if pay_terms
-            else None
-        )
+            plists = self.index.collect_postings(sorted(spec_terms(spec)), *_streams(spec))
         all_docs = self.index.all_doc_ids() if _needs_all_docs(spec) else None
-        return ChunkContext(arrays, cache, all_docs, positions, sim=self.sim, payloads=payloads)
+        return leaf_context({t: [p] for t, p in plists.items()}, cache, self.sim, all_docs=all_docs)
 
-    def _apply_live_docs(self, docs, scores):
-        """Mask tombstoned docs (liveDocs applied at search,
-        Lucene90LiveDocsFormat; stats/scores of survivors unchanged)."""
-        deleted = self.index.deleted_ids
-        if not len(deleted) or not len(docs):
-            return docs, scores
-        live = ~np.isin(docs, deleted, assume_unique=False)
-        return docs[live], scores[live]
+    def _live_matches(self, spec, ctx) -> tuple[np.ndarray, np.ndarray]:
+        """(docs, scores) of ``spec`` over ``ctx`` with tombstoned docs
+        masked (liveDocs applied at search, Lucene90LiveDocsFormat;
+        stats/scores of survivors unchanged)."""
+        return _drop_deleted(*evaluate(spec, ctx), self.index.deleted_ids)
 
     def _search_exhaustive(self, spec, k: int, cache, rows_by_term=None) -> TopDocs:
-        ctx = self._driver_context(spec, cache, rows_by_term)
-        docs, scores = self._apply_live_docs(*evaluate(spec, ctx))
+        docs, scores = self._live_matches(spec, self._driver_context(spec, cache, rows_by_term))
         return TopDocs(top_k_from_arrays(docs, scores, k), len(docs), "EQUAL_TO", {})
 
     def search_sorted_index(self, query: str | A.Query, k: int = 10) -> TopDocs:
@@ -886,8 +863,6 @@ class Searcher:
         per-leaf: each doc-range task collects its first k and the
         merge keeps the globally-first k (chunks here, executors
         there)."""
-        import math
-
         index = self.index
         sort_spec = index.index_sort
         if not sort_spec:
@@ -909,20 +884,9 @@ class Searcher:
         if isinstance(spec, NoneSpec) or k <= 0:
             return TopDocs([], 0, "EQUAL_TO", info)
         cache = self._norm_caches(stats)
-        from lucene_spark.codec.forutil import unpack_postings
-        from lucene_spark.codec.positions import unpack_positions
-
-        manifest = index.manifest
-        dpc = int(manifest.get("docs_per_chunk", 1 << 17))
-        max_doc, _, contiguous = index.doc_id_bounds
-        with_pos = _has_phrase(spec)
-        if _payload_terms(spec):
-            raise NotImplementedError(
-                "payload queries are not wired into the sorted-index "
-                "early-termination path; use search()/match_frame()"
-            )
-        needs_all = _needs_all_docs(spec)
-        deleted = index.deleted_ids
+        dpc = int(index.manifest.get("docs_per_chunk", 1 << 17))
+        flags = _streams(spec)
+        all_ids = index.all_doc_ids() if _needs_all_docs(spec) else None
 
         # hot terms: per-chunk rows decoded on demand (the skip); cold
         # terms: one small row, decoded once, sliced per chunk
@@ -937,9 +901,7 @@ class Searcher:
                     chunk_ids.add(c)
             else:
                 cold_terms.append(term)
-        cold = index.postings_from_rows(
-            {t: rows[t] for t in cold_terms}, with_positions=with_pos
-        )
+        cold = index.postings_from_rows({t: rows[t] for t in cold_terms}, *flags)
         for t, p in cold.items():
             chunk_ids |= set(np.unique(p.docs // dpc).tolist())
         for ds in _collect_docsets(spec):
@@ -951,54 +913,19 @@ class Searcher:
             # would skip them entirely
             d = np.asarray(vs.docs, dtype=np.int64)
             chunk_ids |= set(np.unique(d // dpc).tolist())
-        if needs_all:
-            all_ids = index.all_doc_ids()
-            chunk_ids |= set(range(math.ceil(max_doc / dpc))) if contiguous else set(
-                np.unique(all_ids // dpc).tolist()
-            )
+        if all_ids is not None:
+            chunk_ids |= set(np.unique(all_ids // dpc).tolist())
         ordered_chunks = sorted(chunk_ids)
 
         collected: list[tuple[int, float]] = []
         scanned = 0
         for c in ordered_chunks:
             lo, hi = c * dpc, (c + 1) * dpc
-            arrays: dict = {}
-            positions: dict = {}
-            tparts: dict = {}
+            parts = {t: [p] for t, p in cold.items()}
             for term, r in hot_rows_by_chunk.get(c, ()):
-                d, tf, nm = unpack_postings(bytes(r["blob"]))
-                pos = (
-                    unpack_positions(bytes(r["pos_blob"]), tf)
-                    if with_pos and r["pos_blob"] is not None
-                    else None
-                )
-                # tiered: one row per tier
-                tparts.setdefault(term, []).append((d, tf, nm.astype(np.int64), pos))
-            for term, ps in tparts.items():
-                d, tf, nm, pos = concat_doc_order(ps)
-                arrays[term] = (d, tf, nm)
-                if pos is not None:
-                    positions[term] = pos
-            for t, p in cold.items():
-                i0, i1 = np.searchsorted(p.docs, lo), np.searchsorted(p.docs, hi)
-                arrays[t] = (p.docs[i0:i1], p.tfs[i0:i1], p.norms[i0:i1])
-                if with_pos and p.positions is not None:
-                    positions[t] = p.positions[i0:i1]
-            if needs_all:
-                all_docs = (
-                    np.arange(lo, min(hi, max_doc), dtype=np.int64)
-                    if contiguous
-                    else all_ids[np.searchsorted(all_ids, lo) : np.searchsorted(all_ids, hi)]
-                )
-            else:
-                all_docs = None
-            ctx = ChunkContext(
-                arrays, cache, all_docs, positions if with_pos else None, doc_range=(lo, hi), sim=self.sim
-            )
-            docs, scores = evaluate(spec, ctx)
-            if len(deleted) and len(docs):
-                live = ~np.isin(docs, deleted, assume_unique=False)
-                docs, scores = docs[live], scores[live]
+                parts.setdefault(term, []).append(decode_row(term, r, *flags))
+            ctx = leaf_context(parts, cache, self.sim, window=(lo, hi), all_docs=all_ids)
+            docs, scores = self._live_matches(spec, ctx)
             collected.extend(zip(docs.tolist(), scores.tolist()))
             scanned += 1
             if len(collected) >= k:
@@ -1130,7 +1057,7 @@ class Searcher:
         if isinstance(spec, NoneSpec) or k <= 0:
             return TopDocs([], 0, "EQUAL_TO", {})
         ctx = self._driver_context(spec, self._norm_caches(stats), rows)
-        docs, scores = self._apply_live_docs(*evaluate(spec, ctx))
+        docs, scores = self._live_matches(spec, ctx)
         mask = (scores < after_score) | ((scores == after_score) & (docs > after_doc))
         return TopDocs(
             top_k_from_arrays(docs[mask], scores[mask], k), len(docs), "EQUAL_TO", {"after": after}
@@ -1195,7 +1122,7 @@ class Searcher:
         if isinstance(spec, NoneSpec):
             return 0
         ctx = self._driver_context(spec, self._norm_caches(stats), rows)
-        docs, scores = self._apply_live_docs(*evaluate(spec, ctx))
+        docs, _ = self._live_matches(spec, ctx)
         return len(docs)
 
     # ---- distributed execution ----------------------------------------------
@@ -1327,56 +1254,28 @@ class Searcher:
             span_keys = set()
             mixed_span = []
         small_terms = [t for t in terms if t not in hot_terms]
-        with_pos = _has_phrase(spec)
-        with_pay = bool(_payload_terms(spec))
-        small = index.collect_postings(
-            small_terms, with_positions=with_pos, with_payloads=with_pay
-        )
-        small_arrays = {t: (p.docs, p.tfs, p.norms) for t, p in small.items()}
-        small_positions = {t: p.positions for t, p in small.items()} if with_pos else {}
-        small_payloads = (
-            {t: p.payloads for t, p in small.items() if p.payloads is not None}
-            if with_pay
-            else {}
-        )
+        flags = _streams(spec)
+        with_pos, _, with_pay = flags
+        # each small term is one whole-term part, sliced per leaf
+        small_parts = {
+            t: [p] for t, p in index.collect_postings(small_terms, *flags).items()
+        }
         if mixed_span:
-            # spanning rows of terms that ALSO have confined rows:
-            # rows come from the per-reader row cache (shared with the
-            # driver path — no extra Spark job on repeat queries);
-            # decode bypasses the cache (partial row sets)
-            by_term: dict[str, list] = {}
+            # spanning rows of terms that ALSO have confined rows: rows
+            # come from the per-reader row cache (shared with the driver
+            # path — no extra Spark job on repeat queries), each decoded
+            # row one part (the decoded cache holds full row sets only)
             for t, rs in index.collect_rows(mixed_span).items():
-                span = [
-                    r
-                    for r in rs
-                    if int(r["chunk_id"]) == 0 and (t, r["tier"]) in span_keys
-                ]
+                span = [r for r in rs if int(r["chunk_id"]) == 0 and (t, r["tier"]) in span_keys]
                 if span:
-                    by_term[t] = sorted(span, key=lambda r: r["tier"])
-            for t, p in index.postings_from_rows(
-                by_term, with_positions=with_pos, with_payloads=with_pay, use_cache=False
-            ).items():
-                small_arrays[t] = (p.docs, p.tfs, p.norms)
-                if with_pos:
-                    small_positions[t] = p.positions
-                if with_pay and p.payloads is not None:
-                    small_payloads[t] = p.payloads
+                    span.sort(key=lambda r: r["tier"])
+                    small_parts[t] = [decode_row(t, r, *flags) for r in span]
         if not hot_terms and not preds and not vspecs and not needs_all:
             # all-small-term query: bounded driver evaluation (each
             # small term covers ≤ docs_per_chunk docs by construction)
-            ctx = ChunkContext(
-                small_arrays,
-                cache,
-                None,
-                small_positions if with_pos else None,
-                sim=self.sim,
-                payloads=small_payloads if with_pay else None,
-            )
-            docs, scores = self._apply_live_docs(*evaluate(spec, ctx))
+            docs, scores = self._live_matches(spec, leaf_context(small_parts, cache, self.sim))
             top = top_k_from_arrays(docs, scores, k if k is not None else len(docs))
             return "topdocs", TopDocs(top, len(docs), "EQUAL_TO", {})
-
-        from lucene_spark.codec.forutil import unpack_postings
 
         spec_b = spec
         cache_b = cache
@@ -1392,8 +1291,10 @@ class Searcher:
         # MatchAll over contiguous ids — the whole chunk universe,
         # synthesized arithmetically (range(), not a collect).
         small_chunks = set()
-        for t, (d, _, _) in small_arrays.items():
-            small_chunks |= set((d // dpc).tolist())
+        for ps in small_parts.values():
+            for p in ps:
+                docs = p[0] if isinstance(p, tuple) else p.docs
+                small_chunks |= set((docs // dpc).tolist())
         for ds in _collect_docsets(spec):
             small_chunks |= {int(x) // dpc for x in ds.docs}
         if all_contiguous:
@@ -1407,7 +1308,7 @@ class Searcher:
             # costs more than the cached parquet point read.
             hcond = F.col("term").isin(list(hot_terms))
             if mixed_span:
-                # their spanning rows went to small_arrays above — keep
+                # their spanning rows went to small_parts above — keep
                 # them out of the chunk-keyed groups
                 pairs = [f"{t}\x00{tr}" for (t, tr) in span_keys if t in hot_terms]
                 hcond = hcond & ~F.concat_ws(
@@ -1472,18 +1373,13 @@ class Searcher:
             )
 
         def score_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            from lucene_spark.codec.positions import unpack_payloads, unpack_positions
-
             chunk_id = int(key[0])
             lo, hi = chunk_id * dpc, (chunk_id + 1) * dpc
-            arrays = {}
-            positions: dict = {}
-            payloads: dict = {}
+            parts = {t: list(ps) for t, ps in small_parts.items()}
             docsets: dict = {}
             docvals: dict = {}
             deleted = None
             all_docs = None
-            tparts: dict = {}
             for r in pdf.itertuples(index=False):
                 t = r.term
                 if t is None:
@@ -1501,63 +1397,17 @@ class Searcher:
                     else:
                         docsets[pred_keys[t]] = ds
                     continue
-                d, tf, nm = unpack_postings(bytes(r.blob))
-                pos = (
-                    unpack_positions(bytes(r.pos_blob), tf)
-                    if with_pos and r.pos_blob is not None
-                    else None
-                )
-                pay = (
-                    unpack_payloads(bytes(r.pay_blob), tf)
-                    if with_pay and getattr(r, "pay_blob", None) is not None
-                    else None
-                )
                 # tiered index: a boundary chunk can hold one row per
-                # tier for the same term
-                tparts.setdefault(t, []).append((d, tf, nm.astype(np.int64), pos, pay))
-            for t, (d, tf, nm) in small_arrays.items():
-                i0, i1 = np.searchsorted(d, lo), np.searchsorted(d, hi)
-                if t in tparts and i0 == i1:
-                    continue
-                # a term with confined rows in this chunk too (mixed
-                # spanning/hot layout) concatenates with them
-                tparts.setdefault(t, []).append(
-                    (
-                        d[i0:i1],
-                        tf[i0:i1],
-                        nm[i0:i1],
-                        small_positions[t][i0:i1]
-                        if with_pos and small_positions.get(t) is not None
-                        else None,
-                        small_payloads[t][i0:i1]
-                        if with_pay and small_payloads.get(t) is not None
-                        else None,
-                    )
-                )
-            for t, ps in tparts.items():
-                d, tf, nm, pos, pay = concat_doc_order(ps)
-                arrays[t] = (d, tf, nm)
-                if pos is not None:
-                    positions[t] = pos
-                if pay is not None:
-                    payloads[t] = pay
+                # tier for the same term; a term with spanning rows too
+                # (mixed layout) joins them with its small part
+                parts.setdefault(t, []).append(decode_row(t, r, *flags))
             if all_contiguous:
                 all_docs = np.arange(lo, min(hi, max_doc), dtype=np.int64)
-            ctx = ChunkContext(
-                arrays,
-                cache_b,
-                all_docs,
-                positions if with_pos else None,
-                doc_range=(lo, hi),
-                docsets=docsets,
-                sim=sim_b,
+            ctx = leaf_context(
+                parts, cache_b, sim_b, window=(lo, hi), all_docs=all_docs, docsets=docsets,
                 docvals=docvals,
-                payloads=payloads if with_pay else None,
             )
-            docs, scores = evaluate(spec_b, ctx)
-            if deleted is not None and len(docs):
-                live = ~np.isin(docs, deleted, assume_unique=False)
-                docs, scores = docs[live], scores[live]
+            docs, scores = _drop_deleted(*evaluate(spec_b, ctx), deleted)
             if kk is None:  # match_frame: emit EVERY match in the chunk
                 if not len(docs):
                     return pd.DataFrame({"chunk_id": [], "doc_id": [], "score": [], "n_matched": []})
@@ -1644,6 +1494,19 @@ class Searcher:
             score_chunk, schema="chunk_id long, doc_id long, score float, n_matched long"
         )
         return "df", result
+
+
+def _drop_deleted(docs, scores, deleted):
+    """Mask the tombstoned ``deleted`` ids out of (docs, scores)."""
+    if deleted is None or not len(deleted) or not len(docs):
+        return docs, scores
+    live = ~np.isin(docs, deleted, assume_unique=False)
+    return docs[live], scores[live]
+
+
+def _streams(spec) -> tuple[bool, bool, bool]:
+    """(positions, offsets, payloads): the decode streams ``spec`` reads."""
+    return _has_phrase(spec), False, bool(_payload_terms(spec))
 
 
 def _has_phrase(spec) -> bool:

@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from lucene_spark.index.builder import FIELD_SEP
+from lucene_spark.index.reader import PostingList, concat_doc_order
 from lucene_spark.search import ast as A
 from lucene_spark.search.similarity import BM25_SIM, BM25Stats
 
@@ -547,6 +548,50 @@ class ChunkContext:
 
     def term(self, t: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         return self.arrays.get(t, (EMPTY_I, EMPTY_I, EMPTY_I))
+
+
+def leaf_context(
+    parts: dict[str, list],
+    cache,
+    sim=None,
+    window: tuple[int, int] | None = None,
+    all_docs: np.ndarray | None = None,
+    docsets: dict | None = None,
+    docvals: dict | None = None,
+) -> ChunkContext:
+    """The one kernel context of every evaluator — driver, sorted scan
+    and distributed leaf. ``parts`` maps a term to its posting parts:
+    decoded rows (``decode_row`` tuples) and whole-term PostingLists.
+    With a ``window`` [lo, hi) each part, and ``all_docs``, is sliced
+    to the leaf's doc range; the parts of a term then join in doc order
+    (``concat_doc_order``). A part that needs no slice and has no
+    sibling passes through uncopied, flat position buffer included."""
+    arrays, positions, payloads = {}, {}, {}
+    for t, ps in parts.items():
+        cut = []
+        for p in ps:
+            if isinstance(p, PostingList):
+                p = (p.docs, p.tfs, p.norms, p.positions, p.offsets, p.payloads)
+            if window is not None:
+                i0, i1 = np.searchsorted(p[0], window)
+                if i0 > 0 or i1 < len(p[0]):
+                    p = tuple(None if s is None else s[i0:i1] for s in p)
+            cut.append(p)
+        if len(cut) > 1:  # empty slices add nothing to a joined term
+            cut = [p for p in cut if len(p[0])] or cut[:1]
+        docs, tfs, norms, pos, _off, pay = concat_doc_order(cut)
+        arrays[t] = (docs, tfs, norms)
+        if pos is not None:
+            positions[t] = pos
+        if pay is not None:
+            payloads[t] = pay
+    if window is not None and all_docs is not None:
+        i0, i1 = np.searchsorted(all_docs, window)
+        all_docs = all_docs[i0:i1]
+    return ChunkContext(
+        arrays, cache, all_docs, positions, doc_range=window, docsets=docsets, sim=sim,
+        docvals=docvals, payloads=payloads,
+    )
 
 
 MIN_NORMAL_F32 = float(np.finfo(np.float32).tiny)  # Float.MIN_NORMAL

@@ -20,7 +20,7 @@ from __future__ import annotations
 import numpy as np
 
 from lucene_spark.index.cache import ReaderCache
-from lucene_spark.index.reader import MAX_EXPANSION, PostingList, SearchIndex
+from lucene_spark.index.reader import MAX_EXPANSION, PostingList, SearchIndex, concat_doc_order
 from lucene_spark.search.engine import Searcher, TopDocs
 from lucene_spark.search.kernels import NoneSpec
 from lucene_spark.search.similarity import BM25Stats
@@ -42,7 +42,7 @@ class MultiSearchIndex:
             if len(ix.text_fields) > 1 or len(indexes[0].text_fields) > 1:
                 raise ValueError("multi-index search supports single-field sub-indexes")
         self.indexes = indexes
-        self.cache = ReaderCache()  # the composite's own (field conditions)
+        self.cache = ReaderCache()  # the composite's own (field conditions, merged postings)
         # BaseCompositeReader.java:58-77 — starts[i] = Σ maxDoc(<i)
         bases = [0]
         for ix in indexes[:-1]:
@@ -121,50 +121,38 @@ class MultiSearchIndex:
         with_offsets: bool = False,
         with_payloads: bool = False,
     ) -> dict[str, PostingList]:
-        parts: dict[str, list[tuple[int, PostingList]]] = {}
+        """Each term's sub-index postings rebased into the composite doc
+        space and joined, cached per (term, streams) like a single
+        reader's decodes: the sub-indexes are fixed for the composite's
+        lifetime, and the join re-splits every position list."""
+        flags = (with_positions, with_offsets, with_payloads)
+        got = self.cache.get_many("decoded", [(t, *flags) for t in terms])
+        missing = [t for t in terms if (t, *flags) not in got]
+        parts: dict[str, list[tuple]] = {}
+        wanted = (
+            (with_positions, "positions", "positional queries need every sub-index "
+             "built with positions=True"),
+            (with_offsets, "offsets", "highlighting needs every sub-index built "
+             "with offsets=True"),
+            (with_payloads, "payloads", "payload queries need every sub-index built "
+             "with delimited_payloads"),
+        )
         for base, ix in zip(self.doc_bases, self.indexes):
-            got = ix.collect_postings(terms, with_positions, with_offsets, with_payloads)
-            for t, p in got.items():
-                parts.setdefault(t, []).append((base, p))
-        out: dict[str, PostingList] = {}
+            for t, p in ix.collect_postings(missing, *flags).items():
+                for want, what, hint in wanted:
+                    if want and getattr(p, what) is None:
+                        raise ValueError(f"sub-index lacks {what} for term {t!r}; {hint}")
+                parts.setdefault(t, []).append(
+                    (base + p.docs, p.tfs, p.norms, p.positions, p.offsets, p.payloads)
+                )
+        # leaves cover increasing composite doc ranges: the join keeps
+        # the flat position buffer the positional kernels read
         for t, ps in parts.items():
-            docs = np.concatenate([base + p.docs for base, p in ps])
-            tfs = np.concatenate([p.tfs for _, p in ps])
-            norms = np.concatenate([p.norms for _, p in ps])
-            positions = None
-            if with_positions:
-                for _, p in ps:
-                    if p.positions is None:
-                        raise ValueError(
-                            f"sub-index lacks positions for term {t!r}; "
-                            "positional queries need every sub-index built "
-                            "with positions=True"
-                        )
-                positions = [pl for _, p in ps for pl in p.positions]
-            offsets = None
-            if with_offsets:
-                for _, p in ps:
-                    if p.offsets is None:
-                        raise ValueError(
-                            f"sub-index lacks offsets for term {t!r}; "
-                            "highlighting needs every sub-index built "
-                            "with offsets=True"
-                        )
-                offsets = [ol for _, p in ps for ol in p.offsets]
-            payloads = None
-            if with_payloads:
-                for _, p in ps:
-                    if p.payloads is None:
-                        raise ValueError(
-                            f"sub-index lacks payloads for term {t!r}; "
-                            "payload queries need every sub-index built "
-                            "with delimited_payloads"
-                        )
-                payloads = [yl for _, p in ps for yl in p.payloads]
-            out[t] = PostingList(
-                t, -1, len(docs), docs, tfs, norms, positions, offsets, payloads
+            docs, *streams = concat_doc_order(ps)
+            got[(t, *flags)] = self.cache.put(
+                "decoded", (t, *flags), PostingList(t, -1, len(docs), docs, *streams)
             )
-        return out
+        return {t: got[(t, *flags)] for t in terms if (t, *flags) in got}
 
     def all_doc_ids(self) -> np.ndarray:
         return np.concatenate(
@@ -263,7 +251,6 @@ class MultiSearcher(Searcher):
                 for ix in self.index.indexes
             )
         from lucene_spark.search import ast as A
-        from lucene_spark.search.kernels import evaluate
 
         # the shortcuts read the ANALYZED query, like Searcher.count
         q0 = self._analyze(query)
@@ -275,6 +262,6 @@ class MultiSearcher(Searcher):
         q, spec, stats, _ = self.prepare(query, collect_rows=False)
         if isinstance(spec, NoneSpec):
             return 0
-        ctx = self._driver_context(spec, self._norm_caches(stats), None)
-        docs, _ = self._apply_live_docs(*evaluate(spec, ctx))
+        ctx = self._driver_context(spec, self._norm_caches(stats))
+        docs, _ = self._live_matches(spec, ctx)
         return len(docs)

@@ -122,7 +122,7 @@ def profile(searcher, query, k: int = 10) -> dict:
     t_rows = time.perf_counter() - t0
 
     t0 = time.perf_counter()
-    docs, scores = searcher._apply_live_docs(*evaluate(spec, ctx))
+    docs, scores = searcher._live_matches(spec, ctx)
     t_eval = time.perf_counter() - t0
     t0 = time.perf_counter()
     hits = top_k_from_arrays(docs, scores, k)

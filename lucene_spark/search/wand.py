@@ -134,34 +134,39 @@ class PostingSource:
         self.reader_cache = reader_cache if term is not None else None
         self._scored: dict[int, tuple[np.ndarray, np.ndarray]] = {}  # this query's scored blocks
 
+    def cached_blocks(self, blocks: list[int]) -> list[tuple]:
+        """(docs, tfs, norms) of each given ascending global block. The
+        blocks are read from the reader cache ("block" entries, keyed
+        (term, chunk, block)) in ONE lookup; the missing ones are
+        decoded with one decode_blocks call per chunk — decode_blocks
+        walks the blob's block headers once per CALL — and put."""
+        tb = self.blocks
+        owners = zip(tb.block_chunk[blocks].tolist(), tb.block_local[blocks].tolist())
+        keys = [(self.term, ci, lb) for ci, lb in owners]
+        rc = self.reader_cache
+        got = rc.get_many("block", keys) if rc is not None else {}
+        need: dict[int, list[int]] = {}
+        for key in keys:
+            if key not in got:
+                need.setdefault(key[1], []).append(key[2])
+        for ci, lbs in need.items():  # keys ascend, so each lbs does too
+            d, t, nm = decode_blocks(tb.blobs[ci], lbs, tb.chunk_last[ci])
+            off = 0
+            for lb in lbs:
+                size = tb.block_size(ci, lb)
+                part = (d[off : off + size], t[off : off + size], nm[off : off + size])
+                if rc is not None:
+                    rc.put("block", (self.term, ci, lb), part)
+                got[(self.term, ci, lb)] = part
+                off += size
+        return [got[key] for key in keys]
+
     def scored_blocks(self, block_indices: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         """(docs, scores) of the given ascending global blocks,
-        concatenated. Each block is scored once per query; the blocks
-        not scored yet are read from the reader cache in ONE lookup and
-        the rest decoded with one decode_blocks call per chunk —
-        decode_blocks walks the blob's block headers once per CALL."""
+        concatenated. Each block is scored once per query."""
         new = [b for b in block_indices.tolist() if b not in self._scored]
         if new:
-            tb = self.blocks
-            owners = zip(tb.block_chunk[new].tolist(), tb.block_local[new].tolist())
-            keys = [(self.term, ci, lb) for ci, lb in owners]
-            rc = self.reader_cache
-            got = rc.get_many("block", keys) if rc is not None else {}
-            need: dict[int, list[int]] = {}
-            for key in keys:
-                if key not in got:
-                    need.setdefault(key[1], []).append(key[2])
-            for ci, lbs in need.items():  # keys ascend, so each lbs does too
-                d, t, nm = decode_blocks(tb.blobs[ci], lbs, tb.chunk_last[ci])
-                off = 0
-                for lb in lbs:
-                    size = tb.block_size(ci, lb)
-                    part = (d[off : off + size], t[off : off + size], nm[off : off + size])
-                    if rc is not None:
-                        rc.put("block", (self.term, ci, lb), part)
-                    got[(self.term, ci, lb)] = part
-                    off += size
-            parts = [got[key] for key in keys]
+            parts = self.cached_blocks(new)
             scores = self.score_at(
                 np.concatenate([p[1] for p in parts]), np.concatenate([p[2] for p in parts])
             )
@@ -176,38 +181,41 @@ class PostingSource:
         self, block_indices: np.ndarray
     ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         """(docs, tfs, norms) of the given blocks, concatenated in
-        ascending doc order, UNSCORED and with chunk-granular assembly
-        (no per-block cache entries). The conjunction's dense-hot-side
-        path: when the candidate set touches most of a 62k-block hot
-        term, per-block slicing/caching dominated the walk (measured
-        ~0.8 s/query on the 8M-doc skew drill) and scoring belongs
-        AFTER the intersection, not on every decoded doc.
-        ``block_indices`` must be ascending (np.unique output)."""
+        ascending doc order, UNSCORED (scoring belongs AFTER the
+        intersection, not on every decoded doc). A chunk whose every
+        block is asked for is one reader-cache "chunk" entry, decoded
+        and assembled whole: the conjunction's dense hot side touches
+        most of a 62k-block term, and per-block slicing/caching there
+        dominated the walk (measured ~0.8 s/query on the 8M-doc skew
+        drill). The blocks of the other chunks come from
+        ``cached_blocks``, so a repeat conjunction that skips blocks
+        decodes nothing either. ``block_indices`` must be ascending
+        (np.unique output)."""
         if not len(block_indices):
             e = np.empty(0, dtype=np.int64)
             return e, e, np.empty(0, dtype=np.int64)
         tb = self.blocks
         need: dict[int, list[int]] = {}
-        owners = zip(tb.block_chunk[block_indices].tolist(), tb.block_local[block_indices].tolist())
-        for ci, lb in owners:
-            need.setdefault(ci, []).append(lb)
-        # only whole chunks are shared across queries (one lookup per source)
+        for b, ci in zip(block_indices.tolist(), tb.block_chunk[block_indices].tolist()):
+            need.setdefault(ci, []).append(b)
         n_blocks = (tb.chunk_df + BLOCK_SIZE - 1) // BLOCK_SIZE
-        full = {ci for ci, lbs in need.items() if len(lbs) == n_blocks[ci]}
+        full = {ci for ci, bs in need.items() if len(bs) == n_blocks[ci]}
         rc = self.reader_cache
         cached = rc.get_many("chunk", [(self.term, ci) for ci in full]) if rc is not None else {}
-        dparts, tparts, nparts = [], [], []
-        for ci, lbs in need.items():  # ascending blocks: ascending chunks
+        partial = [b for ci, bs in need.items() if ci not in full for b in bs]
+        partial = iter(self.cached_blocks(partial))
+        parts = []
+        for ci, bs in need.items():  # ascending blocks: ascending chunks
+            if ci not in full:
+                parts.extend(next(partial) for _ in bs)
+                continue
             got = cached.get((self.term, ci))
             if got is None:
-                got = decode_blocks(tb.blobs[ci], lbs, tb.chunk_last[ci])
-                if rc is not None and ci in full:
+                got = decode_blocks(tb.blobs[ci], list(range(len(bs))), tb.chunk_last[ci])
+                if rc is not None:
                     rc.put("chunk", (self.term, ci), got)
-            d, t, nm = got
-            dparts.append(d)
-            tparts.append(t)
-            nparts.append(nm)
-        return np.concatenate(dparts), np.concatenate(tparts), np.concatenate(nparts)
+            parts.append(got)
+        return tuple(np.concatenate([p[i] for p in parts]) for i in range(3))
 
     def score_at(self, tfs: np.ndarray, norms: np.ndarray) -> np.ndarray:
         return self.sim.score(self.weight, tfs, norms, self.cache)

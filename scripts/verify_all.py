@@ -1,6 +1,7 @@
-"""One-command verification: the full pytest suite, every gate query
-vs its DuckDB oracle, the physical-plan audit, and (optionally) the
-two-parallelism scaling pair — one JSON summary line, one exit code.
+"""One-command verification: the full pytest suite, the Spark-free
+benchmark-tracer self-tests, every gate query vs its DuckDB oracle, the
+physical-plan audit, and (optionally) the two-parallelism scaling pair
+— one JSON summary line, one exit code.
 
 The driver samples ~50 gates per round; this entry proves ALL of them
 plus plans the way the round-3 judge did, so every round ships with a
@@ -52,6 +53,20 @@ def main() -> int:
             "rc": rc,
         }
         ok &= rc == 0
+
+    # the benchmark tracer wraps module attributes (unpack_postings,
+    # evaluate, wand_top_k, ...): a refactor that moves one off its
+    # traced name fails here, not in a traced bench run
+    rc, txt = run(
+        [
+            sys.executable, "-m", "pytest", "perfbench/selftest.py", "-q",
+            "-p", "no:cacheprovider", "-k", "wrappers or spans or shape or seed",
+        ],
+        timeout=600,
+    )
+    m = re.search(r"(\d+) passed", txt)
+    summary["perfbench_selftest"] = {"passed": int(m.group(1)) if m else 0, "rc": rc}
+    ok &= rc == 0
 
     rc, txt = run(
         [sys.executable, "scripts/check_gate.py", args.sf_dir], timeout=5400

@@ -127,6 +127,22 @@ def test_heterogeneous_indexes_rejected(split_indexes, tmp_path_factory, spark, 
     shutil.rmtree(d, ignore_errors=True)
 
 
+def test_merged_positions_keep_flat_buffer(split_indexes):
+    """The composite's positional lists join with their flat decode
+    buffer (the positional kernels' zero-copy input), and composite
+    phrase hits equal the single index's."""
+    a, b, whole = split_indexes
+    ms = MultiSearcher([a, b])
+    pl = ms.index.collect_postings(["return"], with_positions=True)["return"]
+    one = whole.collect_postings(["return"], with_positions=True)["return"]
+    assert np.array_equal(pl.docs, one.docs)
+    assert len(pl.positions.flat) == int(pl.tfs.sum())
+    assert pl.positions[0].base is pl.positions.flat
+    ss = Searcher(whole)
+    for q in ['"return if"', '"the data"', '"return if"~3']:
+        assert ms.search(q, k=10).hits == ss.search(q, k=10).hits, q
+
+
 def test_multi_count(split_indexes):
     a, b, whole = split_indexes
     ms = MultiSearcher([a, b])

@@ -504,3 +504,34 @@ class TestPayloadBuildContracts:
         q = A.PayloadScoreQuery(A.PhraseQuery(("alpha", "beta"), slop=2))
         with pytest.raises(ValueError, match="span shape|slop"):
             s.search(q, k=5)
+
+
+class TestPayloadSortedScan:
+    def test_sorted_index_scan_equals_search(self, spark, tmp_path, pay_rows):
+        """The early-terminating sorted scan carries payloads: on an
+        index-sorted payload index its hits are search()'s hits in
+        doc (= index sort) order, scores included."""
+        from lucene_spark.index.builder import IndexBuilder, IndexConfig
+        from lucene_spark.index.reader import SearchIndex
+
+        rows = [(d, t, len(t.split())) for d, t in pay_rows]
+        df = spark.createDataFrame(rows, "key long, content string, n long")
+        cfg = IndexConfig(
+            analyzer="whitespace",
+            delimited_payloads=DELIM,
+            docs_per_chunk=32,
+            term_buckets=2,
+            index_sort=("-n", "key"),
+        )
+        IndexBuilder(spark, cfg).build(df, str(tmp_path / "sorted_pay"))
+        s = Searcher(SearchIndex(spark, str(tmp_path / "sorted_pay")))
+        for q in [
+            A.PayloadScoreQuery(A.TermQuery("alpha"), function="avg"),
+            A.PayloadScoreQuery(A.PhraseQuery(("alpha", "beta")), function="sum"),
+            A.SpanPayloadCheckQuery(A.TermQuery("echo"), payloads=(1.0,)),
+        ]:
+            every = s.search(q, k=len(rows))
+            want = sorted(every.hits)[:10]
+            got = s.search_sorted_index(q, k=10)
+            assert got.hits == want, q
+

@@ -98,6 +98,22 @@ class TestPositionFlatCarrier:
                 flat, offs = _flat_of(ctx, t)
                 assert flat is p.positions.flat, "kernel took the copy path"
 
+    def test_driver_context_passes_decodes_through(self, spark, index_dir):
+        """The driver's leaf context hands each term's cached decode to
+        the kernels as is: no copy of docs, tfs, norms or positions."""
+        from lucene_spark.index.reader import SearchIndex
+        from lucene_spark.search.engine import Searcher
+
+        idx = SearchIndex(spark, index_dir)
+        s = Searcher(idx)
+        _q, spec, stats, rows = s.prepare('"return if"', collect_rows=True)
+        ctx = s._driver_context(spec, s._norm_caches(stats), rows)
+        pls = idx.postings_from_rows(rows, with_positions=True)
+        assert set(pls) == {"return", "if"}
+        for t, p in pls.items():
+            assert all(a is b for a, b in zip(ctx.arrays[t], (p.docs, p.tfs, p.norms)))
+            assert ctx.positions[t] is p.positions
+
     def test_multirow_term_really_spans_chunks(self, spark, index_dir):
         """Guard the guard: the fixture must actually exercise the
         multi-row concat branch or the test above proves nothing."""

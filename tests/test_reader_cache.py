@@ -183,6 +183,35 @@ class TestReaderCacheOnIndex:
         assert after["hits"] - before["hits"] == first.info["decoded_blocks"]
         assert calls == []
 
+    def test_repeat_skipping_conjunction_decodes_nothing(self, spark, tmp_path, monkeypatch):
+        """A conjunction that skips blocks of a multi-block chunk reads
+        the blocks it needs from the reader cache on a repeat: zero
+        decode_blocks calls on the second run."""
+        from lucene_spark.codec import forutil
+        from lucene_spark.index.builder import IndexBuilder, IndexConfig
+        from lucene_spark.index.reader import SearchIndex
+        from lucene_spark.search import wand
+
+        # one 512-doc chunk: "common" has 4 blocks, "rare" sits in block 0
+        rows = [(d, "common rare" if d < 10 else "common other") for d in range(400)]
+        d = str(tmp_path / "conj")
+        IndexBuilder(spark, IndexConfig(docs_per_chunk=512, term_buckets=2)).build(
+            spark.createDataFrame(rows, "doc_id long, content string"), d, assign_ids=False
+        )
+        s = Searcher(SearchIndex(spark, d))
+        first = s.search("rare AND common", k=5)
+        assert first.info["blocks_skipped"] == 3, "must take the skipping conjunction path"
+        calls = []
+
+        def counted(*args, **kwargs):
+            calls.append(args[1])
+            return forutil.decode_blocks(*args, **kwargs)
+
+        monkeypatch.setattr(wand, "decode_blocks", counted)
+        again = s.search("rare AND common", k=5)
+        assert (again.hits, again.info) == (first.hits, first.info)
+        assert calls == []
+
     def test_budget_holds_and_hits_match_unbounded(self, spark, index_dir, search_index):
         from lucene_spark.index.reader import SearchIndex
 
