@@ -56,6 +56,9 @@ QUERIES: dict[str, A.Query] = {
     # repeated-term span-near: both slots read one term's positions
     # (same flat interval producer as distinct terms)
     "q_spannear_rep": A.SpanNearQuery(("table", "table"), slop=4, in_order=True),
+    # repeated-term sloppy phrase: Lucene's repeat groups in the n-slot
+    # lockstep matcher
+    "q_sloppy_rep": A.PhraseQuery(("table", "table"), slop=3),
     "q_interval3": A.IntervalQuery(
         IMaxGaps(8, IOrdered((ITerm("table"), ITerm("hash"), ITerm("merge"))))
     ),

@@ -740,9 +740,9 @@ def evaluate(spec, ctx: ChunkContext) -> tuple[np.ndarray, np.ndarray]:
     if isinstance(spec, BoolSpec):
         return _evaluate_bool(spec, ctx)
     if isinstance(spec, PhraseSpec):
-        return _evaluate_phrase(spec, ctx)
+        return _evaluate_phrase(spec, ctx, tuple((t,) for t in spec.terms))
     if isinstance(spec, MultiPhraseSpec):
-        return _evaluate_multiphrase(spec, ctx)
+        return _evaluate_phrase(spec, ctx, spec.slots)
     if isinstance(spec, SpanNearSpec):
         return _evaluate_spannear(spec, ctx)
     if isinstance(spec, IntervalSpec):
@@ -1383,8 +1383,9 @@ def _evaluate_interval(spec: IntervalSpec, ctx: ChunkContext) -> tuple[np.ndarra
     evaluation over the positions index — the flat lowering
     (:func:`_interval_flat`) over every candidate at once, or the
     per-candidate tree evaluator for the shapes and stacked-token
-    inputs outside it. freq accumulates 1/(1 + gaps) per emitted
-    interval with gaps = max(0, width - covered) (overlapping unordered
+    inputs outside it (named in the flat-kernel header below). freq
+    accumulates 1/(1 + gaps) per emitted interval with
+    gaps = max(0, width - covered) (overlapping unordered
     operands can cover more than the width; clamped like
     SloppyPhraseMatcher clamps negative slop)."""
     from lucene_spark.search.intervals import candidate_docs, eval_source
@@ -1444,38 +1445,24 @@ def _evaluate_interval(spec: IntervalSpec, ctx: ChunkContext) -> tuple[np.ndarra
     return _positional_hits(spec, ctx, cand, freqs, spec.terms)
 
 
-def _evaluate_multiphrase(spec: MultiPhraseSpec, ctx: ChunkContext) -> tuple[np.ndarray, np.ndarray]:
-    """MultiPhraseQuery: each slot's postings are the union of its
-    alternative terms (UnionPostingsEnum — one flat sorted key array per
-    slot), then the exact or sloppy phrase matcher over the slots.
-    Slots that SHARE a term take the multi-term repeat-group path of
-    :func:`_sloppy_freqs` (hasMultiTermRpts,
-    SloppyPhraseMatcher.java:435-453,562-585)."""
-    cand = _slot_conjunction(ctx, spec.slots)
-    if not len(cand):
-        return EMPTY_I, EMPTY_F
-    keys = [_slot_keys(ctx, s, cand) for s in spec.slots]
-    if spec.slop == 0:
-        freqs = _exact_phrase_freqs_keys(keys, len(cand))
-    else:
-        freqs = _sloppy_freqs(keys, spec.slop, len(cand), spec.slots).astype(np.float64)
-    return _positional_hits(spec, ctx, cand, freqs, spec.slots[0])
+def _evaluate_phrase(spec, ctx: ChunkContext, slots) -> tuple[np.ndarray, np.ndarray]:
+    """PhraseQuery (one term per slot) and MultiPhraseQuery, whose slot
+    postings are the union of its alternative terms (UnionPostingsEnum —
+    one flat sorted key array per slot). Candidates = the conjunction of
+    the slots; the freq feeds BM25 with the summed-idf weight
+    (PhraseWeight).
 
-
-def _evaluate_phrase(spec: PhraseSpec, ctx: ChunkContext) -> tuple[np.ndarray, np.ndarray]:
-    """ExactPhraseMatcher semantics (ExactPhraseMatcher.java:39,109):
-    candidate docs = conjunction of all phrase terms; phrase freq =
-    #positions p of term0 with p+i present for every term i. The freq
-    then feeds BM25 with the summed-idf weight (PhraseWeight).
-
-    slop > 0 (SloppyPhraseMatcher.java:53): the reference's
-    priority-queue matcher (:func:`_sloppy_freqs`) — a match needs
-    matchLength <= slop and contributes sloppyFreq = 1/(1+matchLength)
+    slop 0: ExactPhraseMatcher (ExactPhraseMatcher.java:39,109), freq =
+    #positions p of slot 0 with p+i present for every slot i. slop > 0
+    (SloppyPhraseMatcher.java:53): the reference's priority-queue
+    matcher (:func:`_sloppy_freqs`) over every candidate at once — a
+    match needs matchLength <= slop and contributes 1/(1+matchLength)
     (Similarity.SloppySimScorer weighting), accumulated in float32.
-    Repeated terms take Lucene's repeat-group handling
-    (SloppyPhraseMatcher.java:286-470): two slots carrying the same
-    term never sit on the same token position."""
-    slots = tuple((t,) for t in spec.terms)
+    Slots sharing a term take Lucene's repeat groups
+    (SloppyPhraseMatcher.java:286-470, hasMultiTermRpts :435-453,
+    :562-585) in the same lockstep: two slots carrying the same term
+    never sit on the same token position. No sloppy phrase runs per
+    candidate."""
     cand = _slot_conjunction(ctx, slots)
     if not len(cand):
         return EMPTY_I, EMPTY_F
@@ -1484,7 +1471,7 @@ def _evaluate_phrase(spec: PhraseSpec, ctx: ChunkContext) -> tuple[np.ndarray, n
         freqs = _exact_phrase_freqs_keys(keys, len(cand))
     else:
         freqs = _sloppy_freqs(keys, spec.slop, len(cand), slots).astype(np.float64)
-    return _positional_hits(spec, ctx, cand, freqs, spec.terms[:1])
+    return _positional_hits(spec, ctx, cand, freqs, slots[0])
 
 
 def _flat_of(ctx: "ChunkContext", t: str) -> tuple[np.ndarray, np.ndarray]:
@@ -1591,200 +1578,6 @@ def _exact_phrase_freqs_keys(key_arrays: list[np.ndarray], n_cand: int) -> np.nd
     return np.bincount(alive >> np.int64(32), minlength=n_cand).astype(np.float64)
 
 
-def _lucene_sloppy_freq(
-    pos_lists: list, slop: int, terms: tuple | None = None, slot_terms: tuple | None = None
-) -> np.float32:
-    """Exact replication of the reference sloppy matcher semantics
-    (SloppyPhraseMatcher.java:162-205 nextMatch loop, PhrasePositions.java
-    position = pos - offset, PhraseQueue.java (position, offset, ord)
-    ordering; freq accumulation PhraseScorer.java:75-79 in float32,
-    sloppyWeight = 1/(1 + matchLength)), including the single-term
-    repeat-group handling (initComplex / advanceRepeatGroups /
-    advanceRpts collision resolution, SloppyPhraseMatcher.java:286-470:
-    two phrase slots carrying the SAME term may never sit on the same
-    token position — on collision the lesser of the two advances).
-
-    Algorithm: each phrase slot is an iterator over offset-adjusted
-    positions; a priority queue repeatedly advances the minimum; a match
-    is emitted each time the advanced iterator overtakes the queue
-    minimum captured at pop time while the running matchLength
-    (end - min position, minimized while the leader catches up) is
-    <= slop. Javadoc-documented behavior replicated: "a b"~2 on doc
-    "x a b a y" matches twice — distance 0 and distance 2 — freq =
-    1 + 1/3. Like the reference, not every combination is found
-    ("a b c b a" scores "a b c"~4 and "c b a"~4 differently —
-    SloppyPhraseMatcher.java:45-50 comment); this IS the reference
-    behavior, required for rank identity. ``terms`` (aligned with
-    pos_lists) drives repeat-group detection; None = all distinct.
-    The queue is a re-sorted list (equivalent to the reference's
-    pop/re-add heap repair after collision advances).
-
-    ``slot_terms`` (tuple of per-slot term tuples, MultiPhraseQuery
-    shape) enables the multi-term repeat handling (hasMultiTermRpts,
-    SloppyPhraseMatcher.java:435-453 init collide-loop + :562-585
-    connected-component groups over the bipartite slot/term graph):
-    slots that share ANY repeating term join one group; init resolves
-    collisions by advancing the lesser instead of the j-steps rule.
-    """
-    n = len(pos_lists)
-    plists = [np.asarray(p, dtype=np.int64) for p in pos_lists]
-    pos = [int(plists[i][0]) - i for i in range(n)]
-    nxt = [1] * n
-    end = max(pos)
-
-    grp_of = [-1] * n
-    groups: list[list[int]] = []
-    has_multi = False
-    if slot_terms is not None:
-        # repeatingTerms (SloppyPhraseMatcher.java:595-607): terms
-        # carried by >= 2 slots
-        cnt: dict = {}
-        for slot in slot_terms:
-            for t in set(slot):
-                cnt[t] = cnt.get(t, 0) + 1
-        rpt_terms = {t for t, c in cnt.items() if c >= 2}
-        if rpt_terms:
-            rpt_slots = [i for i, slot in enumerate(slot_terms) if rpt_terms & set(slot)]
-            has_multi = any(len(set(slot_terms[i])) > 1 for i in rpt_slots)
-            if not has_multi:
-                by_term: dict = {}
-                for i in rpt_slots:
-                    by_term.setdefault(next(iter(slot_terms[i])), []).append(i)
-                for idxs in by_term.values():
-                    if len(idxs) > 1:
-                        for i in idxs:
-                            grp_of[i] = len(groups)
-                        groups.append(idxs)
-            else:
-                # unionTermGroups (:648-663): union repeating-term sets
-                # sharing a slot until disjoint, then each repeating
-                # slot joins its terms' component
-                comps: list[set] = []
-                for i in rpt_slots:
-                    cur = set(slot_terms[i]) & rpt_terms
-                    rest = []
-                    for m in comps:
-                        if m & cur:
-                            cur |= m
-                        else:
-                            rest.append(m)
-                    comps = rest + [cur]
-                for m in comps:
-                    members = [i for i in rpt_slots if set(slot_terms[i]) & m]
-                    if len(members) > 1:
-                        for i in members:
-                            grp_of[i] = len(groups)
-                        groups.append(members)  # ascending offset order
-    elif terms is not None:
-        by_term = {}
-        for i, t in enumerate(terms):
-            by_term.setdefault(t, []).append(i)
-        for idxs in by_term.values():
-            if len(idxs) > 1:
-                for i in idxs:
-                    grp_of[i] = len(groups)
-                groups.append(idxs)  # members in phrase-offset order
-
-    def advance(i: int) -> bool:
-        nonlocal end
-        if nxt[i] < len(plists[i]):
-            pos[i] = int(plists[i][nxt[i]]) - i
-            nxt[i] += 1
-            if pos[i] > end:
-                end = pos[i]
-            return True
-        return False
-
-    def tp(i: int) -> int:  # actual token position (tpPos)
-        return pos[i] + i
-
-    # init repeats (advanceRepeatGroups, SloppyPhraseMatcher.java:435-467)
-    if has_multi:
-        # multi-term branch: some may not collide — resolve by
-        # advancing the lesser until the group is collision-free
-        for idxs in groups:
-            i = 0
-            while i < len(idxs):
-                incr = 1
-                pp = idxs[i]
-                while True:
-                    k = next((m for m in idxs if m != pp and tp(m) == tp(pp)), None)
-                    if k is None:
-                        break
-                    pp2 = pp if (pos[pp], pp) < (pos[k], k) else k
-                    if not advance(pp2):
-                        return np.float32(0.0)
-                    if idxs.index(pp2) < i:  # rptInd < i: recheck earlier pp
-                        incr = 0
-                        break
-                i += incr
-    else:
-        # single-term repeats: group member j starts j positions in, so
-        # the group begins collision-free ("simpler" branch)
-        for idxs in groups:
-            for j in range(1, len(idxs)):
-                for _ in range(j):
-                    if not advance(idxs[j]):
-                        return np.float32(0.0)
-    end = max(pos)
-
-    def advance_rpts(i: int) -> bool:
-        """Collision resolution after advancing pp i: while another
-        member of its repeat group sits on the same token position,
-        advance the lesser (by adjusted position, then offset)."""
-        p = i
-        while grp_of[p] >= 0:
-            k = next((m for m in groups[grp_of[p]] if m != p and tp(m) == tp(p)), None)
-            if k is None:
-                return True
-            p = p if (pos[p], p) < (pos[k], k) else k
-            if not advance(p):
-                return False
-        return True
-
-    queue = sorted(range(n), key=lambda i: (pos[i], i))
-    positioned = True
-    has_rpts = bool(groups)
-
-    def next_match() -> tuple[bool, int]:
-        nonlocal positioned, queue
-        if not positioned:
-            return False, 0
-        queue.sort(key=lambda i: (pos[i], i))
-        lead = queue.pop(0)
-        match_length = end - pos[lead]
-        next_top = pos[queue[0]]  # captured once per pop, like the reference
-        while advance(lead):
-            if has_rpts and not advance_rpts(lead):
-                break
-            if pos[lead] > next_top:
-                queue.append(lead)
-                if match_length <= slop:
-                    return True, match_length
-                queue.sort(key=lambda i: (pos[i], i))
-                lead = queue.pop(0)
-                next_top = pos[queue[0]]
-                match_length = end - pos[lead]
-            else:
-                ml2 = end - pos[lead]
-                if ml2 < match_length:
-                    match_length = ml2
-        positioned = False
-        return match_length <= slop, match_length
-
-    ok, ml = next_match()
-    if not ok:
-        return np.float32(0.0)
-    one = np.float32(1.0)
-    freq = one / (one + np.float32(ml))  # float32 accumulation, PhraseScorer.java:75-79
-    while True:
-        ok, ml = next_match()
-        if not ok:
-            break
-        freq = np.float32(freq + one / (one + np.float32(ml)))
-    return freq
-
-
 # ---- flat positional kernels ----------------------------------------------
 #
 # Every positional semantic runs over FLAT composite keys (cand_index << 32
@@ -1799,16 +1592,23 @@ def _lucene_sloppy_freq(
 #   co-positioned stacked tokens run the same machines (their zero-width
 #   windows count as gaps 0), so span-near has no per-candidate path.
 # - sloppy phrases: one dispatcher, _sloppy_freqs, for phrases,
-#   multiphrases and the percolator.
+#   multiphrases and the percolator: the 2-slot merge form for two
+#   disjoint slots, the n-slot lockstep otherwise, Lucene's repeat
+#   groups (slots sharing a term) included.
 #
 # The n-slot machines run the per-doc state machines of the scalar
 # references (tests/positional_oracle.py) for all docs in lockstep — one
 # numpy pass advances one step of every active doc — so each doc emits
 # the same sequence and float32 accumulation is bit-identical
-# (fuzz-verified in tests/test_sloppy.py / test_spannear.py). Two cases
-# stay per candidate: sloppy phrases whose slots share a term (Lucene's
-# repeat groups, _lucene_sloppy_freq) and interval sources whose inputs
-# collide or fall outside the flat lowering (intervals.eval_source).
+# (fuzz-verified in tests/test_sloppy.py / test_spannear.py). Sloppy
+# phrases and span-near have no per-candidate path. Interval sources
+# run through intervals.eval_source one candidate at a time when two
+# slots' keys collide (stacked tokens) or the shape falls outside the
+# flat lowering (_interval_flat): a bare top-level term, IMaxWidth,
+# IExtend outside a filter's reference, proximity operands other than
+# terms and or-of-terms, proximity slots repeating a term, and filters
+# whose reference is a proximity (bar a containedBy / notContainedBy
+# pair source) or whose positive operand is not a term or proximity.
 
 _HI64 = np.int64((1 << 62))
 _LOW32 = np.int64((1 << 32) - 1)
@@ -2034,89 +1834,116 @@ def _interval_freqs(S: np.ndarray, E: np.ndarray, covered, n_cand: int, cap=None
 
 def _sloppy_freqs(keys: list[np.ndarray], slop: int, n_cand: int, slot_terms) -> np.ndarray:
     """Sloppy-phrase freqs (float32 per candidate) of the slots whose
-    flat keys are ``keys``; ``slot_terms`` holds each slot's terms.
-    Slots with no term in common run the reference priority-queue
-    matcher (SloppyPhraseMatcher.java:174-206, initSimple) vectorized
-    over every candidate: the 2-slot merge form or the n-slot lockstep.
-    Slots sharing a term need Lucene's repeat groups, which run per
-    candidate (:func:`_lucene_sloppy_freq`) over the keys split by
-    candidate."""
+    flat keys are ``keys``; ``slot_terms`` holds each slot's terms. The
+    reference priority-queue matcher (SloppyPhraseMatcher.java:174-206)
+    runs over every candidate at once: two slots with no term in common
+    take the 2-slot merge form, everything else the n-slot lockstep,
+    which also carries Lucene's repeat groups for slots sharing a term."""
     terms = [t for slot in slot_terms for t in slot]
-    if len(set(terms)) == len(terms):
-        if len(keys) == 2:
-            return _sloppy2_flat_freqs(keys[0], keys[1], slop, n_cand)
-        return _sloppy_flat_freqs_n(keys, slop, n_cand)
-    if all(len(slot) == 1 for slot in slot_terms):
-        groups = {"terms": tuple(terms)}  # single-term repeat groups
-    else:
-        groups = {"slot_terms": slot_terms}
-    bounds = np.arange(n_cand + 1, dtype=np.int64) << np.int64(32)
-    cuts = [np.searchsorted(K, bounds).tolist() for K in keys]
-    pos = [K & _LOW32 for K in keys]
-    freqs = np.zeros(n_cand, dtype=np.float32)
-    for ci in range(n_cand):
-        pl = [P[c[ci] : c[ci + 1]] for P, c in zip(pos, cuts)]
-        if all(len(p) for p in pl):
-            freqs[ci] = _lucene_sloppy_freq(pl, slop, **groups)
-    return freqs
+    if len(keys) == 2 and len(set(terms)) == len(terms):
+        return _sloppy2_flat_freqs(keys[0], keys[1], slop, n_cand)
+    return _sloppy_flat_freqs_n(keys, slop, n_cand, slot_terms)
 
 
 def _sloppy2_flat_freqs(A: np.ndarray, B: np.ndarray, slop: int, n_cand: int) -> np.ndarray:
-    """Flat vectorized 2-slot sloppy matcher over every candidate at
-    once. The alternating run-crossing two-pointer emits exactly one
-    match per ADJACENT CROSS-LIST pair in the merged order of
-    (A-positions + 1) and B-positions, with A winning ties (the
-    PhraseQueue slot-0 tie rule) — so the whole PQ simulation collapses
-    to one merge-sort plus a boundary mask. matchLength = the adjacent
-    gap; emissions accumulate in merged (ascending) order, preserving
-    the reference's float32 add sequence. Fuzz-verified bit-equal to
-    the per-doc 2-slot matcher (tests/test_sloppy.py, against
-    positional_oracle._sloppy_freq2)."""
+    """2-slot sloppy matcher over every candidate at once. The reference
+    PQ walk emits one match per ADJACENT CROSS-LIST pair in the merged
+    order of (A-positions + 1) and B-positions, matchLength = the pair's
+    gap, in merged order (the reference's float32 add sequence). A tie
+    (equal keys) opens with its predecessor's slot, slot 0 at a doc
+    start (PhraseQueue pa <= pb rule). A tie right behind another tie
+    in one doc has that pair's second element as predecessor, so such a
+    chain alternates: pair j of a chain opens with slot 1 iff j plus the
+    slot before the chain is odd.
+
+    The merged order is never built: the shorter list X is located in
+    the longer Y, ties fix how many Y elements precede each x, and each
+    run of X elements emits its two cross pairs (Y before its first x, Y
+    after its last), which in X order is merged order. Fuzz-verified
+    bit-equal to positional_oracle._sloppy_freq2."""
     freqs = np.zeros(n_cand, dtype=np.float32)
     if not len(A) or not len(B):
         return freqs
-    # adjusted A' = A + 1 (phrase offset: slot-1 expected at pos+1)
-    m = np.concatenate([((A + 1) << 1), (B << 1) | 1])
-    m.sort(kind="stable")
-    keys = m >> 1
-    tags = (m & 1).astype(np.int8)
-    if len(m) < 2:
-        return freqs
-    ci = keys >> 32
-    # tie pairs (same adjusted position, one from each list): the pair
-    # joins the CURRENTLY LEADING run — its order is (previous
-    # element's tag, other), defaulting to slot 0 at a run start
-    # (PhraseQueue pa <= pb tie rule). Resolved sequentially since a
-    # tie's outcome feeds the next tie's "previous tag".
-    tie_idx = np.nonzero((keys[1:] == keys[:-1]) & (ci[1:] == ci[:-1]))[0]
-    for i in tie_idx:
-        prev = tags[i - 1] if i > 0 and ci[i - 1] == ci[i] else 0
-        if prev == 1 and tags[i] == 0:  # b leads → b's element first
-            tags[i], tags[i + 1] = np.int8(1), np.int8(0)
-    boundary = (tags[1:] != tags[:-1]) & (ci[1:] == ci[:-1])
-    if not boundary.any():
-        return freqs
-    gaps = (keys[1:] - keys[:-1])[boundary]
-    bci = ci[1:][boundary]
-    ok = gaps <= slop
-    if not ok.any():
-        return freqs
-    contrib = np.float32(1.0) / (np.float32(1.0) + gaps[ok].astype(np.float32))
-    np.add.at(freqs, bci[ok].astype(np.int64), contrib)
+    P = A + 1  # phrase offset: slot 1 is expected at pos + 1
+    x0 = len(P) <= len(B)  # X is slot 0
+    X, Y = (P, B) if x0 else (B, P)
+    lo = np.searchsorted(Y, X)  # Y elements strictly before each x
+    tie = Y[np.minimum(lo, len(Y) - 1)] == X
+    ny = lo + tie  # ... and x's tie, placed first until resolved below
+    doc = X >> 32
+    t = np.nonzero(tie)[0]
+    if len(t):
+        lt, tp = lo[t], t - 1
+        # x_{j-1} precedes the pair when no Y lies between them (for
+        # t == 0, ny[-1] > lt: the wrap never matches)
+        px = (ny[tp] == lt) & (doc[tp] == doc[t])
+        if x0:  # the pair opens with Y (slot 1) iff Y precedes it in this doc
+            opens_y = ~px & (lt > 0) & ((Y[lt - 1] >> 32) == doc[t])
+        else:  # ... with Y (slot 0) unless X precedes it in this doc
+            opens_y = ~px
+        cont = px & tie[tp]  # right behind the previous tie pair
+        if cont.any():
+            i = np.arange(len(t))
+            f = np.maximum.accumulate(np.where(cont, 0, i))  # chain start
+            opens_y = opens_y[f] != ((i - f) % 2 == 1)
+        ny[t] -= ~opens_y
+    # candidate pairs in merged order: (Y before, x) where x opens a run
+    # of X elements, (x, Y after) where x closes one
+    cand = np.empty((len(X), 2), dtype=bool)
+    np.greater(ny[1:], ny[:-1], out=cand[1:, 0])
+    cand[:-1, 1] = cand[1:, 0]
+    cand[0, 0] = ny[0] > 0
+    cand[-1, 1] = ny[-1] < len(Y)
+    e = np.nonzero(cand.ravel())[0]
+    xi = e >> 1
+    y = Y[ny[xi] - 1 + (e & 1)]
+    gaps = np.abs(y - X[xi])
+    keep = (gaps <= slop) & ((y >> 32) == doc[xi])
+    one = np.float32(1.0)
+    np.add.at(freqs, doc[xi[keep]], one / (one + gaps[keep].astype(np.float32)))
     return freqs
 
 
-def _sloppy_flat_freqs_n(key_arrays: list[np.ndarray], slop: int, n_cand: int) -> np.ndarray:
-    """Lockstep-vectorized :func:`_lucene_sloppy_freq` for n DISTINCT
-    phrase slots over every candidate doc at once (the no-repeats PQ,
-    SloppyPhraseMatcher.java:174-206 nextMatch + initSimple). State per
-    doc: per-slot cursors into the flat position arrays, offset-adjusted
-    positions, running end / matchLength / captured queue-top. Each
-    numpy iteration performs exactly one advancePP per active doc.
-    Candidate docs are term-conjunction members, so every segment is
-    non-empty. Emission order per doc equals the sequential algorithm's,
-    preserving the reference float32 accumulation
-    (PhraseScorer.java:75-79)."""
+def _repeat_groups(slot_terms) -> tuple[list[list[int]], bool]:
+    """Lucene's repeat groups (SloppyPhraseMatcher.java:562-663): the
+    connected components, members in offset order, of the slots linked
+    by sharing a term that >= 2 slots carry; and whether a grouped slot
+    has several terms (hasMultiTermRpts)."""
+    cnt: dict = {}
+    for s in slot_terms:
+        for t in set(s):
+            cnt[t] = cnt.get(t, 0) + 1
+    comps: list[tuple[list[int], set]] = []
+    for i, s in enumerate(slot_terms):
+        ts = {t for t in s if cnt[t] > 1}
+        if ts:
+            hit = [c for c in comps if c[1] & ts]
+            comps = [c for c in comps if not c[1] & ts]
+            members = sorted([i, *(m for c in hit for m in c[0])])
+            comps.append((members, ts.union(*(c[1] for c in hit))))
+    groups = [members for members, _ in comps]
+    return groups, any(len(set(slot_terms[i])) > 1 for g in groups for i in g)
+
+
+def _sloppy_flat_freqs_n(
+    key_arrays: list[np.ndarray], slop: int, n_cand: int, slot_terms=None
+) -> np.ndarray:
+    """The reference sloppy matcher (SloppyPhraseMatcher.java:174-206
+    nextMatch; PhraseQueue (position, offset) order) for n slots over
+    every candidate doc at once: each numpy iteration performs one
+    advancePP per active doc, so every doc emits the reference's match
+    sequence and float32 accumulation (PhraseScorer.java:75-79).
+
+    Slots sharing a term (``slot_terms``; None = all distinct) form
+    repeat groups whose members never share a token position. Init
+    (advanceRepeatGroups, :435-467): member j of a single-term group
+    starts j advances in; multi-term groups run the collide loop, one
+    cursor per doc, advancing the lesser of two colliding members. After
+    each lead advance, advanceRpts (:286-330) advances the lesser (by
+    position, then offset) of two same-position group-mates until none
+    collide. A doc whose advance runs out takes the final
+    positioned=false check. Fuzz-verified bit-equal to
+    positional_oracle._lucene_sloppy_freq."""
     n = len(key_arrays)
     freqs = np.zeros(n_cand, dtype=np.float32)
     if n_cand == 0 or any(not len(K) for K in key_arrays):
@@ -2124,64 +1951,108 @@ def _sloppy_flat_freqs_n(key_arrays: list[np.ndarray], slop: int, n_cand: int) -
     slots = _flat_slots(key_arrays, n_cand)
     offs = np.arange(n, dtype=np.int64)
     pos, ptr, lim, ok_docs = _init_slot_state(slots, n_cand, offsets=True)
+    # one flat position buffer: cursors become global indices into it
+    base = np.cumsum([0] + [len(P) for P, _s, _ln in slots[:-1]]).astype(np.int64)
+    flat = np.concatenate([P for P, _s, _ln in slots])
+    ptr += base
+    lim += base
     end = pos.max(axis=1)
-    rows = np.arange(n_cand)
-    order = pos * n + offs  # PhraseQueue order: (position, offset)
-    lead = np.argmin(order, axis=1).astype(np.int64)
-    tmp = order[rows, lead].copy()
-    order[rows, lead] = _HI64
-    next_top = order.min(axis=1) // n  # pq.top().position after pop
-    order[rows, lead] = tmp
-    match_len = end - pos[rows, lead]
+
+    def advance(rows: np.ndarray, sl: np.ndarray) -> np.ndarray:
+        """advancePP of slot sl[i] in doc rows[i]; False where exhausted."""
+        moved = ptr[rows, sl] < lim[rows, sl]
+        r, s = rows[moved], sl[moved]
+        p = flat[ptr[r, s]] - s
+        pos[r, s] = p
+        ptr[r, s] += 1
+        end[r] = np.maximum(end[r], p)
+        return moved
+
+    groups, has_multi = _repeat_groups(slot_terms) if slot_terms else ([], False)
+    mates = np.zeros((n, n), dtype=bool)  # same repeat group, other slot
+    for g in groups:
+        mates[np.ix_(g, g)] = True
+    np.fill_diagonal(mates, False)
+
+    def lesser_collider(rows: np.ndarray, sl: np.ndarray):
+        """(hit, lesser): whether slot sl[i] shares its token position
+        with a group-mate in doc rows[i] (collide: the first such mate in
+        offset order), and the lesser of the two by (position, offset)."""
+        tp = pos[rows] + offs
+        same = mates[sl] & (tp == (pos[rows, sl] + sl)[:, None])
+        hit = same.any(axis=1)
+        k = same.argmax(axis=1)
+        first = pos[rows, sl] * n + sl < pos[rows, k] * n + k
+        return hit, np.where(first, sl, k)
+
+    for g in groups:
+        if has_multi:
+            garr = np.asarray(g, dtype=np.int64)
+            cur = np.zeros(n_cand, dtype=np.int64)
+            while True:
+                rows = np.nonzero(ok_docs & (cur < len(g)))[0]
+                if not len(rows):
+                    break
+                hit, sl = lesser_collider(rows, garr[cur[rows]])
+                cur[rows[~hit]] += 1
+                rows, sl = rows[hit], sl[hit]
+                ok_docs[rows[~advance(rows, sl)]] = False
+        else:
+            for j, i in enumerate(g):
+                for _ in range(j):
+                    rows = np.nonzero(ok_docs)[0]
+                    ok_docs[rows[~advance(rows, np.full(len(rows), i))]] = False
+
+    lead = np.zeros(n_cand, dtype=np.int64)
+    next_top = np.zeros(n_cand, dtype=np.int64)
+    match_len = np.zeros(n_cand, dtype=np.int64)
+
+    def pop(rows: np.ndarray) -> None:
+        """pq.pop(): the lead, pq.top().position after it, matchLength."""
+        order = pos[rows] * n + offs  # PhraseQueue order: (position, offset)
+        lead[rows] = l = np.argmin(order, axis=1)
+        order[np.arange(len(rows)), l] = _HI64
+        next_top[rows] = order.min(axis=1) // n
+        match_len[rows] = end[rows] - pos[rows, l]
+
+    pop(np.arange(n_cand))
     one = np.float32(1.0)
     active = ok_docs
     while True:
         act = np.nonzero(active)[0]
         if not len(act):
             break
-        l = lead[act]
-        exhausted = ptr[act, l] >= lim[act, l]
-        exh = act[exhausted]
-        if len(exh):  # positioned=false path: final emission check
-            ml = match_len[exh]
+        moved = advance(act, lead[act])
+        if groups:  # advanceRpts: resolve the lead's collisions
+            idx = np.nonzero(moved)[0]
+            sl = lead[act[idx]]
+            while len(idx):
+                hit, sl = lesser_collider(act[idx], sl)
+                idx, sl = idx[hit], sl[hit]
+                ran = advance(act[idx], sl)
+                moved[idx[~ran]] = False
+                idx, sl = idx[ran], sl[ran]
+        stop = act[~moved]
+        if len(stop):  # positioned=false path: final emission check
+            ml = match_len[stop]
             ok = ml <= slop
-            e = exh[ok]
-            freqs[e] += one / (one + ml[ok].astype(np.float32))
-            active[exh] = False
-        live = act[~exhausted]
+            freqs[stop[ok]] += one / (one + ml[ok].astype(np.float32))
+            active[stop] = False
+        live = act[moved]
         if not len(live):
             continue
-        l = lead[live]
-        # advancePP: gather the next flat position of each doc's lead slot
-        newpos = np.empty(len(live), dtype=np.int64)
-        for j, (P, _s, _ln) in enumerate(slots):
-            m = l == j
-            if m.any():
-                newpos[m] = P[ptr[live[m], j]] - j
-        pos[live, l] = newpos
-        ptr[live, l] += 1
-        end[live] = np.maximum(end[live], newpos)
-        crossed = newpos > next_top[live]
+        lpos = pos[live, lead[live]]
+        crossed = lpos > next_top[live]
         nc = live[~crossed]
         if len(nc):  # keep minimizing the current match length
-            ml2 = end[nc] - pos[nc, lead[nc]]
-            match_len[nc] = np.minimum(match_len[nc], ml2)
+            match_len[nc] = np.minimum(match_len[nc], end[nc] - lpos[~crossed])
         cr = live[crossed]
         if len(cr):  # done minimizing: emit if within slop, then re-pop
             ml = match_len[cr]
             ok = ml <= slop
-            e = cr[ok]
-            freqs[e] += one / (one + ml[ok].astype(np.float32))
-            order_cr = pos[cr] * n + offs
-            lcr = np.argmin(order_cr, axis=1).astype(np.int64)
-            lead[cr] = lcr
-            rr = np.arange(len(cr))
-            order_cr[rr, lcr] = _HI64
-            next_top[cr] = order_cr.min(axis=1) // n
-            match_len[cr] = end[cr] - pos[cr, lcr]
+            freqs[cr[ok]] += one / (one + ml[ok].astype(np.float32))
+            pop(cr)
     return freqs
-
-
 
 
 def _evaluate_bool(spec: BoolSpec, ctx: ChunkContext) -> tuple[np.ndarray, np.ndarray]:

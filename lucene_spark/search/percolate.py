@@ -21,7 +21,8 @@ it. Two stages, exactly as the reference:
    the document's token stream, Arrow-batched via mapInPandas (the
    per-segment in-memory index the reference builds per doc batch).
    Sloppy phrases reuse the engine's sloppy-phrase dispatcher
-   (kernels._sloppy_freqs) on the document as its one candidate.
+   (kernels._sloppy_freqs, vectorized with no per-candidate path,
+   repeated terms included) on the document as its one candidate.
 
 Scale: the registered query set is the SMALL side (broadcast); the
 document stream is the big side and is touched once — tokenize +

@@ -41,6 +41,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -234,18 +235,40 @@ def _edge_normals(points) -> list[tuple[float, float, float]]:
     raise ValueError("polygon is not convex (GeoConvexPolygon subset)")
 
 
-def convex_polygon_condition(q) -> Column:
-    """GeoConvexPolygon.isWithin role: AND of per-edge plane dot
-    products (normals are query-time constants), AND'd with the
-    vertex bounding box for parquet row-group pruning."""
-    ns = _edge_normals(q.points)
-    pts = [tuple(p) for p in q.points]
+def _polygon_box(points) -> tuple[float, float, float, float]:
+    """(lat_lo, lat_hi, lon_lo, lon_hi) degrees bounding a convex ring
+    for the coarse (row-group pruning) phase. Longitude runs monotonically
+    along a great-circle edge, so the vertices bound it; latitude does
+    not: an edge bulges poleward, so each edge's extreme latitudes — the
+    northmost and southmost points of its great circle, taken from the
+    plane normal n = p x q, where they fall between p and q — widen the
+    vertex band."""
+    pts = [tuple(p) for p in points]
     if pts[0] == pts[-1]:
         pts = pts[:-1]
     lats = [p[0] for p in pts]
     lons = [p[1] for p in pts]
-    coarse = F.col(q.lat_field).between(min(lats), max(lats)) & F.col(q.lon_field).between(
-        min(lons), max(lons)
+    dirs = np.array([direction(math.radians(la), math.radians(lo)) for la, lo in pts])
+    for p, q in zip(dirs, np.roll(dirs, -1, axis=0)):
+        n = np.cross(p, q)
+        h = math.hypot(n[0], n[1])
+        if h == 0.0:
+            continue  # the equator: no bulge
+        top = np.array([-n[0] * n[2], -n[1] * n[2], h * h]) / (h * np.linalg.norm(n))
+        for a in (top, -top):
+            if np.cross(p, a) @ n >= 0.0 and np.cross(a, q) @ n >= 0.0:
+                lats.append(math.degrees(math.asin(min(1.0, max(-1.0, a[2])))))
+    return min(lats), max(lats), min(lons), max(lons)
+
+
+def convex_polygon_condition(q) -> Column:
+    """GeoConvexPolygon.isWithin role: AND of per-edge plane dot
+    products (normals are query-time constants), AND'd with the
+    bounding box of :func:`_polygon_box` for parquet row-group pruning."""
+    ns = _edge_normals(q.points)
+    lat_lo, lat_hi, lon_lo, lon_hi = _polygon_box(q.points)
+    coarse = F.col(q.lat_field).between(lat_lo, lat_hi) & F.col(q.lon_field).between(
+        lon_lo, lon_hi
     )
     x, y, z = _dir_cols(q.lat_field, q.lon_field)
     cond = coarse
@@ -258,6 +281,8 @@ def circle_sql(q) -> str:
     """The DuckDB mirror of circle_condition (gate oracle)."""
     model = MODELS[q.model]
     cutoff = float(q.radius_m) / model.mean_radius
+    if cutoff >= math.pi:
+        return "TRUE"
     lat0, lon0 = math.radians(q.lat), math.radians(q.lon)
     px, py, pz = direction(lat0, lon0)
     band_lo, band_hi = math.degrees(lat0 - cutoff), math.degrees(lat0 + cutoff)
@@ -275,18 +300,14 @@ def circle_sql(q) -> str:
 def polygon_sql(q) -> str:
     """The DuckDB mirror of convex_polygon_condition (gate oracle)."""
     ns = _edge_normals(q.points)
-    pts = [tuple(p) for p in q.points]
-    if pts[0] == pts[-1]:
-        pts = pts[:-1]
-    lats = [p[0] for p in pts]
-    lons = [p[1] for p in pts]
+    lat_lo, lat_hi, lon_lo, lon_hi = _polygon_box(q.points)
     lat, lon = f"radians({q.lat_field})", f"radians({q.lon_field})"
     x = f"cos({lat})*cos({lon})"
     y = f"cos({lat})*sin({lon})"
     z = f"sin({lat})"
     parts = [
-        f"({q.lat_field} BETWEEN {min(lats)!r} AND {max(lats)!r})",
-        f"({q.lon_field} BETWEEN {min(lons)!r} AND {max(lons)!r})",
+        f"({q.lat_field} BETWEEN {lat_lo!r} AND {lat_hi!r})",
+        f"({q.lon_field} BETWEEN {lon_lo!r} AND {lon_hi!r})",
     ]
     for nx, ny, nz in ns:
         parts.append(f"(({x})*({nx!r}) + ({y})*({ny!r}) + ({z})*({nz!r}) >= -1e-12)")

@@ -38,6 +38,7 @@ POSITIONAL = [
     "q_sloppy3",
     "q_spannear3",
     "q_spannear_rep",
+    "q_sloppy_rep",
     "q_interval3",
     "q_atleast",
 ]

@@ -3,9 +3,10 @@
 These are the per-document algorithms the vectorized positional kernels
 in ``lucene_spark.search.kernels`` replaced: the minimal-interval
 walk (Intervals.ordered/unordered, NearSpansOrdered stretch-to-minimal),
-the 2-term mutual-nearest pair forms and the tight 2-slot sloppy
-matcher. The engine no longer calls them; the tests compare every flat
-producer plus its freq accumulator with them bit for bit.
+the 2-term mutual-nearest pair forms, the tight 2-slot sloppy matcher
+and the full sloppy matcher with Lucene's repeat groups. The engine no
+longer calls them; the tests compare every flat producer plus its freq
+accumulator with them bit for bit.
 """
 
 from __future__ import annotations
@@ -166,3 +167,197 @@ def _sloppy_freq2(a_raw, b_raw, slop: int) -> np.float32:
                 freq = np.float32(freq + one / (one + np.float32(ml)))
             if not crossed:
                 return freq
+
+
+def _lucene_sloppy_freq(
+    pos_lists: list, slop: int, terms: tuple | None = None, slot_terms: tuple | None = None
+) -> np.float32:
+    """Exact replication of the reference sloppy matcher semantics
+    (SloppyPhraseMatcher.java:162-205 nextMatch loop, PhrasePositions.java
+    position = pos - offset, PhraseQueue.java (position, offset, ord)
+    ordering; freq accumulation PhraseScorer.java:75-79 in float32,
+    sloppyWeight = 1/(1 + matchLength)), including the single-term
+    repeat-group handling (initComplex / advanceRepeatGroups /
+    advanceRpts collision resolution, SloppyPhraseMatcher.java:286-470:
+    two phrase slots carrying the SAME term may never sit on the same
+    token position — on collision the lesser of the two advances).
+
+    Algorithm: each phrase slot is an iterator over offset-adjusted
+    positions; a priority queue repeatedly advances the minimum; a match
+    is emitted each time the advanced iterator overtakes the queue
+    minimum captured at pop time while the running matchLength
+    (end - min position, minimized while the leader catches up) is
+    <= slop. Javadoc-documented behavior replicated: "a b"~2 on doc
+    "x a b a y" matches twice — distance 0 and distance 2 — freq =
+    1 + 1/3. Like the reference, not every combination is found
+    ("a b c b a" scores "a b c"~4 and "c b a"~4 differently —
+    SloppyPhraseMatcher.java:45-50 comment); this IS the reference
+    behavior, required for rank identity. ``terms`` (aligned with
+    pos_lists) drives repeat-group detection; None = all distinct.
+    The queue is a re-sorted list (equivalent to the reference's
+    pop/re-add heap repair after collision advances).
+
+    ``slot_terms`` (tuple of per-slot term tuples, MultiPhraseQuery
+    shape) enables the multi-term repeat handling (hasMultiTermRpts,
+    SloppyPhraseMatcher.java:435-453 init collide-loop + :562-585
+    connected-component groups over the bipartite slot/term graph):
+    slots that share ANY repeating term join one group; init resolves
+    collisions by advancing the lesser instead of the j-steps rule.
+    """
+    n = len(pos_lists)
+    plists = [np.asarray(p, dtype=np.int64) for p in pos_lists]
+    pos = [int(plists[i][0]) - i for i in range(n)]
+    nxt = [1] * n
+    end = max(pos)
+
+    grp_of = [-1] * n
+    groups: list[list[int]] = []
+    has_multi = False
+    if slot_terms is not None:
+        # repeatingTerms (SloppyPhraseMatcher.java:595-607): terms
+        # carried by >= 2 slots
+        cnt: dict = {}
+        for slot in slot_terms:
+            for t in set(slot):
+                cnt[t] = cnt.get(t, 0) + 1
+        rpt_terms = {t for t, c in cnt.items() if c >= 2}
+        if rpt_terms:
+            rpt_slots = [i for i, slot in enumerate(slot_terms) if rpt_terms & set(slot)]
+            has_multi = any(len(set(slot_terms[i])) > 1 for i in rpt_slots)
+            if not has_multi:
+                by_term: dict = {}
+                for i in rpt_slots:
+                    by_term.setdefault(next(iter(slot_terms[i])), []).append(i)
+                for idxs in by_term.values():
+                    if len(idxs) > 1:
+                        for i in idxs:
+                            grp_of[i] = len(groups)
+                        groups.append(idxs)
+            else:
+                # unionTermGroups (:648-663): union repeating-term sets
+                # sharing a slot until disjoint, then each repeating
+                # slot joins its terms' component
+                comps: list[set] = []
+                for i in rpt_slots:
+                    cur = set(slot_terms[i]) & rpt_terms
+                    rest = []
+                    for m in comps:
+                        if m & cur:
+                            cur |= m
+                        else:
+                            rest.append(m)
+                    comps = rest + [cur]
+                for m in comps:
+                    members = [i for i in rpt_slots if set(slot_terms[i]) & m]
+                    if len(members) > 1:
+                        for i in members:
+                            grp_of[i] = len(groups)
+                        groups.append(members)  # ascending offset order
+    elif terms is not None:
+        by_term = {}
+        for i, t in enumerate(terms):
+            by_term.setdefault(t, []).append(i)
+        for idxs in by_term.values():
+            if len(idxs) > 1:
+                for i in idxs:
+                    grp_of[i] = len(groups)
+                groups.append(idxs)  # members in phrase-offset order
+
+    def advance(i: int) -> bool:
+        nonlocal end
+        if nxt[i] < len(plists[i]):
+            pos[i] = int(plists[i][nxt[i]]) - i
+            nxt[i] += 1
+            if pos[i] > end:
+                end = pos[i]
+            return True
+        return False
+
+    def tp(i: int) -> int:  # actual token position (tpPos)
+        return pos[i] + i
+
+    # init repeats (advanceRepeatGroups, SloppyPhraseMatcher.java:435-467)
+    if has_multi:
+        # multi-term branch: some may not collide — resolve by
+        # advancing the lesser until the group is collision-free
+        for idxs in groups:
+            i = 0
+            while i < len(idxs):
+                incr = 1
+                pp = idxs[i]
+                while True:
+                    k = next((m for m in idxs if m != pp and tp(m) == tp(pp)), None)
+                    if k is None:
+                        break
+                    pp2 = pp if (pos[pp], pp) < (pos[k], k) else k
+                    if not advance(pp2):
+                        return np.float32(0.0)
+                    if idxs.index(pp2) < i:  # rptInd < i: recheck earlier pp
+                        incr = 0
+                        break
+                i += incr
+    else:
+        # single-term repeats: group member j starts j positions in, so
+        # the group begins collision-free ("simpler" branch)
+        for idxs in groups:
+            for j in range(1, len(idxs)):
+                for _ in range(j):
+                    if not advance(idxs[j]):
+                        return np.float32(0.0)
+    end = max(pos)
+
+    def advance_rpts(i: int) -> bool:
+        """Collision resolution after advancing pp i: while another
+        member of its repeat group sits on the same token position,
+        advance the lesser (by adjusted position, then offset)."""
+        p = i
+        while grp_of[p] >= 0:
+            k = next((m for m in groups[grp_of[p]] if m != p and tp(m) == tp(p)), None)
+            if k is None:
+                return True
+            p = p if (pos[p], p) < (pos[k], k) else k
+            if not advance(p):
+                return False
+        return True
+
+    queue = sorted(range(n), key=lambda i: (pos[i], i))
+    positioned = True
+    has_rpts = bool(groups)
+
+    def next_match() -> tuple[bool, int]:
+        nonlocal positioned, queue
+        if not positioned:
+            return False, 0
+        queue.sort(key=lambda i: (pos[i], i))
+        lead = queue.pop(0)
+        match_length = end - pos[lead]
+        next_top = pos[queue[0]]  # captured once per pop, like the reference
+        while advance(lead):
+            if has_rpts and not advance_rpts(lead):
+                break
+            if pos[lead] > next_top:
+                queue.append(lead)
+                if match_length <= slop:
+                    return True, match_length
+                queue.sort(key=lambda i: (pos[i], i))
+                lead = queue.pop(0)
+                next_top = pos[queue[0]]
+                match_length = end - pos[lead]
+            else:
+                ml2 = end - pos[lead]
+                if ml2 < match_length:
+                    match_length = ml2
+        positioned = False
+        return match_length <= slop, match_length
+
+    ok, ml = next_match()
+    if not ok:
+        return np.float32(0.0)
+    one = np.float32(1.0)
+    freq = one / (one + np.float32(ml))  # float32 accumulation, PhraseScorer.java:75-79
+    while True:
+        ok, ml = next_match()
+        if not ok:
+            break
+        freq = np.float32(freq + one / (one + np.float32(ml)))
+    return freq

@@ -111,7 +111,7 @@ class TestSloppyPhrases:
         # SloppyPhraseMatcher.java:40-44 Javadoc: for "a b"~2, the doc
         # "x a b a y" matches twice — "a b" (distance 0) and "a.. b"
         # backwards (distance 2) — so freq = 1/1 + 1/3
-        from lucene_spark.search.kernels import _lucene_sloppy_freq
+        from positional_oracle import _lucene_sloppy_freq
 
         a_positions, b_positions = [1, 3], [2]
         f = _lucene_sloppy_freq([np.array(a_positions), np.array(b_positions)], slop=2)
@@ -128,7 +128,7 @@ class TestSloppyPhrases:
         # SloppyPhraseMatcher.java:45-50: "a b c b a" scores "a b c"~4
         # and "c b a"~4 DIFFERENTLY (least-position propagation skips
         # some combinations) — replicate that asymmetry, don't "fix" it
-        from lucene_spark.search.kernels import _lucene_sloppy_freq
+        from positional_oracle import _lucene_sloppy_freq
 
         toks = ["a", "b", "c", "b", "a"]
         pos = {t: [i for i, x in enumerate(toks) if x == t] for t in "abc"}
@@ -140,7 +140,7 @@ class TestSloppyPhrases:
     def test_repeating_terms_exact_semantics(self):
         # repeat groups: the same term at two phrase offsets must bind
         # to two DISTINCT token positions (collision resolution)
-        from lucene_spark.search.kernels import _lucene_sloppy_freq
+        from positional_oracle import _lucene_sloppy_freq
 
         # doc "a b" cannot match "a b a": only one 'a' occurrence
         a, b = [0], [1]
@@ -253,9 +253,9 @@ class TestFreq2Equivalence:
 
         import numpy as np
 
-        from positional_oracle import _sloppy_freq2
+        from positional_oracle import _lucene_sloppy_freq, _sloppy_freq2
 
-        from lucene_spark.search.kernels import _lucene_sloppy_freq, _sloppy_freqs
+        from lucene_spark.search.kernels import _sloppy_freqs
 
         slots = (("x",), ("y",))
         for na in range(1, 4):
@@ -279,9 +279,9 @@ class TestFreq2Equivalence:
 
         import numpy as np
 
-        from positional_oracle import _sloppy_freq2
+        from positional_oracle import _lucene_sloppy_freq, _sloppy_freq2
 
-        from lucene_spark.search.kernels import _lucene_sloppy_freq, _sloppy_freqs
+        from lucene_spark.search.kernels import _sloppy_freqs
 
         rng = random.Random(7)
         for _ in range(3000):
@@ -308,7 +308,7 @@ class TestTwoTermChainClosedForm:
 
         import numpy as np
 
-        from lucene_spark.search.kernels import _lucene_sloppy_freq
+        from positional_oracle import _lucene_sloppy_freq
 
         def chain_freq(A, Badj, slop):
             a1, b1 = A[0], Badj[0]
@@ -389,14 +389,13 @@ class TestLockstepNSlotEquivalence:
     def test_sloppy_n_slots(self):
         import random
 
-        from lucene_spark.search.kernels import (
-            _lucene_sloppy_freq,
-            _sloppy_flat_freqs_n,
-            _sloppy_freqs,
-        )
+        from positional_oracle import _lucene_sloppy_freq
+
+        from lucene_spark.search.kernels import _sloppy_flat_freqs_n, _sloppy_freqs
 
         rng = random.Random(42)
         rng_rep = random.Random(45)
+        rng_multi = random.Random(47)
         for _ in range(300):
             n_slots, n_docs = rng.randint(2, 5), rng.randint(1, 20)
             slop = rng.randint(0, 6)
@@ -408,8 +407,7 @@ class TestLockstepNSlotEquivalence:
             assert np.array_equal(got, want), (docs, slop, got, want)
             got = _sloppy_freqs(keys, slop, n_docs, slots)
             assert np.array_equal(got, want), (docs, slop, got, want)
-            # repeated terms: the dispatcher's per-candidate repeat-group
-            # path over the flat keys split by candidate
+            # repeated terms: single-term repeat groups in the lockstep
             repeat = self._repeat_of(rng_rep, n_slots) or {n_slots - 1: 0}
             docs = self._make_docs(rng_rep, n_slots, n_docs, repeat=repeat)
             terms = tuple(f"t{repeat.get(j, j)}" for j in range(n_slots))
@@ -420,6 +418,40 @@ class TestLockstepNSlotEquivalence:
                 [_lucene_sloppy_freq(d, slop, terms=terms) for d in docs], dtype=np.float32
             )
             assert np.array_equal(got, want), (docs, terms, slop, got, want)
+            # MultiPhrase slots sharing a term (multi-term repeat groups):
+            # each slot reads the union of its terms' positions in one
+            # random token stream per doc
+            st, docs = self._multi_slot_docs(rng_multi, n_docs)
+            got = _sloppy_freqs(self._keys(docs, len(st)), slop, n_docs, st)
+            want = np.array(
+                [_lucene_sloppy_freq(d, slop, slot_terms=st) for d in docs], dtype=np.float32
+            )
+            assert np.array_equal(got, want), (docs, st, slop, got, want)
+
+    @staticmethod
+    def _multi_slot_docs(rng, n_docs):
+        """(slot_terms, docs): 2-5 slots of 1-2 terms from "abc", some
+        multi-term slot sharing a term with another slot; per doc, each
+        slot's sorted union positions in a random "abcx" token stream,
+        redrawn until every slot occurs."""
+        while True:
+            st = tuple(
+                tuple(rng.sample("abc", rng.randint(1, 2))) for _ in range(rng.randint(2, 5))
+            )
+            if any(
+                len(s) > 1 and any(set(s) & set(o) for o in st[:i] + st[i + 1 :])
+                for i, s in enumerate(st)
+            ):
+                break
+        docs = []
+        while len(docs) < n_docs:
+            toks = [rng.choice("abcx") for _ in range(rng.randint(1, 24))]
+            lists = [
+                np.array([p for p, t in enumerate(toks) if t in s], dtype=np.int64) for s in st
+            ]
+            if all(len(p) for p in lists):
+                docs.append(lists)
+        return st, docs
 
     def test_minimal_interval_kernels(self):
         import random
@@ -552,7 +584,7 @@ class TestSharedTermMachine:
                 ml = min(ml, end - p_lead)
 
     def test_golden_cases(self):
-        from lucene_spark.search.kernels import _lucene_sloppy_freq
+        from positional_oracle import _lucene_sloppy_freq
 
         st = (("a", "b"), ("b",))
         # doc "b x a b": a@2 b@{0,3} -> init displaces slot1 off the
@@ -569,7 +601,7 @@ class TestSharedTermMachine:
     def test_singleton_slots_equal_terms_path(self):
         import random
 
-        from lucene_spark.search.kernels import _lucene_sloppy_freq
+        from positional_oracle import _lucene_sloppy_freq
 
         rng = random.Random(5)
         for _ in range(800):
@@ -592,7 +624,7 @@ class TestSharedTermMachine:
     def test_fuzz_machine_equivalence(self):
         import random
 
-        from lucene_spark.search.kernels import _lucene_sloppy_freq
+        from positional_oracle import _lucene_sloppy_freq
 
         rng = random.Random(11)
         for _ in range(3000):

@@ -64,6 +64,16 @@ class TestPlanetModel:
         assert surface_distance_m(0.3, 0.4, 0.3, 0.4) == 0.0
 
 
+def _inside_ring(ring, lats, lons):
+    """Plane sidedness against every edge's great circle (numpy)."""
+    from lucene_spark.search.spatial3d import _edge_normals
+
+    ns = np.array(_edge_normals(ring))
+    la, lo = np.radians(lats), np.radians(lons)
+    d = np.stack([np.cos(la) * np.cos(lo), np.cos(la) * np.sin(lo), np.sin(la)], axis=1)
+    return ((d @ ns.T) >= -1e-12).all(axis=1)
+
+
 def _brute_circle(pdf, lat, lon, radius_m, model):
     m = MODELS[model]
     cutoff = radius_m / m.mean_radius
@@ -138,20 +148,58 @@ class TestMembership:
             )
         )
         got = {d for d, _ in s.search(q, k=10_000).hits}
-        # brute: same plane sidedness in numpy
-        from lucene_spark.search.spatial3d import _edge_normals
-
-        ns = np.array(_edge_normals(ring))
-        la = np.radians(pdf["lat"].to_numpy())
-        lo = np.radians(pdf["lon"].to_numpy())
-        d = np.stack([np.cos(la) * np.cos(lo), np.cos(la) * np.sin(lo), np.sin(la)], axis=1)
-        lats = pdf["lat"].to_numpy()
-        lons = pdf["lon"].to_numpy()
-        inside = ((d @ ns.T) >= -1e-12).all(axis=1) & (lats >= 0) & (lats <= 35) & (
-            lons >= 0
-        ) & (lons <= 40)
+        # brute: plane sidedness alone in numpy (no coarse box)
+        inside = _inside_ring(ring, pdf["lat"].to_numpy(), pdf["lon"].to_numpy())
         want = set(np.flatnonzero(inside).tolist())
         assert got == want and want
+
+    def test_convex_polygon_edge_bulge(self, spark):
+        """Great-circle edges bulge poleward: (36.5, 20) lies inside the
+        ring below although its latitude exceeds every vertex's. The
+        Spark condition and its DuckDB mirror must keep it, and agree
+        with plane sidedness on points just past the bulge."""
+        import duckdb
+        import pandas as pd
+
+        from lucene_spark.search.spatial3d import convex_polygon_condition, polygon_sql
+
+        ring = ((0.0, 0.0), (0.0, 40.0), (35.0, 40.0), (35.0, 0.0))
+        pts = pd.DataFrame(
+            [(36.5, 20.0), (36.9, 20.0), (35.5, 5.0), (35.5, 35.0), (20.0, 20.0), (-0.5, 20.0)],
+            columns=["lat", "lon"],
+        )
+        want = _inside_ring(ring, pts["lat"].to_numpy(), pts["lon"].to_numpy())
+        assert want[0] and not want[1]
+        q = A.Geo3DPolygonQuery("lat", "lon", ring)
+        df = spark.createDataFrame(pts.reset_index()).withColumn("hit", convex_polygon_condition(q))
+        got = [r["hit"] for r in df.orderBy("index").collect()]
+        assert got == want.tolist()
+        con = duckdb.connect()
+        con.register("pts", pts)
+        duck = con.execute(f"SELECT {polygon_sql(q)} AS hit FROM pts").fetchdf()["hit"]
+        assert duck.tolist() == want.tolist()
+
+    def test_circle_sql_covering_radius_matches_all(self):
+        """A cutoff of pi or more covers the whole sphere: circle_sql
+        matches every point like circle_condition does, antipode
+        included."""
+        import duckdb
+        import pandas as pd
+
+        from lucene_spark.search.spatial3d import circle_sql
+
+        pts = pd.DataFrame(
+            [(0.0, 0.0), (-10.0, -160.0), (10.0, 20.0), (89.0, 0.0), (-90.0, 0.0)],
+            columns=["lat", "lon"],
+        )
+        con = duckdb.connect()
+        con.register("pts", pts)
+        for model in ("sphere", "wgs84"):
+            for scale in (math.pi, 4.0):
+                r = scale * MODELS[model].mean_radius
+                q = A.Geo3DDistanceQuery("lat", "lon", 10.0, 20.0, r, model=model)
+                sql = f"SELECT count(*) FROM pts WHERE {circle_sql(q)}"
+                assert con.execute(sql).fetchone()[0] == len(pts), (model, scale)
 
     def test_polygon_agrees_with_2d_raycast_midlatitudes(self, geo_index):
         """A small convex ring away from poles/dateline: the 3D plane
