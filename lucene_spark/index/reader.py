@@ -115,7 +115,7 @@ class SearchIndex:
     def __init__(self, spark: SparkSession, index_dir: str):
         self.spark = spark
         self.index_dir = index_dir
-        # all a repeat query reads (rows, decoded, chunk, expand, docset,
+        # all a repeat query reads (rows, decoded, source, expand, docset,
         # docvals, tstats, layout; the Searcher's fieldcond and plan):
         # the index is immutable for a reader's lifetime (DirectoryReader)
         self.cache = ReaderCache()
@@ -365,12 +365,18 @@ class SearchIndex:
 
     # ---- term dictionary ---------------------------------------------------
 
-    def term_stats(self, terms: list[str]) -> dict[str, tuple[int, int]]:
+    def term_stats(
+        self, terms: list[str], rows_by_term: dict[str, list] | None = None
+    ) -> dict[str, tuple[int, int]]:
         """term → (df, ttf); point lookups pushed to the parquet scan.
         Aggregated across tiers (a tiered-writer index keeps one
         term_stats row per (term, tier) — per-segment term dicts).
         Cached per reader (absent terms cache a negative entry), so
-        repeat queries in distributed mode cost zero stats jobs."""
+        repeat queries cost zero stats jobs. Given the terms' collected
+        chunk rows (``collect_rows``, the driver path), a miss sums their
+        df / ttf columns instead of running a job: the term dictionary
+        holds those sums (CheckIndex verifies it), so the driver and
+        distributed paths read one set of term statistics."""
         if not terms:
             return {}
         # snapshot THIS call's answers before storing the fetched ones:
@@ -380,15 +386,21 @@ class SearchIndex:
         got = self.cache.get_many("tstats", terms)
         missing = [t for t in terms if t not in got]
         if missing:
-            rows = (
-                self.term_stats_df.filter(F.col("term").isin(missing))
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
-                .collect()
-            )
             fetched: dict[str, tuple | None] = {t: None for t in missing}
-            for r in rows:
-                fetched[r["term"]] = (int(r["df"]), int(r["ttf"]))
+            if rows_by_term is not None:
+                for t in missing:
+                    rs = rows_by_term.get(t)
+                    if rs:
+                        fetched[t] = (sum(int(r["df"]) for r in rs), sum(int(r["ttf"]) for r in rs))
+            else:
+                rows = (
+                    self.term_stats_df.filter(F.col("term").isin(missing))
+                    .groupBy("term")
+                    .agg(F.sum("df").alias("df"), F.sum("ttf").alias("ttf"))
+                    .collect()
+                )
+                for r in rows:
+                    fetched[r["term"]] = (int(r["df"]), int(r["ttf"]))
             for t, v in fetched.items():
                 got[t] = self.cache.put("tstats", t, v)
         return {t: got[t] for t in terms if got[t] is not None}
@@ -656,23 +668,24 @@ class SearchIndex:
     def collect_rows(self, terms: list[str]) -> dict[str, list]:
         """ONE point-read job for all query terms: term → chunk rows in
         doc-range order. Serves both the stats need (df/ttf are columns
-        of every chunk row) and the decode need — the driver query path
-        is a single Spark job (SURVEY §3.1 Spark design: shuffle-free)."""
+        of every chunk row, see ``term_stats``) and the decode need — the
+        driver query path is a single Spark job with no shuffle and no
+        sort (SURVEY §3.1 Spark design: shuffle-free)."""
         if not terms:
             return {}
         got = self.cache.get_many("rows", terms)
         missing = [t for t in terms if t not in got]
         if missing:
-            # tiered indexes: tiers cover increasing doc-id ranges, so
-            # (chunk_id, tier) order = global doc order within a term
-            order_cols = ["term", "chunk_id"] + (
-                ["tier"] if "tier" in self.postings.columns else []
-            )
-            rows = self.postings_rows(missing).orderBy(*order_cols).collect()
+            # collected unsorted (a Spark sort adds a sampling job and a
+            # shuffle) and sorted here: tiered indexes' tiers cover
+            # increasing doc-id ranges, so (chunk_id, tier) order =
+            # global doc order within a term
+            tiered = "tier" in self.postings.columns
             fetched: dict[str, list] = {t: [] for t in missing}
-            for r in rows:
+            for r in self.postings_rows(missing).collect():
                 fetched[r["term"]].append(r)
             for t, rs in fetched.items():
+                rs.sort(key=lambda r: (r["chunk_id"], r["tier"]) if tiered else r["chunk_id"])
                 got[t] = self.cache.put("rows", t, rs)  # negative results cached too ([])
         return {t: got[t] for t in terms if got[t]}
 

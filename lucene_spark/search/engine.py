@@ -647,23 +647,21 @@ class Searcher:
     def prepare(self, query: str | A.Query, collect_rows: bool = False, lazy_docsets: bool = False):
         """Parse → rewrite → Weight creation. With ``collect_rows``
         (driver mode) the query's posting rows are point-read in ONE
-        Spark job and df/ttf derive from their columns — no separate
-        term_stats lookup; the whole driver query path is one job."""
+        Spark job (no shuffle, no sort), and a term first seen by this
+        reader takes its df/ttf from their columns — no separate
+        term_stats job; a first-seen driver query is one job, a repeat
+        none. Either way df/ttf come from the reader's term_stats cache."""
         q = A.rewrite(self._expand_multiterm(self._analyze(query), lazy_docsets))
         terms = sorted(A.extract_terms(q))
         stats = self.index.stats
         rows_by_term = None
-        term_ttf = None
         if collect_rows:
             rows_by_term = self.index.collect_rows(terms)
-            term_df = {t: sum(r["df"] for r in rs) for t, rs in rows_by_term.items()}
-            if self.sim.needs_ttf:
-                term_ttf = {t: sum(int(r["ttf"]) for r in rs) for t, rs in rows_by_term.items()}
+            tstats = self.index.term_stats(terms, rows_by_term)
         else:
             tstats = self.index.term_stats(terms)
-            term_df = {t: df for t, (df, _) in tstats.items()}
-            if self.sim.needs_ttf:
-                term_ttf = {t: ttf for t, (_, ttf) in tstats.items()}
+        term_df = {t: df for t, (df, _) in tstats.items()}
+        term_ttf = {t: ttf for t, (_, ttf) in tstats.items()} if self.sim.needs_ttf else None
         sbf = self._stats_by_field()
         spec = compile_query(q, stats, term_df, stats_by_field=sbf, sim=self.sim, term_ttf=term_ttf)
         return q, spec, stats, rows_by_term
@@ -729,7 +727,8 @@ class Searcher:
         if rows_by_term is None:
             rows_by_term = self.index.collect_rows(terms)
         terms = [t for t in dict.fromkeys(terms) if t in rows_by_term]
-        # a term's block table is built from its chunk rows once per reader
+        # a term's block table and decoded store are built from its
+        # chunk rows once per reader
         by_term = self.index.cache.get_many("source", terms)
         for t in terms:
             if t not in by_term:
@@ -743,14 +742,7 @@ class Searcher:
             # PerFieldSimilarityWrapper: block-max bounds and scoring
             # use the term's field's model (for_field is identity for
             # plain similarities)
-            PostingSource(
-                ts.weight,
-                _c(ts),
-                by_term[ts.term],
-                sim=self.sim.for_field(ts.field),
-                term=ts.term,
-                reader_cache=self.index.cache,
-            )
+            PostingSource(ts.weight, _c(ts), by_term[ts.term], sim=self.sim.for_field(ts.field))
             for ts in term_specs
             if ts.term in by_term
         ]

@@ -15,18 +15,23 @@ as an interval sweep:
    elementary intervals; each interval's upper bound = Σ (per-term
    block-max of the covering block),
 3. intervals are taken in descending upper-bound order, a batch at a
-   time. Every elementary interval lies inside exactly one block of
-   each term, so a batch is scored in one pass: each term's covering
-   blocks are decoded once per reader (the reader cache's "block"
-   entries) and scored once per query, the docs whose interval is in
-   the batch are kept, and their scores are summed in float64 term by
-   term, then cast to float32 — the exhaustive kernel's accumulation.
-   Each doc lies in exactly one interval, so it is scored exactly once.
-   Once the top-k heap is full (and the totalHitsThreshold — default
-   1000, IndexSearcher.java:104 — has been crossed), every interval
-   whose upper bound is below minCompetitiveScore = kth score
+   time, against one decoded store per term and reader (``TermBlocks``,
+   the reader cache's "source" entry) that fills block by block. Every
+   elementary interval lies inside exactly one block of each term, so
+   a batch is scored in one pass: each term's covering blocks are
+   decoded into its store unless they are there already, read back
+   with one ragged gather, the docs whose interval is in the batch are
+   scored, and their scores are summed in float64 term by term, then
+   cast to float32 — the exhaustive kernel's accumulation. Each doc
+   lies in exactly one interval, so it is scored exactly once. Once
+   the top-k heap is full (and the totalHitsThreshold — default 1000,
+   IndexSearcher.java:104 — has been crossed), every interval whose
+   upper bound is below minCompetitiveScore = kth score
    (TopScoreDocCollector.java:335-355) is pruned: the blocks only it
-   needs are never bit-unpacked.
+   needs are never bit-unpacked. The batches, and so the pruning, hits
+   and ``info``, do not depend on what the stores already held: a
+   repeat query on an unchanged reader scores the same batches,
+   decodes nothing and reports the same ``info``.
 
 Like the reference (WANDScorer.java:88-118 rounds max scores UP),
 pruning is by true upper bounds, so the returned top-k is EXACTLY the
@@ -50,20 +55,33 @@ BATCH = 8  # intervals in the first batch; each later batch doubles
 @dataclass
 class TermBlocks:
     """One term's posting chunks as the reader holds them, in ascending
-    doc-range order, plus the global block table over all its chunks:
-    built once per reader from the term's chunk rows (reader cache
-    "source" entries) and shared by every query on the term."""
+    doc-range order: the global block table over all its chunks, its
+    competitive impacts and ONE decoded store — flat ``docs`` / ``tfs``
+    / ``norms`` arrays in global block order (block b's postings sit at
+    ``block_start[b]:block_start[b + 1]``, offsets taken from the
+    chunks' df) with a per-block ``decoded`` mask. Built once per
+    reader from the term's chunk rows (reader cache "source" entries)
+    and shared by every query on the term. The store is allocated at
+    its full decoded size — ``np.empty``, whose pages cost no memory
+    until a block is written — so the cache charges it at that size
+    when the entry is put. ``fill`` writes a block's arrays before it
+    sets the block's mask bit, so a concurrent query reads only
+    finished blocks (two fills of one block write the same values)."""
 
     blobs: list  # encoded postings per chunk
     chunk_last: list  # per chunk: exact last doc of each block (incl. tail)
-    chunk_df: np.ndarray
     block_end: np.ndarray  # per global block: its last doc
     block_chunk: np.ndarray  # per global block: owning chunk
     block_local: np.ndarray  # per global block: block index inside its chunk
+    block_start: np.ndarray  # per global block, plus the end: offset into the store
     imp_block: np.ndarray  # per competitive impact: its global block
     imp_freq: np.ndarray
     imp_norm: np.ndarray
     df: int
+    docs: np.ndarray  # the decoded store, valid where ``decoded``
+    tfs: np.ndarray
+    norms: np.ndarray
+    decoded: np.ndarray  # per global block: its postings are in the store
 
     @classmethod
     def from_rows(cls, rows) -> "TermBlocks":
@@ -72,45 +90,77 @@ class TermBlocks:
         first = np.concatenate([[0], np.cumsum(n_blocks)[:-1]]).astype(np.int64)
         chunk_last = [np.asarray(r["block_last"], dtype=np.int64)[:n] for r, n in zip(rows, n_blocks)]
         block_chunk = np.repeat(np.arange(len(rows), dtype=np.int64), n_blocks)
+        block_local = np.arange(len(block_chunk), dtype=np.int64) - first[block_chunk]
+        # every block holds BLOCK_SIZE postings but a chunk's tail
+        sizes = np.minimum(BLOCK_SIZE, chunk_df[block_chunk] - block_local * BLOCK_SIZE)
         imp_chunk = [np.asarray(r["imp_block"], dtype=np.int64) + f for r, f in zip(rows, first)]
+        df = int(chunk_df.sum())
         return cls(
             blobs=[r["blob"] for r in rows],
             chunk_last=chunk_last,
-            chunk_df=chunk_df,
             block_end=np.concatenate(chunk_last),
             block_chunk=block_chunk,
-            block_local=np.arange(len(block_chunk), dtype=np.int64) - first[block_chunk],
+            block_local=block_local,
+            block_start=np.concatenate([[0], np.cumsum(sizes)]).astype(np.int64),
             imp_block=np.concatenate(imp_chunk),
             imp_freq=np.concatenate([np.asarray(r["imp_freq"], dtype=np.int64) for r in rows]),
             imp_norm=np.concatenate([np.asarray(r["imp_norm"], dtype=np.int64) for r in rows]),
-            df=int(chunk_df.sum()),
+            df=df,
+            docs=np.empty(df, dtype=np.int64),
+            tfs=np.empty(df, dtype=np.int64),
+            norms=np.empty(df, dtype=np.int64),
+            decoded=np.zeros(len(block_chunk), dtype=bool),
         )
 
-    def block_size(self, chunk: int, local: int) -> int:
-        df = int(self.chunk_df[chunk])
-        n_full = df // BLOCK_SIZE
-        return BLOCK_SIZE if local < n_full else df - n_full * BLOCK_SIZE
+    def positions(self, blocks: np.ndarray) -> np.ndarray:
+        """Store offsets of every posting of the given global blocks, in
+        the given block order: one ragged gather index."""
+        starts = self.block_start[blocks]
+        lens = self.block_start[blocks + 1] - starts
+        ends = np.cumsum(lens)
+        return np.arange(ends[-1] if len(ends) else 0) + np.repeat(starts - ends + lens, lens)
+
+    def fill(self, blocks: np.ndarray) -> None:
+        """Decode the given ascending global blocks that are not in the
+        store yet, with one decode_blocks call per chunk — decode_blocks
+        walks the blob's block headers once per CALL."""
+        todo = blocks[~self.decoded[blocks]]
+        if not len(todo):
+            return
+        cuts = np.flatnonzero(np.diff(self.block_chunk[todo])) + 1
+        for part in np.split(todo, cuts):
+            ci = int(self.block_chunk[part[0]])
+            d, t, nm = decode_blocks(self.blobs[ci], self.block_local[part].tolist(), self.chunk_last[ci])
+            if part[-1] - part[0] + 1 == len(part):  # a run of blocks: one slice
+                at = slice(self.block_start[part[0]], self.block_start[part[-1] + 1])
+            else:
+                at = self.positions(part)
+            self.docs[at], self.tfs[at], self.norms[at] = d, t, nm
+        self.decoded[todo] = True
+
+    def arrays(self, blocks: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+        """(docs, tfs, norms) of the given ascending global blocks
+        (np.unique output), concatenated in ascending doc order and
+        UNSCORED (the conjunction scores after the intersection): one
+        gather from the store, decoding the blocks not in it first, so
+        a repeat conjunction decodes nothing."""
+        self.fill(blocks)
+        if len(blocks) == len(self.decoded):  # every block: the store itself
+            return self.docs, self.tfs, self.norms
+        at = self.positions(blocks)
+        return self.docs[at], self.tfs[at], self.norms[at]
 
 
 class PostingSource:
     """One query term over its TermBlocks: per-block score upper bounds
-    from the impacts, selective block decode on demand."""
+    from the impacts, and its postings read from (and decoded on demand
+    into) the term's reader-cached decoded store."""
 
-    def __init__(
-        self,
-        weight,
-        cache: np.ndarray,
-        blocks: TermBlocks,
-        sim=None,
-        term: str | None = None,
-        reader_cache=None,
-    ):
+    def __init__(self, weight, cache: np.ndarray, blocks: TermBlocks, sim=None):
         """``sim`` is the pluggable Similarity (BM25 default); every
         model is monotone in freq and anti-monotone in length, so block
         maxima over the competitive-impact Pareto pairs stay true upper
-        bounds. Decoded blocks are shared across queries in
-        ``reader_cache`` keyed by ``term``: its chunk rows, and so its
-        block numbering, are fixed for the reader's lifetime."""
+        bounds."""
         self.sim = sim if sim is not None else BM25_SIM
         self.weight = weight
         self.cache = cache
@@ -130,95 +180,70 @@ class PostingSource:
                 norms = np.full(len(norms), best, dtype=np.int64)
             s = self.sim.score(self.weight, blocks.imp_freq, norms, cache)
             np.maximum.at(self.block_ub, blocks.imp_block, s)
-        self.term = term
-        self.reader_cache = reader_cache if term is not None else None
-        self._scored: dict[int, tuple[np.ndarray, np.ndarray]] = {}  # this query's scored blocks
-
-    def cached_blocks(self, blocks: list[int]) -> list[tuple]:
-        """(docs, tfs, norms) of each given ascending global block. The
-        blocks are read from the reader cache ("block" entries, keyed
-        (term, chunk, block)) in ONE lookup; the missing ones are
-        decoded with one decode_blocks call per chunk — decode_blocks
-        walks the blob's block headers once per CALL — and put."""
-        tb = self.blocks
-        owners = zip(tb.block_chunk[blocks].tolist(), tb.block_local[blocks].tolist())
-        keys = [(self.term, ci, lb) for ci, lb in owners]
-        rc = self.reader_cache
-        got = rc.get_many("block", keys) if rc is not None else {}
-        need: dict[int, list[int]] = {}
-        for key in keys:
-            if key not in got:
-                need.setdefault(key[1], []).append(key[2])
-        for ci, lbs in need.items():  # keys ascend, so each lbs does too
-            d, t, nm = decode_blocks(tb.blobs[ci], lbs, tb.chunk_last[ci])
-            off = 0
-            for lb in lbs:
-                size = tb.block_size(ci, lb)
-                part = (d[off : off + size], t[off : off + size], nm[off : off + size])
-                if rc is not None:
-                    rc.put("block", (self.term, ci, lb), part)
-                got[(self.term, ci, lb)] = part
-                off += size
-        return [got[key] for key in keys]
-
-    def scored_blocks(self, block_indices: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(docs, scores) of the given ascending global blocks,
-        concatenated. Each block is scored once per query."""
-        new = [b for b in block_indices.tolist() if b not in self._scored]
-        if new:
-            parts = self.cached_blocks(new)
-            scores = self.score_at(
-                np.concatenate([p[1] for p in parts]), np.concatenate([p[2] for p in parts])
-            )
-            off = 0
-            for b, p in zip(new, parts):
-                self._scored[b] = (p[0], scores[off : off + len(p[0])])
-                off += len(p[0])
-        parts = [self._scored[b] for b in block_indices.tolist()]
-        return np.concatenate([p[0] for p in parts]), np.concatenate([p[1] for p in parts])
-
-    def decoded_blocks_arrays(
-        self, block_indices: np.ndarray
-    ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        """(docs, tfs, norms) of the given blocks, concatenated in
-        ascending doc order, UNSCORED (scoring belongs AFTER the
-        intersection, not on every decoded doc). A chunk whose every
-        block is asked for is one reader-cache "chunk" entry, decoded
-        and assembled whole: the conjunction's dense hot side touches
-        most of a 62k-block term, and per-block slicing/caching there
-        dominated the walk (measured ~0.8 s/query on the 8M-doc skew
-        drill). The blocks of the other chunks come from
-        ``cached_blocks``, so a repeat conjunction that skips blocks
-        decodes nothing either. ``block_indices`` must be ascending
-        (np.unique output)."""
-        if not len(block_indices):
-            e = np.empty(0, dtype=np.int64)
-            return e, e, np.empty(0, dtype=np.int64)
-        tb = self.blocks
-        need: dict[int, list[int]] = {}
-        for b, ci in zip(block_indices.tolist(), tb.block_chunk[block_indices].tolist()):
-            need.setdefault(ci, []).append(b)
-        n_blocks = (tb.chunk_df + BLOCK_SIZE - 1) // BLOCK_SIZE
-        full = {ci for ci, bs in need.items() if len(bs) == n_blocks[ci]}
-        rc = self.reader_cache
-        cached = rc.get_many("chunk", [(self.term, ci) for ci in full]) if rc is not None else {}
-        partial = [b for ci, bs in need.items() if ci not in full for b in bs]
-        partial = iter(self.cached_blocks(partial))
-        parts = []
-        for ci, bs in need.items():  # ascending blocks: ascending chunks
-            if ci not in full:
-                parts.extend(next(partial) for _ in bs)
-                continue
-            got = cached.get((self.term, ci))
-            if got is None:
-                got = decode_blocks(tb.blobs[ci], list(range(len(bs))), tb.chunk_last[ci])
-                if rc is not None:
-                    rc.put("chunk", (self.term, ci), got)
-            parts.append(got)
-        return tuple(np.concatenate([p[i] for p in parts]) for i in range(3))
 
     def score_at(self, tfs: np.ndarray, norms: np.ndarray) -> np.ndarray:
         return self.sim.score(self.weight, tfs, norms, self.cache)
+
+
+def _score_intervals(sources, cover, all_ends, intervals, msm, allowed, deleted):
+    """(docs, float32 scores) of the hits in the given elementary
+    intervals, in one pass: every interval lies inside one block of each
+    term, so each term's covering blocks are decoded into its store
+    unless they are there already, then read with one ragged gather,
+    and only the docs whose interval is given are scored. The scores
+    are summed in float64 term by term in source order, then cast to
+    float32 — the exhaustive kernel's accumulation."""
+    in_iv = np.zeros(len(all_ends), dtype=bool)
+    in_iv[intervals] = True
+    parts = []
+    for s, blk in zip(sources, cover):
+        tb = s.blocks
+        used = np.zeros(len(tb.decoded) + 1, dtype=bool)
+        used[blk[intervals]] = True  # -1 (no covering block) marks the spare last slot
+        need = np.flatnonzero(used[:-1])
+        if not len(need):
+            continue
+        tb.fill(need)
+        at = tb.positions(need)
+        d = tb.docs[at]
+        if len(sources) > 1:  # one source: its blocks are the intervals
+            keep = in_iv[np.searchsorted(all_ends, d)]
+            at, d = at[keep], d[keep]
+        parts.append((d, s.score_at(tb.tfs[at], tb.norms[at])))
+    if not sum(len(d) for d, _ in parts):
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32)
+    if len(parts) == 1:  # one source: its float32 scores are the sums
+        docs, scores = parts[0]
+    else:
+        # each part ascends, so the stable sort merges sorted runs and
+        # keeps a doc's parts in source order; bincount adds in element
+        # order from 0.0 — the exhaustive kernel's accumulation
+        cat = np.concatenate([d for d, _ in parts])
+        by_doc = np.argsort(cat, kind="stable")
+        cat = cat[by_doc]
+        first = np.empty(len(cat), dtype=bool)
+        first[0] = True
+        np.not_equal(cat[1:], cat[:-1], out=first[1:])
+        group = np.cumsum(first) - 1
+        weights = np.concatenate([sc for _, sc in parts]).astype(np.float64)[by_doc]
+        docs = cat[first]
+        scores = np.bincount(group, weights=weights).astype(np.float32)
+        if msm > 1:
+            enough = np.bincount(group) >= msm
+            docs, scores = docs[enough], scores[enough]
+    if allowed is not None and len(docs):
+        # FILTER-clause doc-set mask (sorted): the filtered WAND of
+        # Boolean2ScorerSupplier's req(filter)+opt(TOP_SCORES) branch —
+        # pruning bounds stay true upper bounds because a filter only
+        # removes hits
+        idx = np.minimum(np.searchsorted(allowed, docs), max(len(allowed) - 1, 0))
+        inset = allowed[idx] == docs if len(allowed) else np.zeros(len(docs), dtype=bool)
+        docs, scores = docs[inset], scores[inset]
+    if deleted is not None and len(docs):
+        # liveDocs mask (scorer.score(collector, liveDocs) role)
+        live = ~np.isin(docs, deleted, assume_unique=False)
+        docs, scores = docs[live], scores[live]
+    return docs, scores
 
 
 def wand_top_k(
@@ -237,7 +262,8 @@ def wand_top_k(
     its blocks are never decoded — and scored docs matching fewer than
     msm terms are discarded. Returns (hits, info); ``hits_seen`` counts
     every hit of the scored intervals, so it is the exact total when no
-    interval was pruned."""
+    interval was pruned. Hits, scores and ``info`` depend on the query
+    alone, not on which blocks the stores held before it ran."""
     msm = max(1, msm)
     # ---- elementary intervals from all block boundaries: interval j
     # covers (all_ends[j-1], all_ends[j]], inside one block of every
@@ -254,21 +280,20 @@ def wand_top_k(
         ub_sum[inside] += s.block_ub[b[inside]]
         n_cover += inside
         cover.append(b)
-    if msm > 1:
-        # coverage pruning: < msm covering sources → no possible hit
-        ub_sum = np.where(n_cover >= msm, ub_sum, -np.inf)
     order = np.argsort(-ub_sum, kind="stable")
     if msm > 1:
-        order = order[ub_sum[order] > -np.inf]
+        # coverage pruning: < msm covering sources → no possible hit
+        order = order[n_cover[order] >= msm]
     # a doc's score is float32(its float64 sum), so float32(bound) bounds
     # it; the negated bounds ascend along ``order``
     neg_bound = -ub_sum[order].astype(np.float32)
+    # ---- the bound-ordered sweep: intervals in descending upper-bound
+    # order, a batch at a time, each batch scored in one pass that reads
+    # its blocks from the stores (decoding only those not there yet)
     heap_docs = np.empty(0, dtype=np.int64)
     heap_scores = np.empty(0, dtype=np.float32)
     hits = 0
-    pruned_intervals = 0
     min_competitive = None
-    in_batch = np.zeros(n_iv, dtype=bool)
     i, n, size = 0, len(order), BATCH
     timed_out = False
     while i < n:
@@ -278,7 +303,6 @@ def wand_top_k(
         # result is a correct (possibly incomplete) top-k
         if deadline is not None and time.monotonic() > deadline:
             timed_out = True
-            pruned_intervals = n - i
             break
         end = min(n, i + size)
         size *= 2
@@ -287,57 +311,16 @@ def wand_top_k(
             # interval after it is pruned
             cut = i + int(np.searchsorted(neg_bound[i:end], -min_competitive, side="right"))
             if cut < end:
-                pruned_intervals = n - cut
                 end = n = cut
         if end == i:
             break
-        batch = order[i:end]
+        docs, scores = _score_intervals(sources, cover, all_ends, order[i:end], msm, allowed, deleted)
         i = end
-        in_batch[batch] = True
-        parts = []
-        for s, blk in zip(sources, cover):
-            need = np.unique(blk[batch])
-            need = need[need >= 0]
-            if len(need):
-                d, sc = s.scored_blocks(need)
-                keep = in_batch[np.searchsorted(all_ends, d)]
-                parts.append((d[keep], sc[keep]))
-        in_batch[batch] = False
-        if len(parts) == 1:  # one source: its float32 scores are the sums
-            docs, scores = parts[0]
-            counts = np.ones(len(docs), dtype=np.int64)
-        else:
-            docs = np.unique(np.concatenate([d for d, _ in parts]))
-            acc = np.zeros(len(docs), dtype=np.float64)
-            counts = np.zeros(len(docs), dtype=np.int64)
-            for d, sc in parts:  # source order: the exhaustive accumulation
-                idx = np.searchsorted(docs, d)
-                acc[idx] += sc.astype(np.float64)
-                counts[idx] += 1
-            scores = acc.astype(np.float32)
-        if msm > 1 and len(docs):
-            enough = counts >= msm
-            docs, scores = docs[enough], scores[enough]
-        if allowed is not None and len(docs):
-            # FILTER-clause doc-set mask (sorted): the filtered WAND of
-            # Boolean2ScorerSupplier's req(filter)+opt(TOP_SCORES)
-            # branch — pruning bounds stay true upper bounds because a
-            # filter only removes hits
-            idx = np.minimum(np.searchsorted(allowed, docs), max(len(allowed) - 1, 0))
-            inset = allowed[idx] == docs if len(allowed) else np.zeros(len(docs), dtype=bool)
-            docs, scores = docs[inset], scores[inset]
-        if deleted is not None and len(docs):
-            # liveDocs mask (scorer.score(collector, liveDocs) role)
-            live = ~np.isin(docs, deleted, assume_unique=False)
-            docs, scores = docs[live], scores[live]
         if not len(docs):
             continue
         hits += len(docs)
         heap_docs = np.concatenate([heap_docs, docs])
         heap_scores = np.concatenate([heap_scores, scores])
-        if len(heap_docs) > 4 * k:
-            top = np.lexsort((heap_docs, -heap_scores))[:k]
-            heap_docs, heap_scores = heap_docs[top], heap_scores[top]
         if len(heap_docs) >= k:
             # the reference prunes at Math.nextUp(kth)
             # (TopScoreDocCollector.java:335-355) — sound there because
@@ -348,10 +331,22 @@ def wand_top_k(
             # the tie-break — prune strictly below kth to stay exactly
             # ≡ exhaustive.
             min_competitive = np.partition(heap_scores, len(heap_scores) - k)[len(heap_scores) - k]
+            if len(heap_docs) > 4 * k:
+                # a doc below the kth score can never enter the top k;
+                # the ties at kth all stay for the final doc-asc break
+                top = heap_scores >= min_competitive
+                heap_docs, heap_scores = heap_docs[top], heap_scores[top]
+    # every block covering a scored interval was read (decoded by this
+    # query or an earlier one)
+    read = 0
+    for s, blk in zip(sources, cover):
+        seen = np.zeros(len(s.block_end) + 1, dtype=bool)
+        seen[blk[order[:i]]] = True  # -1 (no covering block) marks the spare last slot
+        read += int(np.count_nonzero(seen[:-1]))
     info = {
-        "pruned_intervals": int(pruned_intervals),
+        "pruned_intervals": int(len(order) - i),
         "total_intervals": int(n_iv),
-        "decoded_blocks": int(sum(len(s._scored) for s in sources)),
+        "decoded_blocks": int(read),
         "total_blocks": int(sum(len(s.block_end) for s in sources)),
         "hits_seen": int(hits),
         "timed_out": timed_out,
@@ -384,7 +379,7 @@ def conjunction_top_k(
     just the blocks containing a candidate, the same skip-data bound."""
     sources = sorted(sources, key=lambda s: s.blocks.df)
     lead = sources[0]
-    cand, lead_tf, lead_nm = lead.decoded_blocks_arrays(np.arange(len(lead.block_end)))
+    cand, lead_tf, lead_nm = lead.blocks.arrays(np.arange(len(lead.block_end)))
     acc = lead.score_at(lead_tf, lead_nm).astype(np.float64)
     blocks_decoded = len(lead.block_end)
     blocks_skipped = 0
@@ -409,7 +404,7 @@ def conjunction_top_k(
         if not len(need):
             cand = cand[:0]
             break
-        d, tf, nm = s.decoded_blocks_arrays(need)
+        d, tf, nm = s.blocks.arrays(need)
         idx = np.searchsorted(d, cand)
         idxc = np.minimum(idx, max(len(d) - 1, 0))
         m = (idx < len(d)) & (d[idxc] == cand) if len(d) else np.zeros(len(cand), dtype=bool)
@@ -433,7 +428,7 @@ def conjunction_top_k(
             continue
         blocks_decoded += len(need)
         blocks_skipped += len(s.block_end) - len(need)
-        d, tf, nm = s.decoded_blocks_arrays(need)
+        d, tf, nm = s.blocks.arrays(need)
         idx = np.searchsorted(d, cand)
         idxc = np.minimum(idx, max(len(d) - 1, 0))
         m = (idx < len(d)) & (d[idxc] == cand) if len(d) else np.zeros(len(cand), dtype=bool)

@@ -2,7 +2,8 @@
 hot paths and verify scale-critical plan properties hold:
 
 1. postings point-read: term filter PUSHED to the parquet scan
-   (PushedFilters: [In(term, ...)]), ReadSchema pruned to needed cols
+   (PushedFilters: [In(term, ...)]), ReadSchema pruned to needed cols;
+   the driver's point read has no Exchange and no Sort (one job)
 2. term-dictionary prefix scan: StartsWith pushed
 3. norms doc-range read: range filter pushed (min/max row-group prune)
 4. index build: inversion is a partial-agg (map-side combine) hash
@@ -82,6 +83,13 @@ def main() -> None:
     check("postings term filter pushed to scan", plan, r"PushedFilters: \[.*[Ii]n\(term")
     check_absent("postings column pruning (no pos_blob)", plan, r"ReadSchema:.*pos_blob")
     sections.append(("Postings point read (query hot path)", plan))
+
+    # 1b. the driver's point read exactly as SearchIndex.collect_rows
+    # collects it: one job — no Exchange and no Sort (rows are ordered on
+    # the driver)
+    plan = _capture(index.postings_rows(["table", "merge"]))
+    check_absent("driver point read has no Exchange and no Sort", plan, r"Exchange|\bSort\b")
+    sections.append(("Driver point read (collect_rows, one job)", plan))
 
     # 2. term dictionary prefix scan
     t = index.term_stats_df.filter(F.col("term").startswith("sc")).select("term", "df")

@@ -156,9 +156,11 @@ class TestReaderCacheOnIndex:
         assert after["rows"]["hits"] > 0 and after["rows"]["bytes"] > 0
 
     def test_repeat_wand_query_decodes_nothing(self, spark, index_dir, monkeypatch):
-        """A WAND disjunction's decoded blocks are reader-cached: the
-        second run reads every block it scores from the cache (hits, no
-        misses) and makes no decode_blocks call."""
+        """A WAND disjunction's decoded blocks live in its terms'
+        reader-cached stores ("source" entries): the second run finds
+        every store in the cache (one hit per term, no misses) with the
+        blocks it scores already decoded, and makes no decode_blocks
+        call."""
         from lucene_spark.codec import forutil
         from lucene_spark.index.reader import SearchIndex
         from lucene_spark.search import wand
@@ -175,12 +177,16 @@ class TestReaderCacheOnIndex:
             return forutil.decode_blocks(*args, **kwargs)
 
         monkeypatch.setattr(wand, "decode_blocks", counted)
-        before = idx.cache.stats()["block"]
+        stores = [idx.cache.get("source", t) for t in ("class", "if", "import", "return")]
+        decoded = [tb.decoded.copy() for tb in stores]
+        assert sum(int(d.sum()) for d in decoded) >= first.info["decoded_blocks"]
+        before = idx.cache.stats()["source"]
         again = s.search(q, k=10)
-        after = idx.cache.stats()["block"]
+        after = idx.cache.stats()["source"]
         assert (again.hits, again.info) == (first.hits, first.info)
         assert after["misses"] == before["misses"]
-        assert after["hits"] - before["hits"] == first.info["decoded_blocks"]
+        assert after["hits"] - before["hits"] == len(stores)
+        assert all((tb.decoded == d).all() for tb, d in zip(stores, decoded))
         assert calls == []
 
     def test_repeat_skipping_conjunction_decodes_nothing(self, spark, tmp_path, monkeypatch):
@@ -214,6 +220,7 @@ class TestReaderCacheOnIndex:
 
     def test_budget_holds_and_hits_match_unbounded(self, spark, index_dir, search_index):
         from lucene_spark.index.reader import SearchIndex
+        from lucene_spark.search.wand import TermBlocks
 
         queries = [
             "return", "if", "int", "return AND if", "return OR int OR if",
@@ -224,14 +231,85 @@ class TestReaderCacheOnIndex:
         # a few hot-term row sets' worth: the loop below must evict
         small.cache.BUDGET_BYTES = 64 << 10
         s = Searcher(small)
+        stores = 0
         for _round in range(3):
             for q in queries:
                 assert s.search(q, k=10).hits == want[q], q
                 st = small.cache.stats()
                 assert sum(v["bytes"] for v in st.values()) <= small.cache.BUDGET_BYTES
+                # each decoded store is charged its full decoded size
+                for (ns, _t), (tb, size) in list(small.cache._od.items()):
+                    if ns == "source":
+                        assert isinstance(tb, TermBlocks)
+                        assert size >= tb.docs.nbytes + tb.tfs.nbytes + tb.norms.nbytes
+                        stores += 1
         assert sum(v["evictions"] for v in small.cache.stats().values()) > 0
-        # the WAND disjunctions' decoded blocks were cached under the cap too
-        assert small.cache.stats()["block"]["misses"] > 0
+        # the WAND and conjunction stores were cached under the cap too
+        assert stores and small.cache.stats()["source"]["misses"] > 0
+
+    def test_first_seen_driver_term_query_is_one_job(self, spark, index_dir):
+        """A driver term query whose term this reader has not seen
+        point-reads its rows in ONE Spark job (no range-sampling sort
+        job, no shuffle) and takes df/ttf from those rows."""
+        from lucene_spark.index.reader import SearchIndex
+
+        idx = SearchIndex(spark, index_dir)
+        s = Searcher(idx)
+        assert s.search("return", k=5).hits  # reader-wide state loads once
+        sc = spark.sparkContext
+        group = "first-seen-driver-term-query"
+        sc.setJobGroup(group, "first-seen driver term query")
+        try:
+            td = s.search("import", k=5)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert td.hits and "decoded_blocks" in td.info
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+        rows = idx.collect_rows(["import"])["import"]
+        assert idx.term_stats(["import"])["import"] == (
+            sum(r["df"] for r in rows),
+            sum(r["ttf"] for r in rows),
+        )
+
+    def test_concurrent_cold_disjunction_fills_one_store(self, spark, index_dir):
+        """One cold disjunction from 8 threads on one reader: every
+        thread gets the same hits, and each term's store holds, for
+        every block it marks decoded, exactly what a fresh decode_blocks
+        of that block returns."""
+        from lucene_spark.codec.forutil import decode_blocks
+        from lucene_spark.index.reader import SearchIndex
+
+        idx = SearchIndex(spark, index_dir)
+        s = Searcher(idx, total_hits_threshold=10)
+        q = "return OR if OR class OR import OR int"
+        s.prepare(q, collect_rows=True)  # rows and norms only: no store yet
+        assert idx.cache.get("source", "return") is MISS
+        results, errors = [None] * 8, []
+        barrier = threading.Barrier(8)
+
+        def run(i):
+            try:
+                barrier.wait(timeout=60)
+                results[i] = s.search(q, k=10).hits
+            except Exception as e:  # pragma: no cover - reported below
+                errors.append(e)
+
+        threads = [threading.Thread(target=run, args=(i,)) for i in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not errors and not any(t.is_alive() for t in threads)
+        assert results[0] and all(r == results[0] for r in results)
+        for term in ("return", "if", "class", "import", "int"):
+            tb = idx.cache.get("source", term)
+            assert tb is not MISS and tb.decoded.any(), term
+            for b in np.flatnonzero(tb.decoded):
+                ci, lb = int(tb.block_chunk[b]), int(tb.block_local[b])
+                want = decode_blocks(tb.blobs[ci], [lb], tb.chunk_last[ci])
+                at = slice(tb.block_start[b], tb.block_start[b + 1])
+                for got, w in zip((tb.docs[at], tb.tfs[at], tb.norms[at]), want):
+                    assert np.array_equal(got, w), (term, b)
 
 
 class TestSharedPersistedRelations:

@@ -244,13 +244,20 @@ def _wand_queries(rng, vocab, universe, n):
 
 
 class TestGeneratedWand:
-    """Seeded term disjunctions on three indexes: WAND hits and float32
-    scores equal the exhaustive kernel's bitwise; ``total_hits`` is
-    exact under EQUAL_TO and a lower bound under GREATER_THAN_OR_EQUAL_TO."""
+    """Seeded term disjunctions on three indexes, each run cold (an
+    empty reader cache) and then repeated on the same reader: both runs'
+    WAND hits and float32 scores equal the exhaustive kernel's bitwise;
+    ``total_hits`` is exact under EQUAL_TO and a lower bound under
+    GREATER_THAN_OR_EQUAL_TO. The repeat decodes no block and reports
+    the cold run's ``info``."""
 
     @pytest.mark.parametrize("which", ["fixture", "nopos", "writer"])
-    def test_generated_wand_equals_exhaustive(self, spark, index_dir, nopos_index, writer_index, which):
+    def test_generated_wand_equals_exhaustive(
+        self, spark, index_dir, nopos_index, writer_index, which, monkeypatch
+    ):
+        from lucene_spark.codec import forutil
         from lucene_spark.index.reader import SearchIndex
+        from lucene_spark.search import wand
 
         d = {"fixture": index_dir, "nopos": nopos_index, "writer": writer_index}[which]
         idx = SearchIndex(spark, d)
@@ -261,27 +268,39 @@ class TestGeneratedWand:
         ranked = sorted((t for t in dfs if ":" not in t), key=lambda t: (-dfs[t], t))
         rng = np.random.default_rng(20261019)
         vocab = ranked[:6] + [str(t) for t in rng.choice(ranked[6:], min(8, len(ranked) - 6), replace=False)]
-        idx.collect_rows(vocab)
+        decodes = []
+
+        def counted(*args, **kwargs):
+            decodes.append(args[1])
+            return forutil.decode_blocks(*args, **kwargs)
+
+        monkeypatch.setattr(wand, "decode_blocks", counted)
         pruned = 0
         for n, (q, tombs, thr, k) in enumerate(_wand_queries(rng, np.asarray(vocab), universe, 30)):
             if tombs is not None:
                 idx.deleted_ids = np.union1d(real_tombs, tombs)
             s = Searcher(idx, total_hits_threshold=thr)
-            td = s.search(q, k=k)
+            idx.cache.clear()
+            cold = s.search(q, k=k)
+            del decodes[:]
+            again = s.search(q, k=k)
             _, spec, stats, _ = s.prepare(q)
             exh = s._search_exhaustive(spec, k, s._norm_caches(stats))
             idx.deleted_ids = real_tombs
             msg = f"{which} #{n} k={k} thr={thr} {q}"
-            assert "decoded_blocks" in td.info or not exh.hits, msg
-            assert [h for h, _ in td.hits] == [h for h, _ in exh.hits], msg
-            assert [np.float32(x).tobytes() for _, x in td.hits] == [
-                np.float32(x).tobytes() for _, x in exh.hits
-            ], msg
-            if td.relation == "EQUAL_TO":
-                assert td.total_hits == exh.total_hits, msg
-            else:
-                assert td.total_hits <= exh.total_hits, msg
-                pruned += 1
+            assert decodes == [], msg
+            assert again.info == cold.info, msg
+            for td in (cold, again):
+                assert "decoded_blocks" in td.info or not exh.hits, msg
+                assert [h for h, _ in td.hits] == [h for h, _ in exh.hits], msg
+                assert [np.float32(x).tobytes() for _, x in td.hits] == [
+                    np.float32(x).tobytes() for _, x in exh.hits
+                ], msg
+                if td.relation == "EQUAL_TO":
+                    assert td.total_hits == exh.total_hits, msg
+                else:
+                    assert td.total_hits <= exh.total_hits, msg
+            pruned += cold.relation != "EQUAL_TO"
         # the 200-doc fixture has too few blocks per term to prune
         assert pruned or which == "fixture", "no generated query pruned an interval"
 
