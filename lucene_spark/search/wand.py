@@ -14,9 +14,10 @@ as an interval sweep:
 2. block boundaries across all query terms cut doc-id space into
    elementary intervals; each interval's upper bound = Σ (per-term
    block-max of the covering block),
-3. intervals are taken in descending upper-bound order, a batch at a
-   time, against one decoded store per term and reader (``TermBlocks``,
-   the reader cache's "source" entry) that fills block by block. Every
+3. decoded intervals first, then the bound-ordered sweep: intervals
+   are taken in descending upper-bound order, a batch at a time,
+   against one decoded store per term and reader (``TermBlocks``, the
+   reader cache's "source" entry) that fills block by block. Every
    elementary interval lies inside exactly one block of each term, so
    a batch is scored in one pass: each term's covering blocks are
    decoded into its store unless they are there already, read back
@@ -28,10 +29,14 @@ as an interval sweep:
    IndexSearcher.java:104 — has been crossed), every interval whose
    upper bound is below minCompetitiveScore = kth score
    (TopScoreDocCollector.java:335-355) is pruned: the blocks only it
-   needs are never bit-unpacked. The batches, and so the pruning, hits
-   and ``info``, do not depend on what the stores already held: a
-   repeat query on an unchanged reader scores the same batches,
-   decodes nothing and reports the same ``info``.
+   needs are never bit-unpacked. Before the first batch, the leading
+   run of the order whose covering blocks an earlier sweep has read
+   (each store's ``swept`` mask) is scored in ONE pass, and the batches
+   take their docs from it instead of re-reading those blocks. The
+   batches, and so the pruning, hits and ``info``, do not depend on
+   what the stores already held: a repeat query on an unchanged reader
+   scores its first run's intervals in one pass, decodes nothing and
+   reports the same ``info``.
 
 Like the reference (WANDScorer.java:88-118 rounds max scores UP),
 pruning is by true upper bounds, so the returned top-k is EXACTLY the
@@ -52,6 +57,16 @@ from lucene_spark.search.similarity import BM25_SIM
 BATCH = 8  # intervals in the first batch; each later batch doubles
 
 
+def _ragged(offsets: np.ndarray, groups: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(index, ends): the positions of every element of the given groups,
+    group g being ``offsets[g]:offsets[g + 1]``, in the given group order
+    — one ragged gather index — and each group's end in that index."""
+    starts = offsets[groups]
+    lens = offsets[groups + 1] - starts
+    ends = np.cumsum(lens)
+    return np.arange(ends[-1] if len(ends) else 0) + np.repeat(starts - ends + lens, lens), ends
+
+
 @dataclass
 class TermBlocks:
     """One term's posting chunks as the reader holds them, in ascending
@@ -66,7 +81,11 @@ class TermBlocks:
     until a block is written — so the cache charges it at that size
     when the entry is put. ``fill`` writes a block's arrays before it
     sets the block's mask bit, so a concurrent query reads only
-    finished blocks (two fills of one block write the same values)."""
+    finished blocks (two fills of one block write the same values).
+    ``swept`` marks the decoded blocks a WAND sweep has read: a repeat
+    sweep scores the intervals they cover in one pass. Blocks only a
+    conjunction decoded stay unmarked — a conjunction may decode a hot
+    term whole, and a sweep would then score all of it up front."""
 
     blobs: list  # encoded postings per chunk
     chunk_last: list  # per chunk: exact last doc of each block (incl. tail)
@@ -82,6 +101,7 @@ class TermBlocks:
     tfs: np.ndarray
     norms: np.ndarray
     decoded: np.ndarray  # per global block: its postings are in the store
+    swept: np.ndarray  # per global block: decoded and read by a WAND sweep
 
     @classmethod
     def from_rows(cls, rows) -> "TermBlocks":
@@ -110,15 +130,13 @@ class TermBlocks:
             tfs=np.empty(df, dtype=np.int64),
             norms=np.empty(df, dtype=np.int64),
             decoded=np.zeros(len(block_chunk), dtype=bool),
+            swept=np.zeros(len(block_chunk), dtype=bool),
         )
 
     def positions(self, blocks: np.ndarray) -> np.ndarray:
         """Store offsets of every posting of the given global blocks, in
         the given block order: one ragged gather index."""
-        starts = self.block_start[blocks]
-        lens = self.block_start[blocks + 1] - starts
-        ends = np.cumsum(lens)
-        return np.arange(ends[-1] if len(ends) else 0) + np.repeat(starts - ends + lens, lens)
+        return _ragged(self.block_start, blocks)[0]
 
     def fill(self, blocks: np.ndarray) -> None:
         """Decode the given ascending global blocks that are not in the
@@ -189,8 +207,9 @@ def _score_intervals(sources, cover, all_ends, intervals, msm, allowed, deleted)
     """(docs, float32 scores) of the hits in the given elementary
     intervals, in one pass: every interval lies inside one block of each
     term, so each term's covering blocks are decoded into its store
-    unless they are there already, then read with one ragged gather,
-    and only the docs whose interval is given are scored. The scores
+    unless they are there already (and marked swept), then read with one
+    ragged gather, and only the docs whose interval is given are scored.
+    Hits ascend by doc. The scores
     are summed in float64 term by term in source order, then cast to
     float32 — the exhaustive kernel's accumulation."""
     in_iv = np.zeros(len(all_ends), dtype=bool)
@@ -204,6 +223,7 @@ def _score_intervals(sources, cover, all_ends, intervals, msm, allowed, deleted)
         if not len(need):
             continue
         tb.fill(need)
+        tb.swept[need] = True
         at = tb.positions(need)
         d = tb.docs[at]
         if len(sources) > 1:  # one source: its blocks are the intervals
@@ -263,7 +283,9 @@ def wand_top_k(
     msm terms are discarded. Returns (hits, info); ``hits_seen`` counts
     every hit of the scored intervals, so it is the exact total when no
     interval was pruned. Hits, scores and ``info`` depend on the query
-    alone, not on which blocks the stores held before it ran."""
+    alone, not on which blocks the stores held before it ran: the
+    intervals an earlier sweep read are scored in one pass up front and
+    replayed batch by batch."""
     msm = max(1, msm)
     # ---- elementary intervals from all block boundaries: interval j
     # covers (all_ends[j-1], all_ends[j]], inside one block of every
@@ -287,9 +309,33 @@ def wand_top_k(
     # a doc's score is float32(its float64 sum), so float32(bound) bounds
     # it; the negated bounds ascend along ``order``
     neg_bound = -ub_sum[order].astype(np.float32)
+    # ---- decoded intervals first: the leading run of ``order`` whose
+    # covering blocks an earlier sweep has read (none on a cold run) is
+    # scored in one pass when it spans more than the first batch (which
+    # would score it in one pass anyway)
+    p = 0
+    if len(order) > BATCH:
+        ready = np.ones(len(order), dtype=bool)
+        for s, blk in zip(sources, cover):
+            ready &= np.append(s.blocks.swept, True)[blk[order]]  # -1 (no covering block) reads the spare True
+        p = len(order) if ready.all() else int(np.argmin(ready))
+    if p <= BATCH:
+        p = 0
+    else:
+        pre_docs, pre_scores = _score_intervals(sources, cover, all_ends, order[:p], msm, allowed, deleted)
+        # the hits ascend by doc, so interval j's are the run
+        # pre_docs[edge[j]:edge[j + 1]]: one ragged gather lays the runs
+        # out in ``order``, and the hits of order[i:end] are
+        # pre_docs[pre_end[i]:pre_end[end]]
+        edge = np.concatenate([[0], np.searchsorted(pre_docs, all_ends, side="right")])
+        at, ends = _ragged(edge, order[:p])
+        pre_docs, pre_scores = pre_docs[at], pre_scores[at]
+        pre_end = [0] + ends.tolist()
     # ---- the bound-ordered sweep: intervals in descending upper-bound
-    # order, a batch at a time, each batch scored in one pass that reads
-    # its blocks from the stores (decoding only those not there yet)
+    # order, a batch at a time; a batch takes the hits of its intervals
+    # below ``p`` from the first pass and scores the rest in one pass
+    # that reads their blocks from the stores (decoding only those not
+    # there yet). Batches and pruning are those of a cold run.
     heap_docs = np.empty(0, dtype=np.int64)
     heap_scores = np.empty(0, dtype=np.float32)
     hits = 0
@@ -314,7 +360,13 @@ def wand_top_k(
                 end = n = cut
         if end == i:
             break
-        docs, scores = _score_intervals(sources, cover, all_ends, order[i:end], msm, allowed, deleted)
+        if end <= p:
+            docs, scores = pre_docs[pre_end[i] : pre_end[end]], pre_scores[pre_end[i] : pre_end[end]]
+        else:
+            docs, scores = _score_intervals(sources, cover, all_ends, order[max(i, p) : end], msm, allowed, deleted)
+            if i < p:
+                docs = np.concatenate([pre_docs[pre_end[i] :], docs])
+                scores = np.concatenate([pre_scores[pre_end[i] :], scores])
         i = end
         if not len(docs):
             continue

@@ -159,8 +159,8 @@ class TestReaderCacheOnIndex:
         """A WAND disjunction's decoded blocks live in its terms'
         reader-cached stores ("source" entries): the second run finds
         every store in the cache (one hit per term, no misses) with the
-        blocks it scores already decoded, and makes no decode_blocks
-        call."""
+        blocks it scores already decoded, makes no decode_blocks call
+        and scores its intervals in one pass."""
         from lucene_spark.codec import forutil
         from lucene_spark.index.reader import SearchIndex
         from lucene_spark.search import wand
@@ -177,6 +177,14 @@ class TestReaderCacheOnIndex:
             return forutil.decode_blocks(*args, **kwargs)
 
         monkeypatch.setattr(wand, "decode_blocks", counted)
+        passes = []
+        score_intervals = wand._score_intervals
+
+        def scored(*args, **kwargs):
+            passes.append(len(args[3]))
+            return score_intervals(*args, **kwargs)
+
+        monkeypatch.setattr(wand, "_score_intervals", scored)
         stores = [idx.cache.get("source", t) for t in ("class", "if", "import", "return")]
         decoded = [tb.decoded.copy() for tb in stores]
         assert sum(int(d.sum()) for d in decoded) >= first.info["decoded_blocks"]
@@ -188,6 +196,25 @@ class TestReaderCacheOnIndex:
         assert after["hits"] - before["hits"] == len(stores)
         assert all((tb.decoded == d).all() for tb, d in zip(stores, decoded))
         assert calls == []
+        assert len(passes) == 1
+
+    def test_conjunction_fills_leave_blocks_unswept(self, spark, index_dir):
+        """Blocks a conjunction decoded are in the store but not marked
+        swept: a later disjunction over the same terms runs its sweep as
+        on a fresh reader (same hits and info) instead of scoring every
+        decoded block up front."""
+        from lucene_spark.index.reader import SearchIndex
+
+        q = "return OR if"
+        fresh = Searcher(SearchIndex(spark, index_dir), total_hits_threshold=10).search(q, k=10)
+        idx = SearchIndex(spark, index_dir)
+        s = Searcher(idx, total_hits_threshold=10)
+        assert s.search("return AND if", k=10).hits
+        stores = [idx.cache.get("source", t) for t in ("if", "return")]
+        assert all(tb.decoded.any() and not tb.swept.any() for tb in stores)
+        after = s.search(q, k=10)
+        assert (after.hits, after.info) == (fresh.hits, fresh.info)
+        assert all(not (tb.swept & ~tb.decoded).any() for tb in stores)
 
     def test_repeat_skipping_conjunction_decodes_nothing(self, spark, tmp_path, monkeypatch):
         """A conjunction that skips blocks of a multi-block chunk reads
@@ -273,9 +300,9 @@ class TestReaderCacheOnIndex:
 
     def test_concurrent_cold_disjunction_fills_one_store(self, spark, index_dir):
         """One cold disjunction from 8 threads on one reader: every
-        thread gets the same hits, and each term's store holds, for
-        every block it marks decoded, exactly what a fresh decode_blocks
-        of that block returns."""
+        thread gets the same hits, each term's store marks swept only
+        decoded blocks, and it holds, for every block it marks decoded,
+        exactly what a fresh decode_blocks of that block returns."""
         from lucene_spark.codec.forutil import decode_blocks
         from lucene_spark.index.reader import SearchIndex
 
@@ -304,6 +331,7 @@ class TestReaderCacheOnIndex:
         for term in ("return", "if", "class", "import", "int"):
             tb = idx.cache.get("source", term)
             assert tb is not MISS and tb.decoded.any(), term
+            assert not (tb.swept & ~tb.decoded).any(), term
             for b in np.flatnonzero(tb.decoded):
                 ci, lb = int(tb.block_chunk[b]), int(tb.block_local[b])
                 want = decode_blocks(tb.blobs[ci], [lb], tb.chunk_last[ci])

@@ -248,8 +248,11 @@ class TestGeneratedWand:
     empty reader cache) and then repeated on the same reader: both runs'
     WAND hits and float32 scores equal the exhaustive kernel's bitwise;
     ``total_hits`` is exact under EQUAL_TO and a lower bound under
-    GREATER_THAN_OR_EQUAL_TO. The repeat decodes no block and reports
-    the cold run's ``info``."""
+    GREATER_THAN_OR_EQUAL_TO. The repeat decodes no block, scores its
+    intervals in one pass and reports the cold run's ``info``. Each
+    query also runs first on the stores the previous queries left
+    (some of its blocks already swept, others not) with the cold run's
+    hits and ``info``."""
 
     @pytest.mark.parametrize("which", ["fixture", "nopos", "writer"])
     def test_generated_wand_equals_exhaustive(
@@ -275,21 +278,43 @@ class TestGeneratedWand:
             return forutil.decode_blocks(*args, **kwargs)
 
         monkeypatch.setattr(wand, "decode_blocks", counted)
+        passes = []
+        score_intervals = wand._score_intervals
+
+        def scored(*args, **kwargs):
+            passes.append(len(args[3]))
+            return score_intervals(*args, **kwargs)
+
+        monkeypatch.setattr(wand, "_score_intervals", scored)
+        flips = np.random.default_rng(7)  # apart from ``rng``: the query stream stays as it was
         pruned = 0
         for n, (q, tombs, thr, k) in enumerate(_wand_queries(rng, np.asarray(vocab), universe, 30)):
             if tombs is not None:
                 idx.deleted_ids = np.union1d(real_tombs, tombs)
             s = Searcher(idx, total_hits_threshold=thr)
+            warm = s.search(q, k=k)
             idx.cache.clear()
+            del passes[:]
             cold = s.search(q, k=k)
-            del decodes[:]
+            cold_passes = len(passes)
+            del decodes[:], passes[:]
             again = s.search(q, k=k)
+            again_passes = len(passes)
+            # any swept subset of the decoded blocks: the one pass covers
+            # a shorter run and the sweep scores the rest
+            terms = sorted(A.extract_terms(s.prepare(q)[0]))
+            for tb in idx.cache.get_many("source", terms).values():
+                tb.swept &= flips.random(len(tb.swept)) < 0.7
+            partial = s.search(q, k=k)
             _, spec, stats, _ = s.prepare(q)
             exh = s._search_exhaustive(spec, k, s._norm_caches(stats))
             idx.deleted_ids = real_tombs
             msg = f"{which} #{n} k={k} thr={thr} {q}"
             assert decodes == [], msg
+            assert again_passes == min(cold_passes, 1), msg
             assert again.info == cold.info, msg
+            assert (warm.hits, warm.info) == (cold.hits, cold.info), msg
+            assert (partial.hits, partial.info) == (cold.hits, cold.info), msg
             for td in (cold, again):
                 assert "decoded_blocks" in td.info or not exh.hits, msg
                 assert [h for h, _ in td.hits] == [h for h, _ in exh.hits], msg
@@ -303,6 +328,54 @@ class TestGeneratedWand:
             pruned += cold.relation != "EQUAL_TO"
         # the 200-doc fixture has too few blocks per term to prune
         assert pruned or which == "fixture", "no generated query pruned an interval"
+
+
+class TestSweptRuns:
+    """wand_top_k on synthetic multi-chunk stores: whatever leading run
+    of its bound order a query finds swept (none, part of a batch,
+    several batches, all of it), its hits and ``info`` are the cold
+    run's, and the blocks it reads are swept afterwards."""
+
+    @staticmethod
+    def _stores(rng, n_docs, chunk):
+        from lucene_spark.codec.forutil import pack_postings
+        from lucene_spark.codec.impacts import competitive_impacts_flat
+        from lucene_spark.search.wand import TermBlocks
+
+        stores = []
+        for density in (0.5, 0.3, 0.2):
+            docs = np.flatnonzero(rng.random(n_docs) < density)
+            tfs = rng.integers(1, 6, len(docs))
+            norms = rng.integers(1, 120, len(docs))
+            rows = []
+            for lo in range(0, n_docs, chunk):  # one row per doc-range chunk
+                sel = (docs >= lo) & (docs < lo + chunk)
+                blob, last = pack_postings(docs[sel], tfs[sel], norms[sel])
+                ib, fr, nb = competitive_impacts_flat(tfs[sel], norms[sel])
+                rows.append({"df": int(sel.sum()), "blob": blob, "block_last": last,
+                             "imp_block": ib, "imp_freq": fr, "imp_norm": nb})
+            stores.append(TermBlocks.from_rows(rows))
+        return stores
+
+    def test_any_swept_run_replays_the_cold_sweep(self):
+        from lucene_spark.search.similarity import norm_inverse_cache
+        from lucene_spark.search.wand import PostingSource, wand_top_k
+
+        rng = np.random.default_rng(20261019)
+        cache = norm_inverse_cache(np.float32(40.0))
+        for thr in (10, 1000, 10**6):  # early, late and no pruning
+            stores = self._stores(rng, 20000, 4096)
+            sources = [PostingSource(np.float32(w), cache, tb) for w, tb in zip((1.0, 2.0, 3.0), stores)]
+            cold = wand_top_k(sources, 10, thr)
+            scanned = [tb.swept.copy() for tb in stores]
+            assert cold[1]["total_intervals"] > 100 and any(m.any() for m in scanned)
+            for trial in range(12):
+                for tb, m in zip(stores, scanned):
+                    tb.swept[:] = m
+                    if trial:  # unsweep a few blocks: the run stops at the first one
+                        tb.swept[rng.integers(len(m), size=trial)] = False
+                assert wand_top_k(sources, 10, thr) == cold, (thr, trial)
+                assert all((tb.swept == m).all() for tb, m in zip(stores, scanned)), (thr, trial)
 
 
 class TestMissingPositions:
