@@ -8,6 +8,7 @@ key may both fetch it, and the last put wins."""
 from __future__ import annotations
 
 import dataclasses
+import enum
 import threading
 from collections import OrderedDict, defaultdict
 
@@ -24,11 +25,13 @@ def nbytes(value) -> int:
         return value.nbytes
     if isinstance(value, (bytes, bytearray, str)):
         return len(value)
-    if value is None or isinstance(value, (int, float, np.generic)):
-        return 8
+    if value is None or isinstance(value, (int, float, np.generic, enum.Enum)):
+        return 8  # an Enum member (ast.Occur) is a shared singleton: one reference
     if isinstance(value, (list, tuple)):  # a collected Row is a tuple
         return sum(nbytes(v) for v in value)
-    if dataclasses.is_dataclass(value):  # PostingList
+    if isinstance(value, dict):  # per-field norm tables
+        return sum(nbytes(k) + nbytes(v) for k, v in value.items())
+    if dataclasses.is_dataclass(value):  # PostingList, query ASTs, compiled specs
         return sum(nbytes(v) for v in vars(value).values())
     return OPAQUE_BYTES
 

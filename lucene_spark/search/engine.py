@@ -5,7 +5,8 @@ Query lifecycle (mirrors SURVEY §3.1 / IndexSearcher.java:451-492):
 2. MultiTermQuery expansion against the term dictionary
    (Catalyst predicate scan on term_stats — JVM-side)
 3. Weight creation: fetch GLOBAL df/ttf + collection stats, fold
-   boosts, build the float32 norm-inverse cache
+   boosts, build the float32 norm-inverse cache. Steps 1-3 of a driver
+   query are one reader cache entry ("prepared"): a repeat skips them.
 4. Execution:
    - driver mode: posting rows of the query's terms are point-read
      (partition-pruned parquet filter), kernels score on the driver.
@@ -645,12 +646,38 @@ class Searcher:
         return q
 
     def prepare(self, query: str | A.Query, collect_rows: bool = False, lazy_docsets: bool = False):
-        """Parse → rewrite → Weight creation. With ``collect_rows``
-        (driver mode) the query's posting rows are point-read in ONE
-        Spark job (no shuffle, no sort), and a term first seen by this
-        reader takes its df/ttf from their columns — no separate
-        term_stats job; a first-seen driver query is one job, a repeat
-        none. Either way df/ttf come from the reader's term_stats cache."""
+        """Parse → rewrite → Weight creation: (rewritten query, compiled
+        spec, collection stats, posting rows or None). With
+        ``collect_rows`` (driver mode) the query's posting rows are
+        point-read in ONE Spark job (no shuffle, no sort), and a term
+        first seen by this reader takes its df/ttf from their columns —
+        no separate term_stats job; a first-seen driver query is one
+        job, a repeat none. Either way df/ttf come from the reader's
+        term_stats cache. A repeat query skips parse, analysis, rewrite
+        and compile: its plan is a reader cache entry (see
+        ``_prepare``)."""
+        return self._prepare(query, collect_rows, lazy_docsets)[:4]
+
+    def _prepare(self, query, collect_rows: bool = False, lazy_docsets: bool = False):
+        """``prepare`` plus the norm tables of the plan's stats. The
+        plan — the rewritten query, its spec, the stats, its sorted
+        terms and the norm tables — is a pure function of (query,
+        similarity) for the reader's lifetime, so it is cached per
+        reader ("prepared"); a hit only reads the terms' rows (a
+        "rows" hit). Lazy (distributed) preparation is not cached: it
+        registers the query's lazy conditions on this searcher, and
+        its Spark plan is cached downstream ("plan")."""
+        key = None if lazy_docsets else (query, self.sim)
+        plan = MISS
+        if key is not None:
+            try:
+                plan = self.index.cache.get("prepared", key)
+            except TypeError:  # unhashable query shape: skip caching
+                key = None
+        if plan is not MISS:
+            q, spec, stats, terms, norms = plan
+            rows_by_term = self.index.collect_rows(terms) if collect_rows else None
+            return q, spec, stats, rows_by_term, norms
         q = A.rewrite(self._expand_multiterm(self._analyze(query), lazy_docsets))
         terms = sorted(A.extract_terms(q))
         stats = self.index.stats
@@ -664,17 +691,20 @@ class Searcher:
         term_ttf = {t: ttf for t, (_, ttf) in tstats.items()} if self.sim.needs_ttf else None
         sbf = self._stats_by_field()
         spec = compile_query(q, stats, term_df, stats_by_field=sbf, sim=self.sim, term_ttf=term_ttf)
-        return q, spec, stats, rows_by_term
+        norms = self._norm_caches(stats)
+        if key is not None:
+            # every later query shares the plan: its tables are read-only
+            self.index.cache.put("prepared", key, (q, spec, stats, tuple(terms), _read_only(norms)))
+        return q, spec, stats, rows_by_term, norms
 
     # ---- search -------------------------------------------------------------
 
     def search(self, query: str | A.Query, k: int = 10, mode: str = "driver") -> TopDocs:
-        q, spec, stats, rows = self.prepare(
+        q, spec, _stats, rows, cache = self._prepare(
             query, collect_rows=(mode == "driver"), lazy_docsets=(mode == "distributed")
         )
         if isinstance(spec, NoneSpec) or k <= 0:
             return TopDocs([], 0, "EQUAL_TO", {})
-        cache = self._norm_caches(stats)
         if mode == "distributed":
             return self._search_distributed(spec, k, cache, plan_key=q)
         if self._is_pure_term_disjunction(spec):
@@ -742,7 +772,7 @@ class Searcher:
             # PerFieldSimilarityWrapper: block-max bounds and scoring
             # use the term's field's model (for_field is identity for
             # plain similarities)
-            PostingSource(ts.weight, _c(ts), by_term[ts.term], sim=self.sim.for_field(ts.field))
+            PostingSource(ts.weight, _c(ts), by_term[ts.term], sim=self.sim.for_field(ts.field), field=ts.field)
             for ts in term_specs
             if ts.term in by_term
         ]
@@ -762,14 +792,11 @@ class Searcher:
             return TopDocs([], 0, "EQUAL_TO", {})
         allowed = None
         if isinstance(spec, BoolSpec) and (spec.filters or spec.nots):
-            allowed = None
             for f in spec.filters:
-                d = np.asarray(f.docs, dtype=np.int64)
-                allowed = d if allowed is None else np.intersect1d(allowed, d, assume_unique=True)
+                allowed = f.array if allowed is None else np.intersect1d(allowed, f.array, assume_unique=True)
             for nspec in spec.nots:
                 if allowed is not None:
-                    d = np.asarray(nspec.docs, dtype=np.int64)
-                    allowed = allowed[~np.isin(allowed, d, assume_unique=False)]
+                    allowed = allowed[~np.isin(allowed, nspec.array, assume_unique=False)]
                 # with no positive filter, negations fold into the
                 # tombstone mask below instead
             if allowed is not None and not len(allowed):
@@ -778,7 +805,7 @@ class Searcher:
         if isinstance(spec, BoolSpec) and spec.nots and allowed is None:
             # negation-only mask: fold MUST_NOT doc sets into the
             # tombstone mask (both are "exclude these ids")
-            neg = np.concatenate([np.asarray(n.docs, dtype=np.int64) for n in spec.nots])
+            neg = np.concatenate([n.array for n in spec.nots])
             deleted = np.union1d(deleted, neg) if len(deleted) else np.unique(neg)
         hits, info = wand_top_k(
             sources,
@@ -871,11 +898,10 @@ class Searcher:
                 "doc order no longer matches the index sort — force_merge "
                 "and rebuild with index_sort, or use search()/match_frame"
             )
-        q, spec, stats, rows = self.prepare(query, collect_rows=True)
+        _q, spec, _stats, rows, cache = self._prepare(query, collect_rows=True)
         info: dict = {"index_sort": sort_spec}
         if isinstance(spec, NoneSpec) or k <= 0:
             return TopDocs([], 0, "EQUAL_TO", info)
-        cache = self._norm_caches(stats)
         dpc = int(index.manifest.get("docs_per_chunk", 1 << 17))
         flags = _streams(spec)
         all_ids = index.all_doc_ids() if _needs_all_docs(spec) else None
@@ -897,7 +923,7 @@ class Searcher:
         for t, p in cold.items():
             chunk_ids |= set(np.unique(p.docs // dpc).tolist())
         for ds in _collect_docsets(spec):
-            d = np.asarray(ds.docs, dtype=np.int64)
+            d = ds.array
             chunk_ids |= set(np.unique(d // dpc).tolist())
         for vs in _collect_eager_valspecs(spec):
             # feature/distance-feature clauses: docs scored ONLY by the
@@ -1045,10 +1071,10 @@ class Searcher:
         if after is None:
             return self.search(query, k=k)
         after_doc, after_score = int(after[0]), np.float32(after[1])
-        q, spec, stats, rows = self.prepare(query, collect_rows=True)
+        _q, spec, _stats, rows, cache = self._prepare(query, collect_rows=True)
         if isinstance(spec, NoneSpec) or k <= 0:
             return TopDocs([], 0, "EQUAL_TO", {})
-        ctx = self._driver_context(spec, self._norm_caches(stats), rows)
+        ctx = self._driver_context(spec, cache, rows)
         docs, scores = self._live_matches(spec, ctx)
         mask = (scores < after_score) | ((scores == after_score) & (docs > after_doc))
         return TopDocs(
@@ -1060,10 +1086,10 @@ class Searcher:
         (match, value, description, details) for one document."""
         from lucene_spark.search.explain import explain_spec
 
-        q, spec, stats, rows = self.prepare(query, collect_rows=True)
+        _q, spec, _stats, rows, cache = self._prepare(query, collect_rows=True)
         if isinstance(spec, NoneSpec):
             return {"match": False, "value": 0.0, "description": "MatchNoDocsQuery", "details": []}
-        ctx = self._driver_context(spec, self._norm_caches(stats), rows)
+        ctx = self._driver_context(spec, cache, rows)
         return explain_spec(spec, ctx, int(doc_id))
 
     def doc(self, doc_id: int) -> dict | None:
@@ -1110,10 +1136,10 @@ class Searcher:
             return self.match_frame(query).count()
         # prepare() re-analyzes from the pristine query (stemming is
         # not guaranteed idempotent, so never feed q0 back through)
-        q, spec, stats, rows = self.prepare(query, collect_rows=True)
+        _q, spec, _stats, rows, cache = self._prepare(query, collect_rows=True)
         if isinstance(spec, NoneSpec):
             return 0
-        ctx = self._driver_context(spec, self._norm_caches(stats), rows)
+        ctx = self._driver_context(spec, cache, rows)
         docs, _ = self._live_matches(spec, ctx)
         return len(docs)
 
@@ -1187,8 +1213,8 @@ class Searcher:
 
     def _prepared_spec(self, query):
         """prepare() with lazy doc sets (the distributed contract)."""
-        _q, spec, stats, _rows = self.prepare(query, lazy_docsets=True)
-        return spec, self._norm_caches(stats)
+        _q, spec, _stats, _rows, cache = self._prepare(query, lazy_docsets=True)
+        return spec, cache
 
     def _distributed_plan(self, spec, k: int | None, cache):
         """Build the chunked scoring plan. Returns ("topdocs", TopDocs)
@@ -1486,6 +1512,17 @@ class Searcher:
             score_chunk, schema="chunk_id long, doc_id long, score float, n_matched long"
         )
         return "df", result
+
+
+def _read_only(tables):
+    """``tables`` (a norm table, or a tuple or dict of them) with every
+    array made read-only."""
+    if isinstance(tables, np.ndarray):
+        tables.flags.writeable = False
+    elif isinstance(tables, (tuple, dict)):
+        for t in tables.values() if isinstance(tables, dict) else tables:
+            _read_only(t)
+    return tables
 
 
 def _drop_deleted(docs, scores, deleted):

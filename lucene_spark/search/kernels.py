@@ -84,8 +84,16 @@ class DocSetSpec:
     """Constant-score membership in a resolved sorted doc-id set
     (keyword-field filters; see ast.FieldValueQuery)."""
 
-    docs: tuple  # kept hashable; np view taken at evaluate time
+    docs: tuple  # kept hashable and equal by value
     boost: float = 1.0
+    # the same ids as a read-only int64 array, built once: a cached
+    # plan's doc set is not converted again on every query
+    array: np.ndarray = field(init=False, repr=False, compare=False)
+
+    def __post_init__(self):
+        a = np.asarray(self.docs, dtype=np.int64)
+        a.flags.writeable = False
+        object.__setattr__(self, "array", a)
 
 
 @dataclass(frozen=True)
@@ -682,7 +690,7 @@ def evaluate(spec, ctx: ChunkContext) -> tuple[np.ndarray, np.ndarray]:
             norms_out[mask] = nm[idx[mask]]
         return docs, ctx.score(spec.weight, tf_sum, norms_out, spec.field)
     if isinstance(spec, DocSetSpec):
-        d = np.asarray(spec.docs, dtype=np.int64)
+        d = spec.array
         if ctx.doc_range is not None:
             lo, hi = ctx.doc_range
             d = d[np.searchsorted(d, lo) : np.searchsorted(d, hi)]

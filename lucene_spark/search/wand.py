@@ -102,6 +102,11 @@ class TermBlocks:
     norms: np.ndarray
     decoded: np.ndarray  # per global block: its postings are in the store
     swept: np.ndarray  # per global block: decoded and read by a WAND sweep
+    # the last query's per-block score upper bounds and their key
+    # (similarity, field, weight): a pure function of the key for the
+    # reader's lifetime (the field's norm table is fixed), so a repeat
+    # query reuses them; one slot, so the store never grows with them
+    bounds: tuple = (None, None)
 
     @classmethod
     def from_rows(cls, rows) -> "TermBlocks":
@@ -174,17 +179,27 @@ class PostingSource:
     from the impacts, and its postings read from (and decoded on demand
     into) the term's reader-cached decoded store."""
 
-    def __init__(self, weight, cache: np.ndarray, blocks: TermBlocks, sim=None):
+    def __init__(self, weight, cache: np.ndarray, blocks: TermBlocks, sim=None, field: str = ""):
         """``sim`` is the pluggable Similarity (BM25 default); every
         model is monotone in freq and anti-monotone in length, so block
         maxima over the competitive-impact Pareto pairs stay true upper
-        bounds."""
+        bounds. ``cache`` is the norm table of ``field`` under ``sim``:
+        the bounds are kept on ``blocks`` under (sim, field, weight)."""
         self.sim = sim if sim is not None else BM25_SIM
         self.weight = weight
         self.cache = cache
         self.blocks = blocks
         self.block_end = blocks.block_end
-        self.block_ub = np.zeros(len(blocks.block_end), dtype=np.float32)
+        key = (self.sim, field, weight)
+        memo_key, ub = blocks.bounds
+        if memo_key != key:
+            ub = self._block_ub()
+            blocks.bounds = (key, ub)
+        self.block_ub = ub
+
+    def _block_ub(self) -> np.ndarray:
+        blocks = self.blocks
+        ub = np.zeros(len(blocks.block_end), dtype=np.float32)
         if len(blocks.imp_block):
             norms = blocks.imp_norm
             if not getattr(self.sim, "length_monotone", True):
@@ -194,10 +209,12 @@ class PostingSource:
                 # longer contains the max scorer, so substitute the
                 # globally-best norm byte — a true (looser) upper
                 # bound that keeps dynamic pruning exact
-                best = int(np.argmax(np.asarray(cache, dtype=np.float64)))
+                best = int(np.argmax(np.asarray(self.cache, dtype=np.float64)))
                 norms = np.full(len(norms), best, dtype=np.int64)
-            s = self.sim.score(self.weight, blocks.imp_freq, norms, cache)
-            np.maximum.at(self.block_ub, blocks.imp_block, s)
+            s = self.sim.score(self.weight, blocks.imp_freq, norms, self.cache)
+            np.maximum.at(ub, blocks.imp_block, s)
+        ub.flags.writeable = False
+        return ub
 
     def score_at(self, tfs: np.ndarray, norms: np.ndarray) -> np.ndarray:
         return self.sim.score(self.weight, tfs, norms, self.cache)
@@ -251,19 +268,24 @@ def _score_intervals(sources, cover, all_ends, intervals, msm, allowed, deleted)
         if msm > 1:
             enough = np.bincount(group) >= msm
             docs, scores = docs[enough], scores[enough]
-    if allowed is not None and len(docs):
-        # FILTER-clause doc-set mask (sorted): the filtered WAND of
-        # Boolean2ScorerSupplier's req(filter)+opt(TOP_SCORES) branch —
-        # pruning bounds stay true upper bounds because a filter only
-        # removes hits
+    keep = _kept(docs, allowed, deleted)
+    return (docs, scores) if keep is None else (docs[keep], scores[keep])
+
+
+def _kept(docs, allowed, deleted) -> "np.ndarray | None":
+    """The mask of the hits to keep: in the sorted FILTER doc set
+    ``allowed`` — the filtered WAND of Boolean2ScorerSupplier's
+    req(filter)+opt(TOP_SCORES) branch; pruning bounds stay true upper
+    bounds because a filter only removes hits — and not tombstoned in
+    ``deleted`` (the liveDocs role). None when neither is given."""
+    keep = None
+    if allowed is not None:
         idx = np.minimum(np.searchsorted(allowed, docs), max(len(allowed) - 1, 0))
-        inset = allowed[idx] == docs if len(allowed) else np.zeros(len(docs), dtype=bool)
-        docs, scores = docs[inset], scores[inset]
-    if deleted is not None and len(docs):
-        # liveDocs mask (scorer.score(collector, liveDocs) role)
+        keep = allowed[idx] == docs if len(allowed) else np.zeros(len(docs), dtype=bool)
+    if deleted is not None:
         live = ~np.isin(docs, deleted, assume_unique=False)
-        docs, scores = docs[live], scores[live]
-    return docs, scores
+        keep = live if keep is None else keep & live
+    return keep
 
 
 def wand_top_k(
@@ -321,6 +343,19 @@ def wand_top_k(
         p = len(order) if ready.all() else int(np.argmin(ready))
     if p <= BATCH:
         p = 0
+    elif len(sources) == 1:
+        # one source: its intervals are its blocks, all swept (so in the
+        # store); one ragged gather reads them in ``order``, and the
+        # hits of order[i:end] are pre_docs[pre_end[i]:pre_end[end]]
+        s = sources[0]
+        tb = s.blocks
+        at, ends = _ragged(tb.block_start, order[:p])
+        pre_docs, pre_scores = tb.docs[at], s.score_at(tb.tfs[at], tb.norms[at])
+        keep = _kept(pre_docs, allowed, deleted)
+        if keep is not None:
+            pre_docs, pre_scores = pre_docs[keep], pre_scores[keep]
+            ends = np.cumsum(keep)[ends - 1]  # every block holds a posting
+        pre_end = [0] + ends.tolist()
     else:
         pre_docs, pre_scores = _score_intervals(sources, cover, all_ends, order[:p], msm, allowed, deleted)
         # the hits ascend by doc, so interval j's are the run

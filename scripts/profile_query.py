@@ -8,11 +8,13 @@ Prints the phase buckets, the per-node timing tree and the reader
 cache's hits / misses / evictions / bytes per namespace after the
 query, then one JSON line with the full profile and those cache counts
 (key "cache"). ``--repeat N`` first runs the query N times on the fresh
-reader (``Searcher.search``) and prints each run's wall time, its
-``decode_blocks`` calls and blocks (the WAND / conjunction store
-fills) and its per-namespace cache deltas — so run 1 is cold and a
-repeat should show hits only and no decode; they are in the JSON line
-too (key "repeat"). Cluster form: spark-submit --py-files
+reader (``Searcher.search``) and prints each run's wall time, the part
+of it spent preparing the query (parse through compile, or the cached
+plan), its ``decode_blocks`` calls and blocks (the WAND / conjunction
+store fills) and its per-namespace cache deltas — so run 1 is cold and
+a repeat should show hits only (a "prepared" hit among them), no
+decode and a prepare time near zero; they are in the JSON line too
+(key "repeat"). Cluster form: spark-submit --py-files
 lucene_spark.zip scripts/profile_query.py ...
 """
 
@@ -78,24 +80,34 @@ def main(argv: list[str]) -> int:
 
 def repeat_runs(index, searcher, query: str, k: int, n: int) -> list[dict]:
     """Run ``query`` ``n`` times on one reader; per run: wall time,
-    decode_blocks calls and blocks, and the reader cache's
+    prepare time, decode_blocks calls and blocks, and the reader cache's
     per-namespace deltas (namespaces that did not move are left out)."""
     from lucene_spark.search import wand
 
     decode_blocks = wand.decode_blocks
     decoded: list[int] = []
+    prepare = searcher._prepare
+    prepare_s: list[float] = []
 
     def counted(blob, blocks, block_last):
         decoded.append(len(blocks))
         return decode_blocks(blob, blocks, block_last)
 
+    def timed_prepare(*args, **kwargs):
+        t0 = time.perf_counter()
+        try:
+            return prepare(*args, **kwargs)
+        finally:
+            prepare_s.append(time.perf_counter() - t0)
+
     wand.decode_blocks = counted
+    searcher._prepare = timed_prepare  # search() calls it once per query
     runs = []
     try:
         print(f"repeat: {n} runs on one reader")
         for i in range(n):
             before = index.cache.stats()
-            del decoded[:]
+            del decoded[:], prepare_s[:]
             t0 = time.perf_counter()
             td = searcher.search(query, k=k)
             wall_ms = (time.perf_counter() - t0) * 1000
@@ -104,15 +116,17 @@ def repeat_runs(index, searcher, query: str, k: int, n: int) -> list[dict]:
                 d = {key: v - before.get(ns, {}).get(key, 0) for key, v in st.items()}
                 if any(d.values()):
                     delta[ns] = d
-            print(f"  run {i + 1}: {wall_ms:9.3f} ms  {len(td.hits)} hits  "
+            prepare_ms = sum(prepare_s) * 1000
+            print(f"  run {i + 1}: {wall_ms:9.3f} ms  prepare {prepare_ms:8.3f} ms  {len(td.hits)} hits  "
                   f"decode_blocks calls={len(decoded)} blocks={sum(decoded)}")
             for ns, d in sorted(delta.items()):
                 print(f"    {ns:<10} hits+{d['hits']:<6} misses+{d['misses']:<6} "
                       f"evictions+{d['evictions']:<6} bytes{d['bytes']:+d}")
-            runs.append({"wall_ms": wall_ms, "decode_blocks_calls": len(decoded),
+            runs.append({"wall_ms": wall_ms, "prepare_ms": prepare_ms, "decode_blocks_calls": len(decoded),
                          "decode_blocks_blocks": sum(decoded), "cache": delta})
     finally:
         wand.decode_blocks = decode_blocks
+        del searcher._prepare
     return runs
 
 

@@ -33,6 +33,18 @@ class TestNbytes:
         assert nbytes(PL(a, [a[:4], a[4:]])) == 160
         assert nbytes(None) == 8 and nbytes((3, 4)) == 16
         assert nbytes([]) == 0
+        assert nbytes({"": a, "title": a[:2]}) == 80 + 5 + 16
+
+    def test_parsed_queries_charged_their_size(self):
+        """An Enum member (ast.Occur) is a shared singleton: a parsed
+        Boolean query is charged its terms, not phantom bytes."""
+        from lucene_spark.search import ast as A
+        from lucene_spark.search.parser import parse_query
+
+        assert nbytes(A.Occur.SHOULD) == 8
+        q = parse_query("a OR b OR c")
+        # three (Occur, TermQuery(term, field)) clauses and the msm int
+        assert nbytes(q) == 3 * (8 + len("a") + len("content")) + 8
 
     def test_jvm_backed_values_charged_fixed(self):
         class Column:  # stands in for any value Python cannot size
@@ -153,6 +165,8 @@ class TestReaderCacheOnIndex:
             for ns, st in after.items():
                 assert st["misses"] == before.get(ns, {}).get("misses", 0), (q, ns)
             assert sum(st["hits"] for st in after.values()) > sum(st["hits"] for st in before.values())
+            # the repeat's plan: one "prepared" hit, no parse or compile
+            assert after["prepared"]["hits"] == before["prepared"]["hits"] + 1, q
         assert after["rows"]["hits"] > 0 and after["rows"]["bytes"] > 0
 
     def test_repeat_wand_query_decodes_nothing(self, spark, index_dir, monkeypatch):
@@ -258,21 +272,26 @@ class TestReaderCacheOnIndex:
         # a few hot-term row sets' worth: the loop below must evict
         small.cache.BUDGET_BYTES = 64 << 10
         s = Searcher(small)
-        stores = 0
+        stores = plans = 0
         for _round in range(3):
             for q in queries:
                 assert s.search(q, k=10).hits == want[q], q
                 st = small.cache.stats()
                 assert sum(v["bytes"] for v in st.values()) <= small.cache.BUDGET_BYTES
-                # each decoded store is charged its full decoded size
-                for (ns, _t), (tb, size) in list(small.cache._od.items()):
+                for (ns, _t), (v, size) in list(small.cache._od.items()):
                     if ns == "source":
-                        assert isinstance(tb, TermBlocks)
-                        assert size >= tb.docs.nbytes + tb.tfs.nbytes + tb.norms.nbytes
+                        # each decoded store is charged its full decoded size
+                        assert isinstance(v, TermBlocks)
+                        assert size >= v.docs.nbytes + v.tfs.nbytes + v.norms.nbytes
                         stores += 1
+                    if ns == "prepared":
+                        # a plan is charged what it holds: its query,
+                        # spec and 256-entry norm table, no phantom bytes
+                        assert size < 4 << 10, (_t, size)
+                        plans += 1
         assert sum(v["evictions"] for v in small.cache.stats().values()) > 0
-        # the WAND and conjunction stores were cached under the cap too
-        assert stores and small.cache.stats()["source"]["misses"] > 0
+        # the WAND and conjunction stores and the plans were cached under the cap too
+        assert stores and plans and small.cache.stats()["source"]["misses"] > 0
 
     def test_first_seen_driver_term_query_is_one_job(self, spark, index_dir):
         """A driver term query whose term this reader has not seen

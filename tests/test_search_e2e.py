@@ -330,11 +330,170 @@ class TestGeneratedWand:
         assert pruned or which == "fixture", "no generated query pruned an interval"
 
 
+def _same_topdocs(a, b, msg):
+    """Hits, float32 score bytes, total, relation and ``info`` equal."""
+    assert [d for d, _ in a.hits] == [d for d, _ in b.hits], msg
+    assert [np.float32(x).tobytes() for _, x in a.hits] == [np.float32(x).tobytes() for _, x in b.hits], msg
+    assert (a.total_hits, a.relation, a.info) == (b.total_hits, b.relation, b.info), msg
+
+
+@pytest.fixture
+def planning_calls(monkeypatch):
+    """Counts of parse_query and compile_query calls made by the engine."""
+    from lucene_spark.search import engine
+
+    calls = {"parse": 0, "compile": 0}
+
+    def counting(name, fn):
+        def wrapped(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(engine, "parse_query", counting("parse", engine.parse_query))
+    monkeypatch.setattr(engine, "compile_query", counting("compile", engine.compile_query))
+    return calls
+
+
+class TestPreparedPlans:
+    """A repeat driver query takes its plan from the reader cache
+    ("prepared", keyed by (query, similarity)): it calls neither
+    parse_query nor compile_query, and its hits, float32 scores, totals,
+    relation and ``info`` are those of a run that planned the query —
+    on the same warm stores (a second searcher with another instance of
+    the same similarity misses) and on a fresh reader."""
+
+    @staticmethod
+    def _check(spark, d, queries, planning_calls, thr=1000, ks=None):
+        from lucene_spark.index.reader import SearchIndex
+        from lucene_spark.search.similarity import BM25Sim
+
+        idx, fresh_idx = SearchIndex(spark, d), SearchIndex(spark, d)
+        s = Searcher(idx, total_hits_threshold=thr)
+        for n, q in enumerate(queries):
+            k = ks[n] if ks else 10
+            msg = f"#{n} {q}"
+            fresh = Searcher(fresh_idx, total_hits_threshold=thr).search(q, k=k)
+            cold = s.search(q, k=k)
+            before = idx.cache.stats()["prepared"]
+            calls = dict(planning_calls)
+            hit = s.search(q, k=k)
+            after = idx.cache.stats()["prepared"]
+            assert planning_calls == calls, msg
+            assert (after["hits"] - before["hits"], after["misses"] - before["misses"]) == (1, 0), msg
+            planned = Searcher(idx, total_hits_threshold=thr, similarity=BM25Sim()).search(q, k=k)
+            assert idx.cache.stats()["prepared"]["misses"] == after["misses"] + 1, msg
+            for other in (cold, planned, fresh):
+                _same_topdocs(hit, other, msg)
+
+    @pytest.mark.parametrize("which", ["fixture", "nopos", "writer"])
+    def test_generated_wand_queries(self, spark, index_dir, nopos_index, writer_index, which, planning_calls):
+        from lucene_spark.index.reader import SearchIndex
+
+        d = {"fixture": index_dir, "nopos": nopos_index, "writer": writer_index}[which]
+        idx = SearchIndex(spark, d)
+        universe = idx.all_doc_ids()
+        dfs = {r["term"]: r["df"] for r in idx.postings.groupBy("term").agg({"df": "sum"})
+               .withColumnRenamed("sum(df)", "df").collect()}
+        ranked = sorted((t for t in dfs if ":" not in t), key=lambda t: (-dfs[t], t))
+        rng = np.random.default_rng(20261020)
+        vocab = ranked[:6] + [str(t) for t in rng.choice(ranked[6:], min(8, len(ranked) - 6), replace=False)]
+        gen = [(q, thr, k) for q, _tombs, thr, k in _wand_queries(rng, np.asarray(vocab), universe, 12)]
+        for thr in sorted({t for _, t, _ in gen}):
+            qs = [(q, k) for q, t, k in gen if t == thr]
+            self._check(spark, d, [q for q, _ in qs], planning_calls, thr=thr, ks=[k for _, k in qs])
+
+    def test_query_shapes(self, spark, index_dir, planning_calls):
+        from lucene_spark.search.intervals import IMaxGaps, ITerm, IUnordered
+
+        queries = [
+            "return",
+            "return AND if",
+            "return OR if OR class",
+            '"return if"',
+            '"return if"~3',
+            A.SpanNearQuery(("return", "if"), slop=4, in_order=True),
+            A.IntervalQuery(IMaxGaps(6, IUnordered((ITerm("return"), ITerm("if"))))),
+            "ret*",
+            "+return -if +lang:python",
+            A.BooleanQuery(  # WAND with a FILTER doc set
+                (
+                    (A.Occur.SHOULD, A.TermQuery("return")),
+                    (A.Occur.SHOULD, A.TermQuery("if")),
+                    (A.Occur.FILTER, A.FieldValueQuery("lang", "java")),
+                )
+            ),
+        ]
+        self._check(spark, index_dir, queries, planning_calls, thr=10)
+
+    def test_every_driver_entry_point_reuses_the_plan(self, spark, index_dir, planning_calls):
+        from lucene_spark.index.reader import SearchIndex
+
+        idx = SearchIndex(spark, index_dir)
+        s = Searcher(idx)
+        q = "+return -if +lang:python"
+        td = s.search(q, k=5)
+        calls = dict(planning_calls)
+        before = idx.cache.stats()["prepared"]
+        assert s.search_after(td.hits[1], q, k=3).hits == td.hits[2:5]
+        assert s.count(q) == td.total_hits
+        assert s.explain(q, td.hits[0][0])["match"]
+        after = idx.cache.stats()["prepared"]
+        assert (after["hits"] - before["hits"], after["misses"]) == (3, before["misses"])
+        # count() still analyzes for its df shortcut; nothing compiles
+        assert planning_calls["compile"] == calls["compile"]
+
+    def test_similarities_get_their_own_plans(self, spark, index_dir):
+        from lucene_spark.index.reader import SearchIndex
+
+        idx, fresh = SearchIndex(spark, index_dir), SearchIndex(spark, index_dir)
+        q = "return OR if OR class"
+        bm25, classic = Searcher(idx), Searcher(idx, similarity="classic")
+        for _ in range(2):
+            a, b = bm25.search(q, k=10), classic.search(q, k=10)
+            _same_topdocs(a, Searcher(fresh).search(q, k=10), "bm25")
+            _same_topdocs(b, Searcher(fresh, similarity="classic").search(q, k=10), "classic")
+            assert [x for _, x in a.hits] != [x for _, x in b.hits]
+        st = idx.cache.stats()["prepared"]
+        assert (st["hits"], st["misses"]) == (2, 2)
+
+    def test_unhashable_query_is_planned_every_time(self, spark, index_dir, planning_calls):
+        from lucene_spark.index.reader import SearchIndex
+
+        idx = SearchIndex(spark, index_dir)
+        s = Searcher(idx)
+        q = A.BooleanQuery([(A.Occur.SHOULD, A.TermQuery("return")), (A.Occur.SHOULD, A.TermQuery("if"))])
+        want = s.search(A.BooleanQuery(tuple(q.clauses)), k=10)
+        for _ in range(2):
+            _same_topdocs(s.search(q, k=10), want, "unhashable")
+        assert planning_calls["compile"] == 3
+        assert idx.cache.stats()["prepared"]["hits"] == 0
+
+    def test_distributed_after_driver_finds_its_lazy_conditions(self, spark, index_dir):
+        """A driver search caches a plan with the filter's doc set
+        resolved; a later distributed query of the same string prepares
+        lazily again and registers its lazy filter on the searcher."""
+        from lucene_spark.index.reader import SearchIndex
+
+        s = Searcher(SearchIndex(spark, index_dir))
+        q = "+return -if +lang:python"
+        drv = s.search(q, k=10)
+        assert not s._pred_conds
+        assert s.match_frame(q).count() == drv.total_hits
+        assert s._pred_conds
+        dist = s.search(q, k=10, mode="distributed")
+        assert [d for d, _ in dist.hits] == [d for d, _ in drv.hits]
+        assert [np.float32(x) for _, x in dist.hits] == [np.float32(x) for _, x in drv.hits]
+
+
 class TestSweptRuns:
     """wand_top_k on synthetic multi-chunk stores: whatever leading run
     of its bound order a query finds swept (none, part of a batch,
     several batches, all of it), its hits and ``info`` are the cold
-    run's, and the blocks it reads are swept afterwards."""
+    run's, and the blocks it reads are swept afterwards — for three
+    sources and for one (whose swept run is gathered block by block),
+    with and without a FILTER doc set and tombstones."""
 
     @staticmethod
     def _stores(rng, n_docs, chunk):
@@ -357,25 +516,89 @@ class TestSweptRuns:
             stores.append(TermBlocks.from_rows(rows))
         return stores
 
-    def test_any_swept_run_replays_the_cold_sweep(self):
+    def test_any_swept_run_replays_the_cold_sweep(self, monkeypatch):
+        from lucene_spark.search import wand
         from lucene_spark.search.similarity import norm_inverse_cache
         from lucene_spark.search.wand import PostingSource, wand_top_k
 
+        class Clock:  # one tick per timeout checkpoint (one per batch)
+            t = 0
+
+            def monotonic(self):
+                self.t += 1
+                return self.t
+
+        def run(sources, kw, thr, swept, batches=None):
+            """wand_top_k on the given swept masks; with ``batches``, the
+            partial result of a timeout after that many batches."""
+            for tb, m in zip(stores, swept):
+                tb.swept[:] = m
+            if batches is None:
+                return wand_top_k(sources, 10, thr, **kw)
+            monkeypatch.setattr(wand, "time", Clock())
+            try:
+                return wand_top_k(sources, 10, thr, deadline=batches + 0.5, **kw)
+            finally:
+                monkeypatch.undo()
+
         rng = np.random.default_rng(20261019)
         cache = norm_inverse_cache(np.float32(40.0))
+        n_docs = 20000
+        masks = {
+            "none": {},
+            "masked": {
+                "allowed": np.flatnonzero(rng.random(n_docs) < 0.7),
+                "deleted": np.flatnonzero(rng.random(n_docs) < 0.05),
+            },
+        }
         for thr in (10, 1000, 10**6):  # early, late and no pruning
-            stores = self._stores(rng, 20000, 4096)
-            sources = [PostingSource(np.float32(w), cache, tb) for w, tb in zip((1.0, 2.0, 3.0), stores)]
-            cold = wand_top_k(sources, 10, thr)
-            scanned = [tb.swept.copy() for tb in stores]
-            assert cold[1]["total_intervals"] > 100 and any(m.any() for m in scanned)
-            for trial in range(12):
-                for tb, m in zip(stores, scanned):
-                    tb.swept[:] = m
-                    if trial:  # unsweep a few blocks: the run stops at the first one
-                        tb.swept[rng.integers(len(m), size=trial)] = False
-                assert wand_top_k(sources, 10, thr) == cold, (thr, trial)
-                assert all((tb.swept == m).all() for tb, m in zip(stores, scanned)), (thr, trial)
+            for n_src in (3, 1):
+                for how, kw in masks.items():
+                    stores = self._stores(rng, n_docs, 4096)[:n_src]
+                    sources = [PostingSource(np.float32(w), cache, tb) for w, tb in zip((1.0, 2.0, 3.0), stores)]
+                    unswept = [np.zeros_like(tb.swept) for tb in stores]
+                    # a timeout's partial result batch by batch, then the full run
+                    cold_partial = {j: run(sources, kw, thr, unswept, j) for j in (1, 2, 3)}
+                    cold = run(sources, kw, thr, unswept)
+                    scanned = [tb.swept.copy() for tb in stores]
+                    assert cold[1]["total_intervals"] > 60 and any(m.any() for m in scanned)
+                    for trial in range(12):
+                        swept = [m.copy() for m in scanned]
+                        if trial:  # unsweep a few blocks: the run stops at the first one
+                            for m in swept:
+                                m[rng.integers(len(m), size=trial)] = False
+                        msg = (thr, n_src, how, trial)
+                        assert run(sources, kw, thr, swept) == cold, msg
+                        assert all((tb.swept == m).all() for tb, m in zip(stores, scanned)), msg
+                        for j, want in cold_partial.items():
+                            assert run(sources, kw, thr, swept, j) == want, (*msg, j)
+
+    def test_block_bounds_are_kept_per_similarity_field_and_weight(self):
+        """A store keeps the last query's per-block bounds: a source of
+        the same (similarity, field, weight) reuses them, any other key
+        recomputes, and either way they equal a fresh computation."""
+        from lucene_spark.search.similarity import BM25Stats, ClassicSim, norm_inverse_cache
+        from lucene_spark.search.wand import PostingSource
+
+        tb = self._stores(np.random.default_rng(3), 20000, 4096)[0]
+        cache = norm_inverse_cache(np.float32(40.0))
+        classic = ClassicSim()
+        classic_table = classic.table(BM25Stats(doc_count=20000, sum_total_term_freq=800000))
+        first = PostingSource(np.float32(2.0), cache, tb)
+        again = PostingSource(np.float32(2.0), cache, tb)
+        assert again.block_ub is first.block_ub
+        fresh = first._block_ub()
+        assert fresh is not first.block_ub and np.array_equal(fresh, first.block_ub)
+        assert fresh.max() > 0
+        for other in (
+            PostingSource(np.float32(3.0), cache, tb),
+            PostingSource(np.float32(2.0), cache, tb, field="title"),
+            PostingSource(np.float32(2.0), classic_table, tb, sim=classic),
+        ):
+            assert other.block_ub is not first.block_ub
+            assert np.array_equal(other.block_ub, other._block_ub())
+        assert not np.array_equal(PostingSource(np.float32(3.0), cache, tb).block_ub, first.block_ub)
+        assert not first.block_ub.flags.writeable
 
 
 class TestMissingPositions:
