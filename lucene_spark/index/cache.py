@@ -29,8 +29,6 @@ def nbytes(value) -> int:
         return 8  # an Enum member (ast.Occur) is a shared singleton: one reference
     if isinstance(value, (list, tuple)):  # a collected Row is a tuple
         return sum(nbytes(v) for v in value)
-    if isinstance(value, dict):  # per-field norm tables
-        return sum(nbytes(k) + nbytes(v) for k, v in value.items())
     if dataclasses.is_dataclass(value):  # PostingList, query ASTs, compiled specs
         return sum(nbytes(v) for v in vars(value).values())
     return OPAQUE_BYTES

@@ -6,7 +6,8 @@ Query lifecycle (mirrors SURVEY §3.1 / IndexSearcher.java:451-492):
    (Catalyst predicate scan on term_stats — JVM-side)
 3. Weight creation: fetch GLOBAL df/ttf + collection stats, fold
    boosts, build the float32 norm-inverse cache. Steps 1-3 of a driver
-   query are one reader cache entry ("prepared"): a repeat skips them.
+   query are one reader cache entry ("prepared") and the norm tables
+   are built once per searcher: a repeat skips them.
 4. Execution:
    - driver mode: posting rows of the query's terms are point-read
      (partition-pruned parquet filter), kernels score on the driver.
@@ -90,6 +91,8 @@ class Searcher:
         # PredValueScoreQuery key → (Catalyst cond, [value Columns])
         # (feature / distance-feature queries, same lazy contract)
         self._val_conds: dict[tuple, tuple] = {}
+        # (stats, norm tables) of the last _norm_caches call
+        self._norms = None
 
     def _stats_by_field(self):
         """field → BM25Stats for non-primary tokenized fields (None for
@@ -103,13 +106,26 @@ class Searcher:
         """ChunkContext cache argument: plain array (single field) or
         {field: cache} dict with "" = primary (multi-field). The table
         is similarity-specific (norm-inverse cache for BM25, lengthNorm
-        table for TF-IDF, ln(mu/(len+mu)) for LMDirichlet, ...)."""
+        table for TF-IDF, ln(mu/(len+mu)) for LMDirichlet, ...). Built
+        once per searcher: the similarity and the reader's stats do not
+        change, so every query shares the one result, read-only."""
+        if self._norms is not None and self._norms[0] == stats:
+            return self._norms[1]
         sbf = self._stats_by_field()
         if not sbf:
-            return self.sim.table(stats)
-        caches = {"": self.sim.for_field("").table(stats)}
-        for f, st in sbf.items():
-            caches[f] = self.sim.for_field(f).table(st)
+            caches = self.sim.table(stats)
+        else:
+            caches = {"": self.sim.for_field("").table(stats)}
+            for f, st in sbf.items():
+                caches[f] = self.sim.for_field(f).table(st)
+        tables = [caches]
+        while tables:
+            t = tables.pop()
+            if isinstance(t, np.ndarray):
+                t.flags.writeable = False
+            else:  # a field → table dict, or MultiSim's tuple of tables
+                tables.extend(t.values() if isinstance(t, dict) else t)
+        self._norms = (stats, caches)
         return caches
 
     # ---- query preparation -------------------------------------------------
@@ -654,19 +670,13 @@ class Searcher:
         no separate term_stats job; a first-seen driver query is one
         job, a repeat none. Either way df/ttf come from the reader's
         term_stats cache. A repeat query skips parse, analysis, rewrite
-        and compile: its plan is a reader cache entry (see
-        ``_prepare``)."""
-        return self._prepare(query, collect_rows, lazy_docsets)[:4]
-
-    def _prepare(self, query, collect_rows: bool = False, lazy_docsets: bool = False):
-        """``prepare`` plus the norm tables of the plan's stats. The
-        plan — the rewritten query, its spec, the stats, its sorted
-        terms and the norm tables — is a pure function of (query,
-        similarity) for the reader's lifetime, so it is cached per
-        reader ("prepared"); a hit only reads the terms' rows (a
-        "rows" hit). Lazy (distributed) preparation is not cached: it
-        registers the query's lazy conditions on this searcher, and
-        its Spark plan is cached downstream ("plan")."""
+        and compile: the plan — the rewritten query, its spec, the stats
+        and its sorted terms — is a pure function of (query, similarity)
+        for the reader's lifetime, so it is cached per reader
+        ("prepared"), and a hit only reads the terms' rows (a "rows"
+        hit). Lazy (distributed) preparation is not cached: it registers
+        the query's lazy conditions on this searcher, and its Spark plan
+        is cached downstream ("plan")."""
         key = None if lazy_docsets else (query, self.sim)
         plan = MISS
         if key is not None:
@@ -675,9 +685,8 @@ class Searcher:
             except TypeError:  # unhashable query shape: skip caching
                 key = None
         if plan is not MISS:
-            q, spec, stats, terms, norms = plan
-            rows_by_term = self.index.collect_rows(terms) if collect_rows else None
-            return q, spec, stats, rows_by_term, norms
+            q, spec, stats, terms = plan
+            return q, spec, stats, self.index.collect_rows(terms) if collect_rows else None
         q = A.rewrite(self._expand_multiterm(self._analyze(query), lazy_docsets))
         terms = sorted(A.extract_terms(q))
         stats = self.index.stats
@@ -691,20 +700,19 @@ class Searcher:
         term_ttf = {t: ttf for t, (_, ttf) in tstats.items()} if self.sim.needs_ttf else None
         sbf = self._stats_by_field()
         spec = compile_query(q, stats, term_df, stats_by_field=sbf, sim=self.sim, term_ttf=term_ttf)
-        norms = self._norm_caches(stats)
         if key is not None:
-            # every later query shares the plan: its tables are read-only
-            self.index.cache.put("prepared", key, (q, spec, stats, tuple(terms), _read_only(norms)))
-        return q, spec, stats, rows_by_term, norms
+            self.index.cache.put("prepared", key, (q, spec, stats, tuple(terms)))
+        return q, spec, stats, rows_by_term
 
     # ---- search -------------------------------------------------------------
 
     def search(self, query: str | A.Query, k: int = 10, mode: str = "driver") -> TopDocs:
-        q, spec, _stats, rows, cache = self._prepare(
+        q, spec, stats, rows = self.prepare(
             query, collect_rows=(mode == "driver"), lazy_docsets=(mode == "distributed")
         )
         if isinstance(spec, NoneSpec) or k <= 0:
             return TopDocs([], 0, "EQUAL_TO", {})
+        cache = self._norm_caches(stats)
         if mode == "distributed":
             return self._search_distributed(spec, k, cache, plan_key=q)
         if self._is_pure_term_disjunction(spec):
@@ -898,10 +906,11 @@ class Searcher:
                 "doc order no longer matches the index sort — force_merge "
                 "and rebuild with index_sort, or use search()/match_frame"
             )
-        _q, spec, _stats, rows, cache = self._prepare(query, collect_rows=True)
+        q, spec, stats, rows = self.prepare(query, collect_rows=True)
         info: dict = {"index_sort": sort_spec}
         if isinstance(spec, NoneSpec) or k <= 0:
             return TopDocs([], 0, "EQUAL_TO", info)
+        cache = self._norm_caches(stats)
         dpc = int(index.manifest.get("docs_per_chunk", 1 << 17))
         flags = _streams(spec)
         all_ids = index.all_doc_ids() if _needs_all_docs(spec) else None
@@ -1071,10 +1080,10 @@ class Searcher:
         if after is None:
             return self.search(query, k=k)
         after_doc, after_score = int(after[0]), np.float32(after[1])
-        _q, spec, _stats, rows, cache = self._prepare(query, collect_rows=True)
+        q, spec, stats, rows = self.prepare(query, collect_rows=True)
         if isinstance(spec, NoneSpec) or k <= 0:
             return TopDocs([], 0, "EQUAL_TO", {})
-        ctx = self._driver_context(spec, cache, rows)
+        ctx = self._driver_context(spec, self._norm_caches(stats), rows)
         docs, scores = self._live_matches(spec, ctx)
         mask = (scores < after_score) | ((scores == after_score) & (docs > after_doc))
         return TopDocs(
@@ -1086,10 +1095,10 @@ class Searcher:
         (match, value, description, details) for one document."""
         from lucene_spark.search.explain import explain_spec
 
-        _q, spec, _stats, rows, cache = self._prepare(query, collect_rows=True)
+        q, spec, stats, rows = self.prepare(query, collect_rows=True)
         if isinstance(spec, NoneSpec):
             return {"match": False, "value": 0.0, "description": "MatchNoDocsQuery", "details": []}
-        ctx = self._driver_context(spec, cache, rows)
+        ctx = self._driver_context(spec, self._norm_caches(stats), rows)
         return explain_spec(spec, ctx, int(doc_id))
 
     def doc(self, doc_id: int) -> dict | None:
@@ -1136,10 +1145,10 @@ class Searcher:
             return self.match_frame(query).count()
         # prepare() re-analyzes from the pristine query (stemming is
         # not guaranteed idempotent, so never feed q0 back through)
-        _q, spec, _stats, rows, cache = self._prepare(query, collect_rows=True)
+        q, spec, stats, rows = self.prepare(query, collect_rows=True)
         if isinstance(spec, NoneSpec):
             return 0
-        ctx = self._driver_context(spec, cache, rows)
+        ctx = self._driver_context(spec, self._norm_caches(stats), rows)
         docs, _ = self._live_matches(spec, ctx)
         return len(docs)
 
@@ -1213,8 +1222,8 @@ class Searcher:
 
     def _prepared_spec(self, query):
         """prepare() with lazy doc sets (the distributed contract)."""
-        _q, spec, _stats, _rows, cache = self._prepare(query, lazy_docsets=True)
-        return spec, cache
+        _q, spec, stats, _rows = self.prepare(query, lazy_docsets=True)
+        return spec, self._norm_caches(stats)
 
     def _distributed_plan(self, spec, k: int | None, cache):
         """Build the chunked scoring plan. Returns ("topdocs", TopDocs)
@@ -1512,17 +1521,6 @@ class Searcher:
             score_chunk, schema="chunk_id long, doc_id long, score float, n_matched long"
         )
         return "df", result
-
-
-def _read_only(tables):
-    """``tables`` (a norm table, or a tuple or dict of them) with every
-    array made read-only."""
-    if isinstance(tables, np.ndarray):
-        tables.flags.writeable = False
-    elif isinstance(tables, (tuple, dict)):
-        for t in tables.values() if isinstance(tables, dict) else tables:
-            _read_only(t)
-    return tables
 
 
 def _drop_deleted(docs, scores, deleted):

@@ -185,9 +185,10 @@ class MultiSearcher(Searcher):
             return self._search_distributed_multi(query, k)
         if mode != "driver":
             raise ValueError(f"unknown mode {mode!r}")
-        _q, spec, _stats, _rows, cache = self._prepare(query)
+        q, spec, stats, _ = self.prepare(query, collect_rows=False)
         if isinstance(spec, NoneSpec) or k <= 0:
             return TopDocs([], 0, "EQUAL_TO", {})
+        cache = self._norm_caches(stats)
         return self._search_exhaustive(spec, k, cache, rows_by_term=None)
 
     def _search_distributed_multi(self, query, k: int) -> TopDocs:
@@ -203,7 +204,7 @@ class MultiSearcher(Searcher):
         sub-index's own docs table — never against composite ids."""
         from lucene_spark.search.kernels import DocSetSpec
 
-        _q, spec, _stats, _rows, cache = self._prepare(query, lazy_docsets=True)
+        _q, spec, stats, _ = self.prepare(query, collect_rows=False, lazy_docsets=True)
         if isinstance(spec, NoneSpec) or k <= 0:
             return TopDocs([], 0, "EQUAL_TO", {})
 
@@ -223,6 +224,7 @@ class MultiSearcher(Searcher):
                 "distributed multi-index search needs lazily-resolved filters; "
                 "this query resolved a doc set in composite id space"
             )
+        cache = self._norm_caches(stats)
         hits: list[tuple[int, float]] = []
         total = 0
         for base, ix in zip(self.index.doc_bases, self.index.indexes):
@@ -257,9 +259,9 @@ class MultiSearcher(Searcher):
                 return self.index.term_stats([q0.term]).get(q0.term, (0, 0))[0]
             if isinstance(q0, A.MatchAllDocsQuery):
                 return self.index.stats.doc_count
-        _q, spec, _stats, _rows, cache = self._prepare(query)
+        q, spec, stats, _ = self.prepare(query, collect_rows=False)
         if isinstance(spec, NoneSpec):
             return 0
-        ctx = self._driver_context(spec, cache)
+        ctx = self._driver_context(spec, self._norm_caches(stats))
         docs, _ = self._live_matches(spec, ctx)
         return len(docs)

@@ -97,7 +97,7 @@ def profile(searcher, query, k: int = 10) -> dict:
     rewritten spec, the top-k hits it produced, and the wall time of
     the real (optimized) ``searcher.search`` for comparison."""
     t0 = time.perf_counter()
-    q, spec, _stats, _rows, cache = searcher._prepare(query)
+    q, spec, stats, rows = searcher.prepare(query, collect_rows=False)
     t_prepare = time.perf_counter() - t0
     if isinstance(spec, K.NoneSpec):
         return {
@@ -116,6 +116,7 @@ def profile(searcher, query, k: int = 10) -> dict:
             "total_matched": 0,
             "search_sec": 0.0,
         }
+    cache = searcher._norm_caches(stats)
     t0 = time.perf_counter()
     ctx = searcher._driver_context(spec, cache)
     t_rows = time.perf_counter() - t0

@@ -86,7 +86,7 @@ def repeat_runs(index, searcher, query: str, k: int, n: int) -> list[dict]:
 
     decode_blocks = wand.decode_blocks
     decoded: list[int] = []
-    prepare = searcher._prepare
+    prepare = searcher.prepare
     prepare_s: list[float] = []
 
     def counted(blob, blocks, block_last):
@@ -101,7 +101,7 @@ def repeat_runs(index, searcher, query: str, k: int, n: int) -> list[dict]:
             prepare_s.append(time.perf_counter() - t0)
 
     wand.decode_blocks = counted
-    searcher._prepare = timed_prepare  # search() calls it once per query
+    searcher.prepare = timed_prepare  # search() calls it once per query
     runs = []
     try:
         print(f"repeat: {n} runs on one reader")
@@ -126,7 +126,7 @@ def repeat_runs(index, searcher, query: str, k: int, n: int) -> list[dict]:
                          "decode_blocks_blocks": sum(decoded), "cache": delta})
     finally:
         wand.decode_blocks = decode_blocks
-        del searcher._prepare
+        del searcher.prepare
     return runs
 
 

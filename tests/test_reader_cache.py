@@ -33,7 +33,6 @@ class TestNbytes:
         assert nbytes(PL(a, [a[:4], a[4:]])) == 160
         assert nbytes(None) == 8 and nbytes((3, 4)) == 16
         assert nbytes([]) == 0
-        assert nbytes({"": a, "title": a[:2]}) == 80 + 5 + 16
 
     def test_parsed_queries_charged_their_size(self):
         """An Enum member (ast.Occur) is a shared singleton: a parsed
@@ -286,7 +285,7 @@ class TestReaderCacheOnIndex:
                         stores += 1
                     if ns == "prepared":
                         # a plan is charged what it holds: its query,
-                        # spec and 256-entry norm table, no phantom bytes
+                        # spec, stats and terms, no phantom bytes
                         assert size < 4 << 10, (_t, size)
                         plans += 1
         assert sum(v["evictions"] for v in small.cache.stats().values()) > 0
