@@ -354,17 +354,4 @@ def _walk(q: A.Query, syn: SynonymMap, field: str) -> A.Query:
         return A.MultiPhraseQuery(
             tuple(_slot_alts(s, syn) for s in q.positions), slop=q.slop, field=q.field
         )
-    if isinstance(q, A.BooleanQuery):
-        return A.BooleanQuery(
-            tuple((occ, _walk(sub, syn, field)) for occ, sub in q.clauses),
-            q.minimum_should_match,
-        )
-    if isinstance(q, A.DisjunctionMaxQuery):
-        return A.DisjunctionMaxQuery(
-            tuple(_walk(sub, syn, field) for sub in q.queries), q.tie_breaker
-        )
-    if isinstance(q, A.BoostQuery):
-        return A.BoostQuery(_walk(q.query, syn, field), q.boost)
-    if isinstance(q, A.ConstantScoreQuery):
-        return A.ConstantScoreQuery(_walk(q.query, syn, field))
-    return q
+    return A.map_children(q, lambda sub: _walk(sub, syn, field))

@@ -16,7 +16,7 @@ microseconds before any Spark plan is built.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from enum import Enum
 from typing import Optional
 
@@ -807,9 +807,7 @@ def _rewrite_once(q: Query) -> Query:
         rq = try_rewrite(q.dfa)
         if rq is not None:
             if q.field != "content" and hasattr(rq, "field"):
-                from dataclasses import replace as _rep
-
-                rq = _rep(rq, field=q.field)
+                rq = replace(rq, field=q.field)
             return rq
     return q
 
@@ -839,3 +837,22 @@ def extract_terms(q: Query) -> set[str]:
     if isinstance(q, TermAutomatonQuery):
         return set(q.dfa.real_terms())
     return set()
+
+
+def map_children(q: Query, fn) -> Query | None:
+    """Rebuild a compound node (Boolean, Boost, ConstantScore,
+    DisjunctionMax) over ``fn`` of each child — the one child walk every
+    AST rebuilder shares. A child mapped to None is dropped, and a node
+    whose children were all dropped becomes None (an all-stopword
+    clause analyzes away, QueryBuilder returning null). Any other node
+    is returned as is."""
+    if isinstance(q, BooleanQuery):
+        kids = tuple((o, c) for o, c in ((o, fn(s)) for o, s in q.clauses) if c is not None)
+        return BooleanQuery(kids, q.minimum_should_match) if kids or not q.clauses else None
+    if isinstance(q, DisjunctionMaxQuery):
+        subs = tuple(c for c in map(fn, q.queries) if c is not None)
+        return DisjunctionMaxQuery(subs, q.tie_breaker) if subs or not q.queries else None
+    if isinstance(q, (BoostQuery, ConstantScoreQuery)):
+        c = fn(q.query)
+        return replace(q, query=c) if c is not None else None
+    return q

@@ -37,15 +37,21 @@ from lucene_spark.index.cache import MISS
 from lucene_spark.index.reader import MAX_EXPANSION, SearchIndex, decode_row
 from lucene_spark.search import ast as A
 from lucene_spark.search.kernels import (
+    AllSpec,
     BoolSpec,
     ChunkContext,
+    DocSetSpec,
     NoneSpec,
+    PredSpec,
     TermSpec,
+    ValueSpec,
     compile_query,
     evaluate,
     leaf_context,
+    read_streams,
     spec_terms,
     top_k_from_arrays,
+    walk,
 )
 from lucene_spark.search.parser import parse_query
 from lucene_spark.search.wand import PostingSource, TermBlocks, conjunction_top_k, wand_top_k
@@ -319,17 +325,7 @@ class Searcher:
             if len(toks) == 1:
                 return A.TermQuery(key(q.field, toks[0]))
             return A.PhraseQuery(tuple(key(q.field, t) for t in toks))
-        if isinstance(q, A.BooleanQuery):
-            return A.BooleanQuery(
-                tuple((o, self._fieldize(s)) for o, s in q.clauses), q.minimum_should_match
-            )
-        if isinstance(q, A.BoostQuery):
-            return A.BoostQuery(self._fieldize(q.query), q.boost)
-        if isinstance(q, A.ConstantScoreQuery):
-            return A.ConstantScoreQuery(self._fieldize(q.query))
-        if isinstance(q, A.DisjunctionMaxQuery):
-            return A.DisjunctionMaxQuery(tuple(self._fieldize(s) for s in q.queries), q.tie_breaker)
-        return q
+        return A.map_children(q, self._fieldize)
 
     def _stem_query(self, q: A.Query) -> A.Query:
         """Apply the index's analyzer filter chain to query-side terms
@@ -443,27 +439,7 @@ class Searcher:
         if isinstance(q, A.TermInSetQuery):
             ts = flat(q.terms)
             return A.TermInSetQuery(ts, q.field) if ts else None
-        if isinstance(q, A.BooleanQuery):
-            clauses = tuple(
-                (o, s)
-                for o, s in ((o, self._analyze_node(s, mex)) for o, s in q.clauses)
-                if s is not None
-            )
-            if not clauses:
-                return None
-            return A.BooleanQuery(clauses, q.minimum_should_match)
-        if isinstance(q, A.BoostQuery):
-            s = self._analyze_node(q.query, mex)
-            return A.BoostQuery(s, q.boost) if s is not None else None
-        if isinstance(q, A.ConstantScoreQuery):
-            s = self._analyze_node(q.query, mex)
-            return A.ConstantScoreQuery(s) if s is not None else None
-        if isinstance(q, A.DisjunctionMaxQuery):
-            subs = tuple(
-                s for s in (self._analyze_node(s, mex) for s in q.queries) if s is not None
-            )
-            return A.DisjunctionMaxQuery(subs, q.tie_breaker) if subs else None
-        return q
+        return A.map_children(q, lambda s: self._analyze_node(s, mex))
 
     def _stem_repeat_query(self, q: A.Query) -> A.Query:
         """Query-side graph-token rewrite for a stem_repeat index
@@ -496,15 +472,7 @@ class Searcher:
                     tuple(dict.fromkeys(a for t in s for a in slot(t))) for s in x.positions
                 )
                 return replace(x, positions=slots)
-            if isinstance(x, A.BooleanQuery):
-                return replace(x, clauses=tuple((o, walk(s)) for o, s in x.clauses))
-            if isinstance(x, A.BoostQuery):
-                return replace(x, query=walk(x.query))
-            if isinstance(x, A.ConstantScoreQuery):
-                return replace(x, query=walk(x.query))
-            if isinstance(x, A.DisjunctionMaxQuery):
-                return replace(x, queries=tuple(walk(s) for s in x.queries))
-            return x
+            return A.map_children(x, walk)
 
         return walk(q)
 
@@ -615,20 +583,7 @@ class Searcher:
                 return A.PredValueScoreQuery(kind, params, key)
             docs, vals = self.index.field_doc_values(key, cond, cols)
             return A.DocValueScoreQuery(kind, params, docs, vals)
-        if isinstance(q, A.BooleanQuery):
-            return A.BooleanQuery(
-                tuple((o, self._expand_multiterm(s, lazy_docsets)) for o, s in q.clauses),
-                q.minimum_should_match,
-            )
-        if isinstance(q, A.BoostQuery):
-            return A.BoostQuery(self._expand_multiterm(q.query, lazy_docsets), q.boost)
-        if isinstance(q, A.ConstantScoreQuery):
-            return A.ConstantScoreQuery(self._expand_multiterm(q.query, lazy_docsets))
-        if isinstance(q, A.DisjunctionMaxQuery):
-            return A.DisjunctionMaxQuery(
-                tuple(self._expand_multiterm(s, lazy_docsets) for s in q.queries), q.tie_breaker
-            )
-        return q
+        return A.map_children(q, lambda s: self._expand_multiterm(s, lazy_docsets))
 
     def _analyze(self, query: str | A.Query) -> A.Query:
         """Parse and analyze ``query`` with the index's own chain: the
@@ -730,8 +685,6 @@ class Searcher:
         — the req(filter)+opt(TOP_SCORES) Boolean2ScorerSupplier branch
         — since filtering only removes hits, block-max upper bounds
         stay valid."""
-        from lucene_spark.search.kernels import DocSetSpec
-
         if isinstance(spec, TermSpec):
             return True
         return (
@@ -856,11 +809,13 @@ class Searcher:
     def _driver_context(self, spec, cache, rows_by_term=None) -> ChunkContext:
         """The whole-index kernel context: each term's cached decode is
         its one part (no window), so it reaches the kernels uncopied."""
+        nodes = walk(spec)
+        flags = read_streams(nodes)
         if rows_by_term is not None:
-            plists = self.index.postings_from_rows(rows_by_term, *_streams(spec))
+            plists = self.index.postings_from_rows(rows_by_term, *flags)
         else:
-            plists = self.index.collect_postings(sorted(spec_terms(spec)), *_streams(spec))
-        all_docs = self.index.all_doc_ids() if _needs_all_docs(spec) else None
+            plists = self.index.collect_postings(sorted(spec_terms(spec)), *flags)
+        all_docs = self.index.all_doc_ids() if any(isinstance(n, AllSpec) for n in nodes) else None
         return leaf_context({t: [p] for t, p in plists.items()}, cache, self.sim, all_docs=all_docs)
 
     def _live_matches(self, spec, ctx) -> tuple[np.ndarray, np.ndarray]:
@@ -912,8 +867,9 @@ class Searcher:
             return TopDocs([], 0, "EQUAL_TO", info)
         cache = self._norm_caches(stats)
         dpc = int(index.manifest.get("docs_per_chunk", 1 << 17))
-        flags = _streams(spec)
-        all_ids = index.all_doc_ids() if _needs_all_docs(spec) else None
+        nodes = walk(spec)
+        flags = read_streams(nodes)
+        all_ids = index.all_doc_ids() if any(isinstance(n, AllSpec) for n in nodes) else None
 
         # hot terms: per-chunk rows decoded on demand (the skip); cold
         # terms: one small row, decoded once, sliced per chunk
@@ -931,15 +887,14 @@ class Searcher:
         cold = index.postings_from_rows({t: rows[t] for t in cold_terms}, *flags)
         for t, p in cold.items():
             chunk_ids |= set(np.unique(p.docs // dpc).tolist())
-        for ds in _collect_docsets(spec):
-            d = ds.array
-            chunk_ids |= set(np.unique(d // dpc).tolist())
-        for vs in _collect_eager_valspecs(spec):
-            # feature/distance-feature clauses: docs scored ONLY by the
-            # value source still need their chunks visited, or the scan
-            # would skip them entirely
-            d = np.asarray(vs.docs, dtype=np.int64)
-            chunk_ids |= set(np.unique(d // dpc).tolist())
+        for n in nodes:
+            # doc-set filters and feature/distance-feature clauses: docs
+            # scored ONLY by them still need their chunks visited, or
+            # the scan would skip them entirely
+            if isinstance(n, DocSetSpec):
+                chunk_ids |= set(np.unique(n.array // dpc).tolist())
+            elif isinstance(n, ValueSpec) and n.key is None:
+                chunk_ids |= set(np.unique(np.asarray(n.docs, dtype=np.int64) // dpc).tolist())
         if all_ids is not None:
             chunk_ids |= set(np.unique(all_ids // dpc).tolist())
         ordered_chunks = sorted(chunk_ids)
@@ -1234,10 +1189,11 @@ class Searcher:
         import pyspark.sql.functions as F
 
         index = self.index
+        nodes = walk(spec)
         terms = sorted(spec_terms(spec))
-        preds = _collect_predspecs(spec)
-        vspecs = _collect_valspecs(spec)
-        needs_all = _needs_all_docs(spec)
+        preds = [n for n in nodes if isinstance(n, PredSpec)]
+        vspecs = [n for n in nodes if isinstance(n, ValueSpec) and n.key is not None]
+        needs_all = any(isinstance(n, AllSpec) for n in nodes)
         if not terms and not preds and not vspecs:
             td = self._search_exhaustive(spec, k if k is not None else 1 << 62, cache)
             return "topdocs", td
@@ -1281,7 +1237,7 @@ class Searcher:
             span_keys = set()
             mixed_span = []
         small_terms = [t for t in terms if t not in hot_terms]
-        flags = _streams(spec)
+        flags = read_streams(nodes)
         with_pos, _, with_pay = flags
         # each small term is one whole-term part, sliced per leaf
         small_parts = {
@@ -1322,8 +1278,9 @@ class Searcher:
             for p in ps:
                 docs = p[0] if isinstance(p, tuple) else p.docs
                 small_chunks |= set((docs // dpc).tolist())
-        for ds in _collect_docsets(spec):
-            small_chunks |= {int(x) // dpc for x in ds.docs}
+        for n in nodes:
+            if isinstance(n, DocSetSpec):
+                small_chunks |= {int(x) // dpc for x in n.docs}
         if all_contiguous:
             small_chunks |= set(range((max_doc + dpc - 1) // dpc))
 
@@ -1529,147 +1486,3 @@ def _drop_deleted(docs, scores, deleted):
         return docs, scores
     live = ~np.isin(docs, deleted, assume_unique=False)
     return docs[live], scores[live]
-
-
-def _streams(spec) -> tuple[bool, bool, bool]:
-    """(positions, offsets, payloads): the decode streams ``spec`` reads."""
-    return _has_phrase(spec), False, bool(_payload_terms(spec))
-
-
-def _has_phrase(spec) -> bool:
-    from lucene_spark.search.kernels import (
-        DisMaxSpec,
-        IntervalSpec,
-        MultiPhraseSpec,
-        PayloadSpec,
-        PhraseSpec,
-        SpanNearSpec,
-        TermAutomatonSpec,
-    )
-
-    if isinstance(spec, (PhraseSpec, MultiPhraseSpec, SpanNearSpec, IntervalSpec, TermAutomatonSpec)):
-        return True
-    if isinstance(spec, PayloadSpec):
-        return spec.kind == "phrase"  # positional alignment only for phrase spans
-    if isinstance(spec, BoolSpec):
-        return any(_has_phrase(s) for g in (spec.musts, spec.shoulds, spec.filters, spec.nots) for s in g)
-    if isinstance(spec, DisMaxSpec):
-        return any(_has_phrase(s) for s in spec.subs)
-    if isinstance(spec, tuple) and spec and spec[0] == "const":
-        return _has_phrase(spec[1])
-    return False
-
-
-def _payload_terms(spec) -> set[str]:
-    """Terms whose payload streams a PayloadSpec in the tree needs."""
-    from lucene_spark.search.kernels import DisMaxSpec, PayloadSpec
-
-    if isinstance(spec, PayloadSpec):
-        return set(spec.terms)
-    if isinstance(spec, BoolSpec):
-        out: set[str] = set()
-        for g in (spec.musts, spec.shoulds, spec.filters, spec.nots):
-            for s in g:
-                out |= _payload_terms(s)
-        return out
-    if isinstance(spec, DisMaxSpec):
-        return set().union(*(_payload_terms(s) for s in spec.subs)) if spec.subs else set()
-    if isinstance(spec, tuple) and spec and spec[0] == "const":
-        return _payload_terms(spec[1])
-    return set()
-
-
-def _collect_predspecs(spec) -> list:
-    """All PredSpec nodes (lazy field-filter doc sets) in the tree."""
-    from lucene_spark.search.kernels import DisMaxSpec, PredSpec
-
-    if isinstance(spec, PredSpec):
-        return [spec]
-    if isinstance(spec, BoolSpec):
-        return [
-            d
-            for g in (spec.musts, spec.shoulds, spec.filters, spec.nots)
-            for s in g
-            for d in _collect_predspecs(s)
-        ]
-    if isinstance(spec, DisMaxSpec):
-        return [d for s in spec.subs for d in _collect_predspecs(s)]
-    if isinstance(spec, tuple) and spec and spec[0] == "const":
-        return _collect_predspecs(spec[1])
-    return []
-
-
-def _collect_valspecs(spec) -> list:
-    """All lazy ValueSpec nodes (feature / distance-feature scores)."""
-    from lucene_spark.search.kernels import DisMaxSpec, ValueSpec
-
-    if isinstance(spec, ValueSpec):
-        return [spec] if spec.key is not None else []
-    if isinstance(spec, BoolSpec):
-        return [
-            d
-            for g in (spec.musts, spec.shoulds, spec.filters, spec.nots)
-            for s in g
-            for d in _collect_valspecs(s)
-        ]
-    if isinstance(spec, DisMaxSpec):
-        return [d for s in spec.subs for d in _collect_valspecs(s)]
-    if isinstance(spec, tuple) and spec and spec[0] == "const":
-        return _collect_valspecs(spec[1])
-    return []
-
-
-def _collect_eager_valspecs(spec) -> list:
-    """All EAGER ValueSpec nodes (feature / distance-feature scores
-    with driver-resolved (docs, vals) — the sorted-scan / driver-mode
-    form, as opposed to the key-addressed lazy form the distributed
-    plan ships per chunk)."""
-    from lucene_spark.search.kernels import DisMaxSpec, ValueSpec
-
-    if isinstance(spec, ValueSpec):
-        return [spec] if spec.key is None and spec.docs is not None else []
-    if isinstance(spec, BoolSpec):
-        return [
-            d
-            for g in (spec.musts, spec.shoulds, spec.filters, spec.nots)
-            for s in g
-            for d in _collect_eager_valspecs(s)
-        ]
-    if isinstance(spec, DisMaxSpec):
-        return [d for s in spec.subs for d in _collect_eager_valspecs(s)]
-    if isinstance(spec, tuple) and spec and spec[0] == "const":
-        return _collect_eager_valspecs(spec[1])
-    return []
-
-
-def _collect_docsets(spec) -> list:
-    from lucene_spark.search.kernels import DisMaxSpec, DocSetSpec
-
-    if isinstance(spec, DocSetSpec):
-        return [spec]
-    if isinstance(spec, BoolSpec):
-        return [
-            d
-            for g in (spec.musts, spec.shoulds, spec.filters, spec.nots)
-            for s in g
-            for d in _collect_docsets(s)
-        ]
-    if isinstance(spec, DisMaxSpec):
-        return [d for s in spec.subs for d in _collect_docsets(s)]
-    if isinstance(spec, tuple) and spec and spec[0] == "const":
-        return _collect_docsets(spec[1])
-    return []
-
-
-def _needs_all_docs(spec) -> bool:
-    from lucene_spark.search.kernels import AllSpec
-
-    if isinstance(spec, AllSpec):
-        return True
-    if isinstance(spec, BoolSpec):
-        return any(
-            _needs_all_docs(s) for g in (spec.musts, spec.shoulds, spec.filters, spec.nots) for s in g
-        )
-    if isinstance(spec, tuple) and spec and spec[0] == "const":
-        return _needs_all_docs(spec[1])
-    return False

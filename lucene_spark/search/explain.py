@@ -18,6 +18,7 @@ from lucene_spark.search.kernels import (
     BoolSpec,
     ChunkContext,
     ConstSpec,
+    ConstWrapSpec,
     DisMaxSpec,
     DocSetSpec,
     MultiPhraseSpec,
@@ -118,6 +119,6 @@ def explain_spec(spec, ctx: ChunkContext, doc: int) -> dict:
             d["value"] = 0.0
             details.append(d)
         return _node(matched, v, "sum of:", details)
-    if isinstance(spec, tuple) and spec and spec[0] == "const":
-        return _node(matched, v, "ConstantScore wrapper", [explain_spec(spec[1], ctx, doc)])
+    if isinstance(spec, ConstWrapSpec):
+        return _node(matched, v, "ConstantScore wrapper", [explain_spec(spec.sub, ctx, doc)])
     return _node(matched, v, type(spec).__name__)

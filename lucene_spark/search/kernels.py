@@ -131,6 +131,14 @@ class DisMaxSpec:
 
 
 @dataclass(frozen=True)
+class ConstWrapSpec:
+    """Generic ConstantScoreQuery: ``sub``'s matches, each scored ``boost``."""
+
+    sub: object
+    boost: float
+
+
+@dataclass(frozen=True)
 class PhraseSpec:
     terms: tuple[str, ...]
     weight: float
@@ -268,8 +276,7 @@ def compile_query(
         if isinstance(inner, A.TermQuery):
             return ConstSpec((inner.term,), float(b32)) if term_df.get(inner.term) else NoneSpec()
         # generic: score inner, replace scores by boost
-        sub = _recur(inner, 1.0)
-        return ("const", sub, float(b32))
+        return ConstWrapSpec(_recur(inner, 1.0), float(b32))
     if isinstance(q, A.TermQuery):
         df = term_df.get(q.term, 0)
         if df == 0:
@@ -459,30 +466,59 @@ def compile_query(
     raise TypeError(f"cannot compile {type(q)}")
 
 
-def spec_terms(spec) -> set[str]:
-    if isinstance(spec, (TermSpec,)):
-        return {spec.term}
-    if isinstance(
-        spec,
-        (SynonymSpec, ConstSpec, PhraseSpec, SpanNearSpec, IntervalSpec, PayloadSpec, TermAutomatonSpec),
-    ):
-        return set(spec.terms)
-    if isinstance(spec, MultiPhraseSpec):
-        return {t for slot in spec.slots for t in slot}
+def clauses(spec) -> tuple:
+    """(occur label, child) pairs of a compound spec, () for a leaf —
+    the one child enumeration every tree pass shares (the role of
+    Query.visit / QueryVisitor.getSubVisitor(Occur, parent))."""
     if isinstance(spec, BoolSpec):
-        out: set[str] = set()
-        for group in (spec.musts, spec.shoulds, spec.filters, spec.nots):
-            for s in group:
-                out |= spec_terms(s)
-        return out
+        return (
+            tuple(("MUST", s) for s in spec.musts)
+            + tuple(("SHOULD", s) for s in spec.shoulds)
+            + tuple(("FILTER", s) for s in spec.filters)
+            + tuple(("MUST_NOT", s) for s in spec.nots)
+        )
     if isinstance(spec, DisMaxSpec):
-        out = set()
-        for s in spec.subs:
-            out |= spec_terms(s)
-        return out
-    if isinstance(spec, tuple) and spec and spec[0] == "const":
-        return spec_terms(spec[1])
-    return set()
+        return tuple(("DISJUNCT", s) for s in spec.subs)
+    if isinstance(spec, ConstWrapSpec):
+        return (("FILTER", spec.sub),)  # ConstantScoreQuery.visit: FILTER
+    return ()
+
+
+def walk(spec) -> list:
+    """Every node of the spec tree, in pre-order."""
+    out, stack = [], [spec]
+    while stack:
+        node = stack.pop()
+        out.append(node)
+        stack.extend(child for _, child in reversed(clauses(node)))
+    return out
+
+
+_POSITIONAL = (PhraseSpec, MultiPhraseSpec, SpanNearSpec, IntervalSpec, TermAutomatonSpec)
+
+
+def spec_terms(spec) -> set[str]:
+    """The terms whose postings the tree's leaves read."""
+    out: set[str] = set()
+    for n in walk(spec):
+        if isinstance(n, TermSpec):
+            out.add(n.term)
+        elif isinstance(n, MultiPhraseSpec):
+            out.update(t for slot in n.slots for t in slot)
+        elif isinstance(n, (SynonymSpec, ConstSpec, PayloadSpec) + _POSITIONAL):
+            out.update(n.terms)
+    return out
+
+
+def read_streams(nodes) -> tuple[bool, bool, bool]:
+    """(positions, offsets, payloads): the decode streams ``nodes`` (a
+    :func:`walk`) read. A payload span aligns positions only for
+    phrase spans."""
+    positions = any(
+        isinstance(n, _POSITIONAL) or (isinstance(n, PayloadSpec) and n.kind == "phrase")
+        for n in nodes
+    )
+    return positions, False, any(isinstance(n, PayloadSpec) and n.terms for n in nodes)
 
 
 # ---- evaluation --------------------------------------------------------------
@@ -728,9 +764,9 @@ def evaluate(spec, ctx: ChunkContext) -> tuple[np.ndarray, np.ndarray]:
             return EMPTY_I, EMPTY_F
         docs = np.unique(np.concatenate(parts))
         return docs, np.full(len(docs), np.float32(spec.boost), dtype=np.float32)
-    if isinstance(spec, tuple) and spec and spec[0] == "const":
-        docs, _ = evaluate(spec[1], ctx)
-        return docs, np.full(len(docs), np.float32(spec[2]), dtype=np.float32)
+    if isinstance(spec, ConstWrapSpec):
+        docs, _ = evaluate(spec.sub, ctx)
+        return docs, np.full(len(docs), np.float32(spec.boost), dtype=np.float32)
     if isinstance(spec, DisMaxSpec):
         subs = [evaluate(s, ctx) for s in spec.subs]
         subs = [s for s in subs if len(s[0])]

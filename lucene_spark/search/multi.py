@@ -202,24 +202,13 @@ class MultiSearcher(Searcher):
         composite weight/norm caches, which are shared across leaves.
         Field filters stay lazy (PredSpec), resolving against each
         sub-index's own docs table — never against composite ids."""
-        from lucene_spark.search.kernels import DocSetSpec
+        from lucene_spark.search.kernels import DocSetSpec, walk
 
         _q, spec, stats, _ = self.prepare(query, collect_rows=False, lazy_docsets=True)
         if isinstance(spec, NoneSpec) or k <= 0:
             return TopDocs([], 0, "EQUAL_TO", {})
 
-        def has_docset(s) -> bool:
-            if isinstance(s, DocSetSpec):
-                return True
-            for grp in ("musts", "shoulds", "filters", "nots", "subs"):
-                for x in getattr(s, grp, ()) or ():
-                    if has_docset(x):
-                        return True
-            if isinstance(s, tuple) and s and s[0] == "const":
-                return has_docset(s[1])
-            return False
-
-        if has_docset(spec):
+        if any(isinstance(n, DocSetSpec) for n in walk(spec)):
             raise ValueError(
                 "distributed multi-index search needs lazily-resolved filters; "
                 "this query resolved a doc set in composite id space"

@@ -41,6 +41,7 @@ from lucene_spark.search.ast import (
     TermQuery,
     TermRangeQuery,
     WildcardQuery,
+    map_children,
     rewrite,
 )
 
@@ -389,13 +390,7 @@ def parse_multifield(
     def walk(q: Query) -> Query:
         if isinstance(q, _MULTIFIELD_LEAVES) and q.field == "content":
             return fan(q)
-        if isinstance(q, BooleanQuery):
-            return replace(
-                q, clauses=tuple((occ, walk(sub)) for occ, sub in q.clauses)
-            )
-        if isinstance(q, BoostQuery):
-            return replace(q, query=walk(q.query))
-        return q
+        return map_children(q, walk)
 
     parsed = parse_query(s, analyzer=analyzer)
     return rewrite(walk(parsed))

@@ -40,21 +40,6 @@ from lucene_spark.search.kernels import evaluate, top_k_from_arrays
 __all__ = ["profile"]
 
 
-def _children(spec) -> list[tuple[str, object]]:
-    """(relation label, child spec) pairs, mirroring the rewritten
-    query tree like QueryProfilerTree's children."""
-    if isinstance(spec, K.BoolSpec):
-        return (
-            [("MUST", s) for s in spec.musts]
-            + [("SHOULD", s) for s in spec.shoulds]
-            + [("FILTER", s) for s in spec.filters]
-            + [("MUST_NOT", s) for s in spec.nots]
-        )
-    if isinstance(spec, K.DisMaxSpec):
-        return [("DISJUNCT", s) for s in spec.subs]
-    return []
-
-
 def _describe(spec) -> str:
     name = type(spec).__name__.removesuffix("Spec")
     for attr in ("term", "terms"):
@@ -63,16 +48,17 @@ def _describe(spec) -> str:
             toks = [v] if isinstance(v, str) else list(v)
             return f"{name}({' '.join(map(str, toks[:6]))}{'…' if len(toks) > 6 else ''})"
     if isinstance(spec, K.BoolSpec):
-        n = sum(map(len, (spec.musts, spec.shoulds, spec.filters, spec.nots)))
         msm = f", msm={spec.msm}" if spec.msm else ""
-        return f"Bool({n} clauses{msm})"
+        return f"Bool({len(K.clauses(spec))} clauses{msm})"
     if isinstance(spec, K.DisMaxSpec):
         return f"DisMax({len(spec.subs)} subs, tie={spec.tie})"
+    if isinstance(spec, K.ConstWrapSpec):
+        return f"ConstantScore(boost={spec.boost:g})"
     return name
 
 
 def _profile_node(spec, ctx, label: str) -> dict:
-    kids = [_profile_node(s, ctx, rel) for rel, s in _children(spec)]
+    kids = [_profile_node(s, ctx, rel) for rel, s in K.clauses(spec)]
     t0 = time.perf_counter()
     docs, _scores = evaluate(spec, ctx)
     total = time.perf_counter() - t0

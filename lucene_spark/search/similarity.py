@@ -754,23 +754,22 @@ class PerFieldSim(Similarity):
 
 BM25_SIM = BM25Sim()
 
+# one shared instance per name: the named models hold only their
+# constructor parameters, and the reader cache's plan keys and the
+# block-bound slots compare similarities by identity, so every searcher
+# of a name must hold the same object
 _SIMILARITIES = {
-    "bm25": BM25Sim,
-    "classic": ClassicSim,
-    "sweetspot": SweetSpotSim,
-    "boolean": BooleanSim,
-    "lmdirichlet": LMDirichletSim,
-    "lmjelinekmercer": LMJelinekMercerSim,
-    "dfr": DFRSim,
-    "dfi": DFISim,
-    "ib": IBSim,
-    "indri": IndriDirichletSim,
-    "axiomaticf1exp": lambda: AxiomaticSim("f1exp"),
-    "axiomaticf1log": lambda: AxiomaticSim("f1log"),
-    "axiomaticf2exp": lambda: AxiomaticSim("f2exp"),
-    "axiomaticf2log": lambda: AxiomaticSim("f2log"),
-    "axiomaticf3exp": lambda: AxiomaticSim("f3exp"),
-    "axiomaticf3log": lambda: AxiomaticSim("f3log"),
+    "bm25": BM25_SIM,
+    "classic": ClassicSim(),
+    "sweetspot": SweetSpotSim(),
+    "boolean": BooleanSim(),
+    "lmdirichlet": LMDirichletSim(),
+    "lmjelinekmercer": LMJelinekMercerSim(),
+    "dfr": DFRSim(),
+    "dfi": DFISim(),
+    "ib": IBSim(),
+    "indri": IndriDirichletSim(),
+    **{f"axiomatic{v}": AxiomaticSim(v) for v in ("f1exp", "f1log", "f2exp", "f2log", "f3exp", "f3log")},
 }
 
 
@@ -781,6 +780,6 @@ def get_similarity(sim) -> Similarity:
     if sim is None:
         return BM25_SIM
     try:
-        return _SIMILARITIES[sim]()
+        return _SIMILARITIES[sim]
     except KeyError:
         raise ValueError(f"unknown similarity {sim!r}; one of {sorted(_SIMILARITIES)}") from None

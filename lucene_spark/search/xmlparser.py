@@ -185,13 +185,9 @@ def _user_query(e, field, default_field, analyzer):
         # UserInputQueryBuilder parses against the element's field:
         # re-home default-field leaves (same walk as parse_multifield)
         def walk(x):
-            if isinstance(x, A.BooleanQuery):
-                return replace(x, clauses=tuple((o, walk(s)) for o, s in x.clauses))
-            if isinstance(x, A.BoostQuery):
-                return replace(x, query=walk(x.query))
             if getattr(x, "field", None) == "content":
                 return replace(x, field=f)
-            return x
+            return A.map_children(x, walk)
 
         q = walk(q)
     return _boost(e, q)

@@ -1,7 +1,8 @@
 """One-command verification: the full pytest suite, the Spark-free
 benchmark-tracer self-tests, every gate query vs its DuckDB oracle, the
 physical-plan audit, and (optionally) the two-parallelism scaling pair
-— one JSON summary line, one exit code.
+— one JSON summary line (with ``loc``, the line count of
+``lucene_spark/**/*.py``), one exit code.
 
 The driver samples ~50 gates per round; this entry proves ALL of them
 plus plans the way the round-3 judge did, so every round ships with a
@@ -40,7 +41,9 @@ def main() -> int:
     ap.add_argument("--skip-pytest", action="store_true")
     ap.add_argument("--ab-repo", default=None, help="run the interleaved positional A/B vs this checkout")
     args = ap.parse_args()
-    summary: dict = {}
+    # lines of library code, the size figure each change records
+    loc = sum(len(f.read_bytes().splitlines()) for f in (REPO / "lucene_spark").rglob("*.py"))
+    summary: dict = {"loc": loc}
     ok = True
 
     if not args.skip_pytest:

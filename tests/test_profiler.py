@@ -66,6 +66,19 @@ class TestProfileTree:
         # union is at least as large as either disjunct
         assert p["tree"]["matched"] >= max(c["matched"] for c in p["tree"]["children"])
 
+    def test_constant_score_wrapper(self, searcher):
+        inner = A.BooleanQuery(
+            ((A.Occur.MUST, A.TermQuery("return")), (A.Occur.SHOULD, A.TermQuery("if")))
+        )
+        p = profile(searcher, A.BoostQuery(A.ConstantScoreQuery(inner), 2.0), k=10)
+        t = p["tree"]
+        assert (t["type"], t["description"]) == ("ConstWrapSpec", "ConstantScore(boost=2)")
+        [child] = t["children"]
+        assert (child["relation"], child["type"]) == ("FILTER", "BoolSpec")
+        assert [c["relation"] for c in child["children"]] == ["MUST", "SHOULD"]
+        assert t["matched"] == child["matched"] > 0
+        assert {s for _, s in p["hits"]} == {2.0}
+
     def test_term_and_phrase_descriptions(self, searcher):
         p = profile(searcher, '"return if"', k=5)
         assert "return if" in p["tree"]["description"]

@@ -463,6 +463,23 @@ class TestPreparedPlans:
             assert s._norm_caches(idx.stats) is t and not t.flags.writeable
         assert not np.array_equal(*tables)
 
+    def test_default_searchers_share_plans(self, spark, index_dir):
+        """A named similarity is one shared instance, so a second
+        default searcher on the reader hits the first one's plan."""
+        from lucene_spark.index.reader import SearchIndex
+        from lucene_spark.search.similarity import BM25_SIM, get_similarity
+
+        assert get_similarity("bm25") is BM25_SIM
+        assert get_similarity("classic") is get_similarity("classic")
+        idx = SearchIndex(spark, index_dir)
+        q = "return OR if OR class"
+        first = Searcher(idx).search(q, k=10)
+        before = idx.cache.stats()["prepared"]
+        second = Searcher(idx).search(q, k=10)
+        after = idx.cache.stats()["prepared"]
+        assert (after["hits"] - before["hits"], after["misses"] - before["misses"]) == (1, 0)
+        _same_topdocs(first, second, "second default searcher")
+
     def test_unhashable_query_is_planned_every_time(self, spark, index_dir, planning_calls):
         from lucene_spark.index.reader import SearchIndex
 
@@ -782,3 +799,37 @@ class TestEquivalences:
             assert td.total_hits == true_count
         else:
             assert td.total_hits <= true_count
+
+
+class TestDisMaxOverMatchAll:
+    """MatchAll under a DisjunctionMax matches every doc, each scoring at
+    least the MatchAll disjunct's 1.0, on every execution path (the
+    all-docs flag of a spec tree enters DisMax clauses too)."""
+
+    Q = A.DisjunctionMaxQuery((A.MatchAllDocsQuery(), A.TermQuery("return")), 0.1)
+    XML = (
+        '<DisjunctionMaxQuery fieldName="content" tieBreaker="0.1">'
+        "<MatchAllDocsQuery/><TermQuery>return</TermQuery></DisjunctionMaxQuery>"
+    )
+
+    def test_every_mode_returns_every_doc(self, search_index, oracle):
+        from lucene_spark.search.xmlparser import parse_xml_query
+
+        s = Searcher(search_index)
+        want = oracle.top_k(self.Q, 1000)
+        assert len(want) == 200 and min(x for _, x in want) >= 1.0
+        xml_q = parse_xml_query(self.XML)
+        assert xml_q == self.Q
+        driver = s.search(self.Q, k=1000)
+        dist = s.search(self.Q, k=1000, mode="distributed")
+        for name, td in (("driver", driver), ("distributed", dist), ("xml", s.search(xml_q, k=1000))):
+            assert td.total_hits == 200, name
+            assert_rank_identical(td.hits, want, name)
+        assert dist.hits == driver.hits
+        assert s.count(self.Q) == 200
+        assert s.count(self.Q, mode="distributed") == 200
+        frame = sorted(
+            ((int(r["doc_id"]), r["score"]) for r in s.match_frame(self.Q).collect()),
+            key=lambda h: (-h[1], h[0]),
+        )
+        assert_rank_identical(frame, want, "match_frame")
