@@ -769,7 +769,12 @@ _SIMILARITIES = {
     "dfi": DFISim(),
     "ib": IBSim(),
     "indri": IndriDirichletSim(),
-    **{f"axiomatic{v}": AxiomaticSim(v) for v in ("f1exp", "f1log", "f2exp", "f2log", "f3exp", "f3log")},
+    "axiomaticf1exp": AxiomaticSim("f1exp"),
+    "axiomaticf1log": AxiomaticSim("f1log"),
+    "axiomaticf2exp": AxiomaticSim("f2exp"),
+    "axiomaticf2log": AxiomaticSim("f2log"),
+    "axiomaticf3exp": AxiomaticSim("f3exp"),
+    "axiomaticf3log": AxiomaticSim("f3log"),
 }
 
 
