@@ -458,7 +458,7 @@ class Searcher:
             st = porter_stem(t)
             return (t,) if st == t else (t, st)
 
-        def walk(x: A.Query) -> A.Query:
+        def rebuild(x: A.Query) -> A.Query:
             if isinstance(x, A.TermQuery):
                 alts = slot(x.term)
                 return x if len(alts) == 1 else A.SynonymQuery(alts, field=x.field)
@@ -472,9 +472,9 @@ class Searcher:
                     tuple(dict.fromkeys(a for t in s for a in slot(t))) for s in x.positions
                 )
                 return replace(x, positions=slots)
-            return A.map_children(x, walk)
+            return A.map_children(x, rebuild)
 
-        return walk(q)
+        return rebuild(q)
 
     def _mtq_rewrite(self, terms: list, q) -> A.Query:
         """Apply the MultiTermQuery rewrite method (MultiTermQuery.java
